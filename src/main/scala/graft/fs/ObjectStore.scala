@@ -16,12 +16,15 @@ final class ObjectStore(conf: Configuration) {
 
   private def fs(p: Path): FileSystem = p.getFileSystem(conf)
 
-  /** S9 list — files under a prefix, non-recursive. */
+  /** S9 list — files under a prefix, non-recursive, sorted by name
+    * (`listStatus` order is unspecified on local FS and HDFS), so every
+    * run processes a landing in the same order on every filesystem.
+    */
   def list(dir: String): Seq[String] = {
     val p = new Path(dir)
     val f = fs(p)
     if (!f.exists(p)) Nil
-    else f.listStatus(p).filter(_.isFile).map(_.getPath.toString).toSeq
+    else f.listStatus(p).filter(_.isFile).map(_.getPath.toString).toSeq.sorted
   }
 
   /** S9 copy+delete — the reference's "move to processed/" archive

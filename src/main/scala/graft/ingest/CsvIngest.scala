@@ -1,18 +1,24 @@
 package graft.ingest
 
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import com.univocity.parsers.csv.CsvParser
+import org.apache.hadoop.fs.Path
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.csv.CSVOptions
+import org.apache.spark.sql.execution.datasources.csv.CSVUtils
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
 /** CSV ingestion with the reference's three-layer schema handling
   * (SURVEY.md §1.5; reference main.py:136-178, 223-258):
   *
-  *  1. header-only probe (S1) — cheap, no data scan;
+  *  1. header probe (S1) — read on the driver with Spark's own CSV
+  *     header rules: no Spark job, no data scan;
   *  2. mandatory-column contract check (F2) — files missing any
   *     contract column are rejected (quarantine path);
-  *  3. conform (P1/X1) — extra columns beyond the contract are folded
-  *     into one `additional_column` string via concat_ws(", ", …),
-  *     every file is projected to the same 9 columns.
+  *  3. conform (P1/X1) — one multi-path scan per distinct header;
+  *     extras fold into `additional_column` via concat_ws(", ", …),
+  *     and the groups, projected to the same 9 columns, are unioned:
+  *     ingest cost scales with distinct headers, not with files.
   *
   * Divergence from the reference (documented, SURVEY.md §7.4): money
   * is DECIMAL(10,2) not float, and types come from explicit casts of
@@ -40,84 +46,77 @@ object CsvIngest {
     StructField("total_cost", Money),
     StructField("additional_column", StringType)))
 
-  /** S1 — header-only probe: one file-read of the first line, no
-    * full scan (main.py:139-141).
+  private def csvOptions(spark: SparkSession): CSVOptions = new CSVOptions(
+    Map("header" -> "true"), false, spark.sessionState.conf.sessionLocalTimeZone)
+
+  /** A file's header cells: its first non-blank line, tokenized on the
+    * driver (main.py:139-141); empty for a zero-byte file.
     */
+  private def headerCells(spark: SparkSession, path: String): Seq[String] = {
+    val opts = csvOptions(spark)
+    CSVUtils.readHeaderLine(new Path(path), opts, spark.sessionState.newHadoopConf())
+      .fold(Seq.empty[String])(new CsvParser(opts.asParserSettings).parseLine(_).toSeq)
+  }
+
+  /** Header cells → Spark's column names (index-suffixed if empty or duplicate). */
+  private def columnNames(spark: SparkSession, cells: Seq[String]): Seq[String] =
+    CSVUtils.makeSafeHeader(cells.toArray,
+      spark.sessionState.conf.caseSensitiveAnalysis, csvOptions(spark)).toSeq
+
+  /** S1 — header probe: a `header=true` read's `columns`, with no Spark job. */
   def probeColumns(spark: SparkSession, path: String): Seq[String] =
-    spark.read.option("header", "true").csv(path).columns.toSeq
+    columnNames(spark, headerCells(spark, path))
 
   /** Contract check: Left(missing columns) if the file violates the
     * contract, Right(extra columns) otherwise (main.py:146-153).
     */
-  def validate(spark: SparkSession, path: String): Either[Set[String], Seq[String]] = {
-    val cols = probeColumns(spark, path)
-    val missing = mandatoryColumns.toSet -- cols.toSet
-    if (missing.nonEmpty) Left(missing)
-    else Right(cols.filterNot(mandatoryColumns.contains))
-  }
+  def validate(spark: SparkSession, path: String): Either[Set[String], Seq[String]] =
+    triage(spark, Seq(path)) match {
+      case (Seq((_, cells)), _) =>
+        Right(columnNames(spark, cells).filterNot(mandatoryColumns.contains))
+      case (_, bad) => Left(bad.head._2)
+    }
 
-  /** Split candidate files into (good, bad-with-missing-cols). */
+  /** Split candidate files into (good with header cells, bad with missing cols). */
   def triage(spark: SparkSession, paths: Seq[String])
-      : (Seq[String], Seq[(String, Set[String])]) = {
-    val checked = paths.map(p => p -> validate(spark, p))
-    (checked.collect { case (p, Right(_)) => p },
-      checked.collect { case (p, Left(m)) => (p, m) })
+      : (Seq[(String, Seq[String])], Seq[(String, Set[String])]) = {
+    val checked = paths.map { p =>
+      val cells = headerCells(spark, p)
+      (p, cells, mandatoryColumns.toSet -- columnNames(spark, cells))
+    }
+    (checked.collect { case (p, cells, m) if m.isEmpty => (p, cells) },
+      checked.collect { case (p, _, m) if m.nonEmpty => (p, m) })
   }
 
-  /** Conform one (validated) file to the 9-column contract, folding
-    * extra columns into `additional_column` (main.py:245-256).
+  /** O3/S4 — conform validated files to the 9-column contract: one
+    * all-string multi-path read per distinct header, unioned in
+    * first-seen order (main.py:235-258). `enforceSchema=false` makes
+    * Spark re-check each file's header, so a file changed since
+    * [[triage]] fails the read instead of landing in the wrong columns;
+    * a header Spark renames (empty or duplicate cells) cannot match and
+    * is read positionally, as a plain `header=true` read is.
     */
-  def conform(spark: SparkSession, path: String): DataFrame = {
-    val raw = spark.read.option("header", "true").csv(path)
-    val extras = raw.columns.filterNot(mandatoryColumns.contains)
-    val withAdd =
-      if (extras.nonEmpty)
-        raw.withColumn("additional_column",
-          concat_ws(", ", extras.map(col).toIndexedSeq: _*))
-      else
-        raw.withColumn("additional_column", lit(null).cast(StringType))
-    withAdd.select(
-      col("customer_id").cast(IntegerType),
-      col("store_id").cast(IntegerType),
-      col("product_name"),
-      col("sales_date").cast(DateType),
-      col("sales_person_id").cast(IntegerType),
-      col("price").cast(Money),
-      col("quantity").cast(IntegerType),
-      col("total_cost").cast(Money),
-      col("additional_column"))
-      // .to() aligns nullability with the declared contract (concat_ws
-      // is non-nullable; the contract column is nullable).
-      .to(factSchema)
+  def read(spark: SparkSession, files: Seq[(String, Seq[String])]): DataFrame = {
+    require(files.nonEmpty, "read needs at least one file")
+    files.map(_._2).distinct.map { cells =>
+      val names = columnNames(spark, cells)
+      val raw = spark.read
+        .schema(StructType(names.map(StructField(_, StringType))))
+        .option("header", "true")
+        .option("enforceSchema", names != cells)
+        .csv(files.collect { case (p, `cells`) => p }: _*)
+      val extras = names.filterNot(mandatoryColumns.contains)
+      val additional =
+        if (extras.nonEmpty) concat_ws(", ", extras.map(col): _*) else lit(null)
+      raw.select(factSchema.fields.toIndexedSeq.map { f =>
+          val c = if (f.name == "additional_column") additional else col(f.name)
+          c.cast(f.dataType).as(f.name) }: _*)
+        // .to() relaxes concat_ws's non-null output to the contract
+        .to(factSchema)
+    }.reduce(_ union _)
   }
 
-  /** O3/S4 — the reference's literal shape: per-file conform unioned
-    * by position over an empty seed (main.py:235-258). Kept for
-    * parity; plan depth is O(files), so prefer [[multiPathRead]] when
-    * all files share a header.
-    */
-  def unionFold(spark: SparkSession, paths: Seq[String]): DataFrame = {
-    val seed = spark.createDataFrame(
-      spark.sparkContext.emptyRDD[Row], factSchema)
-    paths.map(conform(spark, _)).foldLeft(seed)(_ union _)
-  }
-
-  /** Canonical scale form (SURVEY.md §4.3): one multi-path read for
-    * files sharing a header — one scan node, parallel file listing,
-    * no O(files) plan depth. Verified equal to [[unionFold]] in
-    * CsvIngestSpec.
-    */
-  def multiPathRead(spark: SparkSession, paths: Seq[String]): DataFrame = {
-    require(paths.nonEmpty, "multiPathRead needs at least one path")
-    val raw = spark.read.option("header", "true").csv(paths: _*)
-    val extras = raw.columns.filterNot(mandatoryColumns.contains)
-    val withAdd =
-      if (extras.nonEmpty)
-        raw.withColumn("additional_column",
-          concat_ws(", ", extras.map(col).toIndexedSeq: _*))
-      else raw.withColumn("additional_column", lit(null).cast(StringType))
-    withAdd.select(factSchema.fields.map(f =>
-      col(f.name).cast(f.dataType)).toIndexedSeq: _*)
-      .to(factSchema)
-  }
+  /** Conform one validated file (main.py:245-256): a one-file [[read]]. */
+  def conform(spark: SparkSession, path: String): DataFrame =
+    read(spark, Seq(path -> headerCells(spark, path)))
 }

@@ -10,7 +10,7 @@ class EnrichMartsSpec extends SparkSpec {
 
   lazy val dir: String = tempDir("enrich_")
   lazy val enriched: DataFrame = {
-    val fact = CsvIngest.unionFold(spark,
+    val fact = Fixtures.unionFold(spark,
       Seq(Fixtures.writeF1(dir), Fixtures.writeF2(dir)))
     val (c, s, st) = Fixtures.dims(spark)
     DimensionEnricher.enrich(fact, c, s, st).cache()

@@ -1,8 +1,10 @@
 package graft
 
+import graft.ingest.CsvIngest
 import java.nio.file.{Files, Paths}
 import java.time.LocalDate
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.functions.{col, concat_ws, lit}
 import scala.util.Random
 
 /** Deterministic (seed=42) regenerations of the reference's test
@@ -84,6 +86,24 @@ object Fixtures {
     val p = Paths.get(dir, name)
     Files.write(p, String.join("\n", lines: _*).getBytes)
     p.toString
+  }
+
+  /** O3/S4 in the reference's literal shape (main.py:235-258): each
+    * file read on its own with Spark's inferred header, conformed, and
+    * unioned by position over an empty seed. Plan depth is O(files);
+    * kept as the parity oracle for `CsvIngest.read`.
+    */
+  def unionFold(spark: SparkSession, paths: Seq[String]): DataFrame = {
+    val seed = spark.createDataFrame(
+      spark.sparkContext.emptyRDD[Row], CsvIngest.factSchema)
+    paths.map { p =>
+      val raw = spark.read.option("header", "true").csv(p)
+      val extras = raw.columns.toSeq.filterNot(CsvIngest.mandatoryColumns.contains)
+      val add = if (extras.nonEmpty) concat_ws(", ", extras.map(col): _*) else lit(null)
+      raw.select(CsvIngest.factSchema.fields.toIndexedSeq.map { f =>
+        val c = if (f.name == "additional_column") add else col(f.name)
+        c.cast(f.dataType).as(f.name) }: _*)
+    }.foldLeft(seed)(_ union _)
   }
 
   /** F4 — dimension stand-ins with the reference MySQL schemas

@@ -2,10 +2,83 @@ package graft
 
 import graft.app.PipelineRunner
 import graft.app.PipelineRunner.{Dimensions, PipelineConfig}
+import graft.fs.ObjectStore
+import graft.ingest.CsvIngest
 import graft.ledger.InMemoryRunLedger
 import java.nio.file.{Files, Paths}
+import java.util.concurrent.{CountDownLatch, TimeUnit}
+import java.util.concurrent.atomic.AtomicInteger
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 
 class PipelineSpec extends SparkSpec {
+
+  /** Spark jobs started by `body`, counted by a listener on the jobs of
+    * a job group set around it. The listener bus is asynchronous, so a
+    * marker job in the same group flushes it: once the listener has
+    * seen the marker, it has seen every job `body` started.
+    */
+  private def jobsStartedBy(body: => Unit): Int = {
+    val sc = spark.sparkContext
+    val group = s"job-count-${java.util.UUID.randomUUID}"
+    val jobs = new AtomicInteger
+    val marker = new CountDownLatch(1)
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (e.properties != null && e.properties.getProperty("spark.jobGroup.id") == group) {
+          if (e.properties.getProperty("spark.job.description") == group) marker.countDown()
+          else jobs.incrementAndGet()
+        }
+    }
+    sc.addSparkListener(listener)
+    sc.setJobGroup(group, "")
+    try {
+      body
+      sc.setJobDescription(group)
+      sc.parallelize(Seq(1), 1).count()
+      assert(marker.await(60, TimeUnit.SECONDS), "the listener never saw the marker job")
+      jobs.get
+    } finally {
+      sc.clearJobGroup()
+      sc.setJobDescription(null)
+      sc.removeSparkListener(listener)
+    }
+  }
+
+  test("ObjectStore.list returns a landing's files sorted by name") {
+    val root = tempDir("objstore_list_")
+    val names = new scala.util.Random(7).shuffle((1 to 40).map(i => s"f$i.csv"))
+    names.foreach(n => Files.writeString(Paths.get(root, n), n))
+    Files.createDirectory(Paths.get(root, "subdir"))
+    val listed = new ObjectStore(spark.sparkContext.hadoopConfiguration).list(root)
+    assert(listed.map(new org.apache.hadoop.fs.Path(_).getName) == names.sorted)
+  }
+
+  test("ingest starts no Spark job per file: triage none, a run as many for 12 files as for 3") {
+    def landing(good: Int): PipelineConfig = {
+      val root = tempDir(s"pipeline_jobs_${good}_")
+      val cfg = PipelineConfig(s"$root/in", s"$root/err", s"$root/done",
+        s"$root/out")
+      Files.createDirectories(Paths.get(cfg.inputDir))
+      // the same two-header mix at both sizes: two F1 files per F2 file
+      (0 until good).foreach { i =>
+        if (i % 3 == 2) Fixtures.writeF2(cfg.inputDir, name = s"f2_$i.csv", seed = i)
+        else Fixtures.writeF1(cfg.inputDir, name = s"f1_$i.csv", seed = i)
+      }
+      Fixtures.writeF3(cfg.inputDir)
+      cfg
+    }
+    val (small, large) = (landing(3), landing(12))
+    val store = new ObjectStore(spark.sparkContext.hadoopConfiguration)
+    assert(jobsStartedBy(CsvIngest.triage(spark, store.list(large.inputDir))) == 0)
+    val (c, s, st) = Fixtures.dims(spark)
+    def runJobs(cfg: PipelineConfig): Int = jobsStartedBy {
+      val report = PipelineRunner.run(spark, cfg, Dimensions(c, s, st), new InMemoryRunLedger)
+      assert(report.quarantined.size == 1)
+    }
+    val (smallJobs, largeJobs) = (runJobs(small), runJobs(large))
+    assert(smallJobs > 0 && smallJobs == largeJobs,
+      s"$smallJobs jobs over 3 files, $largeJobs over 12")
+  }
 
   test("S9: copyFromLocal/copyToLocal round-trip a file, source kept") {
     val root = tempDir("objstore_")
@@ -81,6 +154,8 @@ class PipelineSpec extends SparkSpec {
     val part = spark.read
       .parquet(s"${cfg.outputDir}/sales_team_data_mart_partitioned")
     assert(part.count() == report.salesMartRows)
+    assert(spark.read.parquet(s"${cfg.outputDir}/customers_data_mart").count()
+      == report.customerMartRows)
     val dirs = Files.list(
       Paths.get(s"${cfg.outputDir}/sales_team_data_mart_partitioned"))
       .toArray.map(_.toString).filter(_.contains("sales_month="))
