@@ -32,8 +32,8 @@ object Verify {
       if (selected.isEmpty) SparkEntry.queries
       else SparkEntry.queries.filter(q => selected(q._1))
     queries.foreach { case (name, fn) =>
-      try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
-        .parquet(s"$outDir/$name")
+      try graft.io.Writers.sink(fn(spark, sfDir).coalesce(1))
+        .mode("overwrite").parquet(s"$outDir/$name")
       catch { case e: Throwable =>
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
       }

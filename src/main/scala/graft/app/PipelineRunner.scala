@@ -23,6 +23,8 @@ import org.apache.spark.sql.functions.{count, lit}
   *  - the enriched frame is cached before mart fan-out (the reference
   *    recomputes the whole lineage ≥6 times);
   *  - mart row counts are observed on the flat writes, not read back;
+  *  - local mart writes set file modes in-process (`Writers.sink`),
+  *    not with one forked `chmod` per file and directory;
   *  - S3 round-trip downloads are replaced by direct HCFS reads.
   */
 object PipelineRunner {

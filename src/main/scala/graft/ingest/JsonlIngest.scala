@@ -80,9 +80,9 @@ object JsonlIngest {
     import s.implicits._
     val root = graft.io.Scratch.qd49Dir(dir)
     val docs = graft.core.Tables.documents(s, dir)
-    docs.select(to_json(struct(col("doc_id"), col("text"), col("lang"),
-        col("source"), col("n_chars"))).as("value"))
-      .write.mode("overwrite").text(s"$root/good")
+    graft.io.Writers.sink(docs.select(to_json(struct(col("doc_id"),
+        col("text"), col("lang"), col("source"), col("n_chars"))).as("value")))
+      .mode("overwrite").text(s"$root/good")
     // NOTE the Spark subtlety the spec pins: corruption is detected
     // relative to the PARSED PROJECTION — a type clash on a column
     // the downstream query never references is invisible (the column
@@ -91,8 +91,8 @@ object JsonlIngest {
     // a doc_id clash would sail through this query as a "good" row.
     // Full-contract validation parses every column (cache/write the
     // parse first — the spec's path).
-    PlantedBad.toDF("value")
-      .coalesce(1).write.mode("overwrite").text(s"$root/bad")
+    graft.io.Writers.sink(PlantedBad.toDF("value").coalesce(1))
+      .mode("overwrite").text(s"$root/bad")
     val parsed = readQuarantined(s, DocSchema,
       s"$root/good", s"$root/bad")
     ledger(parsed).orderBy("bucket")
@@ -160,10 +160,10 @@ object JsonlIngest {
     graft.io.Scratch.landedOnce(dir, graft.io.Scratch.qs38Dir(dir),
         version = 1) {
       landing =>
-        graft.core.Tables.documents(s, dir)
+        graft.io.Writers.sink(graft.core.Tables.documents(s, dir)
           .select(to_json(struct(col("doc_id"), col("text"), col("lang"),
-            col("source"), col("n_chars"))).as("value"))
-          .write.mode("overwrite").text(landing)
+            col("source"), col("n_chars"))).as("value")))
+          .mode("overwrite").text(landing)
         java.nio.file.Files.write(
           java.nio.file.Paths.get(landing, "zz-corrupt.jsonl"),
           PlantedBad.mkString("", "\n", "\n")

@@ -129,7 +129,7 @@ object ArtifactStore {
         java.nio.file.Files.createDirectories(root.toPath)
         val tmp = new java.io.File(root,
           "tmp-" + java.util.UUID.randomUUID.toString.take(13))
-        build.write.mode("overwrite").parquet(tmp.getAbsolutePath)
+        Writers.sink(build).mode("overwrite").parquet(tmp.getAbsolutePath)
         try
           java.nio.file.Files.move(tmp.toPath, dataDir.toPath,
             java.nio.file.StandardCopyOption.ATOMIC_MOVE)

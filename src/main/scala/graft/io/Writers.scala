@@ -1,6 +1,8 @@
 package graft.io
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import graft.fs.{ChecksumLocalFs, LocalFs}
+import org.apache.hadoop.fs.{LocalFileSystem, RawLocalFileSystem}
+import org.apache.spark.sql.{DataFrame, DataFrameWriter, Row}
 import org.apache.spark.sql.functions.col
 
 /** Sink operators (SURVEY.md §2.1 S5–S7).
@@ -14,18 +16,43 @@ import org.apache.spark.sql.functions.col
   */
 object Writers {
 
+  private val twins = Map(
+    classOf[RawLocalFileSystem].getName -> classOf[LocalFs].getName,
+    classOf[LocalFileSystem].getName -> classOf[ChecksumLocalFs].getName)
+
+  /** `df.write` on the fork-free twin of the session's local
+    * filesystem ([[graft.fs.LocalFs]]), set as per-write Hadoop
+    * options: `RawLocalFileSystem` → `LocalFs`; unset or
+    * `LocalFileSystem` → `ChecksumLocalFs` (same `.crc` sidecars); any
+    * other `fs.file.impl` → no option. `fs.file.impl.disable.cache` is
+    * required: the FileSystem cache is keyed by scheme, not class.
+    * Only the `file` scheme reads these keys, and the bytes, files and
+    * modes written are unchanged (LocalFsSpec).
+    *
+    * Every program-side batch path write goes through here, except
+    * `Bucketing.writeBucketed` (`saveAsTable` stores write options in
+    * the catalog) and streaming queries (their checkpoint and sink
+    * logs use the session's filesystem whatever the options say).
+    */
+  def sink(df: DataFrame): DataFrameWriter[Row] = {
+    val impl = df.sparkSession.sessionState.newHadoopConf()
+      .getTrimmed("fs.file.impl", classOf[LocalFileSystem].getName)
+    twins.get(impl).fold(df.write)(twin => df.write
+      .option("fs.file.impl", twin).option("fs.file.impl.disable.cache", "true"))
+  }
+
   /** S5 — flat overwrite. */
   def writeFlat(df: DataFrame, path: String): Unit =
-    df.write.mode("overwrite").parquet(path)
+    sink(df).mode("overwrite").parquet(path)
 
   /** S6 — hive-partitioned overwrite, small-files-safe. Uses the
     * default v1 committer: with rows clustered by partition key each
     * hive directory lives in exactly one task's output, so the driver
-    * merge is one cheap rename per directory (measured faster than
-    * v2's per-file task-side moves on local FS; on S3A prefer the
-    * magic committer instead). The other many-small-files cost
-    * locally is Hadoop CRC sidecars — disabled in the bench/verify
-    * sessions via RawLocalFileSystem.
+    * merge is one rename per directory (on S3A prefer the magic
+    * committer). Locally the per-file cost is neither the disk nor the
+    * committer's renames but a forked `chmod` per created file and
+    * directory: the 1,995-directory etl_monthly mart write spent
+    * 34.8 s of task time on 7.1 s of CPU. [[sink]] removes the forks.
     */
   def writePartitioned(df: DataFrame, path: String,
                        partitionCols: Seq[String],
@@ -35,16 +62,13 @@ object Writers {
     // coalesces the (byte-wise tiny) shuffle to 1-2 tasks, which then
     // write thousands of partition directories serially — the cost of
     // a hive-partitioned write is per-FILE, not per-byte, so keep the
-    // writer task count pinned. Default = cluster parallelism (tasks
-    // spread across machines, each with its own IO path). numTasks
-    // overrides it when all writers share one storage endpoint: the
-    // WriteProbe measurement (BASELINE.md) shows a single local disk
-    // saturates at ~8 concurrent parquet writers (4.3 s vs 5.9-6.4 s
-    // at 32 tasks for 2100 dirs) — contention, not CPU, is the floor.
+    // writer task count pinned. Default = cluster parallelism; callers
+    // writing to one local disk pass 8, a count tuned while every file
+    // still forked a `chmod` (fork concurrency, not disk contention).
     val n = if (numTasks > 0) numTasks
             else df.sparkSession.sparkContext.defaultParallelism
-    df.repartition(n, partitionCols.map(col): _*)
-      .write.mode("overwrite")
+    sink(df.repartition(n, partitionCols.map(col): _*))
+      .mode("overwrite")
       // snappy: per-file cost is writer+codec init when partitions are
       // fine-grained; zstd's context setup is ~2x snappy's per file.
       // For fat single-dir outputs where size wins, pass codec=zstd.
@@ -59,7 +83,4 @@ object Writers {
   def writeJdbcAppend(df: DataFrame, url: String, table: String,
                       props: java.util.Properties): Unit =
     df.write.mode("append").jdbc(url, table, props)
-
-  def readParquet(spark: SparkSession, path: String): DataFrame =
-    spark.read.parquet(path)
 }

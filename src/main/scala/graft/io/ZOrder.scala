@@ -49,9 +49,9 @@ object ZOrder {
     */
   def writeZOrdered(df: DataFrame, xCol: String, yCol: String,
                     path: String, numFiles: Int): Unit =
-    df.withColumn("_z", zValue(col(xCol), col(yCol)))
+    Writers.sink(df.withColumn("_z", zValue(col(xCol), col(yCol)))
       .repartitionByRange(numFiles, col("_z"))
       .sortWithinPartitions("_z")
-      .drop("_z")
-      .write.mode("overwrite").parquet(path)
+      .drop("_z"))
+      .mode("overwrite").parquet(path)
 }

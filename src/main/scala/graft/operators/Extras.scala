@@ -393,12 +393,12 @@ object Extras {
     if (!evolvedWritten.contains(root) || !new java.io.File(era1).exists()
         || !new java.io.File(era2).exists()) {
       val o = Tables.orders(s, dir)
-      o.filter(col("o_orderkey") % 2 === 0)
-        .select("o_orderkey", "o_totalprice")
-        .write.mode("overwrite").parquet(era1)
-      o.filter(col("o_orderkey") % 2 === 1)
-        .select("o_orderkey", "o_orderstatus")
-        .write.mode("overwrite").parquet(era2)
+      graft.io.Writers.sink(o.filter(col("o_orderkey") % 2 === 0)
+        .select("o_orderkey", "o_totalprice"))
+        .mode("overwrite").parquet(era1)
+      graft.io.Writers.sink(o.filter(col("o_orderkey") % 2 === 1)
+        .select("o_orderkey", "o_orderstatus"))
+        .mode("overwrite").parquet(era2)
       evolvedWritten.add(root)
     }
     s.read.option("mergeSchema", "true").parquet(era1, era2)
@@ -429,7 +429,7 @@ object Extras {
     val orcPath = graft.io.Scratch.stampedOnce(dir,
         graft.io.Scratch.qx28Dir(dir), "documents_orc", "documents",
         version = 1) { target =>
-      Tables.documents(s, dir).write.mode("overwrite").orc(target)
+      graft.io.Writers.sink(Tables.documents(s, dir)).mode("overwrite").orc(target)
     }
     s.read.orc(orcPath)
       .filter(col("n_chars") >= 200)

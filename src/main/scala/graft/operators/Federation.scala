@@ -39,7 +39,7 @@ object Federation {
     // CSV leg: header'd write, read back under the parquet schema
     // (CSV carries no types — the explicit schema is the contract,
     // same rule as CsvIngest's conform step)
-    nat.coalesce(1).write.mode("overwrite")
+    graft.io.Writers.sink(nat.coalesce(1)).mode("overwrite")
       .option("header", "true").csv(s"$root/nation_csv")
     val csvLeg = s.read.option("header", "true")
       .schema(nat.schema).csv(s"$root/nation_csv")

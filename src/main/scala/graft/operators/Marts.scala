@@ -57,10 +57,10 @@ object Marts {
     // task writes into every month×store directory (tasks × dirs tiny
     // files — the small-files problem at scale). With it, each
     // directory gets one file.
-    // numTasks=8: this roundtrip writes to the node-local disk, where
-    // the WriteProbe measurement found ~8 concurrent writers is the
-    // contention sweet spot (see Writers.writePartitioned doc); a
-    // distributed FS target would leave the default.
+    // numTasks=8: this roundtrip writes to the node-local disk; the 8
+    // was tuned while every file forked a `chmod` (fork concurrency,
+    // not disk contention; see Writers.writePartitioned) and stays
+    // until re-measured. A distributed FS would leave the default.
     val t0 = System.nanoTime()
     graft.io.Writers.writePartitioned(mart, out, Seq("month", "store"),
       numTasks = 8)
@@ -230,7 +230,7 @@ object Marts {
     // phase 1: the pathological layout — every writer task touches
     // every partition dir (round-robin repartition spreads rows
     // arbitrarily), yielding tasks×dirs files
-    ev.repartition(64).write.mode("overwrite")
+    graft.io.Writers.sink(ev.repartition(64)).mode("overwrite")
       .partitionBy("event_type").parquet(frag)
     // phase 2: compact = re-cluster by the partition keys, one writer
     // per directory

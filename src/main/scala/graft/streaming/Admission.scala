@@ -55,11 +55,11 @@ object Admission {
     graft.io.Scratch.landedOnce(dir, graft.io.Scratch.qs39Dir(dir),
         version = 1) {
       landing =>
-        Tables.documents(s, dir).where(!isCorpus)
+        graft.io.Writers.sink(Tables.documents(s, dir).where(!isCorpus)
           .repartition(4)
           .select(to_json(struct(col("doc_id"), col("text"), col("lang"),
-            col("source"), col("n_chars"))).as("value"))
-          .write.mode("overwrite").text(landing)
+            col("source"), col("n_chars"))).as("value")))
+          .mode("overwrite").text(landing)
     }
 
   /** qs39 — drain the drop folder, score each micro-batch against
@@ -383,11 +383,11 @@ object Admission {
       val t0 = System.currentTimeMillis - 600000L
       Seq(1, 2).foreach { gen =>
         val tmp = new java.io.File(landing, s"_tmp_gen$gen")
-        EditJoin.genBatch(docs, gen)
+        graft.io.Writers.sink(EditJoin.genBatch(docs, gen)
           .coalesce(1)
           .select(to_json(struct(col("doc_id"), col("text"), col("lang"),
-            col("source"), col("n_chars"))).as("value"))
-          .write.mode("overwrite").text(tmp.getAbsolutePath)
+            col("source"), col("n_chars"))).as("value")))
+          .mode("overwrite").text(tmp.getAbsolutePath)
         val part = Option(tmp.listFiles()).getOrElse(Array.empty)
           .find(f => f.getName.startsWith("part-")).get
         val dst = new java.io.File(landing, s"gen$gen.json")

@@ -43,11 +43,11 @@ object SketchStream {
                 root: String => String = graft.io.Scratch.sketchDir)
       : String =
     graft.io.Scratch.landedOnce(dir, root(dir), version = 1) { landing =>
-      Tables.documents(s, dir)
+      graft.io.Writers.sink(Tables.documents(s, dir)
         .repartition(4)
         .select(to_json(struct(col("doc_id"), col("text"), col("lang"),
-          col("source"), col("n_chars"))).as("value"))
-        .write.mode("overwrite").text(landing)
+          col("source"), col("n_chars"))).as("value")))
+        .mode("overwrite").text(landing)
     }
 
   /** Drain the landing folder through the streaming register
