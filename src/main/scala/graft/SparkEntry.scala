@@ -289,14 +289,16 @@ object SparkEntry {
   private val oMonthQ = monthExpr.format("o.o_orderdate")
 
   /** q09's mart without the output ORDER BY — shared by q09/q14
-    * verbatim and wrapped with a partition predicate by qp1.
+    * verbatim and wrapped with a partition predicate by qp1. The rank
+    * has no tie-break, as in RetailMarts: tied top totals all earn
+    * the incentive.
     */
   private val q09SqlCore: String =
     s"""SELECT store, person, month, CAST(total_dec AS DOUBLE) AS total,
        |  CAST(CASE WHEN rnk = 1 THEN round(total_dec * 0.01, 2) ELSE 0 END AS DOUBLE) AS incentive
        |FROM (
        |  SELECT store, person, month, total_dec,
-       |    rank() OVER (PARTITION BY store, month ORDER BY total_dec DESC, person) AS rnk
+       |    rank() OVER (PARTITION BY store, month ORDER BY total_dec DESC) AS rnk
        |  FROM (
        |    SELECT n.n_nationkey AS store, s.s_suppkey AS person,
        |      $oMonthQ AS month,

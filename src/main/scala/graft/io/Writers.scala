@@ -62,9 +62,7 @@ object Writers {
     // coalesces the (byte-wise tiny) shuffle to 1-2 tasks, which then
     // write thousands of partition directories serially — the cost of
     // a hive-partitioned write is per-FILE, not per-byte, so keep the
-    // writer task count pinned. Default = cluster parallelism; callers
-    // writing to one local disk pass 8, a count tuned while every file
-    // still forked a `chmod` (fork concurrency, not disk contention).
+    // writer task count pinned. Default = cluster parallelism.
     val n = if (numTasks > 0) numTasks
             else df.sparkSession.sparkContext.defaultParallelism
     sink(df.repartition(n, partitionCols.map(col): _*))

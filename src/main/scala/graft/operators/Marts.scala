@@ -1,18 +1,21 @@
 package graft.operators
 
-import graft.core.{Fns, Tables}
+import graft.core.Tables
+import graft.marts.RetailMarts
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** The reference's two data marts (SURVEY.md §3.3), re-expressed over
   * the shared star schema: `orders`/`lineitem` play the sales fact,
   * `customer`/`supplier`/`nation` the dimensions, and
-  * substring(date,1,7) the month key.
+  * substring(date,1,7) the month key; the mart rules live only in
+  * [[graft.marts.RetailMarts]].
   *
   * customer mart: customer_mart_sql_tranform_write.py:9-23 — monthly
-  * per-customer purchase totals with a concat'd full name.
+  * per-customer purchase totals with a concat'd full name (q13).
   * sales mart: sales_mart_sql_transform_write.py:8-33 — monthly
-  * store×person totals + rank-1 incentive (see Relational.q09).
+  * store×person totals + rank-1 incentive (Relational.q09; q14/qp1/qp2
+  * write and read it back).
   */
 object Marts {
 
@@ -29,13 +32,13 @@ object Marts {
   def customerMart(s: SparkSession, dir: String): DataFrame = {
     val o = Tables.orders(s, dir)
     val c = Tables.customer(s, dir)
-    o.join(c, o("o_custkey") === c("c_custkey"), "inner")
+    val rows = o.join(c, o("o_custkey") === c("c_custkey"), "inner")
       .select(c("c_custkey").as("customer_id"),
         concat(c("c_name"), lit(" "), c("c_mktsegment")).as("full_name"),
-        Fns.monthKey(o("o_orderdate")).as("month"),
-        o("o_totalprice").cast(Fns.Money).as("price_dec"))
-      .groupBy("customer_id", "full_name", "month")
-      .agg(sum(col("price_dec")).cast("double").as("total_sales"))
+        o("o_orderdate").as("date"), o("o_totalprice").as("money"))
+    RetailMarts.monthlyTotals(rows, "customer_id", "full_name")
+      .select(col("customer_id"), col("full_name"), col("month"),
+        col("total").cast("double").as("total_sales"))
       .orderBy("customer_id", "month")
   }
 
@@ -57,13 +60,8 @@ object Marts {
     // task writes into every month×store directory (tasks × dirs tiny
     // files — the small-files problem at scale). With it, each
     // directory gets one file.
-    // numTasks=8: this roundtrip writes to the node-local disk; the 8
-    // was tuned while every file forked a `chmod` (fork concurrency,
-    // not disk contention; see Writers.writePartitioned) and stays
-    // until re-measured. A distributed FS would leave the default.
     val t0 = System.nanoTime()
-    graft.io.Writers.writePartitioned(mart, out, Seq("month", "store"),
-      numTasks = 8)
+    graft.io.Writers.writePartitioned(mart, out, Seq("month", "store"))
     lastWriteNanos.set(System.nanoTime() - t0)
     s.read.parquet(out)
       .select(col("store").cast("int").as("store"), col("person"),
@@ -90,7 +88,7 @@ object Marts {
     // rest of the JVM (the overwrite mode makes retries safe)
     if (!martWritten.contains(out) || !new java.io.File(out).exists()) {
       graft.io.Writers.writePartitioned(Relational.q09(s, dir), out,
-        Seq("month", "store"), numTasks = 8)
+        Seq("month", "store"))
       martWritten.add(out)
     }
     out
@@ -317,26 +315,25 @@ object Marts {
       val o = pre(Tables.orders(s, dir))
       val sup = Tables.supplier(s, dir)
       val n = Tables.nation(s, dir)
-      l.join(o, l("l_orderkey") === o("o_orderkey"))
+      val rows = l.join(o, l("l_orderkey") === o("o_orderkey"))
         .join(sup, l("l_suppkey") === sup("s_suppkey"))
         .join(n, sup("s_nationkey") === n("n_nationkey"))
-        .select(n("n_nationkey").as("store"),
-          Fns.monthKey(o("o_orderdate")).as("month"),
-          l("l_extendedprice").cast(Fns.Money).as("p"))
-        .groupBy("store", "month")
-        .agg(sum(col("p")).as("total_dec"))
+        .select(n("n_nationkey").as("store"), o("o_orderdate").as("date"),
+          l("l_extendedprice").as("money"))
+      RetailMarts.monthlyTotals(rows, "store")
+        .select(col("store"), col("month"), col("total").as("total_dec"))
     }
     // v1: the old snapshot — everything before the cutoff, every store
     graft.io.Writers.writePartitioned(
       mart(_.filter(col("o_orderdate") < to_timestamp(lit("1997-01-01")))),
-      root, Seq("store"), numTasks = 8)
+      root, Seq("store"))
     // v2: the refresh batch — full history, stores 1-3 only; dynamic
     // mode replaces exactly those three partitions
     withConfs(s,
       Map("spark.sql.sources.partitionOverwriteMode" -> "dynamic")) {
       graft.io.Writers.writePartitioned(
         mart(identity).filter(col("store").isin(1, 2, 3)),
-        root, Seq("store"), numTasks = 4)
+        root, Seq("store"))
     }
     s.read.parquet(root)
       .select(col("store").cast("int").as("store"), col("month"),

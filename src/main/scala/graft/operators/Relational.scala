@@ -1,6 +1,7 @@
 package graft.operators
 
-import graft.core.{Fns, Tables}
+import graft.core.Tables
+import graft.marts.RetailMarts
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -69,30 +70,29 @@ object Relational {
     even.union(odd).orderBy("k")
   }
 
+  /** q06/q07's rule input: orders as per-customer money by date. */
+  private def orderRows(s: SparkSession, dir: String): DataFrame =
+    Tables.orders(s, dir).select(col("o_custkey"),
+      col("o_orderdate").as("date"), col("o_totalprice").as("money"))
+
   /** Q6 — customer-mart aggregation in canonical groupBy form
-    * (A1+A3 ≡ groupBy, SURVEY.md §2.5).
+    * (A1+A3 ≡ groupBy, SURVEY.md §2.5): the monthly-totals rule.
     */
   def q06(s: SparkSession, dir: String): DataFrame =
-    Tables.orders(s, dir)
-      .withColumn("month", Fns.monthKey(col("o_orderdate")))
-      .groupBy("o_custkey", "month")
-      .agg(Fns.moneySum(col("o_totalprice")).cast("double").as("total"))
+    RetailMarts.monthlyTotals(orderRows(s, dir), "o_custkey")
+      .select(col("o_custkey"), col("month"),
+        col("total").cast("double").as("total"))
       .orderBy("o_custkey", "month")
 
   /** Q7 — the literal reference form: windowed sum + distinct
-    * (customer_mart_sql_tranform_write.py:10-19). Kept as-is for
-    * parity; must equal q06 (asserted in tests).
+    * (customer_mart_sql_tranform_write.py:10-19), the monthly-totals
+    * rule's literal shape; must equal q06 (asserted in tests).
     */
-  def q07(s: SparkSession, dir: String): DataFrame = {
-    val w = Window.partitionBy("o_custkey", "month")
-    Tables.orders(s, dir)
-      .withColumn("month", Fns.monthKey(col("o_orderdate")))
-      .withColumn("total_dec", sum(col("o_totalprice").cast(Fns.Money)).over(w))
+  def q07(s: SparkSession, dir: String): DataFrame =
+    RetailMarts.monthlyTotalsLiteral(orderRows(s, dir), "o_custkey")
       .select(col("o_custkey"), col("month"),
-        col("total_dec").cast("double").as("total"))
-      .distinct()
+        col("total").cast("double").as("total"))
       .orderBy("o_custkey", "month")
-  }
 
   /** Q8 — rank window, top-3 per customer (A4,
     * sales_mart_sql_transform_write.py:18-22). Tie-broken on
@@ -118,27 +118,16 @@ object Relational {
     val o = Tables.orders(s, dir)
     val sup = Tables.supplier(s, dir)
     val n = Tables.nation(s, dir)
-
-    val grouped = l
+    val rows = l
       .join(o, l("l_orderkey") === o("o_orderkey"), "inner")
       .join(sup, l("l_suppkey") === sup("s_suppkey"), "inner")
       .join(broadcast(n), sup("s_nationkey") === n("n_nationkey"), "inner")
       .select(n("n_nationkey").as("store"), sup("s_suppkey").as("person"),
-        Fns.monthKey(o("o_orderdate")).as("month"),
-        l("l_extendedprice").cast(Fns.Money).as("price_dec"))
-      .groupBy("store", "person", "month")
-      .agg(sum(col("price_dec")).as("total_dec"))
-
-    val w = Window.partitionBy("store", "month")
-      .orderBy(col("total_dec").desc, col("person"))
-    grouped
-      .withColumn("rnk", rank().over(w))
+        o("o_orderdate").as("date"), l("l_extendedprice").as("money"))
+    RetailMarts.withIncentive(RetailMarts.monthlyTotals(rows, "store", "person"))
       .select(col("store"), col("person"), col("month"),
-        col("total_dec").cast("double").as("total"),
-        when(col("rnk") === 1,
-          round(col("total_dec") * lit(new java.math.BigDecimal("0.01")), 2))
-          .otherwise(lit(new java.math.BigDecimal("0.00")))
-          .cast("double").as("incentive"))
+        col("total").cast("double").as("total"),
+        col("incentive").cast("double").as("incentive"))
       .orderBy("store", "month", "person")
   }
 

@@ -55,17 +55,15 @@ class EnrichMartsSpec extends SparkSpec {
   }
 
   test("customer mart: literal window+distinct equals canonical groupBy") {
-    val lit0 = RetailMarts.customerMartLiteral(enriched)
-    val can = RetailMarts.customerMart(enriched)
-      .select(lit0.columns.map(col).toIndexedSeq: _*)
-    assert(asSet(lit0) == asSet(can))
+    val lit0 = RetailMarts.monthlyTotalsLiteral(
+      RetailMarts.customerRows(enriched), RetailMarts.customerKeys: _*)
+    assert(asSet(lit0) == asSet(RetailMarts.customerMart(enriched)))
   }
 
   test("sales mart: literal window+distinct equals canonical groupBy") {
-    val lit0 = RetailMarts.salesMartLiteral(enriched)
-    val can = RetailMarts.salesMart(enriched)
-      .select(lit0.columns.map(col).toIndexedSeq: _*)
-    assert(asSet(lit0) == asSet(can))
+    val lit0 = RetailMarts.withIncentive(RetailMarts.monthlyTotalsLiteral(
+      RetailMarts.salesRows(enriched), RetailMarts.salesKeys: _*))
+    assert(asSet(lit0) == asSet(RetailMarts.salesMart(enriched)))
   }
 
   test("customer mart conserves money: sum(total_sales) == sum(total_cost)") {
@@ -76,17 +74,32 @@ class EnrichMartsSpec extends SparkSpec {
   }
 
   test("sales mart: exactly rank-1 rows carry a 1% incentive") {
-    val sm = RetailMarts.salesMart(enriched).cache()
-    val withMax = sm.withColumn("max_total",
-      max("total_sales").over(org.apache.spark.sql.expressions.Window
-        .partitionBy("store_id", "sales_month")))
-    val top = withMax.filter(col("total_sales") === col("max_total"))
-    val rest = withMax.filter(col("total_sales") =!= col("max_total"))
-    assert(top.filter(col("incentive") =!=
-      round(col("total_sales") * lit(0.01), 2).cast(CsvIngest.Money))
-      .count() == 0)
-    assert(rest.filter(col("incentive") =!= lit(0.0).cast(CsvIngest.Money))
-      .count() == 0)
+    import spark.implicits._
+    // one more store-month in which persons 4 and 5 tie at the top:
+    // rank() without a tie-break gives both rank 1, so both earn it
+    val tie = Seq(4 -> "1234.50", 5 -> "1234.50", 6 -> "99.99").map {
+      case (person, total) => (1, 122, "sugar",
+        java.sql.Date.valueOf("2030-06-15"), person, BigDecimal(total), 1,
+        BigDecimal(total), null: String)
+    }.toDF(CsvIngest.factSchema.fieldNames.toIndexedSeq: _*)
+      .select(CsvIngest.factSchema.fields.toIndexedSeq.map(f =>
+        col(f.name).cast(f.dataType)): _*)
+    val (c, s, st) = Fixtures.dims(spark)
+    val rows = RetailMarts.salesMart(
+      enriched.unionByName(DimensionEnricher.enrich(tie, c, s, st)))
+      .select("store_id", "sales_month", "total_sales", "incentive")
+      .collect().map(r => ((r.getInt(0), r.getString(1)),
+        BigDecimal(r.getDecimal(2)), BigDecimal(r.getDecimal(3))))
+    val top = rows.groupBy(_._1).map { case (k, rs) => k -> rs.map(_._2).max }
+    rows.foreach { case (k, total, incentive) =>
+      val expected =
+        if (total == top(k))
+          (total * BigDecimal("0.01")).setScale(2, BigDecimal.RoundingMode.HALF_UP)
+        else BigDecimal("0.00")
+      assert(incentive == expected, s"$k total $total")
+    }
+    assert(rows.filter(_._1 == (122 -> "2030-06")).map(_._3).sorted.toSeq ==
+      Seq(BigDecimal("0.00"), BigDecimal("12.35"), BigDecimal("12.35")))
   }
 
   test("sales mart only contains valid store/person pairs") {
