@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 
 /** Driver-run benchmark: every declared query at SPARK_GRAFT_SF_DIR,
   * one JSON line on stdout.
@@ -23,34 +22,9 @@ import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     val repeats =
       math.max(1, sys.env.getOrElse("SPARK_GRAFT_BENCH_RUNS", "3").toInt)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      // deployment config: graft functions injected at construction
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      // local scratch writes: skip Hadoop .crc sidecars (4x faster
-      // many-small-file partitioned writes; irrelevant on HDFS/S3A)
-      .config("spark.hadoop.fs.file.impl",
-        "org.apache.hadoop.fs.RawLocalFileSystem")
-      // status-store retention (round 15): even with the UI disabled,
-      // AppStatusListener + SQLAppStatusListener retain up to 1000
-      // jobs/stages/executions in the ElementTrackingStore — and this
-      // suite's retained SQL executions carry PLAN-GRAPH strings of
-      // unrolled-DP oracles and literal-heavy scorers. Across ~600
-      // query executions the r14 sweep's heap crept 350 MB -> 1 GB of
-      // exactly such state (bench_details/r14 telemetry); old-gen
-      // pressure from it is charged to whatever query runs LATE in
-      // the sweep. Keep a debugging-sized window instead.
-      .config("spark.ui.retainedJobs", "50")
-      .config("spark.ui.retainedStages", "100")
-      .config("spark.ui.retainedTasks", "5000")
-      .config("spark.sql.ui.retainedExecutions", "25")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session.local(Session.cpusFromEnv)
     // q14 scratch: reap trees left by earlier rounds' random-suffix
     // temp dirs (the query itself now overwrites one fixed path)
     graft.io.Scratch.reapTmp()
@@ -183,34 +157,6 @@ object Bench {
     import scala.jdk.CollectionConverters._
     val gcBeans = java.lang.management.ManagementFactory.getGarbageCollectorMXBeans
     def gcMillis: Long = gcBeans.asScala.map(_.getCollectionTime).sum
-    def interQueryReset(): Unit = {
-      spark.sparkContext.getPersistentRDDs.values
-        .foreach(_.unpersist(blocking = false))
-      spark.catalog.clearCache()
-      System.gc()
-    }
-    // Between a query's OWN runs, drop Spark-side leftovers too
-    // (VERDICT r11 #2: qd54's three same-JVM runs escalated
-    // 3.6→8.8→23.5 s on the driver box — each run of a
-    // checkpoint-heavy query leaves its result's retained blocks
-    // behind, and ContextCleaner only reaps them on a GC that may
-    // not come mid-query). No query reuses Spark state across its
-    // runs by design — cross-run reuse is all driver-side models and
-    // parquet artifacts, which this does not touch — so the reset
-    // only removes compounding, never warmth. GC stays inter-query:
-    // a full collection per run would add ~2 min of untimed wall.
-    // CONTRACT (ADVICE r12): this unpersists ALL persistent RDDs,
-    // which also drops the blocks BACKING localCheckpoint'd frames —
-    // driver-side caches (TrainingOps models, any CHM) must therefore
-    // NEVER hold a DataFrame backed by checkpoint blocks across
-    // queries/runs: only collected objects or parquet paths (the
-    // ArtifactStore seam). A cached checkpointed frame would fail
-    // with 'block not found' on run 2+.
-    def interRunReset(): Unit = {
-      spark.sparkContext.getPersistentRDDs.values
-        .foreach(_.unpersist(blocking = false))
-      spark.catalog.clearCache()
-    }
 
     // optional args: bench only the named queries (debugging aid; the
     // driver invokes with no args -> all queries, sorted for stable
@@ -255,11 +201,20 @@ object Bench {
       val fn = SparkEntry.queries(name)
       var ok = true
       val writeSecs = scala.collection.mutable.ArrayBuffer.empty[Double]
-      interQueryReset()
+      Session.reset(spark)
+      System.gc()
       val load0 = loadAvg
       val gc0 = gcMillis
       val runs = (1 to repeats).map { i =>
-        if (i > 1) interRunReset()
+        // between a query's OWN runs, drop Spark-side leftovers too
+        // (VERDICT r11 #2: qd54's three same-JVM runs escalated
+        // 3.6→8.8→23.5 s on the benchmark host — each run of a
+        // checkpoint-heavy query leaves its result's retained blocks
+        // behind, and ContextCleaner only reaps them on a GC that may
+        // not come mid-query). The reset removes compounding, never
+        // warmth. GC stays inter-query: a full collection per run
+        // would add ~2 min of untimed wall.
+        if (i > 1) Session.reset(spark)
         graft.operators.Marts.lastWriteNanos.set(0L)
         val t0 = System.nanoTime()
         // noop-sink write: materializes every output column AND keeps

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Codegen-health audit: execute declared queries and fail loudly if
   * any generated Java fails to compile. Spark's fallback on a Janino
   * CompileException is SILENT (the subtree drops to interpreted eval
@@ -36,12 +34,7 @@ object CodegenAudit {
   }
 
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[4]")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.sql.shuffle.partitions", 4)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session.local(Session.cpusFromEnv)
     val ctx = org.apache.logging.log4j.LogManager.getContext(false)
       .asInstanceOf[org.apache.logging.log4j.core.LoggerContext]
     val appender = new CountingAppender

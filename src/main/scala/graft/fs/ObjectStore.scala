@@ -1,7 +1,7 @@
 package graft.fs
 
 import org.apache.hadoop.conf.Configuration
-import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.hadoop.fs.{FileSystem, FileUtil, Path}
 
 /** Object-store file management around the job (SURVEY.md §2.1
   * S9/S10; reference aws_read.py / aws_file_download.py /
@@ -48,20 +48,36 @@ final class ObjectStore(conf: Configuration) {
     val s = new Path(src)
     val dstDir = new java.io.File(localDstDir)
     dstDir.mkdirs()
-    val d = new Path(new java.io.File(dstDir, s.getName).getAbsolutePath)
-    fs(s).copyToLocalFile(false, s, d, true)
-    d.toString
+    val d = new java.io.File(dstDir, s.getName)
+    copy(s, local(d))
+    d.getAbsolutePath
   }
 
   /** Local → remote copy (upload_to_s3.py:11-18). */
   def copyFromLocal(localSrc: String, dstDir: String): String = {
-    val s = new Path(localSrc)
+    val s = local(new java.io.File(localSrc))
     val d = new Path(dstDir, s.getName)
     val f = fs(d)
     f.mkdirs(new Path(dstDir))
-    f.copyFromLocalFile(false, true, s, d)
+    copy(s, d)
     d.toString
   }
+
+  /** The local side as a `file:` path: it resolves to the local
+    * filesystem whatever `fs.defaultFS` is, without
+    * `FileSystem.getLocal`. Hadoop's copyFromLocalFile/copyToLocalFile
+    * go through that, and it casts the `file` filesystem to
+    * LocalFileSystem, which fails under graft.Session's
+    * RawLocalFileSystem.
+    */
+  private def local(f: java.io.File): Path = new Path(f.getAbsoluteFile.toURI)
+
+  /** Copy that keeps the source, replaces an existing target, and
+    * fails loudly (FileUtil.copy reports some failures as `false`).
+    */
+  private def copy(s: Path, d: Path): Unit =
+    if (!FileUtil.copy(fs(s), s, fs(d), d, false, true, conf))
+      throw new java.io.IOException(s"copy failed: $s -> $d")
 
   /** S9/S10 delete — scratch cleanup (local_file_delete.py:5-19). */
   def delete(path: String): Boolean = {

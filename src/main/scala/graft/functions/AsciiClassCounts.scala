@@ -83,7 +83,7 @@ object AsciiClassCounts {
     Registration.registerOnce(spark, "ascii_class_counts",
       exprs => AsciiClassCounts(exprs.head))
 
-  /** Column wrapper; requires [[register]] on the active session. */
+  /** Column wrapper, resolved by [[graft.GraftExtensions]] (or [[register]]). */
   def of(c: Column): Column =
     org.apache.spark.sql.functions.call_function("ascii_class_counts", c)
 

@@ -96,7 +96,7 @@ object CharHist {
     Registration.registerOnce(spark, "char_hist",
       exprs => CharHist(exprs.head))
 
-  /** Column wrapper; requires [[register]] on the active session. */
+  /** Column wrapper, resolved by [[graft.GraftExtensions]] (or [[register]]). */
   def of(c: Column): Column =
     org.apache.spark.sql.functions.call_function("char_hist", c)
 

@@ -100,7 +100,7 @@ object DocFingerprint {
     Registration.registerOnce(spark, "doc_fingerprint",
       exprs => DocFingerprint(exprs.head))
 
-  /** Column wrapper; requires [[register]] on the active session. */
+  /** Column wrapper, resolved by [[graft.GraftExtensions]] (or [[register]]). */
   def of(c: Column): Column =
     org.apache.spark.sql.functions.call_function("doc_fingerprint", c)
 

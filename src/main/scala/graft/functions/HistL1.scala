@@ -110,7 +110,7 @@ object HistL1 {
     Registration.registerOnce(spark, "hist_l1",
       exprs => HistL1(exprs(0), exprs(1)))
 
-  /** Column wrapper; requires [[register]] on the active session. */
+  /** Column wrapper, resolved by [[graft.GraftExtensions]] (or [[register]]). */
   def of(a: Column, b: Column): Column =
     org.apache.spark.sql.functions.call_function("hist_l1", a, b)
 

@@ -145,7 +145,7 @@ object MarkerWordCounts {
     Registration.registerOnce(spark, "marker_word_counts",
       exprs => MarkerWordCounts(exprs.head))
 
-  /** Column wrapper; requires [[register]] on the active session. */
+  /** Column wrapper, resolved by [[graft.GraftExtensions]] (or [[register]]). */
   def of(c: Column): Column =
     org.apache.spark.sql.functions.call_function("marker_word_counts", c)
 

@@ -60,7 +60,7 @@ object NfcNormalize {
     Registration.registerOnce(spark, "nfc_normalize",
       exprs => NfcNormalize(exprs.head))
 
-  /** Column wrapper; requires [[register]] on the active session. */
+  /** Column wrapper, resolved by [[graft.GraftExtensions]] (or [[register]]). */
   def of(c: Column): Column =
     org.apache.spark.sql.functions.call_function("nfc_normalize", c)
 

@@ -25,6 +25,13 @@ import org.apache.spark.sql.catalyst.expressions.Expression
   * builder lambda whose class lives under `graft.`). Anything else is
   * replaced, restoring the graft-builder-wins guarantee — with the
   * one WARN that replacement genuinely deserves.
+  *
+  * That guarantee holds only for callers of a `register()` helper,
+  * and graft's operators are not among them: they resolve whatever the
+  * session's registry holds under the name. On a `graft.Session`
+  * session that is the builder [[graft.GraftExtensions]] injected, but
+  * a user temp function registered under the same name replaces it
+  * for every operator that calls the function.
   */
 object Registration {
 

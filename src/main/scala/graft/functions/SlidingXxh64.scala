@@ -157,7 +157,7 @@ object SlidingXxh64 {
     SlidingXxh64(exprs.head, lit(exprs(1), "width"), lit(exprs(2), "stride"))
   }
 
-  /** Column wrapper; requires [[register]] on the active session. */
+  /** Column wrapper, resolved by [[graft.GraftExtensions]] (or [[register]]). */
   def of(c: Column, width: Int, stride: Int): Column =
     org.apache.spark.sql.functions.call_function("sliding_xxh64", c,
       org.apache.spark.sql.functions.lit(width),

@@ -130,7 +130,7 @@ object Sq8Adc {
     Registration.registerOnce(spark, "sq8_adc",
       exprs => Sq8Adc(exprs(0), exprs(1), exprs(2)))
 
-  /** Column wrapper; requires [[register]] on the active session. */
+  /** Column wrapper, resolved by [[graft.GraftExtensions]] (or [[register]]). */
   def of(words: Column, q: Column, widths: Column): Column =
     org.apache.spark.sql.functions.call_function("sq8_adc", words, q, widths)
 

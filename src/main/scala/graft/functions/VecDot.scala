@@ -103,7 +103,7 @@ object VecDot {
     Registration.registerOnce(spark, "vec_dot",
       exprs => VecDot(exprs(0), exprs(1)))
 
-  /** Column wrapper; requires [[register]] on the active session. */
+  /** Column wrapper, resolved by [[graft.GraftExtensions]] (or [[register]]). */
   def of(a: Column, b: Column): Column =
     org.apache.spark.sql.functions.call_function("vec_dot", a, b)
 

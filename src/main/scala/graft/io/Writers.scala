@@ -56,7 +56,6 @@ object Writers {
     */
   def writePartitioned(df: DataFrame, path: String,
                        partitionCols: Seq[String],
-                       codec: String = "snappy",
                        numTasks: Int = 0): Unit = {
     // Explicit partition count: with repartition(cols) alone AQE
     // coalesces the (byte-wise tiny) shuffle to 1-2 tasks, which then
@@ -69,14 +68,14 @@ object Writers {
       .mode("overwrite")
       // snappy: per-file cost is writer+codec init when partitions are
       // fine-grained; zstd's context setup is ~2x snappy's per file.
-      // For fat single-dir outputs where size wins, pass codec=zstd.
-      .option("compression", codec)
+      .option("compression", "snappy")
       .partitionBy(partitionCols: _*)
       .parquet(path)
   }
 
-  /** S7 — JDBC append (database_write.py:11-14). Untouched by tests
-    * (no database in this container); the call shape is the contract.
+  /** S7 — JDBC append (database_write.py:11-14). JdbcSpec and
+    * PipelineSpec run it against embedded Derby, as does perfbench's
+    * ETL set-up.
     */
   def writeJdbcAppend(df: DataFrame, url: String, table: String,
                       props: java.util.Properties): Unit =

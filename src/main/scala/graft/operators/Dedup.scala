@@ -429,7 +429,7 @@ object Dedup {
     // Pair-sized — eager checkpoint, the usual small-result move.
     // (Round 18, measured and kept: merging the checkpoint job with
     // the guard's count() via persist+count ran SLOWER per batch —
-    // 0.55-0.64 s vs 0.43-0.47 s in ComposedProbe — the columnar
+    // 0.55-0.64 s vs 0.43-0.47 s, OPTIMIZATION_r18.md — the columnar
     // cache build on a flat pair grain costs more than the saved job
     // barrier, the round-11 flat-grain rule. The checkpoint stays.)
     // Batch-derived sides carry EXPLICIT broadcast hints (round 17,
@@ -998,7 +998,6 @@ object Dedup {
     */
   def simhashPortableFrame(df: DataFrame, idCol: String, textCol: String,
                            out: String): DataFrame = {
-    graft.functions.DocFingerprint.register(df.sparkSession)
     val sums = (0 until 31).map { i =>
       sum(expr("CASE WHEN _h IS NULL THEN 0 " +
         s"WHEN ((_h >> $i) & 1) = 1 THEN 1 ELSE -1 END")).as(s"_c$i")

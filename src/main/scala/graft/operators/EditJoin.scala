@@ -84,7 +84,6 @@ object EditJoin {
     * CharHist batch signatures.
     */
   private def sigs(df: DataFrame, idCol: String, textCol: String): DataFrame = {
-    graft.functions.CharHist.register(df.sparkSession)
     df.select(col(idCol).as("_id"), col(textCol).as("_text"))
       .select(
         col("_id"), col("_text"),
@@ -107,7 +106,6 @@ object EditJoin {
   def editNearDups(df: DataFrame, idCol: String, textCol: String,
                    maxDist: Int = MaxDist): DataFrame = {
     require(maxDist < BucketWidth, "bucket width must exceed maxDist")
-    graft.functions.HistL1.register(df.sparkSession)
     val sig = sigs(df, idCol, textCol)
     // Join ON the bucket equality alone; every residual predicate
     // rides ONE filter whose conjunct order is cheap -> expensive.
@@ -229,7 +227,6 @@ object EditJoin {
   def editNearDupsSegIndexed(df: DataFrame, idCol: String, textCol: String,
                              maxDist: Int = MaxDist): DataFrame = {
     require(maxDist < BucketWidth, "bucket width must exceed maxDist")
-    graft.functions.HistL1.register(df.sparkSession)
     val sig = sigs(df, idCol, textCol)
 
     // -- long-chunk-side pairs through the segment index ------------
@@ -291,7 +288,6 @@ object EditJoin {
     * and [[IndexVersion]] does not move.
     */
   private def gridChunks(sig: DataFrame, maxDist: Int): DataFrame = {
-    graft.functions.SlidingXxh64.register(sig.sparkSession)
     sig.filter(col("_len") >= minLong(maxDist))
       .select(col("_id").as("_ida"),
         posexplode(graft.functions.SlidingXxh64.of(
@@ -306,7 +302,6 @@ object EditJoin {
     * in-query index and qd69/qs44's stored one.
     */
   private[graft] def slidingWindows(sig: DataFrame, maxDist: Int): DataFrame = {
-    graft.functions.SlidingXxh64.register(sig.sparkSession)
     sig.filter(col("_len") >= minLong(maxDist) - maxDist)
       .select(col("_id").as("_idb"),
         posexplode(graft.functions.SlidingXxh64.of(col("_text"), SegWidth, 1))
@@ -356,7 +351,6 @@ object EditJoin {
                     idCol: String, textCol: String,
                     maxDist: Int = MaxDist): DataFrame = {
     require(maxDist < BucketWidth, "bucket width must exceed maxDist")
-    graft.functions.HistL1.register(batchDocs.sparkSession)
     val bSig = sigs(batchDocs, idCol, textCol)
 
     val longCands = gridChunks(bSig, maxDist)
@@ -622,7 +616,6 @@ object EditJoin {
     * Round17OpsSpec (the qd28 crafted-input pattern).
     */
   private[graft] def genBatch(docs: DataFrame, gen: Int): DataFrame = {
-    graft.functions.DocFingerprint.register(docs.sparkSession)
     docs.filter(col("source") === "src19" &&
       pmod(graft.functions.DocFingerprint.of(col("doc_id").cast("string")),
         lit(2L)) === lit((gen - 1).toLong))

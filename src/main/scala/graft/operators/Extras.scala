@@ -358,10 +358,8 @@ object Extras {
       |ORDER BY doc_a, doc_b""".stripMargin
 
   def editSqlSurface(s: SparkSession, dir: String): DataFrame = {
-    // extension-less host sessions still resolve the functions (the
-    // VecDot register pattern); extension-built sessions no-op here
-    graft.functions.HistL1.register(s)
-    graft.functions.CharHist.register(s)
+    // char_hist and hist_l1 resolve through the session's
+    // GraftExtensions (graft.Session installs it)
     Tables.documents(s, dir).createOrReplaceTempView("documents")
     s.sql(editSqlText)
   }

@@ -159,7 +159,6 @@ object Ivf {
   def searchPq(emb: DataFrame, model: IvfModel, pq: Pq.PqModel,
                queryIds: Seq[Long], k: Int, nProbe: Int,
                shortlist: Int): DataFrame = {
-    graft.functions.VecDot.register(emb.sparkSession)
     val assigned = assign(emb, model)
     val q = assigned.filter(col("vec_id").isin(queryIds: _*))
       .select(col("vec_id").as("query_id"),
@@ -175,7 +174,6 @@ object Ivf {
     */
   def search(emb: DataFrame, model: IvfModel, queryIds: Seq[Long], k: Int,
              nProbe: Int = 4): DataFrame = {
-    graft.functions.VecDot.register(emb.sparkSession)
     val assigned = assign(emb, model)
       .select(col("vec_id"), col("embedding"), col("cluster"),
         org.apache.spark.sql.functions.sqrt(graft.functions.VecDot

@@ -377,7 +377,6 @@ object Multimodal {
     */
   def crossModalAlign(docs: DataFrame, emb: DataFrame,
                       threshold: Double): DataFrame = {
-    graft.functions.VecDot.register(docs.sparkSession)
     val media = mediaFromDocs(docs)
     val meta = decodeMeta(media).toDF()
       .filter(col("valid") && pmod(col("media_id"), lit(2)) === 0)

@@ -135,7 +135,6 @@ object Pq {
   def search(emb: DataFrame, model: PqModel, queryIds: Seq[Long], k: Int,
              shortlist: Int,
              candidates: Option[DataFrame] = None): DataFrame = {
-    graft.functions.VecDot.register(emb.sparkSession)
     val codes = assignCodes(emb, model)
     // per-query exact sub-distance table: nq x m x kCodes rows, tiny
     val adc = emb.filter(col("vec_id").isin(queryIds: _*))

@@ -223,7 +223,6 @@ object Selection {
     */
   def dsirResample(docs: DataFrame, model: DsirModel,
                    k: Int = 64): DataFrame = {
-    graft.functions.DocFingerprint.register(docs.sparkSession)
     // source and fp are doc-constant: thread them through scoreGrain's
     // aggregates as carried keys (a few bytes per token-grain shuffle
     // row) instead of the first cut's SECOND corpus text scan +

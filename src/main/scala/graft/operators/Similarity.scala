@@ -48,7 +48,6 @@ object Similarity {
     * Output: query_id, vec_id, rnk, sim — deterministically ordered.
     */
   def bruteForceKnn(emb: DataFrame, queryIds: Seq[Long], k: Int): DataFrame = {
-    graft.functions.VecDot.register(emb.sparkSession)
     val base = emb.select(col("vec_id"), col("embedding"),
       normN(col("embedding")).as("nrm"))
     val q = base.filter(col("vec_id").isin(queryIds: _*))
@@ -128,7 +127,6 @@ object Similarity {
                         dim: Int = 64, nPlanes: Int = 32,
                         nBands: Int = 4,
                         materialize: Boolean = true): DataFrame = {
-    graft.functions.VecDot.register(emb.sparkSession)
     // nBands = nPlanes (1-bit bands) is the oracle-parity geometry —
     // a pair escapes blocking only when EVERY sign bit differs,
     // p ~ (theta/pi)^nPlanes (~5e-7 per pair at sim 0.3 with 16
@@ -294,7 +292,6 @@ object Similarity {
   def lshKnn(emb: DataFrame, queryIds: Seq[Long], k: Int,
              dim: Int = 64, nPlanes: Int = NumPlanes,
              nBands: Int = PlaneBands): DataFrame = {
-    graft.functions.VecDot.register(emb.sparkSession)
     val base = emb.select(col("vec_id"), col("embedding"),
       normN(col("embedding")).as("nrm"))
       .join(signatureBands(emb, dim, nPlanes, nBands), "vec_id")
@@ -391,8 +388,6 @@ object Similarity {
     * partial aggregate's final hop.
     */
   def centroidOutliers(emb: DataFrame): DataFrame = {
-    val spark = emb.sparkSession
-    graft.functions.VecDot.register(spark)
     val sums = emb
       .select(col("label"), posexplode(col("embedding")).as(Seq("d", "v")))
       .select(col("label"), col("d"),
@@ -529,7 +524,6 @@ object Similarity {
     * nbr_id. [[knnGraphBlocked]] is the cell-blocked scale path.
     */
   def knnGraph(emb: DataFrame, k: Int): DataFrame = {
-    graft.functions.VecDot.register(emb.sparkSession)
     val base = emb.select(col("vec_id"), col("embedding"),
       normN(col("embedding")).as("nrm"))
     val right = base.select(col("vec_id").as("nbr_id"),
@@ -551,7 +545,6 @@ object Similarity {
     */
   def knnGraphBlocked(emb: DataFrame, model: Ivf.IvfModel,
                       k: Int, nProbe: Int): DataFrame = {
-    graft.functions.VecDot.register(emb.sparkSession)
     val assigned = Ivf.assignCells(emb, model)
       .select(col("vec_id").as("nbr_id"), col("cluster"),
         col("embedding").as("n_emb"),
@@ -593,7 +586,6 @@ object Similarity {
     * [[bruteForceKnn]] minus the norm divisions.
     */
   def mipsKnn(emb: DataFrame, queryIds: Seq[Long], k: Int): DataFrame = {
-    graft.functions.VecDot.register(emb.sparkSession)
     val q = emb.filter(col("vec_id").isin(queryIds: _*))
       .select(col("vec_id").as("query_id"), col("embedding").as("q_emb"))
     val w = Window.partitionBy("query_id")
@@ -613,7 +605,6 @@ object Similarity {
     * corpus norms become the constant M, so cosine order ≡ dot order.
     */
   def augmentForMips(emb: DataFrame, m: Double): DataFrame = {
-    graft.functions.VecDot.register(emb.sparkSession)
     emb.withColumn("_sq",
       graft.functions.VecDot.of(col("embedding"), col("embedding")))
       .withColumn("embedding",
@@ -642,7 +633,6 @@ object Similarity {
     */
   def radiusSearch(emb: DataFrame, model: Ivf.IvfModel, queryIds: Seq[Long],
                    minSim: Double, nProbe: Int): DataFrame = {
-    graft.functions.VecDot.register(emb.sparkSession)
     val assigned = Ivf.assignCells(emb, model)
       .select(col("vec_id"), col("cluster"), col("embedding").as("c_emb"),
         normN(col("embedding")).as("c_nrm"))
@@ -680,7 +670,6 @@ object Similarity {
     */
   def semanticDedup(emb: DataFrame, model: Ivf.IvfModel,
                     threshold: Double): DataFrame = {
-    graft.functions.VecDot.register(emb.sparkSession)
     val assigned = Ivf.assignCells(emb, model)
       .select(col("vec_id"), col("cluster"), col("embedding"),
         normN(col("embedding")).as("nrm"))
@@ -714,7 +703,6 @@ object Similarity {
     * frames by design (exempted in PlanSpec's sweep with reason).
     */
   def centroidMatrix(emb: DataFrame): DataFrame = {
-    graft.functions.VecDot.register(emb.sparkSession)
     val sums = emb
       .select(col("label"), posexplode(col("embedding")).as(Seq("d", "v")))
       .select(col("label"), col("d"),
@@ -768,7 +756,6 @@ object Similarity {
   def mmrDiversify(emb: DataFrame, queryId: Long, k: Int, pool: Int,
                    lambda: Double): DataFrame = {
     val spark = emb.sparkSession
-    graft.functions.VecDot.register(spark)
     import spark.implicits._
     val base = emb.select(col("vec_id"), col("embedding"),
       normN(col("embedding")).as("nrm"))

@@ -136,7 +136,6 @@ object Sketch {
     * caveat, solved the way production solves it).
     */
   def tokenRegisters(docs: DataFrame): DataFrame = {
-    DocFingerprint.register(docs.sparkSession)
     withRegisterCols(
       docs.where(col("text").isNotNull)
         .select(col("source"), explode(Dedup.tokens(col("text"))).as("item")),
@@ -160,7 +159,6 @@ object Sketch {
       .orderBy("source")
 
   def hllProfile(docs: DataFrame): DataFrame = {
-    DocFingerprint.register(docs.sparkSession)
     val toks = docs.select(col("source"), lit("token").as("grain"),
       explode(Dedup.tokens(col("text"))).as("item"))
     val grams = Dedup
@@ -239,7 +237,6 @@ object Sketch {
     * the report's truth column; the production path drops it.
     */
   def hllOverlap(docs: DataFrame): DataFrame = {
-    DocFingerprint.register(docs.sparkSession)
     // two consumers (exact overlap + registers): localCheckpoint, not
     // persist — the flat item grain is the pairJaccard case (blocks
     // free on GC, no caller reap contract)
@@ -477,7 +474,6 @@ object Sketch {
     * FOREVER (the qs40 boundedness argument, third member).
     */
   def tokenCmEvents(docs: DataFrame): DataFrame = {
-    DocFingerprint.register(docs.sparkSession)
     docs.where(col("text").isNotNull)
       .select(col("source"), explode(Dedup.tokens(col("text"))).as("item"))
       .withColumn("fp", DocFingerprint.of(col("item")))
@@ -490,7 +486,6 @@ object Sketch {
     * map-side-combined aggregate, regardless of vocabulary size.
     */
   def cmCounters(tfc: DataFrame): DataFrame = {
-    DocFingerprint.register(tfc.sparkSession)
     tfc.withColumn("fp", DocFingerprint.of(col("item")))
       .select(col("source"), col("tf"), explode(cmRowBuckets()).as("rb"))
       .groupBy(col("source"), col("rb.r").as("r"), col("rb.b").as("b"))
@@ -513,7 +508,6 @@ object Sketch {
     * (min over the 4 row counters) and the signed overestimate.
     */
   def cmReport(tfc: DataFrame, counters: DataFrame, k: Int): DataFrame = {
-    DocFingerprint.register(tfc.sparkSession)
     val top = tfc
       .withColumn("rnk", row_number().over(Window.partitionBy("source")
         .orderBy(col("tf").desc, col("item"))))
@@ -557,7 +551,6 @@ object Sketch {
     * once; qd62 checkpoints for its two legs.
     */
   def tokenTf(docs: DataFrame): DataFrame = {
-    DocFingerprint.register(docs.sparkSession)
     docs.where(col("text").isNotNull)
       .select(col("source"), explode(Dedup.tokens(col("text"))).as("item"))
       .groupBy("source", "item").agg(count(lit(1)).as("tf"))
@@ -611,7 +604,6 @@ object Sketch {
     * job, at O(k) state.
     */
   def tokenHashEvents(docs: DataFrame): DataFrame = {
-    DocFingerprint.register(docs.sparkSession)
     withAvalanche(
       docs.where(col("text").isNotNull)
         .select(col("source"), explode(Dedup.tokens(col("text"))).as("item")),
@@ -624,7 +616,6 @@ object Sketch {
     * used to re-inline this chain and could drift from the sample's).
     */
   private def distinctTokenHashes(docs: DataFrame): DataFrame = {
-    DocFingerprint.register(docs.sparkSession)
     withAvalanche(
         docs.where(col("text").isNotNull)
           .select(col("source"),

@@ -186,7 +186,6 @@ object Sq {
   def search(emb: DataFrame, model: SqModel, queryIds: Seq[Long], k: Int,
              shortlist: Int,
              packedTable: Option[DataFrame] = None): DataFrame = {
-    graft.functions.VecDot.register(emb.sparkSession)
     val qVecs: Seq[(Long, Array[Double])] = emb
       .filter(col("vec_id").isin(queryIds: _*))
       .select(col("vec_id"), col("embedding"))

@@ -161,7 +161,6 @@ object TextPrep {
     * allocation) is spec-covered instead. Map-only, zero shuffle.
     */
   def normalizeQuery(s: SparkSession, dir: String): DataFrame = {
-    graft.functions.NfcNormalize.register(s)
     Tables.documents(s, dir)
       // the suffix is DECOMPOSED on purpose: 'e' + U+0301 combining
       // acute (6 codepoints), which NFC composes to " café" (5)

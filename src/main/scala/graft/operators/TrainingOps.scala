@@ -378,7 +378,6 @@ object TrainingOps {
     * TextFns.qualitySignalsFrom).
     */
   def quality(s: SparkSession, dir: String): DataFrame = {
-    graft.functions.AsciiClassCounts.register(s)
     val sigs = TextFns.qualitySignalsFrom(col("_c"), col("_stops"),
       col("_ntok"), col("_len"))
     Tables.documents(s, dir)
@@ -396,7 +395,6 @@ object TrainingOps {
     * reference (13x; see TextFns.langIdDecision).
     */
   def langId(s: SparkSession, dir: String): DataFrame = {
-    graft.functions.MarkerWordCounts.register(s)
     Tables.documents(s, dir)
       .withColumn("_m", graft.functions.MarkerWordCounts.of(col("text")))
       .withColumn("_zh", col("text").rlike("[\\x{4e00}-\\x{9fff}]"))
@@ -410,7 +408,6 @@ object TrainingOps {
     * list_reduce over codepoints (ASCII corpus ⇒ bytes==codepoints).
     */
   def fingerprint(s: SparkSession, dir: String): DataFrame = {
-    DocFingerprint.register(s)
     Tables.documents(s, dir)
       .select(col("doc_id"), DocFingerprint.of(col("text")).as("fp"))
       .orderBy("doc_id")
@@ -509,7 +506,6 @@ object TrainingOps {
     * estimate is integer-match-count / 16.0, exact on both engines.
     */
   def minhashEstimate(s: SparkSession, dir: String): DataFrame = {
-    DocFingerprint.register(s)
     minhashEstimateOn(Tables.documents(s, dir))
   }
 
@@ -666,7 +662,6 @@ object TrainingOps {
     * projection — no extra exchange.
     */
   def leakageSplit(s: SparkSession, dir: String): DataFrame = {
-    graft.functions.DocFingerprint.register(s)
     splitOnLabels(dupLabels(s, dir))
   }
 
@@ -675,7 +670,6 @@ object TrainingOps {
     * self-contained form); `trainPct` is the train share in [0,100].
     */
   def leakageSplitOn(docs: DataFrame, trainPct: Int = 80): DataFrame = {
-    graft.functions.DocFingerprint.register(docs.sparkSession)
     val pairs = Dedup.minhashNearDups(docs, "doc_id", "text", threshold = 0.9)
     splitOnLabels(Dedup.dupClusters(docs, pairs, "doc_id")
       .select(col("id").as("doc_id"), col("cluster")), trainPct)
@@ -1080,7 +1074,6 @@ object TrainingOps {
     * pass — no shuffle at all until the output sort.
     */
   def hashSample(s: SparkSession, dir: String): DataFrame = {
-    graft.functions.DocFingerprint.register(s)
     val rate = lit(20) + lit(20) * pmod(length(col("source")), lit(3))
     Tables.documents(s, dir)
       .withColumn("bucket",
@@ -1176,7 +1169,6 @@ object TrainingOps {
     * reduces map-side, so the exchange carries only label-count rows.
     */
   def normAudit(s: SparkSession, dir: String): DataFrame = {
-    graft.functions.VecDot.register(s)
     Tables.embeddings(s, dir)
       .select(col("label"), size(col("embedding")).as("dim"),
         sqrt(graft.functions.VecDot.of(col("embedding"), col("embedding")))
@@ -1694,7 +1686,6 @@ object TrainingOps {
     * 250 documents.
     */
   def temperatureSampleQuery(s: SparkSession, dir: String): DataFrame = {
-    graft.functions.DocFingerprint.register(s)
     temperatureSample(Tables.documents(s, dir), "lang", target = 250L)
   }
 
@@ -1926,7 +1917,6 @@ object TrainingOps {
     * stays explicit.
     */
   def knnFiltered(s: SparkSession, dir: String): DataFrame = {
-    graft.functions.VecDot.register(s)
     val emb = Tables.embeddings(s, dir)
     val model = ivfModel(s, dir)
     val enIds = Tables.documents(s, dir).where(col("lang") === "en")
@@ -1991,7 +1981,6 @@ object TrainingOps {
     */
   def knnHardNegativesAt(s: SparkSession, dir: String,
                          nProbe: Int): DataFrame = {
-    graft.functions.VecDot.register(s)
     val emb = Tables.embeddings(s, dir)
     val model = ivfModel(s, dir)
     val langs = Tables.documents(s, dir)
@@ -2123,7 +2112,6 @@ object TrainingOps {
     * shuffling full gram strings.
     */
   def dedupQuality(s: SparkSession, dir: String): DataFrame = {
-    DocFingerprint.register(s)
     dedupQualityOn(Tables.documents(s, dir), Seq(0.5, 0.7, 0.9))
   }
 
@@ -2382,7 +2370,6 @@ object TrainingOps {
     */
   def rotateEmbeddings(emb: DataFrame,
                        rot: Array[Array[Double]]): DataFrame = {
-    graft.functions.VecDot.register(emb.sparkSession)
     val comps = rot.map { row =>
       graft.functions.VecDot.of(col("embedding"),
         lit(row.map(_.toFloat))).cast("float")
@@ -2405,7 +2392,6 @@ object TrainingOps {
     * source table, which also proves the roundtrip lost nothing.
     */
   def shardExport(s: SparkSession, dir: String): DataFrame = {
-    DocFingerprint.register(s)
     val root = graft.io.Scratch.qd50Dir(dir)
     val docs = Tables.documents(s, dir)
       .withColumn("fp", DocFingerprint.of(col("text")))

@@ -125,7 +125,6 @@ object VecAdmission {
     * artifact ≡ fresh parity check.
     */
   def freshCells(s: SparkSession, dir: String): DataFrame = {
-    graft.functions.VecDot.register(s)
     Ivf.assignCells(corpusEmb(s, dir), corpusModel(s, dir))
       .select(col("vec_id"), col("cluster"),
         sqrt(graft.functions.VecDot.of(col("embedding"), col("embedding")))
@@ -181,8 +180,6 @@ object VecAdmission {
   def admit(arrivals: DataFrame, cells: DataFrame, codes: DataFrame,
             corpus: DataFrame, model: Ivf.IvfModel, sq: Sq.SqModel,
             k: Int, nProbe: Int, shortlist: Int): DataFrame = {
-    graft.functions.VecDot.register(arrivals.sparkSession)
-    graft.functions.Sq8Adc.register(arrivals.sparkSession)
     val q = arrivals.select(col("query_id"), col("q_emb"),
       sqrt(graft.functions.VecDot.of(col("q_emb"), col("q_emb")))
         .as("q_nrm"))
@@ -339,8 +336,6 @@ object VecAdmission {
         val cells = storedCells(s, dir)
         val codes = storedCodes(s, dir)
         val corpus = corpusEmb(s, dir)
-        graft.functions.VecDot.register(s)
-        graft.functions.Sq8Adc.register(s)
         // Ladder restructure (round 17, guide §1.2): the rungs share
         // ALL their expensive work, so hoist it out of the walk —
         //  (a) the interpreted nearest-centroid scoring HOF ran once
@@ -444,7 +439,6 @@ object VecAdmission {
   def publishAdmitted(cells: DataFrame, codes: DataFrame,
                       admitted: DataFrame, model: Ivf.IvfModel,
                       sq: Sq.SqModel): (DataFrame, DataFrame) = {
-    graft.functions.VecDot.register(admitted.sparkSession)
     val newCells = Ivf.assignCells(admitted, model)
       .select(col("vec_id"), col("cluster"),
         sqrt(graft.functions.VecDot.of(col("embedding"), col("embedding")))

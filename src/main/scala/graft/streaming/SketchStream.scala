@@ -82,9 +82,9 @@ object SketchStream {
     * (wall-clock ≈ one drain, and each still consumes all four
     * micro-batch files — the boundary-independence conditions are
     * unchanged); what is cached is kilobyte-sized collected state
-    * (≤ 4·256 rows per source), never a DataFrame — the Bench
-    * interRunReset contract (driver caches hold collected objects or
-    * parquet paths only).
+    * (≤ 4·256 rows per source), never a DataFrame — the
+    * [[graft.Session.reset]] contract (driver caches hold collected
+    * objects or parquet paths only).
     */
   private final case class Drained(
       hll: (org.apache.spark.sql.types.StructType,

@@ -1,17 +1,23 @@
 package graft
 
 /** The library deployment path: `spark.sql.extensions=
-  * graft.GraftExtensions` (set by SparkSpec's builder, exactly as the
-  * Verify/Bench mains set it) must put every custom function in the
+  * graft.GraftExtensions` (set by [[graft.Session]], which every main
+  * and SparkSpec build through) must put every custom function in the
   * catalog at session construction. Proven against a `newSession()`
   * child: it shares the extensions applied at build time but has a
   * FRESH temp-function registry, so a resolution there cannot come
-  * from another suite's `register()` call.
+  * from another suite's `register()` call. Operators register nothing
+  * themselves, so every injected name must resolve this way.
   */
 class GraftExtensionsSpec extends SparkSpec {
 
   test("extension-injected functions resolve in a registry-fresh session") {
     val fresh = spark.newSession()
+    GraftExtensions.functions.foreach { case (id, _, _) =>
+      val info = fresh.sessionState.functionRegistry.lookupFunction(id)
+      assert(info.map(_.getClassName).contains("graft.functions"),
+        s"${id.funcName} is not the injected graft entry: $info")
+    }
     // decomposed e + U+0301 in, precomposed expected out
     val row = fresh.sql(
       s"""SELECT doc_fingerprint('graft') AS fp,

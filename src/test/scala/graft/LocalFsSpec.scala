@@ -111,7 +111,8 @@ class LocalFsSpec extends SparkSpec {
   }
 
   test("writePartitioned lays down a plain write's files, modes and .crc (Raw and default)") {
-    Seq(spark -> true, sessionWith(classOf[RawLocalFileSystem]) -> false)
+    Seq(sessionWith(classOf[LocalFileSystem]) -> true,
+        sessionWith(classOf[RawLocalFileSystem]) -> false)
       .foreach { case (s, checksummed) =>
         val df = frame(s)
         val plain = tempDir("localfs_plain")
@@ -139,7 +140,10 @@ class LocalFsSpec extends SparkSpec {
   }
 
   test("routed writes reach LocalFs: its statistics count the bytes written") {
-    Seq(spark, sessionWith(classOf[RawLocalFileSystem])).foreach { s =>
+    // `spark` (Raw under graft.Session) keeps the FileSystem cache on:
+    // the cached `file` instance is Raw, so only a write that disables
+    // the cache reaches LocalFs
+    Seq(spark, sessionWith(classOf[LocalFileSystem])).foreach { s =>
       val stats = FileSystem.getStatistics("file", classOf[LocalFs])
       val before = stats.getBytesWritten
       val out = tempDir("localfs_stats")

@@ -93,6 +93,12 @@ class PipelineSpec extends SparkSpec {
       == "graft-roundtrip-123")
     assert(store.exists(up), "download must copy, not move")
     assert(down.endsWith("payload.txt"))
+    // a second round trip over the same targets replaces them
+    Files.writeString(src.toPath, "graft-roundtrip-456")
+    assert(store.copyFromLocal(src.getAbsolutePath, s"$root/remote") == up)
+    assert(store.copyToLocal(up, s"$root/local") == down)
+    assert(Files.readString(Paths.get(s"$root/local/payload.txt"))
+      == "graft-roundtrip-456")
   }
 
   test("ensureEventsLanding repairs dangling and re-pointed symlinks") {

@@ -330,6 +330,47 @@ class PlanSpec extends SparkSpec
       "gen-2 must probe the published gen-1 artifacts: " + p)
   }
 
+  // The streaming drains (qs39/qs44/qs46/qs48) hand the admission
+  // operators a foreachBatch frame: a LogicalRDD with default, huge
+  // statistics, so only hints or a small corpus side can broadcast.
+  // The declared queries return the post-drain read, so their own
+  // plans never show these; the pins run the operators as the drains
+  // do (plans/r18/drain_*_after.txt records the same strategies).
+  private def drainSplit: (org.apache.spark.sql.DataFrame,
+      org.apache.spark.sql.DataFrame) = {
+    import org.apache.spark.sql.functions.col
+    val docs = graft.core.Tables.documents(spark, sf)
+    val batch = docs.where(col("source") === "src19")
+    (docs.where(col("source") =!= "src19"),
+      spark.createDataFrame(batch.rdd, batch.schema))
+  }
+
+  private def joinCounts(p: String): (Int, Int) =
+    ("BroadcastHashJoin".r.findAllIn(p).size, "SortMergeJoin".r.findAllIn(p).size)
+
+  test("drain editAdmission: the batch probes broadcast corpus sides, never cartesian") {
+    import graft.operators.EditJoin
+    val (corpus, batch) = drainSplit
+    val p = plan(EditJoin.editAdmission(corpus,
+      EditJoin.storedWindowIndex(spark, sf, corpus),
+      EditJoin.storedSignatures(spark, sf, corpus), batch, "doc_id", "text"))
+    noAllPairs(p)
+    // window probe, band probe, signature and text join-backs
+    // broadcast; the candidate/batch join and the verdict join shuffle
+    assert(joinCounts(p) == (4, 2), p)
+  }
+
+  test("drain admitAgainst: batch-derived sides broadcast, one verify shuffle") {
+    val (corpus, batch) = drainSplit
+    val p = plan(graft.operators.Dedup.admitAgainst(corpus,
+      graft.operators.TrainingOps.corpusBands(spark, sf), batch,
+      threshold = 0.9, materialize = false))
+    noAllPairs(p)
+    // batch bands (x3), the band-collision pair set, the candidate ids
+    // (x2) and the verdicts broadcast; only the Jaccard verify shuffles
+    assert(joinCounts(p) == (7, 1), p)
+  }
+
   test("qe25: admission probes stored artifacts, never cartesian") {
     // NOTE: building this frame materializes the cell/code artifacts
     // at sf0.001 (the declared query's contract, qd69 precedent)

@@ -115,10 +115,17 @@ class SessionStreamSpec extends SparkSpec {
     // streaming gates must be backend-agnostic, proven by strict
     // result equality on a real corpus drain
     val sf = "/root/testdata/sf0.001"
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val prev = spark.conf.getOption(key)
-    spark.conf.set(key,
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
+    // RocksDB uploads its snapshot files with copyFromLocalFile, which
+    // casts the `file` filesystem to LocalFileSystem: it cannot run on
+    // graft.Session's RawLocalFileSystem, so this drain checkpoints
+    // through the checksummed one (uncached, so the cast sees it)
+    val confs = Map(
+      "spark.sql.streaming.stateStore.providerClass" ->
+        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
+      "fs.file.impl" -> classOf[org.apache.hadoop.fs.LocalFileSystem].getName,
+      "fs.file.impl.disable.cache" -> "true")
+    val prev = confs.keys.map(k => k -> spark.conf.getOption(k)).toMap
+    confs.foreach { case (k, v) => spark.conf.set(k, v) }
     try {
       val rocks = graft.streaming.SessionStream
         .sessionWindowGate(spark, sf).collect().toSeq
@@ -126,9 +133,9 @@ class SessionStreamSpec extends SparkSpec {
         .collect().toSeq
       assert(rocks == batch,
         s"RocksDB drain ${rocks.length} rows vs batch ${batch.length}")
-    } finally prev match {
-      case Some(v) => spark.conf.set(key, v)
-      case None => spark.conf.unset(key)
+    } finally prev.foreach {
+      case (k, Some(v)) => spark.conf.set(k, v)
+      case (k, None) => spark.conf.unset(k)
     }
   }
 

@@ -4,20 +4,12 @@ import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Shared local session for all suites (one JVM-wide session via
-  * getOrCreate; suites must not stop() it).
+  * getOrCreate; suites must not stop() it). Four cores whatever
+  * `SPARK_GRAFT_CPUS` says, so plan and partition-count assertions
+  * see the same session on every host.
   */
 trait SparkSpec extends AnyFunSuite {
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName("graft-test")
-    // the library's deployment config: custom functions injected at
-    // session construction (GraftExtensionsSpec proves resolution in
-    // a registry-fresh child session)
-    .config("spark.sql.extensions", "graft.GraftExtensions")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  lazy val spark: SparkSession = Session.local(4)
 
   def tempDir(prefix: String): String =
     java.nio.file.Files.createTempDirectory(prefix).toString
