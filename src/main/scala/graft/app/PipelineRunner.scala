@@ -6,8 +6,9 @@ import graft.ingest.CsvIngest
 import graft.io.Writers
 import graft.ledger.RunLedger
 import graft.marts.RetailMarts
+import java.util.concurrent.{Callable, ExecutionException, Executors}
 import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
-import org.apache.spark.sql.functions.{count, lit}
+import org.apache.spark.sql.functions.{broadcast, count, lit}
 
 /** End-to-end batch run composing the modules into the reference's
   * §3.1 stage graph: failed-run check → list → validate/quarantine →
@@ -20,8 +21,13 @@ import org.apache.spark.sql.functions.{count, lit}
   *    CSV scan per distinct header, instead of the reference's per-file
   *    conform+union (main.py:235-258), so ingest costs no Spark job
   *    per file and the plan does not grow with the file count;
-  *  - the enriched frame is cached before mart fan-out (the reference
-  *    recomputes the whole lineage ≥6 times);
+  *  - the JDBC dimensions are broadcast into the streamed fact, so the
+  *    enrichment keeps the fact scan's tasks (the reference leaves the
+  *    join to Catalyst, which, with no size estimate for a JDBC
+  *    relation, broadcasts the fact and runs the join in one task);
+  *  - the enriched frame is cached and materialized by one count
+  *    before the mart fan-out (the reference recomputes the whole
+  *    lineage ≥6 times), and the three mart writes run concurrently;
   *  - mart row counts are observed on the flat writes, not read back;
   *  - local mart writes set file modes in-process (`Writers.sink`),
   *    not with one forked `chmod` per file and directory;
@@ -42,10 +48,13 @@ object PipelineRunner {
       * (main.py:272-289 via database_read.py:7-9); callers that
       * already hold DataFrames can keep passing them directly.
       *
-      * Scale note: a plain `read.jdbc(table)` is a single-partition
-      * pull, which is exactly right for broadcast-bound dimension
-      * tables; a dimension too large to broadcast should come in
-      * through a partitioned read (predicates / bounds) instead.
+      * Each is a single-partition `read.jdbc(table)` pull wrapped in
+      * `broadcast(...)`: a JDBC relation carries no size estimate, so
+      * without the hint Catalyst broadcasts the (estimated) fact
+      * instead and streams the one-partition dimension scan, which
+      * leaves the enrichment and everything after it one task wide.
+      * Only for dimensions that fit a broadcast; a larger one comes in
+      * through [[jdbcPartitioned]], which carries no hint.
       */
     def fromJdbc(spark: SparkSession, url: String,
                  props: java.util.Properties,
@@ -53,9 +62,9 @@ object PipelineRunner {
                  storeTable: String = "store",
                  salesTeamTable: String = "sales_team"): Dimensions =
       Dimensions(
-        customer = spark.read.jdbc(url, customerTable, props),
-        store = spark.read.jdbc(url, storeTable, props),
-        salesTeam = spark.read.jdbc(url, salesTeamTable, props))
+        customer = broadcast(spark.read.jdbc(url, customerTable, props)),
+        store = broadcast(spark.read.jdbc(url, storeTable, props)),
+        salesTeam = broadcast(spark.read.jdbc(url, salesTeamTable, props)))
 
     /** Partitioned JDBC scan for a dimension too large to broadcast:
       * `numPartitions` concurrent range queries split on a numeric
@@ -63,7 +72,8 @@ object PipelineRunner {
       * reference's whole-table `database_read.py:7-9` pull lacks.
       * Bounds only shape the split points; rows OUTSIDE them still
       * arrive (Spark's first/last partitions are unbounded), so the
-      * read is always complete.
+      * read is always complete. No broadcast hint: Catalyst and AQE
+      * choose the join from the scan's runtime size.
       */
     def jdbcPartitioned(spark: SparkSession, url: String,
                         props: java.util.Properties, table: String,
@@ -84,6 +94,27 @@ object PipelineRunner {
 
   private def fileName(p: String): String =
     new org.apache.hadoop.fs.Path(p).getName
+
+  /** Run `writes` on a pool of their own and wait until every one has
+    * settled, then rethrow the first failure (in `writes` order; later
+    * ones ride along as suppressed). The pool's threads are started
+    * from the calling thread, so they inherit its SparkContext local
+    * properties: job group, job description, scheduler pool.
+    */
+  private def writeConcurrently(writes: (() => Unit)*): Unit = {
+    val pool = Executors.newFixedThreadPool(writes.size)
+    try {
+      val pending = writes.map(w => pool.submit(new Callable[Unit] { def call(): Unit = w() }))
+      val failures = pending.flatMap { f =>
+        try { f.get(); None }
+        catch { case e: ExecutionException => Some(e.getCause) }
+      }
+      failures.headOption.foreach { first =>
+        failures.tail.foreach(first.addSuppressed)
+        throw first
+      }
+    } finally pool.shutdown()
+  }
 
   def run(spark: SparkSession, cfg: PipelineConfig, dims: Dimensions,
           ledger: RunLedger): RunReport = {
@@ -106,38 +137,42 @@ object PipelineRunner {
         DimensionEnricher.EnrichmentAudit(0, 0), 0, 0)
     }
 
-    // stage 7 — conform + union; cache before multi-action fan-out
-    val fact = CsvIngest.read(spark, goodHeaders).cache()
+    // stage 7 — conform + union
+    val fact = CsvIngest.read(spark, goodHeaders)
 
-    // stages 8-10 — enrich with audit (observe() metrics: the counts
-    // ride the first mart write below, zero extra jobs)
+    // stages 8-10 — enrich with audit (observe() metrics). One count
+    // builds the cache, which the three writes below read, and
+    // completes the audit before they fan out
     val (enriched, auditOf) = DimensionEnricher.enrichWithAudit(
       fact, dims.customer, dims.store, dims.salesTeam)
     enriched.cache()
+    try {
+      enriched.count()
 
-    // stages 10-11 — marts + writes (flat + partitioned, main.py:313-365);
-    // the flat writes' row counts ride them as observe() metrics
-    val cmRows = Observation()
-    val smRows = Observation()
-    val customerMart = RetailMarts.customerMart(enriched)
-    val salesMart = RetailMarts.salesMart(enriched)
-    Writers.writeFlat(customerMart.observe(cmRows, count(lit(1)).as("rows")),
-      s"${cfg.outputDir}/customers_data_mart")
-    Writers.writeFlat(salesMart.observe(smRows, count(lit(1)).as("rows")),
-      s"${cfg.outputDir}/sales_team_data_mart")
-    Writers.writePartitioned(salesMart,
-      s"${cfg.outputDir}/sales_team_data_mart_partitioned",
-      Seq("sales_month", "store_id"))
+      // stages 10-11 — marts + writes (flat + partitioned,
+      // main.py:313-365), run concurrently; the flat writes' row counts
+      // ride them as observe() metrics
+      val cmRows = Observation()
+      val smRows = Observation()
+      val customerMart = RetailMarts.customerMart(enriched)
+      val salesMart = RetailMarts.salesMart(enriched)
+      writeConcurrently(
+        () => Writers.writeFlat(customerMart.observe(cmRows, count(lit(1)).as("rows")),
+          s"${cfg.outputDir}/customers_data_mart"),
+        () => Writers.writeFlat(salesMart.observe(smRows, count(lit(1)).as("rows")),
+          s"${cfg.outputDir}/sales_team_data_mart"),
+        () => Writers.writePartitioned(salesMart,
+          s"${cfg.outputDir}/sales_team_data_mart_partitioned",
+          Seq("sales_month", "store_id")))
 
-    // stage 14 — archive + flip to 'I' (main.py:396-443)
-    good.foreach(p => store.move(p, cfg.processedDir))
-    ledger.markInactive(good.map(fileName))
-    fact.unpersist()
-    enriched.unpersist()
+      // stage 14 — archive + flip to 'I' (main.py:396-443)
+      good.foreach(p => store.move(p, cfg.processedDir))
+      ledger.markInactive(good.map(fileName))
 
-    // the mart writes above flowed through the observed plans, so the
-    // metrics are already collected — this never triggers a job
-    RunReport(stale, good, bad, auditOf(),
-      cmRows.get("rows").asInstanceOf[Long], smRows.get("rows").asInstanceOf[Long])
+      // the count and the writes above flowed through the observed
+      // plans, so the metrics are already collected — no job here
+      RunReport(stale, good, bad, auditOf(),
+        cmRows.get("rows").asInstanceOf[Long], smRows.get("rows").asInstanceOf[Long])
+    } finally enriched.unpersist()
   }
 }

@@ -14,10 +14,15 @@ import org.apache.spark.sql.functions._
   *  - inner joins silently discard unmatched fact rows — semantics
   *    kept, but [[EnrichmentAudit]] makes the loss observable.
   *
-  * Scale: dimensions are broadcast-eligible; we leave the choice to
-  * Catalyst/AQE (a 100 TB deployment may have a customer dimension
-  * far beyond broadcast threshold; AQE demotes to shuffle join with
-  * accurate runtime stats).
+  * Scale: the join strategy comes from the inputs. Catalyst picks the
+  * broadcast side by size estimate, and a JDBC relation has none: over
+  * unhinted JDBC dimensions it broadcast the CSV fact and streamed the
+  * one-partition dimension scan, so the join ran as one task.
+  * `PipelineRunner.Dimensions.fromJdbc` therefore hints its whole-table
+  * pulls `broadcast(...)`, which streams the fact with its scan's
+  * tasks; `jdbcPartitioned` stays unhinted, so for a dimension far
+  * beyond the broadcast threshold Catalyst/AQE choose the join from
+  * runtime stats.
   */
 object DimensionEnricher {
 
@@ -52,7 +57,7 @@ object DimensionEnricher {
     * the caller's cache() is populated, computed the whole enrichment
     * twice — VERDICT r3 #2). The audit thunk blocks until an action
     * has flowed through the observed plan, so call it after the first
-    * write/collect (PipelineRunner does).
+    * action (PipelineRunner's count that builds its cache).
     */
   def enrichWithAudit(fact: DataFrame, customer: DataFrame,
                       store: DataFrame, salesTeam: DataFrame)

@@ -50,9 +50,17 @@ object Writers {
     * hive directory lives in exactly one task's output, so the driver
     * merge is one rename per directory (on S3A prefer the magic
     * committer). Locally the per-file cost is neither the disk nor the
-    * committer's renames but a forked `chmod` per created file and
-    * directory: the 1,995-directory etl_monthly mart write spent
-    * 34.8 s of task time on 7.1 s of CPU. [[sink]] removes the forks.
+    * committer's renames. [[sink]] removes the forked `chmod` per
+    * created file and directory; what is left is CPU-bound per-file
+    * Parquet set-up. In a cold etl_monthly run on 4 vCPU, the
+    * 1,997-file mart write's last stage took 2.6–3.1 s of wall time on
+    * 4.8 s of CPU and 9–12 s of task time. A 1 ms JFR profile of it has
+    * 563 of 622 task samples in closing one file and opening the next.
+    * 111 of those are `ColumnConfigParser.parseConfig`, which copies and
+    * prefix-scans the whole job `Configuration` for every file. 46 are
+    * the schema JSON parse in `ParquetWriteSupport.init`, and 22 are
+    * building a `FileSystem` per file, since this write disables the
+    * cache.
     */
   def writePartitioned(df: DataFrame, path: String,
                        partitionCols: Seq[String],

@@ -2,32 +2,43 @@ package graft
 
 import graft.app.PipelineRunner
 import graft.app.PipelineRunner.{Dimensions, PipelineConfig}
+import graft.enrich.DimensionEnricher
 import graft.fs.ObjectStore
 import graft.ingest.CsvIngest
 import graft.ledger.InMemoryRunLedger
 import java.nio.file.{Files, Paths}
-import java.util.concurrent.{CountDownLatch, TimeUnit}
+import java.util.concurrent.{ConcurrentHashMap, CountDownLatch, TimeUnit}
 import java.util.concurrent.atomic.AtomicInteger
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart}
+import org.apache.spark.sql.catalyst.optimizer.BuildRight
+import org.apache.spark.sql.catalyst.plans.logical.ResolvedHint
+import org.apache.spark.sql.execution.{FileSourceScanExec, RowDataSourceScanExec, SparkPlan}
+import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+import org.apache.spark.sql.execution.exchange.{BroadcastExchangeExec, ReusedExchangeExec}
+import org.apache.spark.sql.execution.joins.BroadcastHashJoinExec
 
 class PipelineSpec extends SparkSpec {
 
-  /** Spark jobs started by `body`, counted by a listener on the jobs of
-    * a job group set around it. The listener bus is asynchronous, so a
-    * marker job in the same group flushes it: once the listener has
-    * seen the marker, it has seen every job `body` started.
+  /** Spark jobs started by `body`, and how many of them were still
+    * running when it returned, seen by a listener on the jobs of a job
+    * group set around it. The listener bus is asynchronous, so a
+    * marker job in the same group, started after `body`, flushes it:
+    * once the listener has seen the marker, it has seen every job
+    * `body` started and the end of every one that had ended.
     */
-  private def jobsStartedBy(body: => Unit): Int = {
+  private def jobsOf(body: => Unit): (Int, Int) = {
     val sc = spark.sparkContext
     val group = s"job-count-${java.util.UUID.randomUUID}"
     val jobs = new AtomicInteger
+    val active = ConcurrentHashMap.newKeySet[Int]()
     val marker = new CountDownLatch(1)
     val listener = new SparkListener {
       override def onJobStart(e: SparkListenerJobStart): Unit =
         if (e.properties != null && e.properties.getProperty("spark.jobGroup.id") == group) {
           if (e.properties.getProperty("spark.job.description") == group) marker.countDown()
-          else jobs.incrementAndGet()
+          else { jobs.incrementAndGet(); active.add(e.jobId) }
         }
+      override def onJobEnd(e: SparkListenerJobEnd): Unit = active.remove(e.jobId)
     }
     sc.addSparkListener(listener)
     sc.setJobGroup(group, "")
@@ -36,13 +47,51 @@ class PipelineSpec extends SparkSpec {
       sc.setJobDescription(group)
       sc.parallelize(Seq(1), 1).count()
       assert(marker.await(60, TimeUnit.SECONDS), "the listener never saw the marker job")
-      jobs.get
+      (jobs.get, active.size)
     } finally {
       sc.clearJobGroup()
       sc.setJobDescription(null)
       sc.removeSparkListener(listener)
     }
   }
+
+  private def jobsStartedBy(body: => Unit): Int = jobsOf(body)._1
+
+  private val derbyProps = {
+    val props = new java.util.Properties()
+    props.setProperty("driver", "org.apache.derby.jdbc.EmbeddedDriver")
+    props
+  }
+
+  /** The F4 dimensions appended to a fresh in-memory Derby database;
+    * returns its URL.
+    */
+  private def derbyDims(db: String): String = {
+    val url = s"jdbc:derby:memory:$db;create=true"
+    val (c, s, st) = Fixtures.dims(spark)
+    graft.io.Writers.writeJdbcAppend(c, url, "customer", derbyProps)
+    graft.io.Writers.writeJdbcAppend(s, url, "store", derbyProps)
+    graft.io.Writers.writeJdbcAppend(st, url, "sales_team", derbyProps)
+    url
+  }
+
+  private def config(prefix: String): PipelineConfig = {
+    val root = tempDir(prefix)
+    val cfg = PipelineConfig(s"$root/in", s"$root/err", s"$root/done",
+      s"$root/out")
+    Files.createDirectories(Paths.get(cfg.inputDir))
+    cfg
+  }
+
+  /** Every node of an executed plan, through adaptive plans, query
+    * stages and reused exchanges.
+    */
+  private def nodes(p: SparkPlan): Seq[SparkPlan] = p +: (p match {
+    case a: AdaptiveSparkPlanExec => Seq(a.executedPlan)
+    case q: QueryStageExec => Seq(q.plan)
+    case r: ReusedExchangeExec => Seq(r.child)
+    case _ => p.children
+  }).flatMap(nodes)
 
   test("ObjectStore.list returns a landing's files sorted by name") {
     val root = tempDir("objstore_list_")
@@ -169,25 +218,96 @@ class PipelineSpec extends SparkSpec {
   }
 
   test("end-to-end run with JDBC-sourced dimensions (Derby)") {
-    val root = tempDir("pipeline_jdbc_")
-    val cfg = PipelineConfig(s"$root/in", s"$root/err", s"$root/done",
-      s"$root/out")
-    Files.createDirectories(Paths.get(cfg.inputDir))
+    val cfg = config("pipeline_jdbc_")
     Fixtures.writeF1(cfg.inputDir)
-    val url = "jdbc:derby:memory:graftdims;create=true"
-    val props = new java.util.Properties()
-    props.setProperty("driver", "org.apache.derby.jdbc.EmbeddedDriver")
-    val (c, s, st) = Fixtures.dims(spark)
-    graft.io.Writers.writeJdbcAppend(c, url, "customer", props)
-    graft.io.Writers.writeJdbcAppend(s, url, "store", props)
-    graft.io.Writers.writeJdbcAppend(st, url, "sales_team", props)
-
-    val dims = PipelineRunner.Dimensions.fromJdbc(spark, url, props)
+    val dims = PipelineRunner.Dimensions.fromJdbc(spark, derbyDims("graftdims"), derbyProps)
     val report = PipelineRunner.run(spark, cfg, dims, new InMemoryRunLedger)
 
     assert(report.goodFiles.size == 1)
     assert(report.audit.rowsIn == 500 && report.audit.rowsOut == 500)
     assert(report.customerMartRows > 0 && report.salesMartRows > 0)
+  }
+
+  test("JDBC dimensions are broadcast into the streamed fact, which keeps its scan's tasks") {
+    val root = tempDir("pipeline_plan_")
+    (0 until 8).foreach(i => Fixtures.writeF1(root, name = s"f1_$i.csv", seed = i))
+    val url = derbyDims("graftdimsplan")
+    val dims = Dimensions.fromJdbc(spark, url, derbyProps)
+    val store = new ObjectStore(spark.sparkContext.hadoopConfiguration)
+    val fact = CsvIngest.read(spark, CsvIngest.triage(spark, store.list(root))._1)
+    val enriched = DimensionEnricher.enrich(fact, dims.customer, dims.store, dims.salesTeam)
+    enriched.collect() // settles the adaptive plan
+    val plan = nodes(enriched.queryExecution.executedPlan)
+
+    val joins = plan.collect { case j: BroadcastHashJoinExec => j }
+    assert(joins.size == 3, s"broadcast joins: ${joins.size}")
+    joins.foreach { j =>
+      val build = nodes(if (j.buildSide == BuildRight) j.right else j.left)
+      assert(build.exists(_.isInstanceOf[RowDataSourceScanExec]) &&
+        !build.exists(_.isInstanceOf[FileSourceScanExec]),
+        s"build side is not a JDBC dimension:\n${j.treeString}")
+    }
+    val broadcastInputs = plan.collect { case b: BroadcastExchangeExec => nodes(b) }.flatten
+    assert(!broadcastInputs.exists(_.isInstanceOf[FileSourceScanExec]),
+      "the CSV fact is broadcast")
+    val factTasks = fact.rdd.getNumPartitions
+    assert(factTasks > 1 && enriched.rdd.getNumPartitions == factTasks,
+      s"fact scan $factTasks tasks, enrichment ${enriched.rdd.getNumPartitions}")
+
+    // the partitioned read is for dimensions too large to broadcast
+    val split = Dimensions.jdbcPartitioned(spark, url, derbyProps, "customer",
+      partitionColumn = "customer_id", lowerBound = 1L, upperBound = 25L,
+      numPartitions = 4)
+    assert(split.queryExecution.analyzed.collect { case h: ResolvedHint => h }.isEmpty)
+  }
+
+  test("a failed mart write is rethrown after the others settle; nothing archived, ledger stays 'A'") {
+    val cfg = config("pipeline_fail_")
+    Fixtures.writeF1(cfg.inputDir)
+    Fixtures.writeF2(cfg.inputDir)
+    // the customer mart's target resolves through a regular file, so
+    // its write cannot create it
+    val blocker = Paths.get(cfg.inputDir).resolveSibling("blocker")
+    Files.writeString(blocker, "")
+    Files.createDirectories(Paths.get(cfg.outputDir))
+    Files.createSymbolicLink(Paths.get(cfg.outputDir, "customers_data_mart"),
+      blocker.resolve("mart"))
+    val (c, s, st) = Fixtures.dims(spark)
+    val ledger = new InMemoryRunLedger
+
+    // the write threads inherit the job group from the run's thread
+    var failure: Throwable = null
+    val (started, active) = jobsOf {
+      failure = intercept[Exception](PipelineRunner.run(spark, cfg, Dimensions(c, s, st), ledger))
+    }
+    assert(Iterator.iterate(failure)(_.getCause).takeWhile(_ != null)
+      .exists(e => String.valueOf(e.getMessage).contains("customers_data_mart")),
+      s"not the customer mart's failure: $failure")
+    assert(started > 0 && active == 0,
+      s"$active of $started jobs still active when run threw: $failure")
+    Seq("sales_team_data_mart", "sales_team_data_mart_partitioned").foreach { m =>
+      assert(Files.exists(Paths.get(cfg.outputDir, m, "_SUCCESS")), s"$m did not finish")
+    }
+    assert(!Files.exists(Paths.get(cfg.processedDir)) ||
+      Files.list(Paths.get(cfg.processedDir)).count() == 0)
+    assert(Files.list(Paths.get(cfg.inputDir)).count() == 2)
+    assert(ledger.all.toSet == Set(("f1_sales.csv", "A"), ("f2_extra.csv", "A")))
+  }
+
+  test("repeated runs of one landing: the audit and mart counts hold every time") {
+    val dims = Dimensions.fromJdbc(spark, derbyDims("graftdimsrepeat"), derbyProps)
+    (1 to 4).foreach { i =>
+      val cfg = config(s"pipeline_repeat_${i}_")
+      Fixtures.writeF1(cfg.inputDir)
+      Fixtures.writeF2(cfg.inputDir)
+      val report = PipelineRunner.run(spark, cfg, dims, new InMemoryRunLedger)
+      assert(report.audit.rowsIn == 1500 && report.audit.rowsOut == 1500,
+        s"run $i: ${report.audit}")
+      def rows(m: String): Long = spark.read.parquet(s"${cfg.outputDir}/$m").count()
+      assert(report.customerMartRows == rows("customers_data_mart"), s"run $i")
+      assert(report.salesMartRows == rows("sales_team_data_mart"), s"run $i")
+      assert(report.salesMartRows == rows("sales_team_data_mart_partitioned"), s"run $i")
+    }
   }
 
   test("a crashed run leaves 'A' rows that the next run detects") {
