@@ -21,6 +21,7 @@ package graft
   */
 object Bench {
   def main(args: Array[String]): Unit = {
+    SparkEntry.requireDeclared(args.toSeq)
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val repeats =
       math.max(1, sys.env.getOrElse("SPARK_GRAFT_BENCH_RUNS", "3").toInt)

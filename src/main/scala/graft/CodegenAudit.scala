@@ -34,6 +34,9 @@ object CodegenAudit {
   }
 
   def main(args: Array[String]): Unit = {
+    val names = if (args.nonEmpty) args.toSeq
+                else SparkEntry.queries.keys.toSeq.sorted
+    SparkEntry.requireDeclared(names)
     val spark = Session.local(Session.cpusFromEnv)
     val ctx = org.apache.logging.log4j.LogManager.getContext(false)
       .asInstanceOf[org.apache.logging.log4j.core.LoggerContext]
@@ -46,8 +49,6 @@ object CodegenAudit {
     org.apache.logging.log4j.core.config.Configurator.setLevel(
       loggerName, org.apache.logging.log4j.Level.ERROR)
 
-    val names = if (args.nonEmpty) args.toSeq
-                else SparkEntry.queries.keys.toSeq.sorted
     names.foreach { name =>
       current = name
       SparkEntry.queries(name)(spark, "/root/testdata/sf0.001")

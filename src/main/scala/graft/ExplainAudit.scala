@@ -10,6 +10,7 @@ object ExplainAudit {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.001")
     val names = if (args.length > 1) args.drop(1).toSeq
                 else SparkEntry.queries.keys.toSeq.sorted
+    SparkEntry.requireDeclared(names)
     val spark = Session.local(Session.cpusFromEnv)
     names.foreach { n =>
       println(s"\n========== $n ==========")

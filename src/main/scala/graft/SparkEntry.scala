@@ -1,18 +1,43 @@
 package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import graft.operators.{Dedup, Events, Extras, Marts, Relational, TrainingOps}
+import graft.ingest.JsonlIngest
+import graft.operators.{AsOfJoin, Curation, Dedup, EditJoin, Events, Extras,
+  Federation, Marts, Profile, RangeJoin, Relational, Scd2, Search, Selection,
+  Similarity, Sketch, TextPrep, TrainingOps, UnigramLm, VecAdmission}
+import graft.streaming.{Admission, EventStream, SessionStream, SketchStream}
 
-/** Driver contract — see /root/repo/SURVEY.md §7 + the builder prompt.
+/** Driver contract (SURVEY.md §7): `entry`, `queries`, `oracleSql` and
+  * `rowsOnly`.
   *
-  * Every `queries` key has a matching `oracleSql` entry (ANSI SQL run
-  * by DuckDB over the same parquet tables) unless the operator is not
-  * SQL-expressible, in which case the driver records a rows-only
-  * check. Column names and row ORDER BY are kept identical on both
-  * sides; money aggregates go through DECIMAL(18,2) in both engines
-  * so value hashes match bitwise (see graft.core.Fns).
+  * Each declared query is one registry entry, `"name" -> Query(run,
+  * check)`. The check is either `Oracle(sql)`, ANSI SQL that DuckDB runs
+  * over the same parquet tables, or `RowsOnly(reason)` for an operator
+  * with no exact SQL truth, for which the driver records a rows-only
+  * check. `queries`, `oracleSql` and `rowsOnly` are views of the
+  * registry, so adding a query is adding one entry. Column names and
+  * row ORDER BY are kept identical on both sides; money aggregates go
+  * through DECIMAL(18,2) in both engines so value hashes match bitwise
+  * (see graft.core.Fns).
   */
 object SparkEntry {
+
+  /** What a query's rows are checked against. */
+  sealed trait Check
+
+  /** ANSI SQL that DuckDB runs over the same parquet tables; its rows
+    * must hash-match the query's.
+    */
+  final case class Oracle(sql: String) extends Check
+
+  /** No exact SQL truth exists; the reason says why, and where the
+    * query's correctness is pinned instead.
+    */
+  final case class RowsOnly(reason: String) extends Check
+
+  /** A declared query: its run function over an sf dir, and its check. */
+  final case class Query(run: (SparkSession, String) => DataFrame,
+                         check: Check)
 
   /** Flagship query on /root/testdata/sf0.001; driver smoke-checks rows>0.
     * The sales-mart incentive query — joins, groupBy, rank window,
@@ -21,267 +46,36 @@ object SparkEntry {
   def entry(spark: SparkSession): DataFrame =
     Relational.q09(spark, "/root/testdata/sf0.001")
 
-  /** One entry per implemented operator from SURVEY.md §2. */
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q01_scan_project"   -> Relational.q01 _,
-    "q02_filter"         -> Relational.q02 _,
-    "q03_join"           -> Relational.q03 _,
-    "q04_join3"          -> Relational.q04 _,
-    "q05_union"          -> Relational.q05 _,
-    "q06_group_month"    -> Relational.q06 _,
-    "q07_window_distinct"-> Relational.q07 _,
-    "q08_rank_topk"      -> Relational.q08 _,
-    "q09_incentive_mart" -> Relational.q09 _,
-    "q10_concat"         -> Relational.q10 _,
-    "q11_distinct"       -> Relational.q11 _,
-    "q12_topk_limit"     -> Relational.q12 _,
-    "q13_customer_mart"  -> (Marts.customerMart _),
-    "q14_partitioned_roundtrip" -> (Marts.partitionedRoundtrip _),
-    "qp1_pruned_read"    -> (Marts.prunedMartRead _),
-    "q15_union_fold"     -> Relational.q15 _,
-    "qd1_dedup_exact"    -> TrainingOps.dedupExact _,
-    "qd2_token_stats"    -> TrainingOps.tokenStats _,
-    "qd3_quality"        -> TrainingOps.quality _,
-    "qd4_langid"         -> TrainingOps.langId _,
-    "qd5_fingerprint"    -> TrainingOps.fingerprint _,
-    "qd6_minhash_pairs"  -> TrainingOps.minhashTopPairs _,
-    "qd13_dup_clusters"  -> TrainingOps.dupClusters _,
-    "qd16_dup_clusters_star" -> TrainingOps.dupClustersStar _,
-    "qd14_decontaminate" -> TrainingOps.decontaminate _,
-    "qd15_source_lang_pivot" -> TrainingOps.sourceLangPivot _,
-    "qd7_simhash"        -> TrainingOps.simhash _,
-    "qe1_knn_brute"      -> TrainingOps.knnBrute _,
-    "qe2_knn_lsh"        -> TrainingOps.knnLsh _,
-    "qe3_embedding_neardups" -> TrainingOps.embeddingNearDups _,
-    "qe4_knn_ivf"        -> TrainingOps.knnIvf _,
-    "qs1_event_hourly"   -> Events.hourlyStats _,
-    "qs2_sessionize"     -> (Events.sessionize(_, _)),
-    "qs3_props_json"     -> Events.propsExtract _,
-    "qs4_top_spenders"   -> Events.topSpenders _,
-    "qs5_percentiles"    -> Events.valuePercentiles _,
-    "qs6_moving_avg"     -> Events.movingAvg _,
-    "qs7_stream_sessionize" -> (graft.streaming.SessionStream.sessionizeGate _),
-    "qs8_stream_hourly"  -> (graft.streaming.EventStream.hourlyStatsGate _),
-    "qs9_stream_dedup"   -> (graft.streaming.EventStream.dedupGate _),
-    "qd8_source_stats"   -> TrainingOps.sourceStats _,
-    "qd9_token_freq"     -> TrainingOps.tokenFreq _,
-    "qd10_pair_jaccard"  -> ((s: SparkSession, d: String) =>
-      TrainingOps.pairJaccard(s, d)),
-    "qd11_doc_keywords"  -> TrainingOps.docKeywords _,
-    "qd12_hash_sample"   -> TrainingOps.hashSample _,
-    "qx1_left_join"      -> Extras.leftJoinOrders _,
-    "qx2_semi_join"      -> Extras.semiJoin _,
-    "qx3_anti_join"      -> Extras.antiJoin _,
-    "qx4_rollup"         -> Extras.rollupStatus _,
-    "qx5_cube"           -> Extras.cubeStatus _,
-    "qx6_intersect"      -> Extras.intersectNations _,
-    "qx7_except"         -> Extras.exceptNations _,
-    "qx8_asof_join"      -> graft.operators.AsOfJoin.eventAsOf _,
-    "qx9_range_join"     -> graft.operators.RangeJoin.errorClickBurst _,
-    "qm1_media_stats"    -> TrainingOps.mediaStats _,
-    "qm2_frame_sample"   -> TrainingOps.frameSample _,
-    "qm3_resize"         -> TrainingOps.resizeStats _,
-    "qx10_unpivot"       -> TrainingOps.sourceLangUnpivot _,
-    "qx11_topk_agg"      -> Events.topSpendersTyped _,
-    "qx12_salted_join"   -> Extras.saltedEnrich _,
-    "qx13_bucketed_join" -> Extras.bucketedJoin _,
-    "qd17_chunk"         -> (graft.operators.TextPrep.chunkQuery _),
-    "qd18_strip_boilerplate" -> (graft.operators.TextPrep.stripQuery _),
-    "qe5_norm_audit"     -> TrainingOps.normAudit _,
-    "qx14_scd2_history"  -> (graft.operators.Scd2.customerHistory _),
-    "qd19_pack_bins"     -> (graft.operators.TextPrep.packQuery _),
-    "qx15_upsert"        -> (graft.operators.Scd2.customerUpsert _),
-    "qs10_session_window" -> ((s, d) => Events.sessionWindow(s, d)),
-    "qs11_funnel"        -> (Events.funnel _),
-    "qd20_lexical_diversity" -> TrainingOps.lexicalDiversity _,
-    "qd21_char_entropy"  -> TrainingOps.charEntropy _,
-    "qx16_sql_api"       -> (Extras.sqlMart _),
-    "qs12_stream_session_window" ->
-      (graft.streaming.SessionStream.sessionWindowGate _),
-    "qx17_spend_distribution" -> (Events.spendDistribution _),
-    "qx18_grouping_sets" -> (Extras.groupingSetsAgg _),
-    "qd22_prune_vocab"   -> ((s, d) => TrainingOps.pruneVocab(s, d)),
-    "qd23_bigram_lm"     -> (TrainingOps.bigramLm _),
-    "qp2_dpp_read"       -> (Marts.dppMartRead _),
-    "qs13_hourly_delta"  -> (Events.hourlyDelta _),
-    "qx19_corr_subquery" -> (Extras.corrSubquery _),
-    "qd24_redact"        -> (graft.operators.TextPrep.redactQuery _),
-    "qd25_repetition"    -> (TrainingOps.repetition _),
-    "qd26_nfc_normalize" -> (graft.operators.TextPrep.normalizeQuery _),
-    "qd27_minhash_estimate" -> (TrainingOps.minhashEstimate _),
-    "qs14_stream_segment" ->
-      (graft.streaming.EventStream.segmentSpendGate _),
-    "qx20_schema_merge"  -> (Extras.schemaMergeRead _),
-    "qd28_length_filter" -> (TrainingOps.lengthFilter _),
-    "qs15_stream_stream_join" ->
-      (graft.streaming.EventStream.clickAttributionGate _),
-    "qx21_nullsafe_join" -> (Extras.nullSafeJoin _),
-    "qs16_foreachbatch_sink" ->
-      (graft.streaming.EventStream.foreachBatchGate _),
-    "qs17_gap_fill"      -> (Events.gapFillHourly _),
-    "qs18_retention"     -> (Events.retention _),
-    "qs19_trailing_hour" -> (Events.trailingHourSpend _),
-    "qd29_chunk_dedup"   -> (Dedup.chunkDedupQuery _),
-    "qd30_hot_spans"     -> (TrainingOps.hotSpansQuery _),
-    "qd31_temperature_sample" -> (TrainingOps.temperatureSampleQuery _),
-    "qp3_bloom_join"     -> (Marts.bloomJoinRead _),
-    "qd32_pack_sequences" -> (graft.operators.TextPrep.packSeqQuery _),
-    "qx22_moment_corr"   -> (Events.valueHourCorr _),
-    "qs20_stream_dedup_ww" ->
-      (graft.streaming.EventStream.dedupWwGate _),
-    "qd33_bpe_merge"     -> (TrainingOps.bpeMergeQuery _),
-    "qe6_pq_audit"       -> (graft.operators.Similarity.pqAuditQuery _),
-    "qd34_curation"      -> (TrainingOps.curationVerdict _),
-    "qs21_first_touch"   -> (Events.firstTouch _),
-    "qx23_union_by_name" -> (Extras.unionByNameDrift _),
-    "qp4_compaction"     -> (Marts.compactionRoundtrip _),
-    "qs22_cumulative_users" -> (Events.cumulativeUsers _),
-    "qd35_bpe_train"     -> (TrainingOps.bpeTrainQuery _),
-    "qx24_federation"    -> (graft.operators.Federation.federatedNation _),
-    "qp5_zorder"         -> (Marts.zorderBoxRead _),
-    "qx25_snapshot_diff" -> (graft.operators.Scd2.customerDiff _),
-    "qp6_profile"        -> (graft.operators.Profile.ordersProfile _),
-    "qs23_sliding_window" -> (Events.slidingHourly _),
-    "qd36_leakage_split" -> (TrainingOps.leakageSplit _),
-    "qe7_centroid_outlier" -> (graft.operators.Similarity.centroidOutlierQuery _),
-    "qd37_source_overlap" -> (TrainingOps.sourceOverlap _),
-    "qd38_bpe_encode"    -> (TrainingOps.bpeEncodeQuery _),
-    "qd39_gram_novelty"  -> (TrainingOps.gramNovelty _),
-    "qs24_hourly_anomaly" -> (Events.hourlyAnomaly _),
-    "qs25_type_transitions" -> (Events.typeTransitions _),
-    "qe8_knn_pq"         -> (TrainingOps.knnPq _),
-    "qd40_incremental_dedup" -> (TrainingOps.incrementalDedup _),
-    "qs26_winsorized"    -> (Events.winsorizedStats _),
-    "qs27_burst_detect"  -> (Events.burstDetect _),
-    "qd41_containment"   -> (TrainingOps.containment _),
-    "qs28_mad_stats"     -> (Events.madStats _),
-    "qe9_mmr_rerank"     -> (graft.operators.Similarity.mmrQuery _),
-    "qs29_rolling_actives" -> (Events.rollingActives _),
-    "qs30_session_stats" -> (Events.sessionStats _),
-    "qe10_centroid_matrix" -> (graft.operators.Similarity.centroidMatrixQuery _),
-    "qm4_media_dedup"    -> (TrainingOps.mediaDedup _),
-    "qd42_cross_perplexity" -> (TrainingOps.crossPerplexity _),
-    "qd43_corpus_report" -> (TrainingOps.corpusReport _),
-    "qd44_cluster_reps"  -> (TrainingOps.clusterRepresentatives _),
-    "qe11_knn_hamming"   -> (TrainingOps.knnHamming _),
-    "qs31_timed_funnel"  -> (Events.timedFunnel _),
-    "qs32_spend_share"   -> (Events.spendShare _),
-    "qs33_decayed_spend" -> (Events.decayedSpend _),
-    "qs34_stickiness"    -> (Events.stickiness _),
-    "qe12_knn_ivfpq"     -> (TrainingOps.knnIvfPq _),
-    // qe13 (all-pairs exact kNN graph) was demoted from the gate in
-    // round 9 (VERDICT r8 #8): its broadcast crossJoin cannot run at
-    // growing sf, and its truth-anchor role is carried by
-    // SimilaritySpec's bit-for-bit qe14 parity test. qe14 — the
-    // cell-blocked plan that provably equals it — keeps the oracle.
-    "qe14_knn_graph_blocked" -> (TrainingOps.knnGraphBlockedFull _),
-    "qe15_semantic_dedup" -> (TrainingOps.semanticDedupSingleCell _),
-    "qe16_knn_sq"        -> (TrainingOps.knnSq _),
-    "qe17_pagerank"      -> (TrainingOps.knnPageRank _),
-    "qd45_pmi"           -> (TrainingOps.pmiCooccur _),
-    "qd46_zipf"          -> (TrainingOps.zipfFit _),
-    "qs35_linear_attribution" -> (Events.linearAttribution _),
-    "qp7_bucket_pruned"  -> (Extras.bucketPrunedRead _),
-    "qm5_media_sniff"    -> (TrainingOps.mediaSniff _),
-    "qe18_radius_search" -> (TrainingOps.radiusKnn _),
-    "qp8_dynamic_overwrite" -> (Marts.dynamicOverwriteRefresh _),
-    "qe19_mips"          -> ((s, d) => graft.operators.Similarity.mipsKnn(
-      graft.core.Tables.embeddings(s, d), TrainingOps.knnQueryIds, 10)),
-    "qd47_bpe_fertility" -> (TrainingOps.bpeFertility _),
-    "qs36_time_to_convert" -> (Events.timeToConvert _),
-    "qd48_dedup_quality" -> (TrainingOps.dedupQuality _),
-    "qx26_nested_roundtrip" -> (Extras.nestedRoundtrip _),
-    "qx27_quality_checks" -> (Extras.qualityChecks _),
-    "qd49_jsonl_roundtrip" -> (graft.ingest.JsonlIngest.jsonlRoundtrip _),
-    "qe20_ann_quality"   -> (TrainingOps.annQuality _),
-    "qs37_daily_autocorr" -> (Events.dailyAutocorr _),
-    "qd50_shard_export"  -> (TrainingOps.shardExport _),
-    "qd51_bm25_search"   -> (graft.operators.Search.bm25Search _),
-    "qe22_rrf_fusion"    -> (graft.operators.Search.hybridSearch _),
-    "qd52_prf_expansion" -> (graft.operators.Search.prfExpand _),
-    "qe23_gram_matrix"   -> (TrainingOps.gramMatrix _),
-    "qd53_span_dedup"    -> (graft.operators.Dedup.spanDedupQuery _),
-    "qd54_refresh_labels" -> (TrainingOps.refreshedDupLabels _),
-    "qd55_dsir_weights"  -> (graft.operators.Selection.dsirQuery _),
-    "qd56_dsir_resample" -> (graft.operators.Selection.resampleQuery _),
-    "qd57_refresh_publish" -> (TrainingOps.publishedLabels _),
-    "qe24_opq_permute"   -> (TrainingOps.opqPermuteReport _),
-    "qs38_jsonl_stream"  -> (graft.ingest.JsonlIngest.jsonlStreamGate _),
-    "qm6_phash_neardup"  -> (TrainingOps.phashNearDups _),
-    "qm7_crossmodal_align" -> (TrainingOps.crossModalAlign _),
-    "qd58_nb_classify"   -> (graft.operators.Selection.nbQuery _),
-    "qd59_hll_profile"   -> (graft.operators.Sketch.hllQuery _),
-    "qs39_admission_gate" -> (graft.streaming.Admission.admissionGate _),
-    "qd60_hll_overlap"   -> (graft.operators.Sketch.hllOverlapQuery _),
-    "qs40_stream_hll"    -> (graft.streaming.SketchStream.hllStreamGate _),
-    "qd61_quantile_sketch" -> (graft.operators.Sketch.quantileQuery _),
-    "qd62_heavy_hitters" -> (graft.operators.Sketch.cmQuery _),
-    "qs41_stream_cm"     -> (graft.streaming.SketchStream.cmStreamGate _),
-    "qd63_bottomk_profile" -> (graft.operators.Sketch.bottomkQuery _),
-    "qs42_stream_bottomk" ->
-      (graft.streaming.SketchStream.bottomkStreamGate _),
-    "qd64_bottomk_resemblance" ->
-      (graft.operators.Sketch.bottomkResQuery _),
-    "qs43_stream_quantile" ->
-      (graft.streaming.SketchStream.quantileStreamGate _),
-    "qd65_sketch_store"  -> (TrainingOps.storedSketchEstimate _),
-    "qd66_span_decontaminate" ->
-      (graft.operators.Dedup.spanDecontaminateQuery _),
-    "qd67_edit_neardups" ->
-      (graft.operators.EditJoin.editNearDupsQuery _),
-    "qd68_edit_neardups_seg" ->
-      (graft.operators.EditJoin.editNearDupsSegQuery _),
-    "qd69_edit_admission" ->
-      (graft.operators.EditJoin.editAdmissionQuery _),
-    "qs44_edit_admission_gate" ->
-      (graft.streaming.Admission.editAdmissionGate _),
-    "qx28_orc_roundtrip" -> (graft.operators.Extras.orcRoundtrip _),
-    "qx29_edit_sql_surface" -> (graft.operators.Extras.editSqlSurface _),
-    "qe25_vec_admission" ->
-      (graft.operators.VecAdmission.vecAdmissionQuery _),
-    "qs45_vec_admission_gate" ->
-      (graft.streaming.Admission.vecAdmissionGate _),
-    "qd70_unigram_lm" ->
-      (graft.operators.UnigramLm.emStepQuery _),
-    "qe26_knn_filtered" -> (TrainingOps.knnFiltered _),
-    "qd71_unigram_encode" ->
-      (graft.operators.UnigramLm.encodeQuery _),
-    "qd72_unigram_lm2" ->
-      (graft.operators.UnigramLm.emRound2 _),
-    "qd73_unigram_lm3" ->
-      (graft.operators.UnigramLm.emRound3 _),
-    "qe27_hard_negatives" -> (TrainingOps.knnHardNegatives _),
-    "qs46_composed_admission" ->
-      (graft.streaming.Admission.composedAdmissionGate _),
-    "qd74_unigram_fertility" ->
-      (graft.operators.UnigramLm.encode3ByLang _),
-    "qd75_edit_publish" ->
-      (graft.operators.EditJoin.editPublishQuery _),
-    "qs47_calibrated_admission" ->
-      (graft.streaming.Admission.calibratedAdmissionGate _),
-    "qd76_edit_seq_admission" ->
-      (graft.operators.EditJoin.editSeqAdmissionQuery _),
-    "qd77_curation_pipeline" ->
-      (graft.operators.Curation.pipelineReport _),
-    "qs48_seq_publish_gate" ->
-      (graft.streaming.Admission.seqPublishGate _),
-  )
-
-  /** Queries intentionally without an oracle. Empty from rounds 5–15
-    * (qd6/qe2/qe3/qe4/qd7 all graduated via oracle-parity
-    * configurations — threshold-0.9 near-dups, 1-bit-band LSH,
-    * full-probe IVF, portable SimHash). qs47 is the one member since
-    * round 16: the composed admission drain at qe25's CALIBRATED
-    * (nProbe, shortlist) operating point, which is approximate BY
-    * DESIGN — its vector leg trades recall for probing ~nProbe/k of
-    * the corpus, so no exact SQL truth exists (VERDICT r15 #2 asked
-    * for exactly this honest-operating-point bench bar). Correctness
-    * is spec-level (CLAUDE.md contract): Round16OpsSpec pins the
-    * lexical legs EXACTLY equal to qs46's oracle-checked verdicts and
-    * floors the composed-verdict agreement and vector-leg top-1
-    * recall against the parity drain.
+  /** The registry map of `entries`; throws naming every name declared
+    * more than once (a Map literal would keep the last one silently).
     */
-  def rowsOnly: Set[String] = Set("qs47_calibrated_admission")
+  private[graft] def declare(entries: (String, Query)*): Map[String, Query] = {
+    val dups = entries.groupBy(_._1).collect { case (n, es) if es.size > 1 => n }
+    require(dups.isEmpty,
+      s"query declared more than once: ${dups.toSeq.sorted.mkString(", ")}")
+    entries.toMap
+  }
+
+  /** The run function of every declared query. */
+  lazy val queries: Map[String, (SparkSession, String) => DataFrame] =
+    registry.map { case (name, q) => name -> q.run }
+
+  /** The oracle SQL of every query declared with an `Oracle`. */
+  lazy val oracleSql: Map[String, String] =
+    registry.collect { case (name, Query(_, Oracle(sql))) => name -> sql }
+
+  /** The queries declared `RowsOnly`. */
+  lazy val rowsOnly: Set[String] =
+    registry.collect { case (name, Query(_, RowsOnly(_))) => name }.toSet
+
+  /** Throws, naming each one, if any of `names` is not a declared query;
+    * the mains call it on their arguments before building a session.
+    */
+  def requireDeclared(names: Seq[String]): Unit = {
+    val unknown = names.filterNot(registry.contains).distinct
+    require(unknown.isEmpty,
+      s"unknown query name(s): ${unknown.mkString(", ")}")
+  }
 
   private val monthExpr =
     "substring(CAST(CAST(%s AS DATE) AS VARCHAR), 1, 7)"
@@ -312,142 +106,141 @@ object SparkEntry {
   private val q09Sql: String =
     q09SqlCore + "\nORDER BY store, month, person"
 
-  /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
-    * the same parquet tables. Omit for non-SQL-expressible ops.
+  /** Every declared query by name, one entry each. Lazy, so an entry
+    * may read any helper string of this object.
     */
-  def oracleSql: Map[String, String] = {
-    val base = Map(
-    "q01_scan_project" ->
-      "SELECT c_custkey, c_name, c_mktsegment FROM customer ORDER BY c_custkey",
-    "q02_filter" ->
-      ("SELECT l_orderkey, l_linenumber, l_quantity FROM lineitem " +
-        "WHERE l_quantity > 30 ORDER BY l_orderkey, l_linenumber"),
-    "q03_join" -> q03Sql,
-    "q04_join3" ->
-      ("SELECT l.l_orderkey, l.l_linenumber, c.c_name, s.s_name FROM lineitem l " +
+  private[graft] lazy val registry: Map[String, Query] = declare(
+    "q01_scan_project" -> Query(Relational.q01 _, Oracle(
+      "SELECT c_custkey, c_name, c_mktsegment FROM customer ORDER BY c_custkey")),
+    "q02_filter" -> Query(Relational.q02 _, Oracle(
+      "SELECT l_orderkey, l_linenumber, l_quantity FROM lineitem " +
+        "WHERE l_quantity > 30 ORDER BY l_orderkey, l_linenumber")),
+    "q03_join" -> Query(Relational.q03 _, Oracle(q03Sql)),
+    "q04_join3" -> Query(Relational.q04 _, Oracle(
+      "SELECT l.l_orderkey, l.l_linenumber, c.c_name, s.s_name FROM lineitem l " +
         "JOIN orders o ON l.l_orderkey = o.o_orderkey " +
         "JOIN customer c ON o.o_custkey = c.c_custkey " +
         "JOIN supplier s ON l.l_suppkey = s.s_suppkey " +
-        "ORDER BY l.l_orderkey, l.l_linenumber"),
-    "q05_union" ->
-      ("SELECT c_custkey AS k, c_name AS n FROM customer WHERE c_custkey % 2 = 0 " +
+        "ORDER BY l.l_orderkey, l.l_linenumber")),
+    "q05_union" -> Query(Relational.q05 _, Oracle(
+      "SELECT c_custkey AS k, c_name AS n FROM customer WHERE c_custkey % 2 = 0 " +
         "UNION ALL SELECT c_custkey AS k, c_name AS n FROM customer " +
-        "WHERE c_custkey % 2 = 1 ORDER BY k"),
-    "q06_group_month" ->
-      (s"SELECT o_custkey, $oMonth AS month, " +
+        "WHERE c_custkey % 2 = 1 ORDER BY k")),
+    "q06_group_month" -> Query(Relational.q06 _, Oracle(
+      s"SELECT o_custkey, $oMonth AS month, " +
         "CAST(SUM(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE) AS total " +
-        "FROM orders GROUP BY 1, 2 ORDER BY 1, 2"),
-    "q07_window_distinct" ->
-      (s"SELECT DISTINCT o_custkey, month, CAST(total_dec AS DOUBLE) AS total FROM (" +
+        "FROM orders GROUP BY 1, 2 ORDER BY 1, 2")),
+    "q07_window_distinct" -> Query(Relational.q07 _, Oracle(
+      s"SELECT DISTINCT o_custkey, month, CAST(total_dec AS DOUBLE) AS total FROM (" +
         s"SELECT o_custkey, $oMonth AS month, " +
         s"SUM(CAST(o_totalprice AS DECIMAL(18,2))) OVER (PARTITION BY o_custkey, $oMonth) AS total_dec " +
-        "FROM orders) t ORDER BY o_custkey, month"),
-    "q08_rank_topk" ->
-      ("SELECT o_custkey, o_orderkey, CAST(rnk AS INTEGER) AS rnk FROM (" +
+        "FROM orders) t ORDER BY o_custkey, month")),
+    "q08_rank_topk" -> Query(Relational.q08 _, Oracle(
+      "SELECT o_custkey, o_orderkey, CAST(rnk AS INTEGER) AS rnk FROM (" +
         "SELECT o_custkey, o_orderkey, rank() OVER (PARTITION BY o_custkey " +
         "ORDER BY o_totalprice DESC, o_orderkey) AS rnk FROM orders) t " +
-        "WHERE rnk <= 3 ORDER BY o_custkey, rnk, o_orderkey"),
-    "q09_incentive_mart" -> q09Sql,
-    "q10_concat" ->
-      ("SELECT s.s_suppkey, s.s_name || ' ' || n.n_name AS full_name FROM supplier s " +
-        "JOIN nation n ON s.s_nationkey = n.n_nationkey ORDER BY s.s_suppkey"),
-    "q11_distinct" ->
-      ("SELECT DISTINCT o_orderstatus, o_orderpriority FROM orders " +
-        "ORDER BY 1, 2"),
-    "q12_topk_limit" ->
-      ("SELECT o_orderkey, o_totalprice FROM orders " +
-        "ORDER BY o_totalprice DESC, o_orderkey LIMIT 20"),
-    "q13_customer_mart" ->
-      (s"SELECT c.c_custkey AS customer_id, c.c_name || ' ' || c.c_mktsegment AS full_name, " +
+        "WHERE rnk <= 3 ORDER BY o_custkey, rnk, o_orderkey")),
+    "q09_incentive_mart" -> Query(Relational.q09 _, Oracle(q09Sql)),
+    "q10_concat" -> Query(Relational.q10 _, Oracle(
+      "SELECT s.s_suppkey, s.s_name || ' ' || n.n_name AS full_name FROM supplier s " +
+        "JOIN nation n ON s.s_nationkey = n.n_nationkey ORDER BY s.s_suppkey")),
+    "q11_distinct" -> Query(Relational.q11 _, Oracle(
+      "SELECT DISTINCT o_orderstatus, o_orderpriority FROM orders " +
+        "ORDER BY 1, 2")),
+    "q12_topk_limit" -> Query(Relational.q12 _, Oracle(
+      "SELECT o_orderkey, o_totalprice FROM orders " +
+        "ORDER BY o_totalprice DESC, o_orderkey LIMIT 20")),
+    "q13_customer_mart" -> Query(Marts.customerMart _, Oracle(
+      s"SELECT c.c_custkey AS customer_id, c.c_name || ' ' || c.c_mktsegment AS full_name, " +
         s"$oMonthQ AS month, " +
         "CAST(SUM(CAST(o.o_totalprice AS DECIMAL(18,2))) AS DOUBLE) AS total_sales " +
         "FROM orders o JOIN customer c ON o.o_custkey = c.c_custkey " +
-        "GROUP BY 1, 2, 3 ORDER BY customer_id, month"),
-    "q14_partitioned_roundtrip" -> q09Sql,
+        "GROUP BY 1, 2, 3 ORDER BY customer_id, month")),
+    "q14_partitioned_roundtrip" -> Query(Marts.partitionedRoundtrip _, Oracle(q09Sql)),
     // qp1 reads q14's hive layout back WITH partition predicates —
     // the result is q09 restricted to the pruned month x store range
-    "qp1_pruned_read" ->
-      (s"SELECT store, person, month, total, incentive FROM (\n$q09SqlCore) q " +
+    "qp1_pruned_read" -> Query(Marts.prunedMartRead _, Oracle(
+      s"SELECT store, person, month, total, incentive FROM (\n$q09SqlCore) q " +
         "WHERE month >= '1996-01' AND month < '1997-01' AND store < 5 " +
-        "ORDER BY store, month, person"),
-    "q15_union_fold" ->
-      "SELECT c_custkey, c_name, c_nationkey FROM customer ORDER BY c_custkey",
-    "qd1_dedup_exact" ->
-      ("SELECT doc_id, lang, source FROM (SELECT doc_id, lang, source, " +
+        "ORDER BY store, month, person")),
+    "q15_union_fold" -> Query(Relational.q15 _, Oracle(
+      "SELECT c_custkey, c_name, c_nationkey FROM customer ORDER BY c_custkey")),
+    "qd1_dedup_exact" -> Query(TrainingOps.dedupExact _, Oracle(
+      "SELECT doc_id, lang, source FROM (SELECT doc_id, lang, source, " +
         "row_number() OVER (PARTITION BY text ORDER BY doc_id) AS rn " +
-        "FROM documents) t WHERE rn = 1 ORDER BY doc_id"),
-    "qd2_token_stats" ->
-      ("SELECT doc_id, " +
+        "FROM documents) t WHERE rn = 1 ORDER BY doc_id")),
+    "qd2_token_stats" -> Query(TrainingOps.tokenStats _, Oracle(
+      "SELECT doc_id, " +
         "CASE WHEN length(trim(text)) = 0 THEN 0 ELSE " +
         "CAST(len(regexp_split_to_array(trim(text), '\\s+')) AS INTEGER) END AS n_tokens, " +
         "CAST(len(regexp_extract_all(text, '[A-Za-z0-9]+|[^A-Za-z0-9\\s]')) AS INTEGER) AS n_bpe " +
-        "FROM documents ORDER BY doc_id"),
-    "qd3_quality" -> qualitySql,
-    "qd4_langid" -> langIdSql,
-    "qd5_fingerprint" ->
-      ("SELECT doc_id, CASE WHEN length(text) = 0 THEN 0 ELSE " +
+        "FROM documents ORDER BY doc_id")),
+    "qd3_quality" -> Query(TrainingOps.quality _, Oracle(qualitySql)),
+    "qd4_langid" -> Query(TrainingOps.langId _, Oracle(langIdSql)),
+    "qd5_fingerprint" -> Query(TrainingOps.fingerprint _, Oracle(
+      "SELECT doc_id, CASE WHEN length(text) = 0 THEN 0 ELSE " +
         "list_reduce(list_transform(string_split(text, ''), c -> CAST(unicode(c) AS BIGINT)), " +
         "(acc, x) -> (acc * 31 + x) % 2147483647) END AS fp " +
-        "FROM documents ORDER BY doc_id"),
-    "qd7_simhash" -> simhashSql,
-    "qd13_dup_clusters" -> dupClustersSql,
-    "qd44_cluster_reps" -> clusterRepsSql,
+        "FROM documents ORDER BY doc_id")),
+    "qd7_simhash" -> Query(TrainingOps.simhash _, Oracle(simhashSql)),
+    "qd13_dup_clusters" -> Query(TrainingOps.dupClusters _, Oracle(dupClustersSql)),
+    "qd44_cluster_reps" -> Query(TrainingOps.clusterRepresentatives _, Oracle(clusterRepsSql)),
     // qd16 computes the same components via large-star/small-star —
     // identical labels, identical oracle.
-    "qd16_dup_clusters_star" -> dupClustersSql,
+    "qd16_dup_clusters_star" -> Query(TrainingOps.dupClustersStar _, Oracle(dupClustersSql)),
     // qd54 refreshes a standing corpus label table with the batch via
     // cluster contraction — labels provably equal the full rebuild's
     // (min-label quotient argument in Dedup.refreshClusterLabels), so
     // the rebuild's recursive CTE is its oracle too.
-    "qd54_refresh_labels" -> dupClustersSql,
+    "qd54_refresh_labels" -> Query(TrainingOps.refreshedDupLabels _, Oracle(dupClustersSql)),
     // qd57 reads the PUBLISHED label artifact (qd54's output written
     // back through ArtifactStore — the loop's durable hand-off), so
     // the rebuild oracle applies for the same reason qd54's does:
     // what the store serves must equal the full rebuild.
-    "qd57_refresh_publish" -> dupClustersSql,
-    "qd55_dsir_weights" -> dsirSql,
-    "qd56_dsir_resample" -> dsirResampleSql,
-    "qd58_nb_classify" -> nbSql,
-    "qd59_hll_profile" -> hllSql,
-    "qd60_hll_overlap" -> hllOverlapSql,
+    "qd57_refresh_publish" -> Query(TrainingOps.publishedLabels _, Oracle(dupClustersSql)),
+    "qd55_dsir_weights" -> Query(Selection.dsirQuery _, Oracle(dsirSql)),
+    "qd56_dsir_resample" -> Query(Selection.resampleQuery _, Oracle(dsirResampleSql)),
+    "qd58_nb_classify" -> Query(Selection.nbQuery _, Oracle(nbSql)),
+    "qd59_hll_profile" -> Query(Sketch.hllQuery _, Oracle(hllSql)),
+    "qd60_hll_overlap" -> Query(Sketch.hllOverlapQuery _, Oracle(hllOverlapSql)),
     // qd61: every ingredient is exact integer arithmetic — bucket
     // index from bitlength+shift (the qd59 BIN/LENGTH convention),
     // k = ceil(p·n/100) in integer form, bucket lower edge from
     // shifts, exact side the rank-k order statistic (well-defined
     // under ties) — so the whole report is bit-identical cross-engine.
-    "qd61_quantile_sketch" -> quantileSql,
+    "qd61_quantile_sketch" -> Query(Sketch.quantileQuery _, Oracle(quantileSql)),
     // qs43: bucket counts are a summable order-free monoid — the
     // drained streaming histogram provably equals qd61's batch one
     // for any micro-batch split, so qd61's oracle carries verbatim
     // (the fourth member of the bounded-state streaming tier).
-    "qs43_stream_quantile" -> quantileSql,
+    "qs43_stream_quantile" -> Query(SketchStream.quantileStreamGate _, Oracle(quantileSql)),
     // qd62: the count-min counters are plain BIGINT sums over the
     // same portable fingerprint + avalanche chain as qd59 (per-row
     // affine pre-mix, the portablePerms convention), the top-5 rank
     // ties to the lexically smaller token, and the estimate is a MIN
     // over 4 exact counters — every ingredient integer-exact, so the
     // report is bit-identical cross-engine.
-    "qd62_heavy_hitters" -> cmSql,
+    "qd62_heavy_hitters" -> Query(Sketch.cmQuery _, Oracle(cmSql)),
     // qs41: counter sums are an order-free monoid — the drained
     // streaming counter table provably equals qd62's batch counters
     // for ANY micro-batch split, so qd62's oracle carries verbatim
     // (the qs40 argument, third member of the sketch tier).
-    "qs41_stream_cm" -> cmSql,
+    "qs41_stream_cm" -> Query(SketchStream.cmStreamGate _, Oracle(cmSql)),
     // qd63: the bottom-k sample is the k smallest distinct avalanched
     // hashes (the qd59 chain verbatim), the estimator one dialect-
     // shared expression over (n_kept, kth_hash) — integer-exact
     // inputs, bit-identical report.
-    "qd63_bottomk_profile" -> bkSql,
+    "qd63_bottomk_profile" -> Query(Sketch.bottomkQuery _, Oracle(bkSql)),
     // qs42: min-k over a set is an order-free monoid (the streaming
     // aggregator's merge is union + take-k), so the drained sample
     // provably equals the batch bottom-k for any micro-batch split —
     // qd63's oracle carries verbatim.
-    "qs42_stream_bottomk" -> bkSql,
+    "qs42_stream_bottomk" -> Query(SketchStream.bottomkStreamGate _, Oracle(bkSql)),
     // qd64: both sketches, the union fold (k smallest of the tagged
     // union — the monoid merge in SQL), the membership counts and
     // both dialect-shared estimate expressions rebuilt — all exact
     // integer arithmetic, bit-identical cross-engine.
-    "qd64_bottomk_resemblance" -> bkResSql,
+    "qd64_bottomk_resemblance" -> Query(Sketch.bottomkResQuery _, Oracle(bkResSql)),
     // qs40: qd59's token-grain register chain, estimate-only — the
     // streaming register-max aggregate provably equals the batch one
     // (max is an order-free monoid; micro-batch boundaries can't
@@ -455,18 +248,18 @@ object SparkEntry {
     // carries over. Registers over token OCCURRENCES equal registers
     // over DISTINCT tokens (max ignores duplicates), so the oracle
     // derives from the distinct grain.
-    "qs40_stream_hll" -> hllEstOnlySql,
+    "qs40_stream_hll" -> Query(SketchStream.hllStreamGate _, Oracle(hllEstOnlySql)),
     // qd65: reads the STORED register artifact; storage cannot change
     // the registers, so the estimate-only chain carries verbatim.
-    "qd65_sketch_store" -> hllEstOnlySql,
+    "qd65_sketch_store" -> Query(TrainingOps.storedSketchEstimate _, Oracle(hllEstOnlySql)),
     // qd66: qd53's exhaustive span machinery with cross-corpus-only
     // coverage — a training position is cut iff its 8-gram appears in
     // the src0 (eval) gram set; islands/rebuild carry verbatim. The
     // join against a DISTINCT eval gram set replaces qd53's rn >= 2
     // keep-first window (eval text must not leak at all), so no
     // window determinism caveat applies.
-    "qd66_span_decontaminate" ->
-      ("""WITH toks AS (
+    "qd66_span_decontaminate" -> Query(Dedup.spanDecontaminateQuery _, Oracle(
+      """WITH toks AS (
          |  SELECT doc_id, source, list_filter(string_split(
          |    regexp_replace(lower(text), '[^a-z0-9]+', ' ', 'g'), ' '),
          |    x -> x != '') AS t
@@ -505,14 +298,14 @@ object SparkEntry {
          |LEFT JOIN reb r ON d.doc_id = r.doc_id
          |LEFT JOIN sp s ON d.doc_id = s.doc_id
          |WHERE d.source != 'src0'
-         |ORDER BY d.doc_id""".stripMargin),
+         |ORDER BY d.doc_id""".stripMargin)),
     // qs39: qd40's exhaustive batch×corpus oracle re-framed on the
     // qd54 corpus split (src19 arrives, everything else stands) — the
     // streaming gate's micro-batch union is provably boundary-free
     // (per-doc verdicts are order-free; Dedup.admitAgainst scaladoc),
     // so the batch oracle carries over verbatim.
-    "qs39_admission_gate" ->
-      (s"""$shingleCte,
+    "qs39_admission_gate" -> Query(Admission.admissionGate _, Oracle(
+      s"""$shingleCte,
          |m AS (SELECT sh.doc_id, d.source != 'src19' AS corp, sh.s
          |  FROM sh JOIN documents d USING (doc_id)),
          |x AS (SELECT b.doc_id, CAST(min(c.doc_id) AS BIGINT) AS dup_of
@@ -523,7 +316,7 @@ object SparkEntry {
          |  GROUP BY 1)
          |SELECT m.doc_id, x.dup_of, x.dup_of IS NOT NULL AS is_dup
          |FROM m LEFT JOIN x USING (doc_id) WHERE NOT m.corp
-         |ORDER BY doc_id""".stripMargin),
+         |ORDER BY doc_id""".stripMargin)),
     // qd67: exhaustive edit-distance truth behind two SOUND
     // prefilters (ed >= |Δlen|; ed >= L1(charHist)/2 under any
     // alphabet projection — each edit moves the multiset by at most
@@ -532,42 +325,42 @@ object SparkEntry {
     // optimization fence: without it DuckDB reorders the O(n·m)
     // levenshtein ahead of the histogram prune (39 candidate pairs
     // vs 6258 — 0.7 s vs 25 s at sf0.01), same rows either way.
-    "qd67_edit_neardups" -> editNearDupsSql,
+    "qd67_edit_neardups" -> Query(EditJoin.editNearDupsQuery _, Oracle(editNearDupsSql)),
     // qd68: SAME truth through the segment-indexed candidate path —
     // the oracle is blocking-independent, so it carries verbatim
     // (the qd13/qd16 two-algorithms-one-truth precedent).
-    "qd68_edit_neardups_seg" -> editNearDupsSql,
+    "qd68_edit_neardups_seg" -> Query(EditJoin.editNearDupsSegQuery _, Oracle(editNearDupsSql)),
     // qx29: the SQL-surface declaration of the same truth (unbounded
     // levenshtein predicate, rewritten to the banded form by the
     // injected optimizer rule) — blocking-independent oracle carries.
-    "qx29_edit_sql_surface" -> editNearDupsSql,
+    "qx29_edit_sql_surface" -> Query(Extras.editSqlSurface _, Oracle(editNearDupsSql)),
     // qd69: the same exhaustive machinery oriented batch(src19) ->
     // corpus, rolled up to one verdict per batch doc (best partner by
     // (distance, id); NULL/false when none within 12). Blocking- and
     // storage-independent truth, so the stored-index path carries.
-    "qd69_edit_admission" -> editAdmissionSql,
+    "qd69_edit_admission" -> Query(EditJoin.editAdmissionQuery _, Oracle(editAdmissionSql)),
     // qs44: per-doc verdicts are order-free (doc + standing index
     // only), so the micro-batch union provably equals qd69's
     // one-shot batch run and its oracle carries verbatim (the qs39
     // argument, edit family).
-    "qs44_edit_admission_gate" -> editAdmissionSql,
+    "qs44_edit_admission_gate" -> Query(Admission.editAdmissionGate _, Oracle(editAdmissionSql)),
     // qx28: the oracle recomputes from the PARQUET source, so the
     // ORC roundtrip must be lossless for every carried type; SUM of
     // BIGINT is HUGEINT in DuckDB -> cast back (the dtype rule).
-    "qx28_orc_roundtrip" ->
-      ("""SELECT source, count(*) AS n_docs,
+    "qx28_orc_roundtrip" -> Query(Extras.orcRoundtrip _, Oracle(
+      """SELECT source, count(*) AS n_docs,
          |  CAST(sum(n_chars) AS BIGINT) AS sum_chars,
          |  min(doc_id) AS first_doc
          |FROM documents WHERE n_chars >= 200
-         |GROUP BY source ORDER BY source""".stripMargin),
-    "qd14_decontaminate" -> decontaminateSql,
-    "qd36_leakage_split" -> leakageSplitSql,
+         |GROUP BY source ORDER BY source""".stripMargin)),
+    "qd14_decontaminate" -> Query(TrainingOps.decontaminate _, Oracle(decontaminateSql)),
+    "qd36_leakage_split" -> Query(TrainingOps.leakageSplit _, Oracle(leakageSplitSql)),
     // qd37: the oracle takes the plain self-join formulation — same
     // distinct (source, gram) rows, same counts; the Spark side's
     // one-pass pair explode is an implementation choice, not a
     // semantic one. Jaccard is one double division over exact longs.
-    "qd37_source_overlap" ->
-      (s"""$shingleCte,
+    "qd37_source_overlap" -> Query(TrainingOps.sourceOverlap _, Oracle(
+      s"""$shingleCte,
          |sg AS (SELECT DISTINCT source, g FROM (
          |  SELECT d.source, unnest(sh.s) AS g
          |  FROM sh JOIN documents d USING (doc_id))),
@@ -582,13 +375,13 @@ object SparkEntry {
          |    / CAST(ca.n + cb.n - shared AS DOUBLE) AS gram_jaccard
          |FROM p JOIN cnt ca ON ca.source = p.src_a
          |JOIN cnt cb ON cb.source = p.src_b
-         |ORDER BY src_a, src_b""".stripMargin),
+         |ORDER BY src_a, src_b""".stripMargin)),
     // qd39: both engines derive the identical distinct-gram sets
     // (shingleCte == gramsRelational), so first-occurrence is an
     // exact min over BIGINT doc ids and novelty one division of
     // exact longs.
-    "qd39_gram_novelty" ->
-      (s"""$shingleCte,
+    "qd39_gram_novelty" -> Query(TrainingOps.gramNovelty _, Oracle(
+      s"""$shingleCte,
          |g AS (SELECT doc_id, unnest(s) AS gram FROM sh),
          |f AS (SELECT gram, CAST(min(doc_id) AS BIGINT) AS first_doc
          |  FROM g GROUP BY 1)
@@ -598,12 +391,12 @@ object SparkEntry {
          |  CAST(SUM(CASE WHEN f.first_doc = g.doc_id THEN 1 ELSE 0 END)
          |      AS DOUBLE) / CAST(count(*) AS DOUBLE) AS novelty
          |FROM g JOIN f USING (gram) GROUP BY g.doc_id
-         |ORDER BY doc_id""".stripMargin),
+         |ORDER BY doc_id""".stripMargin)),
     // qs24: the qx22 exact-moment construction — counts and moment
     // sums are exact BIGINTs, z is ONE closed-form double expression
     // over them on both engines; zero variance pins z = 0.
-    "qs24_hourly_anomaly" ->
-      ("""WITH hc AS (
+    "qs24_hourly_anomaly" -> Query(Events.hourlyAnomaly _, Oracle(
+      """WITH hc AS (
          |  SELECT event_type, date_trunc('hour', ts) AS h,
          |    CAST(count(*) AS BIGINT) AS cnt
          |  FROM events GROUP BY 1, 2),
@@ -618,13 +411,13 @@ object SparkEntry {
          |  FROM hc JOIN st USING (event_type))
          |SELECT event_type, strftime(h, '%Y-%m-%d %H:00:00') AS hour,
          |  cnt, z, abs(z) >= 2.0 AS is_anomaly
-         |FROM zt ORDER BY event_type, hour""".stripMargin),
+         |FROM zt ORDER BY event_type, hour""".stripMargin)),
     // qd40: the qd6 banding-parity argument at threshold 0.9 — the
     // oracle is the exhaustive batch×corpus jaccard join (string
     // shingles; the Spark side blocks on hashed-shingle MinHash bands
     // with the same collision caveat qd6 documents).
-    "qd40_incremental_dedup" ->
-      (s"""$shingleCte,
+    "qd40_incremental_dedup" -> Query(TrainingOps.incrementalDedup _, Oracle(
+      s"""$shingleCte,
          |m AS (SELECT sh.doc_id, d.source = 'src0' AS corp, sh.s
          |  FROM sh JOIN documents d USING (doc_id)),
          |x AS (SELECT b.doc_id, CAST(min(c.doc_id) AS BIGINT) AS dup_of
@@ -635,13 +428,13 @@ object SparkEntry {
          |  GROUP BY 1)
          |SELECT m.doc_id, x.dup_of, x.dup_of IS NOT NULL AS is_dup
          |FROM m LEFT JOIN x USING (doc_id) WHERE NOT m.corp
-         |ORDER BY doc_id""".stripMargin),
+         |ORDER BY doc_id""".stripMargin)),
     // qs26: money through cents (exact ints), percentile bounds from
     // identical ints (the qs5 parity), quantized back to cents via
     // ceil/floor of identical doubles, clip+sum pure BIGINT, mean one
     // shared division chain.
-    "qs26_winsorized" ->
-      ("""WITH e AS (SELECT event_type,
+    "qs26_winsorized" -> Query(Events.winsorizedStats _, Oracle(
+      """WITH e AS (SELECT event_type,
          |    CAST(CAST(value AS DECIMAL(18,2)) * 100 AS BIGINT) AS c
          |  FROM events),
          |b AS (SELECT event_type,
@@ -656,12 +449,12 @@ object SparkEntry {
          |  CAST(hi AS DOUBLE) / 100.0 AS p99,
          |  CAST(wsum AS DOUBLE) / CAST(n AS DOUBLE) / 100.0
          |    AS winsorized_avg
-         |FROM w ORDER BY event_type""".stripMargin),
+         |FROM w ORDER BY event_type""".stripMargin)),
     // qs27: RANGE frame on floored epoch seconds (the qs19
     // convention), exact counts; same-second events are peers on
     // both engines.
-    "qs27_burst_detect" ->
-      ("""WITH e AS (SELECT user_id,
+    "qs27_burst_detect" -> Query(Events.burstDetect _, Oracle(
+      """WITH e AS (SELECT user_id,
          |    CAST(floor(epoch(ts)) AS BIGINT) AS tsec FROM events),
          |w AS (SELECT user_id, count(*) OVER (
          |    PARTITION BY user_id ORDER BY tsec
@@ -670,12 +463,12 @@ object SparkEntry {
          |SELECT user_id, CAST(count(*) AS BIGINT) AS n_events,
          |  CAST(max(in_window) AS INTEGER) AS burst,
          |  max(in_window) >= 5 AS is_bot
-         |FROM w GROUP BY user_id ORDER BY user_id""".stripMargin),
+         |FROM w GROUP BY user_id ORDER BY user_id""".stripMargin)),
     // qd41: identical distinct-gram sets both engines; shared counts
     // are exact longs, containment one division, the >= 0.8 filter
     // compares identical doubles.
-    "qd41_containment" ->
-      (s"""$shingleCte,
+    "qd41_containment" -> Query(TrainingOps.containment _, Oracle(
+      s"""$shingleCte,
          |g AS (SELECT doc_id, unnest(s) AS gram FROM sh),
          |n AS (SELECT doc_id, CAST(count(*) AS BIGINT) AS grams_a
          |  FROM g GROUP BY 1),
@@ -687,12 +480,12 @@ object SparkEntry {
          |  CAST(shared AS DOUBLE) / CAST(n.grams_a AS DOUBLE) AS containment
          |FROM p JOIN n ON n.doc_id = p.doc_a
          |WHERE CAST(shared AS DOUBLE) / CAST(n.grams_a AS DOUBLE) >= 0.8
-         |ORDER BY doc_a, doc_b""".stripMargin),
+         |ORDER BY doc_a, doc_b""".stripMargin)),
     // qs28: cents ints -> interpolated median (qs5 parity) -> exact
     // double deviations -> second interpolated median; ratio one
     // guarded shared division.
-    "qs28_mad_stats" ->
-      ("""WITH e AS (SELECT event_type,
+    "qs28_mad_stats" -> Query(Events.madStats _, Oracle(
+      """WITH e AS (SELECT event_type,
          |    CAST(CAST(value AS DECIMAL(18,2)) * 100 AS BIGINT) AS c
          |  FROM events),
          |m AS (SELECT event_type, quantile_cont(c, 0.5) AS med
@@ -705,13 +498,13 @@ object SparkEntry {
          |SELECT event_type, n, med / 100.0 AS median,
          |  mad_raw / 100.0 AS mad,
          |  CASE WHEN med = 0 THEN 0.0 ELSE mad_raw / med END AS robust_cv
-         |FROM s ORDER BY event_type""".stripMargin),
+         |FROM s ORDER BY event_type""".stripMargin)),
     // qe11: identical 1024-bit packing — generated from the SAME
     // stride list as the Spark side (hammingSigCtes): sign word +
     // 15 ordinal words; 1-based i maps to bit i-1; bit 63 is the
     // BIGINT min literal since DuckDB rejects 1<<63. Exact integer
     // Hamming = Σ popcount over the 16 words.
-    "qe11_knn_hamming" -> {
+    "qe11_knn_hamming" -> Query(TrainingOps.knnHamming _, Oracle({
       val ids = graft.operators.TrainingOps.knnQueryIds.mkString(", ")
       s"""WITH ${hammingSigCtes("e", "s")},
          |${hammingQCte("q", "s", ids)},
@@ -723,11 +516,11 @@ object SparkEntry {
          |      ORDER BY hamming, vec_id) AS INTEGER) AS rnk FROM h)
          |SELECT query_id, vec_id, rnk, hamming FROM r WHERE rnk <= 10
          |ORDER BY query_id, rnk, vec_id""".stripMargin
-    },
+    })),
     // qe10: qe7's exact-integer centroid CTEs, pair join on
     // label_a < label_b, the usual sequential-fold cosine.
-    "qe10_centroid_matrix" ->
-      (s"""WITH el AS (SELECT label, vec_id, i AS d,
+    "qe10_centroid_matrix" -> Query(Similarity.centroidMatrixQuery _, Oracle(
+      s"""WITH el AS (SELECT label, vec_id, i AS d,
          |    CAST(floor(CAST(embedding[i] AS DOUBLE) * 1000000) AS BIGINT) AS q
          |  FROM embeddings, unnest(range(1, len(embedding)+1)) u(i)),
          |s AS (SELECT label, d, CAST(SUM(q) AS BIGINT) AS qsum,
@@ -742,16 +535,16 @@ object SparkEntry {
          |    / (sqrt(${dotSql("a.centroid", "a.centroid")})
          |       * sqrt(${dotSql("b.centroid", "b.centroid")})) AS cos
          |FROM c a JOIN c b ON a.label < b.label
-         |ORDER BY label_a, label_b""".stripMargin),
+         |ORDER BY label_a, label_b""".stripMargin)),
     // qe9: the 5 greedy rounds unrolled as CTEs; rel and pairwise
     // sims are the same sequential folds as knnSql, the MMR update
     // is one IEEE multiply-subtract over them on both engines, ties
     // pinned on vec_id every round.
-    "qe9_mmr_rerank" -> mmrSql,
+    "qe9_mmr_rerank" -> Query(Similarity.mmrQuery _, Oracle(mmrSql)),
     // qs25: identical per-user (ts, event_id) step ordering, exact
     // pair counts, probability one division of exact longs.
-    "qs25_type_transitions" ->
-      ("""WITH pr AS (
+    "qs25_type_transitions" -> Query(Events.typeTransitions _, Oracle(
+      """WITH pr AS (
          |  SELECT event_type AS from_type,
          |    lead(event_type) OVER (
          |      PARTITION BY user_id ORDER BY ts, event_id) AS to_type
@@ -763,56 +556,56 @@ object SparkEntry {
          |SELECT c.from_type, c.to_type, c.n,
          |  CAST(c.n AS DOUBLE) / CAST(t.tot AS DOUBLE) AS p
          |FROM c JOIN t USING (from_type)
-         |ORDER BY from_type, to_type""".stripMargin),
-    "qd15_source_lang_pivot" ->
-      ("SELECT source, " +
+         |ORDER BY from_type, to_type""".stripMargin)),
+    "qd15_source_lang_pivot" -> Query(TrainingOps.sourceLangPivot _, Oracle(
+      "SELECT source, " +
         Seq("de", "en", "es", "fr", "zh").map(l =>
           s"CAST(SUM(CASE WHEN lang = '$l' THEN 1 ELSE 0 END) AS BIGINT) AS $l")
           .mkString(", ") +
-        " FROM documents GROUP BY source ORDER BY source"),
+        " FROM documents GROUP BY source ORDER BY source")),
     // unpivot of the wide matrix == per-(source, lang) conditional
     // counts, zeros kept
-    "qx10_unpivot" ->
-      (Seq("de", "en", "es", "fr", "zh").map(l =>
+    "qx10_unpivot" -> Query(TrainingOps.sourceLangUnpivot _, Oracle(
+      Seq("de", "en", "es", "fr", "zh").map(l =>
         s"SELECT source, '$l' AS lang, " +
           s"CAST(SUM(CASE WHEN lang = '$l' THEN 1 ELSE 0 END) AS BIGINT) AS n " +
           "FROM documents GROUP BY source")
-        .mkString("", " UNION ALL ", " ORDER BY source, lang")),
-    "qe1_knn_brute" -> knnSql,
+        .mkString("", " UNION ALL ", " ORDER BY source, lang"))),
+    "qe1_knn_brute" -> Query(TrainingOps.knnBrute _, Oracle(knnSql)),
     // qe25 (vector admission at full probe + full shortlist): both
     // parity arguments stack over the STORED corpus index — every
     // corpus vector admitted by the cell probe, every candidate
     // exactly re-ranked after the ADC pass — so the exhaustive
     // arrivals × corpus kNN below is exact for any centroids/grid.
-    "qe25_vec_admission" -> vecAdmitSql,
+    "qe25_vec_admission" -> Query(VecAdmission.vecAdmissionQuery _, Oracle(vecAdmitSql)),
     // qs45: per-arrival verdicts depend only on (that vector, the
     // standing index) — order-free, so the micro-batch union equals
     // qe25's one-shot batch run for ANY file split (the qs44 move).
-    "qs45_vec_admission_gate" -> vecAdmitSql,
+    "qs45_vec_admission_gate" -> Query(Admission.vecAdmissionGate _, Oracle(vecAdmitSql)),
     // qd70: the unigram-LM EM step, DP unrolled per word position —
     // every ingredient integer-exact or shared-floor-quantized (see
     // unigramLmSql's scaladoc).
-    "qd70_unigram_lm" -> unigramLmSql,
+    "qd70_unigram_lm" -> Query(UnigramLm.emStepQuery _, Oracle(unigramLmSql)),
     // qe26 (filtered search at full probe): candidates provably = the
     // whole FILTERED corpus for any centroids, so the brute top-10
     // over the lang='en' slice is the exact truth (queries
     // unfiltered, self excluded by id).
-    "qe26_knn_filtered" -> knnFilteredSql,
+    "qe26_knn_filtered" -> Query(TrainingOps.knnFiltered _, Oracle(knnFilteredSql)),
     // qe27 (hard negatives at full probe): candidates provably cover
     // each anchor's whole different-lang slice, so the exhaustive
     // complement top-10 is the exact truth.
-    "qe27_hard_negatives" -> hardNegativesSql,
+    "qe27_hard_negatives" -> Query(TrainingOps.knnHardNegatives _, Oracle(hardNegativesSql)),
     // qd71: the trainer chain re-run + the pruned-vocab second DP +
     // doc rollup (see unigramEncodeSql's scaladoc).
-    "qd71_unigram_encode" -> unigramEncodeSql,
+    "qd71_unigram_encode" -> Query(UnigramLm.encodeQuery _, Oracle(unigramEncodeSql)),
     // qd72: EM round 2 — qd71's shared kept-vocab chain, then round
     // 1's M-step rules applied to the round-2 usage counts.
-    "qd72_unigram_lm2" -> unigramLm2Sql,
+    "qd72_unigram_lm2" -> Query(UnigramLm.emRound2 _, Oracle(unigramLm2Sql)),
     // qd73: EM round 3 — one more kept-vocab chain + M-step; the
     // 3-round driver loop (qd35's BPE twin at the unigram tier).
-    "qd73_unigram_lm3" -> unigramLm3Sql,
-    "qd74_unigram_fertility" -> unigramEncode3Sql,
-    "qd75_edit_publish" -> editPublishSql,
+    "qd73_unigram_lm3" -> Query(UnigramLm.emRound3 _, Oracle(unigramLm3Sql)),
+    "qd74_unigram_fertility" -> Query(UnigramLm.encode3ByLang _, Oracle(unigramEncode3Sql)),
+    "qd75_edit_publish" -> Query(EditJoin.editPublishQuery _, Oracle(editPublishSql)),
     // qd76: the two-generation SEQUENTIAL admission truth (gen-2
     // candidates meet corpus ∪ gen-1 survivors) — the published-index
     // probe's oracle; qs48 is the same semantics on the streaming
@@ -820,30 +613,39 @@ object SparkEntry {
     // publish), so it shares the oracle verbatim — INCLUDING the gen
     // column, which pins the file source's modification-time batch
     // order (a flipped drain order would mislabel gen and fail).
-    "qd76_edit_seq_admission" -> editSeqSql,
-    "qs48_seq_publish_gate" -> editSeqSql,
+    "qd76_edit_seq_admission" -> Query(EditJoin.editSeqAdmissionQuery _, Oracle(editSeqSql)),
+    "qs48_seq_publish_gate" -> Query(Admission.seqPublishGate _, Oracle(editSeqSql)),
     // qd77: the five stage oracles (qd34 quality, qd13/qd44
     // components + reps, qd14 decontamination, qd31 temperature
     // sample, qd43 card) chained as MATERIALIZED CTEs; the edge set
     // rides the exact gram-equi-join Jaccard (identical to the
     // list_intersect form, relational speed).
-    "qd77_curation_pipeline" -> curationPipelineSql,
+    "qd77_curation_pipeline" -> Query(Curation.pipelineReport _, Oracle(curationPipelineSql)),
     // qs46: the composed admission verdict — the conjunction of the
     // three gate oracles (qs39 MinHash, qs44 edit, qs45 vector top-1
     // at the semantic threshold), one row per arrival.
-    "qs46_composed_admission" -> composedAdmissionSql,
+    "qs46_composed_admission" -> Query(Admission.composedAdmissionGate _,
+      Oracle(composedAdmissionSql)),
+    "qs47_calibrated_admission" -> Query(Admission.calibratedAdmissionGate _,
+      RowsOnly("approximate by design: the composed admission drain at " +
+        "qe25's calibrated (nProbe, shortlist) operating point, whose " +
+        "vector leg probes about nProbe/k of the corpus and trades recall " +
+        "for it, so no exact SQL truth exists. Round16OpsSpec pins the " +
+        "lexical legs exactly equal to qs46's oracle-checked verdicts and " +
+        "floors the composed-verdict agreement and the vector leg's top-1 " +
+        "recall against the parity drain.")),
     // qe2 (1-bit-band LSH) and qe4 (full-probe IVF) are declared at
     // provable-equivalence parameters — both reduce to exact cosine
     // top-k, so the brute-force SQL is their oracle verbatim.
-    "qe2_knn_lsh" -> knnSql,
-    "qe4_knn_ivf" -> knnSql,
+    "qe2_knn_lsh" -> Query(TrainingOps.knnLsh _, Oracle(knnSql)),
+    "qe4_knn_ivf" -> Query(TrainingOps.knnIvf _, Oracle(knnSql)),
     // qe8 (full-shortlist PQ/ADC) re-ranks every candidate with exact
     // cosines — equal to brute for ANY codebook, same oracle again.
-    "qe8_knn_pq" -> knnSql,
+    "qe8_knn_pq" -> Query(TrainingOps.knnPq _, Oracle(knnSql)),
     // qe12 (IVF-PQ at full probe + full shortlist): both parity
     // arguments stack — every candidate admitted, every one exactly
     // re-ranked — so brute's oracle applies for any codebooks.
-    "qe12_knn_ivfpq" -> knnSql,
+    "qe12_knn_ivfpq" -> Query(TrainingOps.knnIvfPq _, Oracle(knnSql)),
     // qe14: the kNN SELF-join graph — knnSql's construction with
     // every vector as a query (same sequential-fold cosine, same rank
     // tie on the neighbor id), k=3, computed through the cell-blocked
@@ -851,8 +653,10 @@ object SparkEntry {
     // set all pairs for any centroids, so the result provably equals
     // the exact graph this SQL recomputes (SimilaritySpec pins the
     // bit-for-bit parity against the demoted all-pairs baseline).
-    "qe14_knn_graph_blocked" ->
-      (s"""WITH base AS (
+    // That baseline, qe13, left the gate: its broadcast crossJoin
+    // cannot run at growing sf.
+    "qe14_knn_graph_blocked" -> Query(TrainingOps.knnGraphBlockedFull _, Oracle(
+      s"""WITH base AS (
          |  SELECT vec_id, embedding,
          |    sqrt(${dotSql("embedding", "embedding")}) AS nrm
          |  FROM embeddings),
@@ -865,7 +669,7 @@ object SparkEntry {
          |          ORDER BY sim DESC, nbr_id) AS INTEGER) AS rnk
          |      FROM s)
          |SELECT vec_id, nbr_id, rnk, sim FROM r WHERE rnk <= 3
-         |ORDER BY vec_id, rnk, nbr_id""".stripMargin),
+         |ORDER BY vec_id, rnk, nbr_id""".stripMargin)),
     // qe3 at 1-bit-band geometry: a pair escapes blocking only when
     // all 16 sign bits differ — p ~ (acos(sim)/pi)^16, ~5e-7 per pair
     // at the 0.3 threshold and vanishing for higher sims — so the
@@ -875,15 +679,17 @@ object SparkEntry {
     // regenerated or enlarged, RE-VERIFY this equivalence before
     // treating a qe3 gate failure as a code regression — a fresh
     // corpus can realize the ~5e-7 escape with no code change.
-    "qe3_embedding_neardups" -> nearDupsSql,
-    "qd6_minhash_pairs" -> minhashPairsSql,
-    "qd10_pair_jaccard" -> pairJaccardSql,
+    "qe3_embedding_neardups" -> Query(TrainingOps.embeddingNearDups _, Oracle(nearDupsSql)),
+    "qd6_minhash_pairs" -> Query(TrainingOps.minhashTopPairs _, Oracle(minhashPairsSql)),
+    "qd10_pair_jaccard" -> Query(
+      (s: SparkSession, d: String) => TrainingOps.pairJaccard(s, d),
+      Oracle(pairJaccardSql)),
     // Deterministic mixture sampling: the rolling-hash fingerprint
     // (same expression as qd5's oracle) buckets content mod 100; the
     // per-source rate is a function of the source name both engines
     // compute identically.
-    "qd12_hash_sample" ->
-      ("""WITH f AS (
+    "qd12_hash_sample" -> Query(TrainingOps.hashSample _, Oracle(
+      """WITH f AS (
          |  SELECT doc_id, source,
          |    CAST(CASE WHEN length(text) = 0 THEN 0 ELSE
          |      list_reduce(list_transform(string_split(text, ''), c -> CAST(unicode(c) AS BIGINT)),
@@ -891,12 +697,12 @@ object SparkEntry {
          |  FROM documents)
          |SELECT doc_id, source, bucket FROM f
          |WHERE bucket < 20 + 20 * (length(source) % 3)
-         |ORDER BY doc_id""".stripMargin),
+         |ORDER BY doc_id""".stripMargin)),
     // TF-IDF: Math.log and DuckDB ln can differ by 1 ulp, so the
     // score is quantized to 6 decimals by the same floor construction
     // on both sides and the rank orders on the quantized value.
-    "qd11_doc_keywords" ->
-      ("""WITH toks AS (
+    "qd11_doc_keywords" -> Query(TrainingOps.docKeywords _, Oracle(
+      """WITH toks AS (
          |  SELECT doc_id, unnest(list_filter(string_split(
          |    regexp_replace(lower(text), '[^a-z0-9]+', ' ', 'g'), ' '),
          |    t -> t != '')) AS token
@@ -912,42 +718,42 @@ object SparkEntry {
          |      FROM s)
          |SELECT doc_id, token, CAST(tf AS BIGINT) AS tf, tfidf, rnk
          |FROM r WHERE rnk <= 5
-         |ORDER BY doc_id, rnk, token""".stripMargin),
-    "qx1_left_join" ->
-      ("SELECT c.c_custkey, a.n_orders, a.total FROM customer c LEFT JOIN (" +
+         |ORDER BY doc_id, rnk, token""".stripMargin)),
+    "qx1_left_join" -> Query(Extras.leftJoinOrders _, Oracle(
+      "SELECT c.c_custkey, a.n_orders, a.total FROM customer c LEFT JOIN (" +
         "SELECT o_custkey, count(*) AS n_orders, " +
         "CAST(SUM(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE) AS total " +
         "FROM orders GROUP BY 1) a ON c.c_custkey = a.o_custkey " +
-        "ORDER BY c.c_custkey"),
-    "qx2_semi_join" ->
-      ("SELECT c_custkey, c_name FROM customer c WHERE EXISTS (" +
+        "ORDER BY c.c_custkey")),
+    "qx2_semi_join" -> Query(Extras.semiJoin _, Oracle(
+      "SELECT c_custkey, c_name FROM customer c WHERE EXISTS (" +
         "SELECT 1 FROM orders o WHERE o.o_custkey = c.c_custkey) " +
-        "ORDER BY c_custkey"),
-    "qx3_anti_join" ->
-      ("SELECT c_custkey, c_name FROM customer c WHERE NOT EXISTS (" +
+        "ORDER BY c_custkey")),
+    "qx3_anti_join" -> Query(Extras.antiJoin _, Oracle(
+      "SELECT c_custkey, c_name FROM customer c WHERE NOT EXISTS (" +
         "SELECT 1 FROM orders o WHERE o.o_custkey = c.c_custkey " +
-        "AND o.o_totalprice > 400000) ORDER BY c_custkey"),
-    "qx4_rollup" ->
-      ("SELECT o_orderstatus, o_orderpriority, count(*) AS n, " +
+        "AND o.o_totalprice > 400000) ORDER BY c_custkey")),
+    "qx4_rollup" -> Query(Extras.rollupStatus _, Oracle(
+      "SELECT o_orderstatus, o_orderpriority, count(*) AS n, " +
         "CAST(SUM(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE) AS total " +
         "FROM orders GROUP BY ROLLUP (o_orderstatus, o_orderpriority) " +
-        "ORDER BY o_orderstatus NULLS FIRST, o_orderpriority NULLS FIRST"),
-    "qx5_cube" ->
-      ("SELECT o_orderstatus, o_orderpriority, count(*) AS n " +
+        "ORDER BY o_orderstatus NULLS FIRST, o_orderpriority NULLS FIRST")),
+    "qx5_cube" -> Query(Extras.cubeStatus _, Oracle(
+      "SELECT o_orderstatus, o_orderpriority, count(*) AS n " +
         "FROM orders GROUP BY CUBE (o_orderstatus, o_orderpriority) " +
-        "ORDER BY o_orderstatus NULLS FIRST, o_orderpriority NULLS FIRST"),
-    "qx6_intersect" ->
-      ("SELECT c_nationkey AS nk FROM customer INTERSECT " +
-        "SELECT s_nationkey AS nk FROM supplier ORDER BY nk"),
-    "qx7_except" ->
-      ("SELECT c_nationkey AS nk FROM customer EXCEPT " +
+        "ORDER BY o_orderstatus NULLS FIRST, o_orderpriority NULLS FIRST")),
+    "qx6_intersect" -> Query(Extras.intersectNations _, Oracle(
+      "SELECT c_nationkey AS nk FROM customer INTERSECT " +
+        "SELECT s_nationkey AS nk FROM supplier ORDER BY nk")),
+    "qx7_except" -> Query(Extras.exceptNations _, Oracle(
+      "SELECT c_nationkey AS nk FROM customer EXCEPT " +
         "SELECT s_nationkey AS nk FROM supplier WHERE s_acctbal > 8000 " +
-        "ORDER BY nk"),
+        "ORDER BY nk")),
     // DuckDB's native ASOF JOIN is the oracle for our composed
     // union+window implementation. ts cast TIMESTAMP_NS -> TIMESTAMP
     // (microseconds) mirrors Spark's precision truncation.
-    "qx8_asof_join" ->
-      ("""WITH ev AS (SELECT event_id, user_id, event_type, value,
+    "qx8_asof_join" -> Query(AsOfJoin.eventAsOf _, Oracle(
+      """WITH ev AS (SELECT event_id, user_id, event_type, value,
          |              CAST(ts AS TIMESTAMP) AS ts FROM events),
          |clicks AS (SELECT event_id, user_id, ts FROM ev WHERE event_type = 'click'),
          |purch AS (SELECT user_id, ts, max(CAST(value AS DECIMAL(18,2))) AS pval
@@ -957,10 +763,10 @@ object SparkEntry {
          |  COALESCE(CAST(p.pval AS DOUBLE), -1.0) AS last_purchase
          |FROM clicks c ASOF LEFT JOIN purch p
          |  ON c.user_id = p.user_id AND c.ts >= p.ts
-         |ORDER BY c.event_id""".stripMargin),
+         |ORDER BY c.event_id""".stripMargin)),
     // plain inequality join as oracle for the bucketed range join
-    "qx9_range_join" ->
-      ("""WITH ev AS (SELECT event_id, user_id, event_type,
+    "qx9_range_join" -> Query(RangeJoin.errorClickBurst _, Oracle(
+      """WITH ev AS (SELECT event_id, user_id, event_type,
          |              CAST(floor(epoch(CAST(ts AS TIMESTAMP))) AS BIGINT) AS epoch
          |            FROM events),
          |e AS (SELECT event_id, user_id, epoch FROM ev WHERE event_type = 'error'),
@@ -968,30 +774,30 @@ object SparkEntry {
          |SELECT e.event_id, count(c.epoch) AS n_in_window
          |FROM e LEFT JOIN c ON c.user_id = e.user_id
          |  AND c.epoch <= e.epoch AND c.epoch > e.epoch - 300
-         |GROUP BY 1 ORDER BY e.event_id""".stripMargin),
-    "qs1_event_hourly" -> hourlyStatsSql,
+         |GROUP BY 1 ORDER BY e.event_id""".stripMargin)),
+    "qs1_event_hourly" -> Query(Events.hourlyStats _, Oracle(hourlyStatsSql)),
     // qs8 is qs1 recomputed incrementally (windowed streaming agg;
     // decimal sums are order-free) — same result, same oracle.
-    "qs8_stream_hourly" -> hourlyStatsSql,
+    "qs8_stream_hourly" -> Query(EventStream.hourlyStatsGate _, Oracle(hourlyStatsSql)),
     // qs9: event_ids are unique in the corpus, so the watermarked
     // streaming dedup provably equals the plain projection.
-    "qs9_stream_dedup" ->
-      ("SELECT event_id, user_id, event_type FROM events " +
-        "ORDER BY event_id"),
+    "qs9_stream_dedup" -> Query(EventStream.dedupGate _, Oracle(
+      "SELECT event_id, user_id, event_type FROM events " +
+        "ORDER BY event_id")),
     // qs20: dropDuplicatesWithinWatermark — unique gate event_ids
     // make it the plain projection too (qs9's argument); the
     // differing-event-time duplicate model is StreamingSpec's.
-    "qs20_stream_dedup_ww" ->
-      ("SELECT event_id, user_id, event_type FROM events " +
-        "ORDER BY event_id"),
-    "qs2_sessionize" -> sessionizeSql,
+    "qs20_stream_dedup_ww" -> Query(EventStream.dedupWwGate _, Oracle(
+      "SELECT event_id, user_id, event_type FROM events " +
+        "ORDER BY event_id")),
+    "qs2_sessionize" -> Query((Events.sessionize(_, _)), Oracle(sessionizeSql)),
     // qs7 is qs2 recomputed incrementally (Structured Streaming drain
     // with per-user session state) — same result, same oracle.
-    "qs7_stream_sessionize" -> sessionizeSql,
+    "qs7_stream_sessionize" -> Query(SessionStream.sessionizeGate _, Oracle(sessionizeSql)),
     // qs29: identical (user, day) fan-out on both engines; counts
     // exact, gap days from the same calendar spine.
-    "qs29_rolling_actives" ->
-      ("""WITH ud AS (SELECT DISTINCT user_id, CAST(ts AS DATE) AS day
+    "qs29_rolling_actives" -> Query(Events.rollingActives _, Oracle(
+      """WITH ud AS (SELECT DISTINCT user_id, CAST(ts AS DATE) AS day
          |  FROM events),
          |b AS (SELECT min(day) AS d0, max(day) AS d1 FROM ud),
          |spine AS (SELECT CAST(unnest(generate_series(d0, d1,
@@ -1006,12 +812,12 @@ object SparkEntry {
          |SELECT strftime(s.day, '%Y-%m-%d') AS day,
          |  COALESCE(dau.dau, 0) AS dau, COALESCE(wau.wau7, 0) AS wau7
          |FROM spine s LEFT JOIN dau USING (day) LEFT JOIN wau USING (day)
-         |ORDER BY day""".stripMargin),
+         |ORDER BY day""".stripMargin)),
     // qs30: qs2's session CTEs reduced to durations (floored-epoch
     // diffs, exact BIGINTs), interpolated percentiles (qs5 parity),
     // one shared division for events/session.
-    "qs30_session_stats" ->
-      ("""WITH e AS (SELECT *, lag(ts) OVER (
+    "qs30_session_stats" -> Query(Events.sessionStats _, Oracle(
+      """WITH e AS (SELECT *, lag(ts) OVER (
          |    PARTITION BY user_id ORDER BY ts, event_id) AS prev_ts
          |  FROM events),
          |f AS (SELECT *, CASE WHEN prev_ts IS NULL THEN 1
@@ -1033,18 +839,18 @@ object SparkEntry {
          |  quantile_cont(dur, 0.95) AS p95_dur_sec,
          |  CAST(SUM(n_events) AS DOUBLE) / CAST(count(*) AS DOUBLE)
          |    AS events_per_session
-         |FROM s""".stripMargin),
-    "qs3_props_json" ->
-      ("SELECT event_id, CAST(json_extract_string(props, '$.k') AS INTEGER) AS k " +
-        "FROM events ORDER BY event_id"),
-    "qs5_percentiles" ->
-      ("SELECT event_type, quantile_cont(value, 0.5) AS med, " +
+         |FROM s""".stripMargin)),
+    "qs3_props_json" -> Query(Events.propsExtract _, Oracle(
+      "SELECT event_id, CAST(json_extract_string(props, '$.k') AS INTEGER) AS k " +
+        "FROM events ORDER BY event_id")),
+    "qs5_percentiles" -> Query(Events.valuePercentiles _, Oracle(
+      "SELECT event_type, quantile_cont(value, 0.5) AS med, " +
         "quantile_cont(value, 0.95) AS p95 " +
-        "FROM events GROUP BY 1 ORDER BY event_type"),
+        "FROM events GROUP BY 1 ORDER BY event_type")),
     // bounded-frame window: decimal frame sum / exact count, division
     // in double on both sides; frame order pinned by (ts, event_id)
-    "qs6_moving_avg" ->
-      ("""WITH e AS (SELECT user_id, event_id,
+    "qs6_moving_avg" -> Query(Events.movingAvg _, Oracle(
+      """WITH e AS (SELECT user_id, event_id,
          |             CAST(ts AS TIMESTAMP) AS ts, value FROM events)
          |SELECT user_id, event_id,
          |  strftime(ts, '%Y-%m-%d %H:%M:%S') AS ts_s,
@@ -1055,25 +861,25 @@ object SparkEntry {
          |         OVER (PARTITION BY user_id ORDER BY ts, event_id
          |               ROWS BETWEEN 4 PRECEDING AND CURRENT ROW) AS DOUBLE)
          |    AS avg5
-         |FROM e ORDER BY user_id, ts_s, event_id""".stripMargin),
-    "qd8_source_stats" ->
-      ("SELECT source, count(*) AS n_docs, " +
+         |FROM e ORDER BY user_id, ts_s, event_id""".stripMargin)),
+    "qd8_source_stats" -> Query(TrainingOps.sourceStats _, Oracle(
+      "SELECT source, count(*) AS n_docs, " +
         "count(DISTINCT lang) AS n_langs, CAST(SUM(n_chars) AS BIGINT) AS total_chars " +
-        "FROM documents GROUP BY 1 ORDER BY source"),
-    "qd9_token_freq" ->
-      ("SELECT token, count(*) AS doc_freq FROM (" +
+        "FROM documents GROUP BY 1 ORDER BY source")),
+    "qd9_token_freq" -> Query(TrainingOps.tokenFreq _, Oracle(
+      "SELECT token, count(*) AS doc_freq FROM (" +
         "SELECT DISTINCT doc_id, unnest(list_filter(" +
         "string_split(regexp_replace(lower(text), '[^a-z0-9]+', ' ', 'g'), ' '), " +
         "t -> t != '')) AS token FROM documents) t " +
-        "GROUP BY 1 ORDER BY doc_freq DESC, token LIMIT 50"),
+        "GROUP BY 1 ORDER BY doc_freq DESC, token LIMIT 50")),
     // qm1: the oracle recomputes the media attributes the Spark side
     // encodes into (and decodes back out of) real binary blobs — a
     // value check of the full encode→parse→aggregate round-trip.
     // payload_bytes == octet_length(text) on both branches: the valid
     // decode subtracts the header it added, the corrupt branch never
     // had one.
-    "qm1_media_stats" ->
-      ("""WITH m AS (
+    "qm1_media_stats" -> Query(TrainingOps.mediaStats _, Oracle(
+      """WITH m AS (
          |  SELECT doc_id,
          |    CASE WHEN doc_id % 50 = 0 THEN 'unknown'
          |         WHEN doc_id % 3 = 0 THEN 'image'
@@ -1094,14 +900,14 @@ object SparkEntry {
          |  CAST(SUM(width) AS BIGINT) AS total_width,
          |  CAST(SUM(height) AS BIGINT) AS total_height,
          |  CAST(SUM(n_frames) AS BIGINT) AS total_frames
-         |FROM m GROUP BY kind ORDER BY kind""".stripMargin),
+         |FROM m GROUP BY kind ORDER BY kind""".stripMargin)),
     // qm2: frame sampling is integer arithmetic over the encoded
     // geometry — frameLen = max(1, payload // n_frames), frames
     // 0,4,8,... < n_frames, last slice clipped to the payload end —
     // so the oracle recomputes counts and byte totals from
     // (doc_id, octet_length(text)) while Spark slices real bytes.
-    "qm2_frame_sample" ->
-      ("""WITH v AS (
+    "qm2_frame_sample" -> Query(TrainingOps.frameSample _, Oracle(
+      """WITH v AS (
          |  SELECT doc_id, 1 + doc_id % 120 AS nf,
          |    octet_length(encode(text)) AS pl
          |  FROM documents
@@ -1111,17 +917,17 @@ object SparkEntry {
          |  CAST((nf - 1) // 4 + 1 AS BIGINT) AS n_sampled,
          |  CAST(list_sum(list_transform(range(0, nf, 4),
          |    x -> greatest(0, least(fl, pl - x * fl)))) AS BIGINT) AS sampled_bytes
-         |FROM f ORDER BY media_id""".stripMargin),
+         |FROM f ORDER BY media_id""".stripMargin)),
     // qm3: output sizes are arithmetic over (doc_id, text bytes):
     // invalid (doc_id%50==0) blobs resize to empty, short payloads
     // pass through, long ones stride-sample to 16x16 bytes.
-    "qm3_resize" ->
-      ("SELECT doc_id AS media_id, 16 AS width, 16 AS height, " +
+    "qm3_resize" -> Query(TrainingOps.resizeStats _, Oracle(
+      "SELECT doc_id AS media_id, 16 AS width, 16 AS height, " +
         "CAST(CASE WHEN doc_id % 50 = 0 THEN 0 " +
         "ELSE least(octet_length(encode(text)), 256) END AS BIGINT) " +
         "AS resized_bytes_len " +
-        "FROM documents ORDER BY media_id"),
-    "qs4_top_spenders" -> topSpendersSql,
+        "FROM documents ORDER BY media_id")),
+    "qs4_top_spenders" -> Query(Events.topSpenders _, Oracle(topSpendersSql)),
     // qx11 recomputes qs4 through the typed TopKAggregator — same
     // result, same oracle (see Events.topSpendersTyped). Data-
     // dependent caveat, same class as qe3's: a spend tie crossing the
@@ -1130,23 +936,23 @@ object SparkEntry {
     // thousands of events). On a regenerated corpus, RE-CHECK for
     // boundary ties before reading a qx11 gate failure as a
     // regression.
-    "qx11_topk_agg" -> topSpendersSql,
+    "qx11_topk_agg" -> Query(Events.topSpendersTyped _, Oracle(topSpendersSql)),
     // qx12's salted join must equal the plain join — the oracle IS
     // the unsalted form.
-    "qx12_salted_join" ->
-      ("""WITH t AS (SELECT user_id,
+    "qx12_salted_join" -> Query(Extras.saltedEnrich _, Oracle(
+      """WITH t AS (SELECT user_id,
          |  CAST(SUM(CAST(value AS DECIMAL(18,2))) AS DOUBLE) AS user_total
          |  FROM events GROUP BY 1)
          |SELECT e.event_id, e.user_id, t.user_total
          |FROM events e JOIN t ON e.user_id = t.user_id
-         |ORDER BY e.event_id""".stripMargin),
+         |ORDER BY e.event_id""".stripMargin)),
     // qx13's bucketed co-located join must equal the plain join —
     // q03's oracle verbatim.
-    "qx13_bucketed_join" -> q03Sql,
+    "qx13_bucketed_join" -> Query(Extras.bucketedJoin _, Oracle(q03Sql)),
     // 200-char chunks, 150 stride: unnest(generate_series) mirrors
     // explode(sequence); substr is 1-based in both engines.
-    "qd17_chunk" ->
-      ("""WITH s AS (
+    "qd17_chunk" -> Query(TextPrep.chunkQuery _, Oracle(
+      """WITH s AS (
          |  SELECT doc_id, text,
          |    unnest(generate_series(0, CAST(length(text) AS BIGINT) - 1, 150))
          |      AS start
@@ -1155,12 +961,12 @@ object SparkEntry {
          |  substr(text, CAST(start + 1 AS INTEGER), 200) AS chunk_text,
          |  CAST(length(substr(text, CAST(start + 1 AS INTEGER), 200))
          |    AS INTEGER) AS chunk_chars
-         |FROM s ORDER BY doc_id, chunk_idx""".stripMargin),
+         |FROM s ORDER BY doc_id, chunk_idx""".stripMargin)),
     // Token-equality stopword strip; DuckDB string_split and Spark
     // split(_, " ") agree on empty-token runs, so the rejoin and the
     // removed-count are exact mirrors.
-    "qd18_strip_boilerplate" ->
-      ("""WITH t AS (SELECT doc_id, string_split(text, ' ') AS toks
+    "qd18_strip_boilerplate" -> Query(TextPrep.stripQuery _, Oracle(
+      """WITH t AS (SELECT doc_id, string_split(text, ' ') AS toks
          |  FROM documents),
          |k AS (SELECT doc_id, toks,
          |  list_filter(toks, w -> NOT list_contains(
@@ -1168,22 +974,22 @@ object SparkEntry {
          |  FROM t)
          |SELECT doc_id, array_to_string(kept, ' ') AS kept_text,
          |  CAST(len(toks) - len(kept) AS INTEGER) AS n_removed
-         |FROM k ORDER BY doc_id""".stripMargin),
+         |FROM k ORDER BY doc_id""".stripMargin)),
     // L2 norms via the same sequential dot fold as knnSql; min/max
     // are order-independent, so the group aggregate is exact.
-    "qe5_norm_audit" ->
-      (s"""WITH n AS (SELECT label, CAST(len(embedding) AS INTEGER) AS dim,
+    "qe5_norm_audit" -> Query(TrainingOps.normAudit _, Oracle(
+      s"""WITH n AS (SELECT label, CAST(len(embedding) AS INTEGER) AS dim,
          |  sqrt(${dotSql("embedding", "embedding")}) AS nrm
          |  FROM embeddings)
          |SELECT label, count(*) AS n_vecs,
          |  min(dim) AS min_dim, max(dim) AS max_dim,
          |  min(nrm) AS min_norm, max(nrm) AS max_norm
-         |FROM n GROUP BY label ORDER BY label""".stripMargin),
+         |FROM n GROUP BY label ORDER BY label""".stripMargin)),
     // SCD2 validity intervals: row_number + lead share one window;
     // o_totalprice passes through unchanged (no arithmetic), so the
     // double is bit-exact without the decimal detour.
-    "qx14_scd2_history" ->
-      ("""SELECT o_custkey AS cust,
+    "qx14_scd2_history" -> Query(Scd2.customerHistory _, Oracle(
+      """SELECT o_custkey AS cust,
          |  CAST(row_number() OVER w AS INTEGER) AS version,
          |  o_orderstatus AS status, o_totalprice AS total,
          |  strftime(o_orderdate, '%Y-%m-%d %H:%M:%S') AS valid_from,
@@ -1192,23 +998,23 @@ object SparkEntry {
          |  lead(o_orderdate) OVER w IS NULL AS is_current
          |FROM orders
          |WINDOW w AS (PARTITION BY o_custkey ORDER BY o_orderdate, o_orderkey)
-         |ORDER BY cust, version""".stripMargin),
+         |ORDER BY cust, version""".stripMargin)),
     // Packing is all-integer math (running sum, DIV, min/max/count),
     // so the mirror is exact; DuckDB's window SUM widens to HUGEINT,
     // cast back to BIGINT to match Spark's long.
-    "qd19_pack_bins" ->
-      ("""WITH o AS (SELECT source, doc_id, n_chars,
+    "qd19_pack_bins" -> Query(TextPrep.packQuery _, Oracle(
+      """WITH o AS (SELECT source, doc_id, n_chars,
          |  SUM(n_chars) OVER (PARTITION BY source ORDER BY doc_id) - n_chars
          |    AS off
          |  FROM documents)
          |SELECT source, CAST(off // 2000 AS INTEGER) AS bin,
          |  count(*) AS n_docs, CAST(SUM(n_chars) AS BIGINT) AS bin_chars,
          |  min(doc_id) AS first_doc, max(doc_id) AS last_doc
-         |FROM o GROUP BY 1, 2 ORDER BY source, bin""".stripMargin),
+         |FROM o GROUP BY 1, 2 ORDER BY source, bin""".stripMargin)),
     // The merge's update/insert/carry split mirrors the full-outer
     // coalesce; latest-per-key on both sides, fixed cutoff.
-    "qx15_upsert" ->
-      ("""WITH snap AS (
+    "qx15_upsert" -> Query(Scd2.customerUpsert _, Oracle(
+      """WITH snap AS (
          |  SELECT o_custkey, o_orderstatus AS status, o_totalprice AS total,
          |    strftime(o_orderdate, '%Y-%m-%d %H:%M:%S') AS as_of
          |  FROM (SELECT *, row_number() OVER (PARTITION BY o_custkey
@@ -1230,7 +1036,7 @@ object SparkEntry {
          |       WHEN u.o_custkey IS NULL THEN 'carry'
          |       ELSE 'update' END AS op
          |FROM snap s FULL OUTER JOIN upd u ON s.o_custkey = u.o_custkey
-         |ORDER BY cust""".stripMargin),
+         |ORDER BY cust""".stripMargin)),
     // session_window merges an event landing EXACTLY gap after its
     // predecessor (verified empirically: sf0.1 has one 1800s-exact
     // pair and Spark keeps it in-session), so the new-session
@@ -1239,12 +1045,14 @@ object SparkEntry {
     // nanos/micros precision gap cannot move a boundary. Ties need
     // event_id in BOTH window orders so lag and the cumsum walk rows
     // identically.
-    "qs10_session_window" -> sessionWindowSql,
+    "qs10_session_window" -> Query(((s, d) => Events.sessionWindow(s, d)),
+      Oracle(sessionWindowSql)),
     // native STREAMING session windows (MergingSessions state store,
     // complete-mode drain) — same computation, same oracle
-    "qs12_stream_session_window" -> sessionWindowSql,
-    "qx17_spend_distribution" ->
-      ("""WITH s AS (SELECT event_type, user_id,
+    "qs12_stream_session_window" -> Query(SessionStream.sessionWindowGate _,
+      Oracle(sessionWindowSql)),
+    "qx17_spend_distribution" -> Query(Events.spendDistribution _, Oracle(
+      """WITH s AS (SELECT event_type, user_id,
          |  SUM(CAST(value AS DECIMAL(18,2))) AS spend_dec
          |  FROM events GROUP BY 1, 2)
          |SELECT event_type, user_id, CAST(spend_dec AS DOUBLE) AS spend,
@@ -1252,11 +1060,11 @@ object SparkEntry {
          |  percent_rank() OVER w AS pct_rank,
          |  cume_dist() OVER w AS cume
          |FROM s WINDOW w AS (PARTITION BY event_type ORDER BY spend_dec DESC, user_id)
-         |ORDER BY event_type, user_id""".stripMargin),
+         |ORDER BY event_type, user_id""".stripMargin)),
     // Strict ordered funnel at (user, day) grain; ">= on floored
     // epoch seconds" is the tie rule both engines share.
-    "qs11_funnel" ->
-      ("""WITH e AS (SELECT user_id, CAST(ts AS DATE) AS day, event_type,
+    "qs11_funnel" -> Query(Events.funnel _, Oracle(
+      """WITH e AS (SELECT user_id, CAST(ts AS DATE) AS day, event_type,
          |  CAST(floor(epoch(ts)) AS BIGINT) AS tsec FROM events),
          |v AS (SELECT user_id, day, min(tsec) AS t_view FROM e
          |  WHERE event_type = 'view' GROUP BY 1, 2),
@@ -1269,11 +1077,11 @@ object SparkEntry {
          |SELECT '1_view' AS stage, count(*) AS n_user_days FROM v
          |UNION ALL SELECT '2_view_click' AS stage, count(*) AS n_user_days FROM c
          |UNION ALL SELECT '3_view_click_purchase' AS stage, count(*) AS n_user_days FROM p
-         |ORDER BY stage""".stripMargin),
+         |ORDER BY stage""".stripMargin)),
     // qs31: qs11's oracle with the conversion deadline — inclusive
     // +3600 boundary on both engines, exact integer seconds.
-    "qs31_timed_funnel" ->
-      ("""WITH e AS (SELECT user_id, CAST(ts AS DATE) AS day, event_type,
+    "qs31_timed_funnel" -> Query(Events.timedFunnel _, Oracle(
+      """WITH e AS (SELECT user_id, CAST(ts AS DATE) AS day, event_type,
          |  CAST(floor(epoch(ts)) AS BIGINT) AS tsec FROM events),
          |v AS (SELECT user_id, day, min(tsec) AS t_view FROM e
          |  WHERE event_type = 'view' GROUP BY 1, 2),
@@ -1288,12 +1096,12 @@ object SparkEntry {
          |SELECT '1_view' AS stage, count(*) AS n_user_days FROM v
          |UNION ALL SELECT '2_click_1h' AS stage, count(*) AS n_user_days FROM c
          |UNION ALL SELECT '3_purchase_1h' AS stage, count(*) AS n_user_days FROM p
-         |ORDER BY stage""".stripMargin),
+         |ORDER BY stage""".stripMargin)),
     // qs32: exact DECIMAL totals, share one double division of
     // exactly-representable totals, rank on the double total with
     // the type name as tie-break.
-    "qs32_spend_share" ->
-      ("""WITH t AS (SELECT event_type,
+    "qs32_spend_share" -> Query(Events.spendShare _, Oracle(
+      """WITH t AS (SELECT event_type,
          |    SUM(CAST(value AS DECIMAL(18,2))) AS total_dec
          |  FROM events GROUP BY 1),
          |g AS (SELECT SUM(total_dec) AS grand FROM t)
@@ -1301,13 +1109,13 @@ object SparkEntry {
          |  CAST(total_dec AS DOUBLE) / CAST(grand AS DOUBLE) AS share,
          |  CAST(rank() OVER (ORDER BY CAST(total_dec AS DOUBLE) DESC,
          |    event_type) AS INTEGER) AS rnk
-         |FROM t, g ORDER BY rnk""".stripMargin),
+         |FROM t, g ORDER BY rnk""".stripMargin)),
     // qs33: integral half-life decay — cents are exact BIGINTs
     // (DECIMAL(18,2)*100), age // 7 nonneg so DuckDB floor division
     // == Spark truncating div, the shift is exact integer math, and
     // the final /100.0 is one IEEE division of a <2^53 integer.
-    "qs33_decayed_spend" ->
-      ("""WITH a AS (SELECT max(CAST(ts AS TIMESTAMP)::DATE) AS anchor_day
+    "qs33_decayed_spend" -> Query(Events.decayedSpend _, Oracle(
+      """WITH a AS (SELECT max(CAST(ts AS TIMESTAMP)::DATE) AS anchor_day
          |  FROM events),
          |e AS (SELECT user_id,
          |    CAST(CAST(value AS DECIMAL(18,2)) * 100 AS BIGINT) AS cents,
@@ -1320,12 +1128,12 @@ object SparkEntry {
          |  FROM e GROUP BY 1)
          |SELECT user_id, raw_cents / 100.0 AS raw_spend,
          |  decayed_cents / 100.0 AS decayed_spend
-         |FROM s ORDER BY user_id""".stripMargin),
+         |FROM s ORDER BY user_id""".stripMargin)),
     // qs34: the day-range join form — equivalent to Spark's explode
     // fanout restricted to observed days; counts exact, one IEEE
     // division.
-    "qs34_stickiness" ->
-      ("""WITH ud AS (SELECT DISTINCT user_id,
+    "qs34_stickiness" -> Query(Events.stickiness _, Oracle(
+      """WITH ud AS (SELECT DISTINCT user_id,
          |    CAST(ts AS TIMESTAMP)::DATE AS day FROM events),
          |days AS (SELECT DISTINCT day FROM ud),
          |dau AS (SELECT day, CAST(count(*) AS BIGINT) AS dau
@@ -1337,9 +1145,9 @@ object SparkEntry {
          |SELECT strftime(dau.day, '%Y-%m-%d') AS day, dau.dau, wau.wau,
          |  CAST(dau.dau AS DOUBLE) / CAST(wau.wau AS DOUBLE) AS stickiness
          |FROM dau JOIN wau ON dau.day = wau.day
-         |ORDER BY day""".stripMargin),
-    "qd20_lexical_diversity" ->
-      ("""WITH toks AS (
+         |ORDER BY day""".stripMargin)),
+    "qd20_lexical_diversity" -> Query(TrainingOps.lexicalDiversity _, Oracle(
+      """WITH toks AS (
          |  SELECT doc_id, list_filter(string_split(
          |    regexp_replace(lower(text), '[^a-z0-9]+', ' ', 'g'), ' '),
          |    t -> t != '') AS t
@@ -1349,12 +1157,12 @@ object SparkEntry {
          |  CASE WHEN len(t) > 0 THEN
          |    CAST(len(list_distinct(t)) AS DOUBLE) / CAST(len(t) AS DOUBLE)
          |  END AS ttr
-         |FROM toks ORDER BY doc_id""".stripMargin),
+         |FROM toks ORDER BY doc_id""".stripMargin)),
     // Entropy terms are quantized to integer micro-nats (qd11's floor
     // construction over the 1-ulp ln difference), so the per-doc sum
     // is exact integer arithmetic — order-independent on both sides.
-    "qd21_char_entropy" ->
-      ("""WITH ch AS (SELECT doc_id, n_chars, unnest(string_split(text, '')) AS ch FROM documents),
+    "qd21_char_entropy" -> Query(TrainingOps.charEntropy _, Oracle(
+      """WITH ch AS (SELECT doc_id, n_chars, unnest(string_split(text, '')) AS ch FROM documents),
          |cnt AS (SELECT doc_id, n_chars, ch, count(*) AS c FROM ch GROUP BY 1, 2, 3),
          |t AS (SELECT doc_id,
          |    CAST(floor((CAST(c AS DOUBLE) / CAST(n_chars AS DOUBLE))
@@ -1363,28 +1171,28 @@ object SparkEntry {
          |  FROM cnt)
          |SELECT doc_id, count(*) AS n_distinct_chars,
          |  CAST(-SUM(tm) AS DOUBLE) / 1000000.0 AS entropy
-         |FROM t GROUP BY doc_id ORDER BY doc_id""".stripMargin),
+         |FROM t GROUP BY doc_id ORDER BY doc_id""".stripMargin)),
     // The SQL-surface query: the oracle IS the Spark-side text.
-    "qx16_sql_api" -> Extras.sqlMartText,
+    "qx16_sql_api" -> Query(Extras.sqlMart _, Oracle(Extras.sqlMartText)),
     // Both engines use the same grouping_id bit convention
     // (leftmost grouping column = most significant bit, 1 = that
     // column aggregated out in this row).
-    "qx18_grouping_sets" ->
-      ("""SELECT o_orderstatus, o_orderpriority,
+    "qx18_grouping_sets" -> Query(Extras.groupingSetsAgg _, Oracle(
+      """SELECT o_orderstatus, o_orderpriority,
          |  CAST(GROUPING(o_orderstatus, o_orderpriority) AS INTEGER) AS gid,
          |  count(*) AS n,
          |  CAST(SUM(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE) AS total
          |FROM orders
          |GROUP BY GROUPING SETS ((o_orderstatus), (o_orderpriority), ())
          |ORDER BY gid, o_orderstatus NULLS FIRST, o_orderpriority NULLS FIRST"""
-        .stripMargin),
+        .stripMargin)),
     // list_filter preserves source order, so no position plumbing is
     // needed on the oracle side; len > 0 mirrors the Spark inner
     // join dropping fully-pruned documents. The relative min-df
     // threshold (df >= N/10) is integer cross-multiplied on both
     // sides — no float rounding in the cut.
-    "qd22_prune_vocab" ->
-      ("""WITH toks AS (
+    "qd22_prune_vocab" -> Query(((s, d) => TrainingOps.pruneVocab(s, d)), Oracle(
+      """WITH toks AS (
          |  SELECT doc_id, list_filter(string_split(
          |    regexp_replace(lower(text), '[^a-z0-9]+', ' ', 'g'), ' '),
          |    t -> t != '') AS t
@@ -1402,21 +1210,21 @@ object SparkEntry {
          |SELECT doc_id, CAST(len(p) AS BIGINT) AS n_kept,
          |  array_to_string(p, ' ') AS pruned_text
          |FROM pruned WHERE len(p) > 0
-         |ORDER BY doc_id""".stripMargin),
+         |ORDER BY doc_id""".stripMargin)),
     // Per-bigram ln P quantized to integer micro-nats -> exact
     // per-doc sums; the two trailing double divisions run in the
     // same order on both engines.
     // qm4: payload == the document's UTF-8 bytes under every header
     // branch (mediaFromDocs invariant), so the dup groups are exactly
     // the duplicate-text groups; sha-256 hex lowercase both engines.
-    "qm4_media_dedup" ->
-      ("""SELECT sha256(text) AS content_sha,
+    "qm4_media_dedup" -> Query(TrainingOps.mediaDedup _, Oracle(
+      """SELECT sha256(text) AS content_sha,
          |  CAST(count(*) AS BIGINT) AS n_copies,
          |  CAST(min(doc_id) AS BIGINT) AS keeper_id,
          |  CAST((count(*) - 1) * min(octet_length(encode(text))) AS BIGINT)
          |    AS wasted_bytes
          |FROM documents GROUP BY text
-         |ORDER BY keeper_id""".stripMargin),
+         |ORDER BY keeper_id""".stripMargin)),
     // qm6: every ingredient is integer-exact and recomputable from
     // the source table — pixels are codepoints of the payload (the
     // DocFingerprint unicode(c) convention), sample index and
@@ -1429,8 +1237,8 @@ object SparkEntry {
     // land as re-wrapped copies at media_id doc_id + 10^9 (same
     // payload, different container — Multimodal.mediaWithRewraps),
     // which phash must pair at hamming 0.
-    "qm6_phash_neardup" ->
-      ("""WITH px AS (
+    "qm6_phash_neardup" -> Query(TrainingOps.phashNearDups _, Oracle(
+      """WITH px AS (
          |  SELECT doc_id AS media_id,
          |    list_transform(string_split(text, ''), c -> unicode(c)) AS cps
          |  FROM documents
@@ -1476,7 +1284,7 @@ object SparkEntry {
          |  JOIN h hb ON cand.media_b = hb.media_id)
          |SELECT media_a, media_b, hamming FROM sc
          |WHERE hamming <= 3
-         |ORDER BY media_a, media_b""".stripMargin),
+         |ORDER BY media_a, media_b""".stripMargin)),
     // qm7: the Spark side runs the REAL binary decode (valid flag +
     // kind from the container header); the oracle recomputes both
     // from the mediaFromDocs contract's arithmetic (doc_id % 50 = 0
@@ -1484,8 +1292,8 @@ object SparkEntry {
     // doc/vector 2k+1 on the shared id space, and folds the same
     // sequential-double cosine — so the 0.2 reject-band counts and
     // the order-free min/max extrema match bit for bit.
-    "qm7_crossmodal_align" ->
-      (s"""WITH m AS (
+    "qm7_crossmodal_align" -> Query(TrainingOps.crossModalAlign _, Oracle(
+      s"""WITH m AS (
          |  SELECT a.vec_id AS media_id, d.source,
          |    CASE WHEN a.vec_id % 3 = 0 THEN 'image'
          |         WHEN a.vec_id % 3 = 1 THEN 'audio'
@@ -1502,7 +1310,7 @@ object SparkEntry {
          |  CAST(SUM(CASE WHEN align >= 0.2 THEN 1 ELSE 0 END) AS BIGINT)
          |    AS n_aligned,
          |  min(align) AS min_align, max(align) AS max_align
-         |FROM m GROUP BY 1, 2 ORDER BY source, kind""".stripMargin),
+         |FROM m GROUP BY 1, 2 ORDER BY source, kind""".stripMargin)),
     // qd42: qd23's char-bigram mirror split ref/score; Laplace terms
     // quantized to micro-nats AFTER identical double divisions, so
     // per-doc sums are exact integers; ln-vs-log ulp absorbed by the
@@ -1510,8 +1318,8 @@ object SparkEntry {
     // key only to cheapen the sort — text rides along, so groups are
     // identical); tokens are qd2's whitespace convention; avg_chars
     // is one IEEE division of exact BIGINT totals.
-    "qd43_corpus_report" ->
-      ("""WITH f AS (SELECT source, lang, text, n_chars,
+    "qd43_corpus_report" -> Query(TrainingOps.corpusReport _, Oracle(
+      """WITH f AS (SELECT source, lang, text, n_chars,
          |    CASE WHEN row_number() OVER (PARTITION BY text
          |      ORDER BY doc_id) > 1 THEN 1 ELSE 0 END AS is_dup
          |  FROM documents),
@@ -1532,10 +1340,10 @@ object SparkEntry {
          |  t.top_lang,
          |  CAST(total_chars AS DOUBLE) / CAST(n_docs AS DOUBLE) AS avg_chars
          |FROM s JOIN t ON s.source = t.source AND t.rn = 1
-         |ORDER BY s.source""".stripMargin),
+         |ORDER BY s.source""".stripMargin)),
     // floor(+0.5) quantization (the qd11/qd23 precedent).
-    "qd42_cross_perplexity" ->
-      ("""WITH b AS (
+    "qd42_cross_perplexity" -> Query(TrainingOps.crossPerplexity _, Oracle(
+      """WITH b AS (
          |  SELECT doc_id, ref, substr(text, CAST(i AS INTEGER), 2) AS bg
          |  FROM (SELECT doc_id, source = 'src0' AS ref, text,
          |          unnest(generate_series(1, CAST(n_chars AS BIGINT) - 1)) AS i
@@ -1557,9 +1365,9 @@ object SparkEntry {
          |    / CAST((SELECT t FROM st) + (SELECT v FROM st) AS DOUBLE))
          |    * 1000000.0 + 0.5) AS BIGINT))) AS DOUBLE)
          |    / 1000000.0 / CAST(count(*) AS DOUBLE) AS avg_nll
-         |FROM sc GROUP BY doc_id ORDER BY doc_id""".stripMargin),
-    "qd23_bigram_lm" ->
-      ("""WITH b AS (
+         |FROM sc GROUP BY doc_id ORDER BY doc_id""".stripMargin)),
+    "qd23_bigram_lm" -> Query(TrainingOps.bigramLm _, Oracle(
+      """WITH b AS (
          |  SELECT doc_id, substr(text, CAST(i AS INTEGER), 2) AS bg
          |  FROM (SELECT doc_id, text,
          |          unnest(generate_series(1, CAST(n_chars AS BIGINT) - 1)) AS i
@@ -1571,24 +1379,19 @@ object SparkEntry {
          |SELECT doc_id, count(*) AS n_bigrams,
          |  CAST(-SUM(tm) AS DOUBLE) / 1000000.0 / CAST(count(*) AS DOUBLE) AS avg_nll
          |FROM b JOIN q USING (bg)
-         |GROUP BY doc_id ORDER BY doc_id""".stripMargin),
-  ) ++ batch8Sql ++ batch9Sql
-    base + ("qe15_semantic_dedup" -> semanticDedupSql) ++ batch10Sql
-  }
-
-  /** Round-8 oracles. qe16 (SQ8 at a full-corpus shortlist) re-ranks
-    * every candidate with exact cosines — equal to brute for ANY
-    * quantization grid, so qe1's oracle applies verbatim (the
-    * qe8/qe12 argument).
-    */
-  private lazy val batch10Sql: Map[String, String] = Map(
-    "qe16_knn_sq" -> knnSql,
-    "qe17_pagerank" -> pageRankSql,
-    "qe20_ann_quality" -> annQualitySql,
-    "qe24_opq_permute" -> opqPermuteSql,
-    "qd51_bm25_search" -> bm25Sql,
-    "qe22_rrf_fusion" -> rrfSql,
-    "qd52_prf_expansion" -> prfSql,
+         |GROUP BY doc_id ORDER BY doc_id""".stripMargin)),
+    "qe15_semantic_dedup" -> Query(TrainingOps.semanticDedupSingleCell _,
+      Oracle(semanticDedupSql)),
+    // qe16 (SQ8 at a full-corpus shortlist) re-ranks every candidate
+    // with exact cosines — equal to brute for ANY quantization grid,
+    // so qe1's oracle applies verbatim (the qe8/qe12 argument).
+    "qe16_knn_sq" -> Query(TrainingOps.knnSq _, Oracle(knnSql)),
+    "qe17_pagerank" -> Query(TrainingOps.knnPageRank _, Oracle(pageRankSql)),
+    "qe20_ann_quality" -> Query(TrainingOps.annQuality _, Oracle(annQualitySql)),
+    "qe24_opq_permute" -> Query(TrainingOps.opqPermuteReport _, Oracle(opqPermuteSql)),
+    "qd51_bm25_search" -> Query(Search.bm25Search _, Oracle(bm25Sql)),
+    "qe22_rrf_fusion" -> Query(Search.hybridSearch _, Oracle(rrfSql)),
+    "qd52_prf_expansion" -> Query(Search.prfExpand _, Oracle(prfSql)),
     // qd53: exact repeated-span dedup. Both sides: tokenize (qd30's
     // CTE verbatim), anchor 8-token grams at 0-based positions,
     // row_number per gram over (doc_id, pos) — rn >= 2 sites are cut;
@@ -1596,8 +1399,8 @@ object SparkEntry {
     // (pos - row_number) count maximal removed extents; rebuild via
     // ordered string_agg of uncovered tokens. (doc_id, pos) is a key
     // within each gram partition, so rn is deterministic cross-engine.
-    "qd53_span_dedup" ->
-      ("""WITH toks AS (
+    "qd53_span_dedup" -> Query(Dedup.spanDedupQuery _, Oracle(
+      """WITH toks AS (
          |  SELECT doc_id, list_filter(string_split(
          |    regexp_replace(lower(text), '[^a-z0-9]+', ' ', 'g'), ' '),
          |    x -> x != '') AS t
@@ -1634,12 +1437,12 @@ object SparkEntry {
          |FROM documents d
          |LEFT JOIN reb r ON d.doc_id = r.doc_id
          |LEFT JOIN sp s ON d.doc_id = s.doc_id
-         |ORDER BY d.doc_id""".stripMargin),
+         |ORDER BY d.doc_id""".stripMargin)),
     // qe23: two lateral unnests expand each vector's upper-triangle
     // component pairs; floor quantization + BIGINT sums are
     // order-free on both engines. posexplode is 0-based -> (i-1).
-    "qe23_gram_matrix" ->
-      ("""SELECT CAST(i - 1 AS INTEGER) AS d_a,
+    "qe23_gram_matrix" -> Query(TrainingOps.gramMatrix _, Oracle(
+      """SELECT CAST(i - 1 AS INTEGER) AS d_a,
          |  CAST(j - 1 AS INTEGER) AS d_b,
          |  CAST(count(*) AS BIGINT) AS n_vecs,
          |  CAST(SUM(CAST(floor(CAST(embedding[i] AS DOUBLE) * 1000000)
@@ -1651,14 +1454,14 @@ object SparkEntry {
          |  unnest(range(1, len(embedding) + 1)) v(j)
          |WHERE i <= j
          |GROUP BY 1, 2
-         |ORDER BY d_a, d_b""".stripMargin),
+         |ORDER BY d_a, d_b""".stripMargin)),
     // qd45: ordered skip-gram pairs at distance <= 2 — the two lead
     // columns mirror the 1-based list offsets; PMI's ln rides the
     // micro-nat floor over an identically-ordered double ratio of
     // exact BIGINT counts. Pair totals are counted BEFORE the
     // frequent-pair cut on both sides.
-    "qd45_pmi" ->
-      ("""WITH toks AS (
+    "qd45_pmi" -> Query(TrainingOps.pmiCooccur _, Oracle(
+      """WITH toks AS (
          |  SELECT doc_id, list_filter(string_split(
          |    regexp_replace(lower(text), '[^a-z0-9]+', ' ', 'g'), ' '),
          |    t -> t != '') AS t
@@ -1687,12 +1490,12 @@ object SparkEntry {
          |FROM pc JOIN uni ua ON pc.a = ua.token
          |  JOIN uni ub ON pc.b = ub.token, tt, tp
          |WHERE pc.c_ab >= 5
-         |ORDER BY a, b""".stripMargin),
+         |ORDER BY a, b""".stripMargin)),
     // qd46: ln(rank)/ln(freq) quantized to integer MILLI-nats, then
     // the qx22 closed form over exact BIGINT moment sums — identical
     // double expression both engines.
-    "qd46_zipf" ->
-      ("""WITH toks AS (
+    "qd46_zipf" -> Query(TrainingOps.zipfFit _, Oracle(
+      """WITH toks AS (
          |  SELECT source, list_filter(string_split(
          |    regexp_replace(lower(text), '[^a-z0-9]+', ' ', 'g'), ' '),
          |    t -> t != '') AS t
@@ -1733,11 +1536,11 @@ object SparkEntry {
          |      - CAST(sx AS DOUBLE) * CAST(sx AS DOUBLE))
          |    * (CAST(n AS DOUBLE) * CAST(syy AS DOUBLE)
          |      - CAST(sy AS DOUBLE) * CAST(sy AS DOUBLE))) END AS r2
-         |FROM m ORDER BY source""".stripMargin),
+         |FROM m ORDER BY source""".stripMargin)),
     // qs35: qs21's bounded-pair join with equal-split credit; integer
     // micro-cent division (// == DIV on the nonnegative corpus).
-    "qs35_linear_attribution" ->
-      ("""WITH ev AS (SELECT event_id, user_id, event_type,
+    "qs35_linear_attribution" -> Query(Events.linearAttribution _, Oracle(
+      """WITH ev AS (SELECT event_id, user_id, event_type,
          |    CAST(ts AS TIMESTAMP) AS ts, value FROM events),
          |c AS (SELECT event_id AS click_id, user_id, ts AS c_ts
          |  FROM ev WHERE event_type = 'click'),
@@ -1753,19 +1556,19 @@ object SparkEntry {
          |SELECT j.purchase_id, j.click_id, j.user_id, n.n_touches,
          |  CAST((j.cents * 1000000) // n.n_touches AS BIGINT) AS credit_micro
          |FROM j JOIN n USING (purchase_id)
-         |ORDER BY purchase_id, click_id""".stripMargin),
+         |ORDER BY purchase_id, click_id""".stripMargin)),
     // qp7: the oracle is the plain filtered aggregate — bucketing is
     // a pure layout property (PlanSpec pins SelectedBucketsCount).
-    "qp7_bucket_pruned" ->
-      ("""SELECT o_custkey, CAST(count(*) AS BIGINT) AS n_orders,
+    "qp7_bucket_pruned" -> Query(Extras.bucketPrunedRead _, Oracle(
+      """SELECT o_custkey, CAST(count(*) AS BIGINT) AS n_orders,
          |  CAST(SUM(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE)
          |    AS total_spend
          |FROM orders WHERE o_custkey IN (1, 2, 3)
-         |GROUP BY o_custkey ORDER BY o_custkey""".stripMargin),
+         |GROUP BY o_custkey ORDER BY o_custkey""".stripMargin)),
     // qe18: full probe scores every (query, corpus) pair, so the
     // oracle is the brute radius filter — same sequential fold, same
     // >= boundary, bit-equal sims.
-    "qe18_radius_search" -> {
+    "qe18_radius_search" -> Query(TrainingOps.radiusKnn _, Oracle({
       val ids = graft.operators.TrainingOps.knnQueryIds.mkString(", ")
       s"""WITH base AS (
          |  SELECT vec_id, embedding,
@@ -1779,12 +1582,12 @@ object SparkEntry {
          |  FROM base b, q WHERE b.vec_id <> q.query_id)
          |SELECT query_id, vec_id, sim FROM s WHERE sim >= 0.25
          |ORDER BY query_id, vec_id""".stripMargin
-    },
+    })),
     // qp8: the refreshed mart state — full history for the refreshed
     // stores, the pre-cutoff snapshot everywhere else; rows only a
     // correct partial (dynamic) partition replace can produce.
-    "qp8_dynamic_overwrite" ->
-      ("""WITH old AS (
+    "qp8_dynamic_overwrite" -> Query(Marts.dynamicOverwriteRefresh _, Oracle(
+      """WITH old AS (
          |  SELECT n.n_nationkey AS store,
          |    substring(CAST(CAST(o.o_orderdate AS DATE) AS VARCHAR), 1, 7)
          |      AS month,
@@ -1811,10 +1614,11 @@ object SparkEntry {
          |UNION ALL
          |SELECT store, month, CAST(total_dec AS DOUBLE) AS total
          |FROM old WHERE store NOT IN (1, 2, 3)
-         |ORDER BY store, month""".stripMargin),
+         |ORDER BY store, month""".stripMargin)),
     // qe19: knnSql's construction minus the norm divisions — raw dot
     // ordering, same sequential fold, same (rank, vec_id) ties.
-    "qe19_mips" -> {
+    "qe19_mips" -> Query((s, d) => Similarity.mipsKnn(
+      graft.core.Tables.embeddings(s, d), TrainingOps.knnQueryIds, 10), Oracle {
       val ids = graft.operators.TrainingOps.knnQueryIds.mkString(", ")
       s"""WITH q AS (SELECT vec_id AS query_id, embedding AS q_emb
          |      FROM embeddings WHERE vec_id IN ($ids)),
@@ -1828,16 +1632,16 @@ object SparkEntry {
          |      FROM s)
          |SELECT query_id, vec_id, rnk, dot FROM r WHERE rnk <= 10
          |ORDER BY query_id, rnk, vec_id""".stripMargin
-    },
+    }),
     // qd47: qd38's unrolled merge-chain CTEs rolled up by language —
     // exact char totals, one BIGINT/BIGINT division per lang.
-    "qd47_bpe_fertility" -> bpeFertilitySql,
+    "qd47_bpe_fertility" -> Query(TrainingOps.bpeFertility _, Oracle(bpeFertilitySql)),
     // qs36: strictly-preceding last-click carry (ROWS ... 1
     // PRECEDING), floored epoch gaps, interpolated percentiles over
     // exact BIGINTs (quantile_cont == Spark percentile on identical
     // ints — the qs5 parity).
-    "qs36_time_to_convert" ->
-      ("""WITH ev AS (SELECT event_id, user_id, event_type,
+    "qs36_time_to_convert" -> Query(Events.timeToConvert _, Oracle(
+      """WITH ev AS (SELECT event_id, user_id, event_type,
          |    CAST(ts AS TIMESTAMP) AS ts FROM events
          |  WHERE event_type IN ('click', 'purchase')),
          |w AS (SELECT *,
@@ -1856,20 +1660,20 @@ object SparkEntry {
          |  quantile_cont(gap, 0.5) AS p50_sec,
          |  quantile_cont(gap, 0.9) AS p90_sec,
          |  CAST(max(gap) AS BIGINT) AS max_gap_sec
-         |FROM g""".stripMargin),
+         |FROM g""".stripMargin)),
     // qd48: exhaustive truth + portable-banding candidates, both
     // recomputed from the shared shingle/fingerprint constructions
     // (qd10's sets, qd27's affine minima).
-    "qd48_dedup_quality" -> dedupQualitySql,
+    "qd48_dedup_quality" -> Query(TrainingOps.dedupQuality _, Oracle(dedupQualitySql)),
     // qx26: a correct nested round-trip is invisible — the oracle is
     // the plain flat projection.
-    "qx26_nested_roundtrip" ->
-      ("SELECT l_orderkey, l_linenumber, l_quantity FROM lineitem " +
-        "ORDER BY l_orderkey, l_linenumber, l_quantity"),
+    "qx26_nested_roundtrip" -> Query(Extras.nestedRoundtrip _, Oracle(
+      "SELECT l_orderkey, l_linenumber, l_quantity FROM lineitem " +
+        "ORDER BY l_orderkey, l_linenumber, l_quantity")),
     // qx27: every rule recomputed as its own SQL aggregate; the
     // verdict column is the same violations = 0 predicate.
-    "qx27_quality_checks" ->
-      ("""SELECT 'lineitem.l_orderkey references orders' AS rule,
+    "qx27_quality_checks" -> Query(Extras.qualityChecks _, Oracle(
+      """SELECT 'lineitem.l_orderkey references orders' AS rule,
          |  CAST(count(*) AS BIGINT) AS violations, count(*) = 0 AS pass
          |FROM lineitem l WHERE NOT EXISTS
          |  (SELECT 1 FROM orders o WHERE o.o_orderkey = l.l_orderkey)
@@ -1902,33 +1706,33 @@ object SparkEntry {
          |    AS BIGINT),
          |  SUM(CASE WHEN o_totalprice <= 0 THEN 1 ELSE 0 END) = 0
          |FROM orders
-         |ORDER BY rule""".stripMargin),
+         |ORDER BY rule""".stripMargin)),
     // qd49: the corrupt lines are planted deterministically by the
     // query itself, so the ledger is fully recomputable — per-lang
     // counts from the source table plus the fixed quarantine row.
-    "qd49_jsonl_roundtrip" ->
-      ("""SELECT lang AS bucket, CAST(count(*) AS BIGINT) AS n,
+    "qd49_jsonl_roundtrip" -> Query(JsonlIngest.jsonlRoundtrip _, Oracle(
+      """SELECT lang AS bucket, CAST(count(*) AS BIGINT) AS n,
          |  CAST(SUM(n_chars) AS BIGINT) AS total_chars
          |FROM documents GROUP BY lang
          |UNION ALL
          |SELECT '_corrupt', CAST(2 AS BIGINT), CAST(NULL AS BIGINT)
-         |ORDER BY bucket""".stripMargin),
+         |ORDER BY bucket""".stripMargin)),
     // qs38: the streaming drain of qd49's quarantined JSONL ingest —
     // counts and long-sums are order-free monoids, so the incremental
     // complete-mode ledger is bit-equal to the batch rescan and qd49's
     // oracle carries over verbatim.
-    "qs38_jsonl_stream" ->
-      ("""SELECT lang AS bucket, CAST(count(*) AS BIGINT) AS n,
+    "qs38_jsonl_stream" -> Query(JsonlIngest.jsonlStreamGate _, Oracle(
+      """SELECT lang AS bucket, CAST(count(*) AS BIGINT) AS n,
          |  CAST(SUM(n_chars) AS BIGINT) AS total_chars
          |FROM documents GROUP BY lang
          |UNION ALL
          |SELECT '_corrupt', CAST(2 AS BIGINT), CAST(NULL AS BIGINT)
-         |ORDER BY bucket""".stripMargin),
+         |ORDER BY bucket""".stripMargin)),
     // qs37: pre-reduced hourly grain self-joined at +24h; the qx22
     // exact-moment closed form. Pair roles pinned: x = count(t+24),
     // y = count(t).
-    "qs37_daily_autocorr" ->
-      ("""WITH h AS (SELECT event_type, date_trunc('hour', ts) AS h,
+    "qs37_daily_autocorr" -> Query(Events.dailyAutocorr _, Oracle(
+      """WITH h AS (SELECT event_type, date_trunc('hour', ts) AS h,
          |    CAST(count(*) AS BIGINT) AS n
          |  FROM events GROUP BY 1, 2),
          |p AS (SELECT a.event_type, a.n AS x, b.n AS y
@@ -1952,12 +1756,12 @@ object SparkEntry {
          |        - CAST(sx AS DOUBLE) * CAST(sx AS DOUBLE))
          |      * sqrt(CAST(np AS DOUBLE) * CAST(syy AS DOUBLE)
          |        - CAST(sy AS DOUBLE) * CAST(sy AS DOUBLE))) END AS corr24
-         |FROM m ORDER BY event_type""".stripMargin),
+         |FROM m ORDER BY event_type""".stripMargin)),
     // qd50: every manifest column recomputed from the source table —
     // qd12's portable fingerprint, content-keyed shard = fp % 8,
     // bit_xor checksum order-independent on both engines.
-    "qd50_shard_export" ->
-      ("""WITH f AS (SELECT doc_id, n_chars,
+    "qd50_shard_export" -> Query(TrainingOps.shardExport _, Oracle(
+      """WITH f AS (SELECT doc_id, n_chars,
          |    CAST(CASE WHEN length(text) = 0 THEN 0 ELSE
          |      list_reduce(list_transform(string_split(text, ''),
          |        c -> CAST(unicode(c) AS BIGINT)),
@@ -1970,12 +1774,12 @@ object SparkEntry {
          |  CAST(min(doc_id) AS BIGINT) AS min_doc_id,
          |  CAST(max(doc_id) AS BIGINT) AS max_doc_id,
          |  CAST(bit_xor(fp) AS BIGINT) AS checksum
-         |FROM f GROUP BY 1 ORDER BY shard""".stripMargin),
+         |FROM f GROUP BY 1 ORDER BY shard""".stripMargin)),
     // qm5: kinds recomputed from the mediaFromDocs id rules; every
     // gate blob carries the 10-byte GFT0 header (including the
     // invalid-kind ones), so blob = payload + 10 exactly.
-    "qm5_media_sniff" ->
-      ("""WITH k AS (SELECT doc_id,
+    "qm5_media_sniff" -> Query(TrainingOps.mediaSniff _, Oracle(
+      """WITH k AS (SELECT doc_id,
          |    CASE WHEN doc_id % 50 = 0 THEN 'unknown'
          |         WHEN doc_id % 3 = 0 THEN 'image'
          |         WHEN doc_id % 3 = 1 THEN 'audio'
@@ -1985,7 +1789,581 @@ object SparkEntry {
          |SELECT kind, CAST(count(*) AS BIGINT) AS n,
          |  CAST(SUM(payload + 10) AS BIGINT) AS total_blob_bytes,
          |  CAST(SUM(payload) AS BIGINT) AS total_payload_bytes
-         |FROM k GROUP BY kind ORDER BY kind""".stripMargin),
+         |FROM k GROUP BY kind ORDER BY kind""".stripMargin)),
+    // qp2: runtime-pruned read — q09 joined to the filtered dim; the
+    // Spark side must produce the same rows while only OPENING the
+    // store partitions the broadcast dim admits (PlanSpec pins the
+    // dynamicpruning PartitionFilter).
+    "qp2_dpp_read" -> Query(Marts.dppMartRead _, Oracle(
+      s"""WITH q AS (\n$q09SqlCore)
+         |SELECT q.store, n.n_name AS nation, q.person, q.month,
+         |  q.total, q.incentive
+         |FROM q JOIN nation n ON q.store = n.n_nationkey
+         |WHERE n.n_regionkey = 1
+         |ORDER BY q.store, q.month, q.person""".stripMargin)),
+    // qs13: lag window over the (type, hour) grain; delta on the
+    // DECIMAL totals (exact subtraction), NULL for each type's first
+    // hour. DuckDB lag default is NULL — same as Spark's.
+    "qs13_hourly_delta" -> Query(Events.hourlyDelta _, Oracle(
+      """WITH h AS (SELECT event_type, date_trunc('hour', ts) AS hour_ts,
+         |  SUM(CAST(value AS DECIMAL(18,2))) AS total_dec
+         |  FROM events GROUP BY 1, 2)
+         |SELECT event_type, strftime(hour_ts, '%Y-%m-%d %H:00:00') AS hour,
+         |  CAST(total_dec AS DOUBLE) AS total,
+         |  CAST(total_dec - lag(total_dec)
+         |    OVER (PARTITION BY event_type ORDER BY hour_ts) AS DOUBLE) AS delta
+         |FROM h ORDER BY event_type, hour""".stripMargin)),
+    // qx19: the oracle IS the Spark-side text (same convention as
+    // qx16) — DuckDB decorrelates it with its own rewrite, landing on
+    // the same values by the subquery's definition.
+    "qx19_corr_subquery" -> Query(Extras.corrSubquery _, Oracle(Extras.corrSubqueryText)),
+    // qd24: RE2 and Java agree on \b + alternation; DuckDB needs the
+    // explicit 'g' flag where Spark's regexp_replace is global by
+    // default.
+    "qd24_redact" -> Query(TextPrep.redactQuery _, Oracle(
+      """SELECT doc_id,
+         |  regexp_replace(text, '\b(customer|key|stream)\b', '<PII>', 'g')
+         |    AS redacted_text,
+         |  CAST(len(regexp_extract_all(text, '\b(customer|key|stream)\b'))
+         |    AS INTEGER) AS n_redacted
+         |FROM documents ORDER BY doc_id""".stripMargin)),
+    // qd25: same tokenizer as qd9/qd20; bigrams via 1-based list
+    // indexing over range(1, len) = positions 1..len-1; ratios are
+    // int/int double divisions (exact on both engines). Zero-token
+    // docs drop out; single-token docs keep NULL dup_bigram_ratio
+    // via the LEFT JOIN.
+    "qd25_repetition" -> Query(TrainingOps.repetition _, Oracle(
+      """WITH toks AS (
+         |  SELECT doc_id, list_filter(string_split(
+         |    regexp_replace(lower(text), '[^a-z0-9]+', ' ', 'g'), ' '),
+         |    t -> t != '') AS t
+         |  FROM documents),
+         |tok AS (SELECT doc_id, unnest(t) AS token FROM toks WHERE len(t) > 0),
+         |tc AS (SELECT doc_id, token, count(*) AS c FROM tok GROUP BY 1, 2),
+         |top AS (SELECT doc_id, max(c) AS max_c,
+         |          CAST(SUM(c) AS BIGINT) AS n_tokens FROM tc GROUP BY 1),
+         |g AS (SELECT doc_id, unnest(list_transform(range(1, len(t)),
+         |        i -> t[i] || ' ' || t[i+1])) AS gram
+         |      FROM toks WHERE len(t) >= 2),
+         |gc AS (SELECT doc_id, gram, count(*) AS c FROM g GROUP BY 1, 2),
+         |du AS (SELECT doc_id,
+         |         SUM(CASE WHEN c > 1 THEN c ELSE 0 END) AS dup,
+         |         SUM(c) AS tot FROM gc GROUP BY 1)
+         |SELECT t.doc_id, t.n_tokens,
+         |  CAST(t.max_c AS DOUBLE) / CAST(t.n_tokens AS DOUBLE)
+         |    AS top_token_ratio,
+         |  CAST(du.dup AS DOUBLE) / CAST(du.tot AS DOUBLE)
+         |    AS dup_bigram_ratio
+         |FROM top t LEFT JOIN du ON t.doc_id = du.doc_id
+         |ORDER BY t.doc_id""".stripMargin)),
+    // qd26: nfc_normalize is DuckDB-native; chr(769) = U+0301. The
+    // suffix is decomposed, so every row takes the real rewrite path.
+    "qd26_nfc_normalize" -> Query(TextPrep.normalizeQuery _, Oracle(
+      """SELECT doc_id, norm_text,
+         |  CAST(length(norm_text) AS INTEGER) AS n_chars_nfc
+         |FROM (SELECT doc_id,
+         |        nfc_normalize(text || ' cafe' || chr(769)) AS norm_text
+         |      FROM documents)
+         |ORDER BY doc_id""".stripMargin)),
+    "qd27_minhash_estimate" -> Query(TrainingOps.minhashEstimate _, Oracle(minhashEstimateSql)),
+    // qs14: stream-static join + aggregate ≡ the batch join+groupBy
+    // (decimal sums are order-free under incremental accumulation)
+    "qs14_stream_segment" -> Query(EventStream.segmentSpendGate _, Oracle(
+      """SELECT c.c_mktsegment AS segment, count(*) AS n,
+         |  CAST(SUM(CAST(e.value AS DECIMAL(18,2))) AS DOUBLE) AS total_value
+         |FROM events e JOIN customer c ON e.user_id = c.c_custkey
+         |GROUP BY 1 ORDER BY segment""".stripMargin)),
+    // qx20: the merged read == per-era CASE projections (era 1 = even
+    // keys with price, era 2 = odd keys with status; the other
+    // column is each era's NULL fill)
+    "qx20_schema_merge" -> Query(Extras.schemaMergeRead _, Oracle(
+      """SELECT o_orderkey,
+         |  CASE WHEN o_orderkey % 2 = 0 THEN o_totalprice END AS o_totalprice,
+         |  CASE WHEN o_orderkey % 2 = 1 THEN o_orderstatus END AS o_orderstatus
+         |FROM orders ORDER BY o_orderkey""".stripMargin)),
+    // qd28: thresholds micro-quantized on both sides (floor
+    // construction) so the integer-vs-interpolated-double band
+    // compare cannot flip on a last-ulp percentile difference
+    "qd28_length_filter" -> Query(TrainingOps.lengthFilter _, Oracle(
+      """WITH p AS (
+         |  SELECT source,
+         |    CAST(floor(quantile_cont(n_chars, 0.05) * 1000000.0 + 0.5)
+         |      AS BIGINT) / 1000000.0 AS p05,
+         |    CAST(floor(quantile_cont(n_chars, 0.95) * 1000000.0 + 0.5)
+         |      AS BIGINT) / 1000000.0 AS p95
+         |  FROM documents GROUP BY source)
+         |SELECT d.doc_id, d.source, d.n_chars
+         |FROM documents d JOIN p ON d.source = p.source
+         |WHERE d.n_chars >= p.p05 AND d.n_chars <= p.p95
+         |ORDER BY d.doc_id""".stripMargin)),
+    // qs15: batch interval join on the same micros-truncated
+    // timestamps (qx8's CAST convention); INTERVAL arithmetic is
+    // exact micros on both engines
+    "qs15_stream_stream_join" -> Query(EventStream.clickAttributionGate _, Oracle(
+      """WITH ev AS (SELECT event_id, user_id, event_type,
+         |              CAST(ts AS TIMESTAMP) AS ts FROM events),
+         |c AS (SELECT event_id AS click_id, user_id, ts AS c_ts
+         |      FROM ev WHERE event_type = 'click'),
+         |p AS (SELECT event_id AS purchase_id, user_id AS p_user,
+         |        ts AS p_ts
+         |      FROM ev WHERE event_type = 'purchase')
+         |SELECT c.click_id, p.purchase_id, c.user_id
+         |FROM c JOIN p ON c.user_id = p.p_user
+         |  AND p.p_ts >= c.c_ts
+         |  AND p.p_ts <= c.c_ts + INTERVAL 30 MINUTE
+         |ORDER BY click_id, purchase_id""".stripMargin)),
+    // qx21: <=> == IS NOT DISTINCT FROM — the NULL group must match
+    // across the two aggregates (plain = would drop it)
+    "qx21_nullsafe_join" -> Query(Extras.nullSafeJoin _, Oracle(
+      """WITH a AS (
+         |  SELECT CASE WHEN o_orderstatus = 'P' THEN NULL
+         |           ELSE o_orderstatus END AS k, count(*) AS n_all
+         |  FROM orders GROUP BY 1),
+         |b AS (
+         |  SELECT CASE WHEN o_orderstatus = 'P' THEN NULL
+         |           ELSE o_orderstatus END AS k, count(*) AS n_big
+         |  FROM orders WHERE o_totalprice > 200000 GROUP BY 1)
+         |SELECT a.k AS status_key, a.n_all, b.n_big
+         |FROM a LEFT JOIN b ON a.k IS NOT DISTINCT FROM b.k
+         |ORDER BY status_key NULLS FIRST""".stripMargin)),
+    // qs16: unique event_ids make the batch-dir union provably the
+    // plain projection; value is pass-through (bit-exact doubles)
+    "qs16_foreachbatch_sink" -> Query(EventStream.foreachBatchGate _, Oracle(
+      "SELECT event_id, user_id, event_type, value FROM events " +
+        "ORDER BY event_id")),
+    // qs17: per-type hourly spine (generate_series between that
+    // type's min/max present hour) + IGNORE NULLS forward fill —
+    // same frame, same decimal totals; `total` keeps NULL on
+    // synthesized hours, exactly like the Spark left join.
+    "qs17_gap_fill" -> Query(Events.gapFillHourly _, Oracle(
+      """WITH h AS (SELECT event_type, date_trunc('hour', ts) AS hour_ts,
+         |  SUM(CAST(value AS DECIMAL(18,2))) AS total_dec
+         |  FROM events GROUP BY 1, 2),
+         |b AS (SELECT event_type, min(hour_ts) AS h0, max(hour_ts) AS h1
+         |  FROM h GROUP BY 1),
+         |s AS (SELECT event_type,
+         |  unnest(generate_series(h0, h1, INTERVAL 1 HOUR)) AS hour_ts
+         |  FROM b)
+         |SELECT s.event_type, strftime(s.hour_ts, '%Y-%m-%d %H:00:00') AS hour,
+         |  CAST(h.total_dec AS DOUBLE) AS total,
+         |  CAST(last_value(h.total_dec IGNORE NULLS) OVER (
+         |    PARTITION BY s.event_type ORDER BY s.hour_ts
+         |    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS DOUBLE)
+         |    AS filled,
+         |  h.total_dec IS NULL AS was_gap
+         |FROM s LEFT JOIN h
+         |  ON s.event_type = h.event_type AND s.hour_ts = h.hour_ts
+         |ORDER BY s.event_type, hour""".stripMargin)),
+    // qs18: both engines truncate weeks to Monday; offsets are
+    // day-diff DIV 7 on week-truncated dates (always a multiple of
+    // 7); count(*) at the distinct (user, week) grain IS the
+    // distinct-user count; rate is int/int double division.
+    "qs18_retention" -> Query(Events.retention _, Oracle(
+      """WITH uw AS (SELECT DISTINCT user_id,
+         |    date_trunc('week', ts) AS week FROM events),
+         |c AS (SELECT user_id, week,
+         |    min(week) OVER (PARTITION BY user_id) AS cohort_week
+         |  FROM uw),
+         |m AS (SELECT cohort_week,
+         |    CAST(date_diff('day', cohort_week, week) // 7 AS INTEGER)
+         |      AS week_offset,
+         |    count(*) AS n_users
+         |  FROM c GROUP BY 1, 2)
+         |SELECT strftime(cohort_week, '%Y-%m-%d') AS cohort, week_offset,
+         |  n_users,
+         |  max(CASE WHEN week_offset = 0 THEN n_users END)
+         |    OVER (PARTITION BY cohort_week) AS cohort_size,
+         |  CAST(n_users AS DOUBLE) /
+         |    CAST(max(CASE WHEN week_offset = 0 THEN n_users END)
+         |      OVER (PARTITION BY cohort_week) AS DOUBLE) AS retention
+         |FROM m ORDER BY cohort, week_offset""".stripMargin)),
+    // qs19: RANGE frame on floored epoch seconds — peer-inclusive on
+    // both engines, so same-second ties need no ordering tie-break;
+    // the sum rides DECIMAL(18,2).
+    "qs19_trailing_hour" -> Query(Events.trailingHourSpend _, Oracle(
+      """SELECT user_id, event_id,
+         |  strftime(ts, '%Y-%m-%d %H:%M:%S') AS ts_s,
+         |  CAST(SUM(CAST(value AS DECIMAL(18,2))) OVER (
+         |    PARTITION BY user_id
+         |    ORDER BY CAST(floor(epoch(ts)) AS BIGINT)
+         |    RANGE BETWEEN 3600 PRECEDING AND CURRENT ROW) AS DOUBLE)
+         |    AS trailing_1h
+         |FROM events ORDER BY user_id, event_id""".stripMargin)),
+    // qd29: same slicing as qd17's oracle (generate_series stride =
+    // size), keep-first on (doc_id, chunk_idx) — window partition by
+    // the chunk TEXT (Spark's extra xxhash64 prefix key only
+    // re-buckets the same groups); string_agg rebuilds in chunk
+    // order, LEFT JOIN keeps chunk-free docs as empty text.
+    "qd29_chunk_dedup" -> Query(Dedup.chunkDedupQuery _, Oracle(
+      """WITH c AS (
+         |  SELECT doc_id, CAST((i-1)//120 AS INTEGER) AS chunk_idx,
+         |    substr(text, i, 120) AS chunk_text
+         |  FROM documents, unnest(generate_series(1, len(text), 120)) AS u(i)
+         |  WHERE len(text) > 0),
+         |k AS (SELECT * FROM (
+         |    SELECT doc_id, chunk_idx, chunk_text, row_number() OVER (
+         |      PARTITION BY chunk_text ORDER BY doc_id, chunk_idx) AS rn
+         |    FROM c) WHERE rn = 1)
+         |SELECT d.doc_id,
+         |  COALESCE(string_agg(k.chunk_text, '' ORDER BY k.chunk_idx), '')
+         |    AS dedup_text,
+         |  CAST(count(k.doc_id) AS INTEGER) AS n_chunks_kept
+         |FROM documents d LEFT JOIN k ON d.doc_id = k.doc_id
+         |GROUP BY d.doc_id ORDER BY d.doc_id""".stripMargin)),
+    // qd30: same tokenizer as the shingle family; positions are
+    // 0-based on both sides (posexplode vs i-1); a token is cut iff
+    // ANY hot 4-gram occurrence covers its position.
+    "qd30_hot_spans" -> Query(TrainingOps.hotSpansQuery _, Oracle(
+      """WITH toks AS (
+         |  SELECT doc_id, list_filter(string_split(
+         |    regexp_replace(lower(text), '[^a-z0-9]+', ' ', 'g'), ' '),
+         |    x -> x != '') AS t
+         |  FROM documents),
+         |tok AS (SELECT doc_id, i-1 AS pos, t[i] AS tk
+         |  FROM toks, unnest(range(1, len(t)+1)) AS u(i)),
+         |g AS (SELECT doc_id, i-1 AS pos,
+         |    t[i]||' '||t[i+1]||' '||t[i+2]||' '||t[i+3] AS gram
+         |  FROM toks, unnest(range(1, len(t)-2)) AS u(i)
+         |  WHERE len(t) >= 4),
+         |hot AS (SELECT gram FROM (
+         |    SELECT gram, count(DISTINCT doc_id) AS df FROM g GROUP BY 1)
+         |  WHERE df >= 3),
+         |cov AS (SELECT DISTINCT g.doc_id, g.pos + j AS pos
+         |  FROM g JOIN hot USING (gram), unnest([0,1,2,3]) AS v(j)),
+         |marked AS (SELECT t.doc_id, t.pos, t.tk,
+         |    c.pos IS NOT NULL AS hit
+         |  FROM tok t LEFT JOIN cov c
+         |    ON t.doc_id = c.doc_id AND t.pos = c.pos)
+         |SELECT d.doc_id,
+         |  COALESCE(string_agg(CASE WHEN NOT m.hit THEN m.tk END,
+         |    ' ' ORDER BY m.pos), '') AS clean_text,
+         |  CAST(COALESCE(SUM(CASE WHEN m.hit THEN 1 ELSE 0 END), 0)
+         |    AS INTEGER) AS n_removed
+         |FROM documents d LEFT JOIN marked m ON d.doc_id = m.doc_id
+         |GROUP BY d.doc_id ORDER BY d.doc_id""".stripMargin)),
+    // qd31: all-integer quota arithmetic (floor(sqrt·1e6) weights,
+    // integer sum, (target·w) // Σw) — no summation-order hazard;
+    // rank rides the shared 31-bit rolling fingerprint (qd5/qd12).
+    // qp3: the bloom filter is a pure pruning device — result
+    // semantics are the plain filtered join+agg (money rule on both
+    // double measures).
+    "qp3_bloom_join" -> Query(Marts.bloomJoinRead _, Oracle(
+      """SELECT p.p_partkey, count(*) AS n_items,
+         |  CAST(SUM(CAST(l.l_quantity AS DECIMAL(18,2))) AS DOUBLE)
+         |    AS sum_qty,
+         |  CAST(SUM(CAST(l.l_extendedprice AS DECIMAL(18,2))) AS DOUBLE)
+         |    AS total_price
+         |FROM lineitem l JOIN part p ON l.l_partkey = p.p_partkey
+         |WHERE p.p_brand = 'Brand#12'
+         |GROUP BY p.p_partkey ORDER BY p.p_partkey""".stripMargin)),
+    // qs22: running distinct = Σ n_new on the day grain (first-seen
+    // identity), mirrored exactly; both engines run the cumsum over
+    // the tiny report frame.
+    "qs22_cumulative_users" -> Query(Events.cumulativeUsers _, Oracle(
+      """WITH ud AS (SELECT DISTINCT user_id, CAST(ts AS DATE) AS day
+         |  FROM events),
+         |f AS (SELECT user_id, day,
+         |    min(day) OVER (PARTITION BY user_id) AS first_day FROM ud),
+         |d AS (SELECT day, count(*) AS n_active,
+         |    CAST(SUM(CASE WHEN day = first_day THEN 1 ELSE 0 END)
+         |      AS BIGINT) AS n_new
+         |  FROM f GROUP BY 1)
+         |SELECT strftime(day, '%Y-%m-%d') AS day, n_active, n_new,
+         |  CAST(SUM(n_new) OVER (ORDER BY day
+         |    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
+         |    AS BIGINT) AS cum_users
+         |FROM d ORDER BY day""".stripMargin)),
+    // qp4: compaction is a pure layout change — the read-back of the
+    // compacted tree equals the plain projection.
+    "qp4_compaction" -> Query(Marts.compactionRoundtrip _, Oracle(
+      "SELECT event_id, event_type, user_id, value FROM events " +
+        "ORDER BY event_id")),
+    // qs21: equi-join on user + interval filter, earliest click wins
+    // ((c_ts, click_id) tie rule); gap on floored epoch seconds.
+    "qs21_first_touch" -> Query(Events.firstTouch _, Oracle(
+      """WITH ev AS (SELECT event_id, user_id, event_type,
+         |    CAST(ts AS TIMESTAMP) AS ts FROM events),
+         |c AS (SELECT event_id AS click_id, user_id, ts AS c_ts
+         |  FROM ev WHERE event_type = 'click'),
+         |p AS (SELECT event_id AS purchase_id, user_id, ts AS p_ts
+         |  FROM ev WHERE event_type = 'purchase'),
+         |j AS (SELECT p.purchase_id, c.click_id, p.user_id, c.c_ts, p.p_ts,
+         |    row_number() OVER (PARTITION BY p.purchase_id
+         |      ORDER BY c.c_ts, c.click_id) AS rn
+         |  FROM p JOIN c ON p.user_id = c.user_id
+         |    AND c.c_ts >= p.p_ts - INTERVAL 30 MINUTE
+         |    AND c.c_ts <= p.p_ts)
+         |SELECT purchase_id, click_id, user_id,
+         |  strftime(c_ts, '%Y-%m-%d %H:%M:%S') AS click_at,
+         |  strftime(p_ts, '%Y-%m-%d %H:%M:%S') AS purchase_at,
+         |  CAST(CAST(floor(epoch(p_ts)) AS BIGINT)
+         |    - CAST(floor(epoch(c_ts)) AS BIGINT) AS INTEGER) AS gap_sec
+         |FROM j WHERE rn = 1 ORDER BY purchase_id""".stripMargin)),
+    // qx23: name-aligned union with NULL fill — column identity, not
+    // position, pairs the two eras.
+    "qx23_union_by_name" -> Query(Extras.unionByNameDrift _, Oracle(
+      """SELECT o_orderkey, o_custkey, o_totalprice,
+         |  CAST(NULL AS VARCHAR) AS o_orderstatus,
+         |  CAST(NULL AS VARCHAR) AS o_orderpriority
+         |FROM orders WHERE o_orderdate < TIMESTAMP '1996-01-01'
+         |UNION ALL
+         |SELECT o_orderkey, CAST(NULL AS BIGINT) AS o_custkey,
+         |  o_totalprice, o_orderstatus, o_orderpriority
+         |FROM orders WHERE o_orderdate >= TIMESTAMP '1996-01-01'
+         |ORDER BY o_orderkey""".stripMargin)),
+    // qd34: three verified stage oracles composed — qd1's keep-first
+    // window, qd28's micro-quantized band, qd2's token count.
+    "qd34_curation" -> Query(TrainingOps.curationVerdict _, Oracle(
+      """WITH p AS (
+         |  SELECT source,
+         |    CAST(floor(quantile_cont(n_chars, 0.05) * 1000000.0 + 0.5)
+         |      AS BIGINT) / 1000000.0 AS p05,
+         |    CAST(floor(quantile_cont(n_chars, 0.95) * 1000000.0 + 0.5)
+         |      AS BIGINT) / 1000000.0 AS p95
+         |  FROM documents GROUP BY source),
+         |c AS (SELECT doc_id, row_number() OVER (
+         |    PARTITION BY text ORDER BY doc_id) AS rn FROM documents),
+         |t AS (SELECT doc_id,
+         |    CASE WHEN length(trim(text)) = 0 THEN 0 ELSE
+         |      CAST(len(regexp_split_to_array(trim(text), '\s+'))
+         |        AS INTEGER) END AS n_tokens
+         |  FROM documents)
+         |SELECT d.doc_id, c.rn = 1 AS canonical,
+         |  d.n_chars >= p.p05 AND d.n_chars <= p.p95 AS in_band,
+         |  t.n_tokens >= 30 AS enough_tokens,
+         |  (c.rn = 1 AND d.n_chars >= p.p05 AND d.n_chars <= p.p95
+         |    AND t.n_tokens >= 30) AS kept
+         |FROM documents d
+         |JOIN p ON d.source = p.source
+         |JOIN c ON d.doc_id = c.doc_id
+         |JOIN t ON d.doc_id = t.doc_id
+         |ORDER BY d.doc_id""".stripMargin)),
+    // qe6: integer codes from identical double arithmetic; the MSE
+    // reduction is an integer micro-sum (qd21's device) so no
+    // accumulation order exists to disagree.
+    "qe6_pq_audit" -> Query(Similarity.pqAuditQuery _, Oracle(
+      """WITH el AS (SELECT vec_id, i-1 AS dim,
+         |    CAST(embedding[i] AS DOUBLE) AS x
+         |  FROM embeddings, unnest(range(1, len(embedding)+1)) u(i)),
+         |st AS (SELECT dim, min(x) AS lo, max(x) AS hi FROM el GROUP BY 1),
+         |j AS (SELECT vec_id, x, lo, hi,
+         |    CASE WHEN hi = lo THEN 0 ELSE
+         |      CAST(least(floor((x - lo) / (hi - lo) * 256.0), 255.0)
+         |        AS INTEGER) END AS code
+         |  FROM el JOIN st USING (dim)),
+         |d AS (SELECT vec_id, code,
+         |    lo + (CAST(code AS DOUBLE) + 0.5) * (hi - lo) / 256.0 AS deq,
+         |    x FROM j),
+         |e AS (SELECT vec_id, code,
+         |    CAST(floor((x - deq) * (x - deq) * 1e12 + 0.5) AS BIGINT) AS em
+         |  FROM d)
+         |SELECT vec_id, CAST(SUM(code) AS BIGINT) AS code_sum,
+         |  CAST(SUM(em) AS DOUBLE) / 1e12 / CAST(count(*) AS DOUBLE) AS mse
+         |FROM e GROUP BY vec_id ORDER BY vec_id""".stripMargin)),
+    // qe7: the centroid is exact integer sums (floor(v*1e6) longs)
+    // divided back to double ONCE — no float accumulation order to
+    // disagree on; the cosine then rides the usual sequential fold.
+    "qe7_centroid_outlier" -> Query(Similarity.centroidOutlierQuery _, Oracle(
+      s"""WITH el AS (SELECT label, vec_id, i AS d,
+         |    CAST(floor(CAST(embedding[i] AS DOUBLE) * 1000000) AS BIGINT) AS q
+         |  FROM embeddings, unnest(range(1, len(embedding)+1)) u(i)),
+         |s AS (SELECT label, d, CAST(SUM(q) AS BIGINT) AS qsum,
+         |    count(*) AS n
+         |  FROM el GROUP BY 1, 2),
+         |c AS (SELECT label, list(
+         |    CAST(qsum AS DOUBLE) / (CAST(n AS DOUBLE) * 1000000.0)
+         |    ORDER BY d) AS centroid
+         |  FROM s GROUP BY label),
+         |x AS (SELECT label, e.vec_id,
+         |    ${dotSql("e.embedding", "c.centroid")}
+         |      / (sqrt(${dotSql("e.embedding", "e.embedding")})
+         |         * sqrt(${dotSql("c.centroid", "c.centroid")})) AS cos
+         |  FROM embeddings e JOIN c USING (label))
+         |SELECT label, vec_id, cos,
+         |  CAST(rank() OVER (PARTITION BY label ORDER BY cos, vec_id)
+         |    AS INTEGER) AS outlier_rank
+         |FROM x ORDER BY label, outlier_rank""".stripMargin)),
+    // qd33: adjacency-counted pairs via the char-list mirror (the
+    // Spark side's overlapping lookahead is not RE2-expressible);
+    // the winning pair is a literal alnum regex on both sides, and
+    // greedy non-overlapping replace semantics agree (Java Matcher
+    // and RE2 both scan left-to-right from each match end).
+    "qd33_bpe_merge" -> Query(TrainingOps.bpeMergeQuery _, Oracle(
+      """WITH ch AS (SELECT doc_id, string_split(text, '') AS cs
+         |  FROM documents),
+         |bg AS (SELECT unnest(list_filter(
+         |    list_transform(range(1, len(cs)), i -> cs[i] || cs[i+1]),
+         |    p -> regexp_matches(p, '^[a-z0-9]{2}$'))) AS pair
+         |  FROM ch WHERE len(cs) >= 2),
+         |cnt AS (SELECT pair, count(*) AS c FROM bg GROUP BY 1),
+         |top AS (SELECT pair, c AS pair_count FROM cnt
+         |  ORDER BY c DESC, pair LIMIT 1)
+         |SELECT d.doc_id, t.pair, t.pair_count,
+         |  CAST(len(regexp_extract_all(d.text, t.pair)) AS INTEGER)
+         |    AS n_merges,
+         |  regexp_replace(d.text, t.pair, '#', 'g') AS merged_text
+         |FROM documents d CROSS JOIN top t
+         |ORDER BY doc_id""".stripMargin)),
+    // qx22: exact integer cents/hour moments, then the identical
+    // closed-form double expression — corr() itself could never
+    // hash-match (order-dependent double accumulation); the moments
+    // can.
+    "qx22_moment_corr" -> Query(Events.valueHourCorr _, Oracle(
+      """WITH m AS (
+         |  SELECT event_type, count(*) AS n,
+         |    SUM(xc) AS sx, SUM(y) AS sy,
+         |    SUM(xc * xc) AS sxx, SUM(xc * y) AS sxy, SUM(y * y) AS syy
+         |  FROM (SELECT event_type,
+         |      CAST(CAST(value AS DECIMAL(18,2)) * 100 AS BIGINT) AS xc,
+         |      CAST(hour(ts) AS BIGINT) AS y
+         |    FROM events)
+         |  GROUP BY 1)
+         |SELECT event_type, n,
+         |  CASE WHEN CAST(n AS DOUBLE) * CAST(sxx AS DOUBLE)
+         |        - CAST(sx AS DOUBLE) * CAST(sx AS DOUBLE) = 0
+         |      OR CAST(n AS DOUBLE) * CAST(syy AS DOUBLE)
+         |        - CAST(sy AS DOUBLE) * CAST(sy AS DOUBLE) = 0
+         |    THEN NULL ELSE
+         |  (CAST(n AS DOUBLE) * CAST(sxy AS DOUBLE)
+         |     - CAST(sx AS DOUBLE) * CAST(sy AS DOUBLE)) /
+         |  (sqrt(CAST(n AS DOUBLE) * CAST(sxx AS DOUBLE)
+         |     - CAST(sx AS DOUBLE) * CAST(sx AS DOUBLE)) *
+         |   sqrt(CAST(n AS DOUBLE) * CAST(syy AS DOUBLE)
+         |     - CAST(sy AS DOUBLE) * CAST(sy AS DOUBLE))) END AS corr,
+         |  CASE WHEN CAST(n AS DOUBLE) * CAST(sxx AS DOUBLE)
+         |        - CAST(sx AS DOUBLE) * CAST(sx AS DOUBLE) = 0
+         |    THEN NULL ELSE
+         |  (CAST(n AS DOUBLE) * CAST(sxy AS DOUBLE)
+         |     - CAST(sx AS DOUBLE) * CAST(sy AS DOUBLE)) /
+         |  (CAST(n AS DOUBLE) * CAST(sxx AS DOUBLE)
+         |     - CAST(sx AS DOUBLE) * CAST(sx AS DOUBLE))
+         |    END AS beta_hours_per_cent
+         |FROM m ORDER BY event_type""".stripMargin)),
+    // qd32: qd19's integer window-cumsum bin assignment, then the
+    // sequences themselves — string_agg in id order with the literal
+    // <eos> glue (unique doc_id makes RANGE==ROWS in both engines'
+    // default frames, same as qd19).
+    "qd32_pack_sequences" -> Query(TextPrep.packSeqQuery _, Oracle(
+      """WITH o AS (SELECT source, doc_id, text,
+         |    SUM(n_chars) OVER (PARTITION BY source ORDER BY doc_id)
+         |      - n_chars AS off
+         |  FROM documents),
+         |b AS (SELECT source, doc_id, text,
+         |    CAST(off // 2000 AS INTEGER) AS bin FROM o)
+         |SELECT source, bin, count(*) AS n_docs,
+         |  CAST(length(string_agg(text, '<eos>' ORDER BY doc_id))
+         |    AS INTEGER) AS seq_chars,
+         |  string_agg(text, '<eos>' ORDER BY doc_id) AS seq_text
+         |FROM b GROUP BY 1, 2 ORDER BY source, bin""".stripMargin)),
+    "qd31_temperature_sample" -> Query(TrainingOps.temperatureSampleQuery _, Oracle(
+      """WITH f AS (
+         |  SELECT doc_id, lang,
+         |    CAST(CASE WHEN length(text) = 0 THEN 0 ELSE
+         |      list_reduce(list_transform(string_split(text, ''),
+         |        c -> CAST(unicode(c) AS BIGINT)),
+         |        (acc, x) -> (acc * 31 + x) % 2147483647) END
+         |      AS BIGINT) AS fp
+         |  FROM documents),
+         |s AS (SELECT lang, count(*) AS n_docs,
+         |    CAST(floor(sqrt(count(*)) * 1e6) AS BIGINT) AS w
+         |  FROM documents GROUP BY 1),
+         |q AS (SELECT lang,
+         |    CAST((250 * w) // SUM(w) OVER () AS BIGINT) AS quota
+         |  FROM s),
+         |r AS (SELECT doc_id, lang, fp, row_number() OVER (
+         |    PARTITION BY lang ORDER BY fp, doc_id) AS rn FROM f)
+         |SELECT r.lang, r.doc_id, CAST(rn AS INTEGER) AS rnk,
+         |  CAST(quota AS INTEGER) AS quota
+         |FROM r JOIN q USING (lang) WHERE rn <= quota
+         |ORDER BY lang, doc_id""".stripMargin)),
+    // qp5: the z-ordered layout is a pure clustering change — the
+    // box read's content equals the same filter on the source table
+    // (and the hash proves the clustered write lost nothing).
+    "qp5_zorder" -> Query(Marts.zorderBoxRead _, Oracle(
+      """SELECT l_orderkey, l_linenumber, l_partkey, l_suppkey,
+         |  l_quantity, l_extendedprice
+         |FROM lineitem
+         |WHERE l_partkey BETWEEN 100 AND 199
+         |  AND l_suppkey BETWEEN 1 AND 4
+         |ORDER BY l_orderkey, l_linenumber, l_partkey, l_suppkey,
+         |  l_quantity, l_extendedprice""".stripMargin)),
+    // qx25: CDC diff of the 2000-vs-2001 latest-state snapshots —
+    // change predicate on status only (IS DISTINCT FROM mirrors
+    // Spark's <=> negation), totals carried old/new without
+    // triggering updates, no-change rows suppressed. Totals pass
+    // through unchanged (no arithmetic) so doubles are bit-exact
+    // without the decimal detour (qx14's argument).
+    "qx25_snapshot_diff" -> Query(Scd2.customerDiff _, Oracle(
+      """WITH b AS (
+         |  SELECT o_custkey, o_orderstatus AS status, o_totalprice AS total
+         |  FROM (SELECT *, row_number() OVER (PARTITION BY o_custkey
+         |      ORDER BY o_orderdate DESC, o_orderkey DESC) AS rn
+         |    FROM orders WHERE o_orderdate >= TIMESTAMP '2000-01-01'
+         |      AND o_orderdate < TIMESTAMP '2001-01-01') t
+         |  WHERE rn = 1),
+         |a AS (
+         |  SELECT o_custkey, o_orderstatus AS status, o_totalprice AS total
+         |  FROM (SELECT *, row_number() OVER (PARTITION BY o_custkey
+         |      ORDER BY o_orderdate DESC, o_orderkey DESC) AS rn
+         |    FROM orders WHERE o_orderdate >= TIMESTAMP '2001-01-01') t
+         |  WHERE rn = 1)
+         |SELECT COALESCE(b.o_custkey, a.o_custkey) AS cust,
+         |  CASE WHEN b.o_custkey IS NULL THEN 'insert'
+         |       WHEN a.o_custkey IS NULL THEN 'delete'
+         |       ELSE 'update' END AS op,
+         |  b.status AS old_status, b.total AS old_total,
+         |  a.status AS new_status, a.total AS new_total
+         |FROM b FULL OUTER JOIN a ON b.o_custkey = a.o_custkey
+         |WHERE b.o_custkey IS NULL OR a.o_custkey IS NULL
+         |  OR b.status IS DISTINCT FROM a.status
+         |ORDER BY cust""".stripMargin)),
+    // qp6: per-column profile — exact counts/NDV, min/max rendered
+    // AFTER the typed aggregate (money via DECIMAL(18,2), timestamps
+    // via the canonical format) so string casts can't reorder.
+    "qp6_profile" -> Query(Profile.ordersProfile _, Oracle(
+      Seq(
+        ("o_orderkey", "CAST(%s AS VARCHAR)"),
+        ("o_custkey", "CAST(%s AS VARCHAR)"),
+        ("o_orderstatus", "%s"),
+        ("o_totalprice", "CAST(CAST(%s AS DECIMAL(18,2)) AS VARCHAR)"),
+        ("o_orderdate", "strftime(%s, '%%Y-%%m-%%d %%H:%%M:%%S')"),
+        ("o_orderpriority", "%s"))
+        .map { case (c, r) =>
+          s"SELECT '$c' AS col_name, count($c) AS n_nonnull, " +
+            s"count(DISTINCT $c) AS ndv, " +
+            s"${r.format(s"min($c)")} AS min_val, " +
+            s"${r.format(s"max($c)")} AS max_val FROM orders"
+        }
+        .mkString("", " UNION ALL ", " ORDER BY col_name"))),
+    // qs23: each event belongs to exactly the two epoch-aligned
+    // 2-hour windows starting at trunc_hour(ts) and trunc_hour(ts)-1h
+    // — the cross join against (0,1) materializes that assignment.
+    "qs23_sliding_window" -> Query(Events.slidingHourly _, Oracle(
+      """SELECT strftime(date_trunc('hour', ts) - k.k * INTERVAL 1 HOUR,
+         |    '%Y-%m-%d %H:00:00') AS wstart,
+         |  count(*) AS n,
+         |  CAST(SUM(CAST(value AS DECIMAL(18,2))) AS DOUBLE) AS total_value
+         |FROM events CROSS JOIN (VALUES (0), (1)) k(k)
+         |GROUP BY 1 ORDER BY wstart""".stripMargin)),
+    // qx24: the csv and jdbc legs are written FROM the parquet table
+    // inside the query, so federation reduces to the parquet table
+    // tagged three times — the oracle needs no csv/jdbc reader.
+    "qx24_federation" -> Query(Federation.federatedNation _, Oracle(
+      """WITH legs AS (
+         |  SELECT 'parquet' AS source, n_nationkey, n_name, n_regionkey
+         |    FROM nation
+         |  UNION ALL
+         |  SELECT 'csv', n_nationkey, n_name, n_regionkey FROM nation
+         |  UNION ALL
+         |  SELECT 'jdbc', n_nationkey, n_name, n_regionkey FROM nation)
+         |SELECT source, n_nationkey, n_name, n_regionkey FROM legs
+         |ORDER BY source, n_nationkey""".stripMargin)),
+    // qd35: qd33's char-list adjacency mirror, CHAINED for three
+    // training rounds — each round's corpus CTE (t1/t2) feeds the
+    // next round's candidate count with the merge symbol admitted
+    // into the char class, exactly the Spark driver loop unrolled.
+    "qd35_bpe_train" -> Query(TrainingOps.bpeTrainQuery _, Oracle(bpeTrainSql)),
+    "qd38_bpe_encode" -> Query(TrainingOps.bpeEncodeQuery _, Oracle(bpeEncodeSql)),
   )
 
   /** qe17 oracle: rebuild the exact k=3 edge set from brute-force
@@ -2050,74 +2428,6 @@ object SparkEntry {
        |FROM embeddings e LEFT JOIN d ON e.vec_id = d.vec_id
        |ORDER BY e.vec_id""".stripMargin
 
-  private val batch8Sql: Map[String, String] = Map(
-    // qp2: runtime-pruned read — q09 joined to the filtered dim; the
-    // Spark side must produce the same rows while only OPENING the
-    // store partitions the broadcast dim admits (PlanSpec pins the
-    // dynamicpruning PartitionFilter).
-    "qp2_dpp_read" ->
-      (s"""WITH q AS (\n$q09SqlCore)
-         |SELECT q.store, n.n_name AS nation, q.person, q.month,
-         |  q.total, q.incentive
-         |FROM q JOIN nation n ON q.store = n.n_nationkey
-         |WHERE n.n_regionkey = 1
-         |ORDER BY q.store, q.month, q.person""".stripMargin),
-    // qs13: lag window over the (type, hour) grain; delta on the
-    // DECIMAL totals (exact subtraction), NULL for each type's first
-    // hour. DuckDB lag default is NULL — same as Spark's.
-    "qs13_hourly_delta" ->
-      ("""WITH h AS (SELECT event_type, date_trunc('hour', ts) AS hour_ts,
-         |  SUM(CAST(value AS DECIMAL(18,2))) AS total_dec
-         |  FROM events GROUP BY 1, 2)
-         |SELECT event_type, strftime(hour_ts, '%Y-%m-%d %H:00:00') AS hour,
-         |  CAST(total_dec AS DOUBLE) AS total,
-         |  CAST(total_dec - lag(total_dec)
-         |    OVER (PARTITION BY event_type ORDER BY hour_ts) AS DOUBLE) AS delta
-         |FROM h ORDER BY event_type, hour""".stripMargin),
-    // qx19: the oracle IS the Spark-side text (same convention as
-    // qx16) — DuckDB decorrelates it with its own rewrite, landing on
-    // the same values by the subquery's definition.
-    "qx19_corr_subquery" -> Extras.corrSubqueryText,
-    // qd24: RE2 and Java agree on \b + alternation; DuckDB needs the
-    // explicit 'g' flag where Spark's regexp_replace is global by
-    // default.
-    "qd24_redact" ->
-      ("""SELECT doc_id,
-         |  regexp_replace(text, '\b(customer|key|stream)\b', '<PII>', 'g')
-         |    AS redacted_text,
-         |  CAST(len(regexp_extract_all(text, '\b(customer|key|stream)\b'))
-         |    AS INTEGER) AS n_redacted
-         |FROM documents ORDER BY doc_id""".stripMargin),
-    // qd25: same tokenizer as qd9/qd20; bigrams via 1-based list
-    // indexing over range(1, len) = positions 1..len-1; ratios are
-    // int/int double divisions (exact on both engines). Zero-token
-    // docs drop out; single-token docs keep NULL dup_bigram_ratio
-    // via the LEFT JOIN.
-    "qd25_repetition" ->
-      ("""WITH toks AS (
-         |  SELECT doc_id, list_filter(string_split(
-         |    regexp_replace(lower(text), '[^a-z0-9]+', ' ', 'g'), ' '),
-         |    t -> t != '') AS t
-         |  FROM documents),
-         |tok AS (SELECT doc_id, unnest(t) AS token FROM toks WHERE len(t) > 0),
-         |tc AS (SELECT doc_id, token, count(*) AS c FROM tok GROUP BY 1, 2),
-         |top AS (SELECT doc_id, max(c) AS max_c,
-         |          CAST(SUM(c) AS BIGINT) AS n_tokens FROM tc GROUP BY 1),
-         |g AS (SELECT doc_id, unnest(list_transform(range(1, len(t)),
-         |        i -> t[i] || ' ' || t[i+1])) AS gram
-         |      FROM toks WHERE len(t) >= 2),
-         |gc AS (SELECT doc_id, gram, count(*) AS c FROM g GROUP BY 1, 2),
-         |du AS (SELECT doc_id,
-         |         SUM(CASE WHEN c > 1 THEN c ELSE 0 END) AS dup,
-         |         SUM(c) AS tot FROM gc GROUP BY 1)
-         |SELECT t.doc_id, t.n_tokens,
-         |  CAST(t.max_c AS DOUBLE) / CAST(t.n_tokens AS DOUBLE)
-         |    AS top_token_ratio,
-         |  CAST(du.dup AS DOUBLE) / CAST(du.tot AS DOUBLE)
-         |    AS dup_bigram_ratio
-         |FROM top t LEFT JOIN du ON t.doc_id = du.doc_id
-         |ORDER BY t.doc_id""".stripMargin),
-  )
 
   /** qd27's oracle, generated from the SAME [[Dedup.portablePerms]]
     * constants as the Spark side: per distinct gram, the 31-bit
@@ -2155,516 +2465,6 @@ object SparkEntry {
        |ORDER BY doc_a""".stripMargin
   }
 
-  private lazy val batch9Sql: Map[String, String] = Map(
-    // qd26: nfc_normalize is DuckDB-native; chr(769) = U+0301. The
-    // suffix is decomposed, so every row takes the real rewrite path.
-    "qd26_nfc_normalize" ->
-      ("""SELECT doc_id, norm_text,
-         |  CAST(length(norm_text) AS INTEGER) AS n_chars_nfc
-         |FROM (SELECT doc_id,
-         |        nfc_normalize(text || ' cafe' || chr(769)) AS norm_text
-         |      FROM documents)
-         |ORDER BY doc_id""".stripMargin),
-    "qd27_minhash_estimate" -> minhashEstimateSql,
-    // qs14: stream-static join + aggregate ≡ the batch join+groupBy
-    // (decimal sums are order-free under incremental accumulation)
-    "qs14_stream_segment" ->
-      ("""SELECT c.c_mktsegment AS segment, count(*) AS n,
-         |  CAST(SUM(CAST(e.value AS DECIMAL(18,2))) AS DOUBLE) AS total_value
-         |FROM events e JOIN customer c ON e.user_id = c.c_custkey
-         |GROUP BY 1 ORDER BY segment""".stripMargin),
-    // qx20: the merged read == per-era CASE projections (era 1 = even
-    // keys with price, era 2 = odd keys with status; the other
-    // column is each era's NULL fill)
-    "qx20_schema_merge" ->
-      ("""SELECT o_orderkey,
-         |  CASE WHEN o_orderkey % 2 = 0 THEN o_totalprice END AS o_totalprice,
-         |  CASE WHEN o_orderkey % 2 = 1 THEN o_orderstatus END AS o_orderstatus
-         |FROM orders ORDER BY o_orderkey""".stripMargin),
-    // qd28: thresholds micro-quantized on both sides (floor
-    // construction) so the integer-vs-interpolated-double band
-    // compare cannot flip on a last-ulp percentile difference
-    "qd28_length_filter" ->
-      ("""WITH p AS (
-         |  SELECT source,
-         |    CAST(floor(quantile_cont(n_chars, 0.05) * 1000000.0 + 0.5)
-         |      AS BIGINT) / 1000000.0 AS p05,
-         |    CAST(floor(quantile_cont(n_chars, 0.95) * 1000000.0 + 0.5)
-         |      AS BIGINT) / 1000000.0 AS p95
-         |  FROM documents GROUP BY source)
-         |SELECT d.doc_id, d.source, d.n_chars
-         |FROM documents d JOIN p ON d.source = p.source
-         |WHERE d.n_chars >= p.p05 AND d.n_chars <= p.p95
-         |ORDER BY d.doc_id""".stripMargin),
-    // qs15: batch interval join on the same micros-truncated
-    // timestamps (qx8's CAST convention); INTERVAL arithmetic is
-    // exact micros on both engines
-    "qs15_stream_stream_join" ->
-      ("""WITH ev AS (SELECT event_id, user_id, event_type,
-         |              CAST(ts AS TIMESTAMP) AS ts FROM events),
-         |c AS (SELECT event_id AS click_id, user_id, ts AS c_ts
-         |      FROM ev WHERE event_type = 'click'),
-         |p AS (SELECT event_id AS purchase_id, user_id AS p_user,
-         |        ts AS p_ts
-         |      FROM ev WHERE event_type = 'purchase')
-         |SELECT c.click_id, p.purchase_id, c.user_id
-         |FROM c JOIN p ON c.user_id = p.p_user
-         |  AND p.p_ts >= c.c_ts
-         |  AND p.p_ts <= c.c_ts + INTERVAL 30 MINUTE
-         |ORDER BY click_id, purchase_id""".stripMargin),
-    // qx21: <=> == IS NOT DISTINCT FROM — the NULL group must match
-    // across the two aggregates (plain = would drop it)
-    "qx21_nullsafe_join" ->
-      ("""WITH a AS (
-         |  SELECT CASE WHEN o_orderstatus = 'P' THEN NULL
-         |           ELSE o_orderstatus END AS k, count(*) AS n_all
-         |  FROM orders GROUP BY 1),
-         |b AS (
-         |  SELECT CASE WHEN o_orderstatus = 'P' THEN NULL
-         |           ELSE o_orderstatus END AS k, count(*) AS n_big
-         |  FROM orders WHERE o_totalprice > 200000 GROUP BY 1)
-         |SELECT a.k AS status_key, a.n_all, b.n_big
-         |FROM a LEFT JOIN b ON a.k IS NOT DISTINCT FROM b.k
-         |ORDER BY status_key NULLS FIRST""".stripMargin),
-    // qs16: unique event_ids make the batch-dir union provably the
-    // plain projection; value is pass-through (bit-exact doubles)
-    "qs16_foreachbatch_sink" ->
-      ("SELECT event_id, user_id, event_type, value FROM events " +
-        "ORDER BY event_id"),
-    // qs17: per-type hourly spine (generate_series between that
-    // type's min/max present hour) + IGNORE NULLS forward fill —
-    // same frame, same decimal totals; `total` keeps NULL on
-    // synthesized hours, exactly like the Spark left join.
-    "qs17_gap_fill" ->
-      ("""WITH h AS (SELECT event_type, date_trunc('hour', ts) AS hour_ts,
-         |  SUM(CAST(value AS DECIMAL(18,2))) AS total_dec
-         |  FROM events GROUP BY 1, 2),
-         |b AS (SELECT event_type, min(hour_ts) AS h0, max(hour_ts) AS h1
-         |  FROM h GROUP BY 1),
-         |s AS (SELECT event_type,
-         |  unnest(generate_series(h0, h1, INTERVAL 1 HOUR)) AS hour_ts
-         |  FROM b)
-         |SELECT s.event_type, strftime(s.hour_ts, '%Y-%m-%d %H:00:00') AS hour,
-         |  CAST(h.total_dec AS DOUBLE) AS total,
-         |  CAST(last_value(h.total_dec IGNORE NULLS) OVER (
-         |    PARTITION BY s.event_type ORDER BY s.hour_ts
-         |    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS DOUBLE)
-         |    AS filled,
-         |  h.total_dec IS NULL AS was_gap
-         |FROM s LEFT JOIN h
-         |  ON s.event_type = h.event_type AND s.hour_ts = h.hour_ts
-         |ORDER BY s.event_type, hour""".stripMargin),
-    // qs18: both engines truncate weeks to Monday; offsets are
-    // day-diff DIV 7 on week-truncated dates (always a multiple of
-    // 7); count(*) at the distinct (user, week) grain IS the
-    // distinct-user count; rate is int/int double division.
-    "qs18_retention" ->
-      ("""WITH uw AS (SELECT DISTINCT user_id,
-         |    date_trunc('week', ts) AS week FROM events),
-         |c AS (SELECT user_id, week,
-         |    min(week) OVER (PARTITION BY user_id) AS cohort_week
-         |  FROM uw),
-         |m AS (SELECT cohort_week,
-         |    CAST(date_diff('day', cohort_week, week) // 7 AS INTEGER)
-         |      AS week_offset,
-         |    count(*) AS n_users
-         |  FROM c GROUP BY 1, 2)
-         |SELECT strftime(cohort_week, '%Y-%m-%d') AS cohort, week_offset,
-         |  n_users,
-         |  max(CASE WHEN week_offset = 0 THEN n_users END)
-         |    OVER (PARTITION BY cohort_week) AS cohort_size,
-         |  CAST(n_users AS DOUBLE) /
-         |    CAST(max(CASE WHEN week_offset = 0 THEN n_users END)
-         |      OVER (PARTITION BY cohort_week) AS DOUBLE) AS retention
-         |FROM m ORDER BY cohort, week_offset""".stripMargin),
-    // qs19: RANGE frame on floored epoch seconds — peer-inclusive on
-    // both engines, so same-second ties need no ordering tie-break;
-    // the sum rides DECIMAL(18,2).
-    "qs19_trailing_hour" ->
-      ("""SELECT user_id, event_id,
-         |  strftime(ts, '%Y-%m-%d %H:%M:%S') AS ts_s,
-         |  CAST(SUM(CAST(value AS DECIMAL(18,2))) OVER (
-         |    PARTITION BY user_id
-         |    ORDER BY CAST(floor(epoch(ts)) AS BIGINT)
-         |    RANGE BETWEEN 3600 PRECEDING AND CURRENT ROW) AS DOUBLE)
-         |    AS trailing_1h
-         |FROM events ORDER BY user_id, event_id""".stripMargin),
-    // qd29: same slicing as qd17's oracle (generate_series stride =
-    // size), keep-first on (doc_id, chunk_idx) — window partition by
-    // the chunk TEXT (Spark's extra xxhash64 prefix key only
-    // re-buckets the same groups); string_agg rebuilds in chunk
-    // order, LEFT JOIN keeps chunk-free docs as empty text.
-    "qd29_chunk_dedup" ->
-      ("""WITH c AS (
-         |  SELECT doc_id, CAST((i-1)//120 AS INTEGER) AS chunk_idx,
-         |    substr(text, i, 120) AS chunk_text
-         |  FROM documents, unnest(generate_series(1, len(text), 120)) AS u(i)
-         |  WHERE len(text) > 0),
-         |k AS (SELECT * FROM (
-         |    SELECT doc_id, chunk_idx, chunk_text, row_number() OVER (
-         |      PARTITION BY chunk_text ORDER BY doc_id, chunk_idx) AS rn
-         |    FROM c) WHERE rn = 1)
-         |SELECT d.doc_id,
-         |  COALESCE(string_agg(k.chunk_text, '' ORDER BY k.chunk_idx), '')
-         |    AS dedup_text,
-         |  CAST(count(k.doc_id) AS INTEGER) AS n_chunks_kept
-         |FROM documents d LEFT JOIN k ON d.doc_id = k.doc_id
-         |GROUP BY d.doc_id ORDER BY d.doc_id""".stripMargin),
-    // qd30: same tokenizer as the shingle family; positions are
-    // 0-based on both sides (posexplode vs i-1); a token is cut iff
-    // ANY hot 4-gram occurrence covers its position.
-    "qd30_hot_spans" ->
-      ("""WITH toks AS (
-         |  SELECT doc_id, list_filter(string_split(
-         |    regexp_replace(lower(text), '[^a-z0-9]+', ' ', 'g'), ' '),
-         |    x -> x != '') AS t
-         |  FROM documents),
-         |tok AS (SELECT doc_id, i-1 AS pos, t[i] AS tk
-         |  FROM toks, unnest(range(1, len(t)+1)) AS u(i)),
-         |g AS (SELECT doc_id, i-1 AS pos,
-         |    t[i]||' '||t[i+1]||' '||t[i+2]||' '||t[i+3] AS gram
-         |  FROM toks, unnest(range(1, len(t)-2)) AS u(i)
-         |  WHERE len(t) >= 4),
-         |hot AS (SELECT gram FROM (
-         |    SELECT gram, count(DISTINCT doc_id) AS df FROM g GROUP BY 1)
-         |  WHERE df >= 3),
-         |cov AS (SELECT DISTINCT g.doc_id, g.pos + j AS pos
-         |  FROM g JOIN hot USING (gram), unnest([0,1,2,3]) AS v(j)),
-         |marked AS (SELECT t.doc_id, t.pos, t.tk,
-         |    c.pos IS NOT NULL AS hit
-         |  FROM tok t LEFT JOIN cov c
-         |    ON t.doc_id = c.doc_id AND t.pos = c.pos)
-         |SELECT d.doc_id,
-         |  COALESCE(string_agg(CASE WHEN NOT m.hit THEN m.tk END,
-         |    ' ' ORDER BY m.pos), '') AS clean_text,
-         |  CAST(COALESCE(SUM(CASE WHEN m.hit THEN 1 ELSE 0 END), 0)
-         |    AS INTEGER) AS n_removed
-         |FROM documents d LEFT JOIN marked m ON d.doc_id = m.doc_id
-         |GROUP BY d.doc_id ORDER BY d.doc_id""".stripMargin),
-    // qd31: all-integer quota arithmetic (floor(sqrt·1e6) weights,
-    // integer sum, (target·w) // Σw) — no summation-order hazard;
-    // rank rides the shared 31-bit rolling fingerprint (qd5/qd12).
-    // qp3: the bloom filter is a pure pruning device — result
-    // semantics are the plain filtered join+agg (money rule on both
-    // double measures).
-    "qp3_bloom_join" ->
-      ("""SELECT p.p_partkey, count(*) AS n_items,
-         |  CAST(SUM(CAST(l.l_quantity AS DECIMAL(18,2))) AS DOUBLE)
-         |    AS sum_qty,
-         |  CAST(SUM(CAST(l.l_extendedprice AS DECIMAL(18,2))) AS DOUBLE)
-         |    AS total_price
-         |FROM lineitem l JOIN part p ON l.l_partkey = p.p_partkey
-         |WHERE p.p_brand = 'Brand#12'
-         |GROUP BY p.p_partkey ORDER BY p.p_partkey""".stripMargin),
-    // qs22: running distinct = Σ n_new on the day grain (first-seen
-    // identity), mirrored exactly; both engines run the cumsum over
-    // the tiny report frame.
-    "qs22_cumulative_users" ->
-      ("""WITH ud AS (SELECT DISTINCT user_id, CAST(ts AS DATE) AS day
-         |  FROM events),
-         |f AS (SELECT user_id, day,
-         |    min(day) OVER (PARTITION BY user_id) AS first_day FROM ud),
-         |d AS (SELECT day, count(*) AS n_active,
-         |    CAST(SUM(CASE WHEN day = first_day THEN 1 ELSE 0 END)
-         |      AS BIGINT) AS n_new
-         |  FROM f GROUP BY 1)
-         |SELECT strftime(day, '%Y-%m-%d') AS day, n_active, n_new,
-         |  CAST(SUM(n_new) OVER (ORDER BY day
-         |    ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
-         |    AS BIGINT) AS cum_users
-         |FROM d ORDER BY day""".stripMargin),
-    // qp4: compaction is a pure layout change — the read-back of the
-    // compacted tree equals the plain projection.
-    "qp4_compaction" ->
-      ("SELECT event_id, event_type, user_id, value FROM events " +
-        "ORDER BY event_id"),
-    // qs21: equi-join on user + interval filter, earliest click wins
-    // ((c_ts, click_id) tie rule); gap on floored epoch seconds.
-    "qs21_first_touch" ->
-      ("""WITH ev AS (SELECT event_id, user_id, event_type,
-         |    CAST(ts AS TIMESTAMP) AS ts FROM events),
-         |c AS (SELECT event_id AS click_id, user_id, ts AS c_ts
-         |  FROM ev WHERE event_type = 'click'),
-         |p AS (SELECT event_id AS purchase_id, user_id, ts AS p_ts
-         |  FROM ev WHERE event_type = 'purchase'),
-         |j AS (SELECT p.purchase_id, c.click_id, p.user_id, c.c_ts, p.p_ts,
-         |    row_number() OVER (PARTITION BY p.purchase_id
-         |      ORDER BY c.c_ts, c.click_id) AS rn
-         |  FROM p JOIN c ON p.user_id = c.user_id
-         |    AND c.c_ts >= p.p_ts - INTERVAL 30 MINUTE
-         |    AND c.c_ts <= p.p_ts)
-         |SELECT purchase_id, click_id, user_id,
-         |  strftime(c_ts, '%Y-%m-%d %H:%M:%S') AS click_at,
-         |  strftime(p_ts, '%Y-%m-%d %H:%M:%S') AS purchase_at,
-         |  CAST(CAST(floor(epoch(p_ts)) AS BIGINT)
-         |    - CAST(floor(epoch(c_ts)) AS BIGINT) AS INTEGER) AS gap_sec
-         |FROM j WHERE rn = 1 ORDER BY purchase_id""".stripMargin),
-    // qx23: name-aligned union with NULL fill — column identity, not
-    // position, pairs the two eras.
-    "qx23_union_by_name" ->
-      ("""SELECT o_orderkey, o_custkey, o_totalprice,
-         |  CAST(NULL AS VARCHAR) AS o_orderstatus,
-         |  CAST(NULL AS VARCHAR) AS o_orderpriority
-         |FROM orders WHERE o_orderdate < TIMESTAMP '1996-01-01'
-         |UNION ALL
-         |SELECT o_orderkey, CAST(NULL AS BIGINT) AS o_custkey,
-         |  o_totalprice, o_orderstatus, o_orderpriority
-         |FROM orders WHERE o_orderdate >= TIMESTAMP '1996-01-01'
-         |ORDER BY o_orderkey""".stripMargin),
-    // qd34: three verified stage oracles composed — qd1's keep-first
-    // window, qd28's micro-quantized band, qd2's token count.
-    "qd34_curation" ->
-      ("""WITH p AS (
-         |  SELECT source,
-         |    CAST(floor(quantile_cont(n_chars, 0.05) * 1000000.0 + 0.5)
-         |      AS BIGINT) / 1000000.0 AS p05,
-         |    CAST(floor(quantile_cont(n_chars, 0.95) * 1000000.0 + 0.5)
-         |      AS BIGINT) / 1000000.0 AS p95
-         |  FROM documents GROUP BY source),
-         |c AS (SELECT doc_id, row_number() OVER (
-         |    PARTITION BY text ORDER BY doc_id) AS rn FROM documents),
-         |t AS (SELECT doc_id,
-         |    CASE WHEN length(trim(text)) = 0 THEN 0 ELSE
-         |      CAST(len(regexp_split_to_array(trim(text), '\s+'))
-         |        AS INTEGER) END AS n_tokens
-         |  FROM documents)
-         |SELECT d.doc_id, c.rn = 1 AS canonical,
-         |  d.n_chars >= p.p05 AND d.n_chars <= p.p95 AS in_band,
-         |  t.n_tokens >= 30 AS enough_tokens,
-         |  (c.rn = 1 AND d.n_chars >= p.p05 AND d.n_chars <= p.p95
-         |    AND t.n_tokens >= 30) AS kept
-         |FROM documents d
-         |JOIN p ON d.source = p.source
-         |JOIN c ON d.doc_id = c.doc_id
-         |JOIN t ON d.doc_id = t.doc_id
-         |ORDER BY d.doc_id""".stripMargin),
-    // qe6: integer codes from identical double arithmetic; the MSE
-    // reduction is an integer micro-sum (qd21's device) so no
-    // accumulation order exists to disagree.
-    "qe6_pq_audit" ->
-      ("""WITH el AS (SELECT vec_id, i-1 AS dim,
-         |    CAST(embedding[i] AS DOUBLE) AS x
-         |  FROM embeddings, unnest(range(1, len(embedding)+1)) u(i)),
-         |st AS (SELECT dim, min(x) AS lo, max(x) AS hi FROM el GROUP BY 1),
-         |j AS (SELECT vec_id, x, lo, hi,
-         |    CASE WHEN hi = lo THEN 0 ELSE
-         |      CAST(least(floor((x - lo) / (hi - lo) * 256.0), 255.0)
-         |        AS INTEGER) END AS code
-         |  FROM el JOIN st USING (dim)),
-         |d AS (SELECT vec_id, code,
-         |    lo + (CAST(code AS DOUBLE) + 0.5) * (hi - lo) / 256.0 AS deq,
-         |    x FROM j),
-         |e AS (SELECT vec_id, code,
-         |    CAST(floor((x - deq) * (x - deq) * 1e12 + 0.5) AS BIGINT) AS em
-         |  FROM d)
-         |SELECT vec_id, CAST(SUM(code) AS BIGINT) AS code_sum,
-         |  CAST(SUM(em) AS DOUBLE) / 1e12 / CAST(count(*) AS DOUBLE) AS mse
-         |FROM e GROUP BY vec_id ORDER BY vec_id""".stripMargin),
-    // qe7: the centroid is exact integer sums (floor(v*1e6) longs)
-    // divided back to double ONCE — no float accumulation order to
-    // disagree on; the cosine then rides the usual sequential fold.
-    "qe7_centroid_outlier" ->
-      (s"""WITH el AS (SELECT label, vec_id, i AS d,
-         |    CAST(floor(CAST(embedding[i] AS DOUBLE) * 1000000) AS BIGINT) AS q
-         |  FROM embeddings, unnest(range(1, len(embedding)+1)) u(i)),
-         |s AS (SELECT label, d, CAST(SUM(q) AS BIGINT) AS qsum,
-         |    count(*) AS n
-         |  FROM el GROUP BY 1, 2),
-         |c AS (SELECT label, list(
-         |    CAST(qsum AS DOUBLE) / (CAST(n AS DOUBLE) * 1000000.0)
-         |    ORDER BY d) AS centroid
-         |  FROM s GROUP BY label),
-         |x AS (SELECT label, e.vec_id,
-         |    ${dotSql("e.embedding", "c.centroid")}
-         |      / (sqrt(${dotSql("e.embedding", "e.embedding")})
-         |         * sqrt(${dotSql("c.centroid", "c.centroid")})) AS cos
-         |  FROM embeddings e JOIN c USING (label))
-         |SELECT label, vec_id, cos,
-         |  CAST(rank() OVER (PARTITION BY label ORDER BY cos, vec_id)
-         |    AS INTEGER) AS outlier_rank
-         |FROM x ORDER BY label, outlier_rank""".stripMargin),
-    // qd33: adjacency-counted pairs via the char-list mirror (the
-    // Spark side's overlapping lookahead is not RE2-expressible);
-    // the winning pair is a literal alnum regex on both sides, and
-    // greedy non-overlapping replace semantics agree (Java Matcher
-    // and RE2 both scan left-to-right from each match end).
-    "qd33_bpe_merge" ->
-      ("""WITH ch AS (SELECT doc_id, string_split(text, '') AS cs
-         |  FROM documents),
-         |bg AS (SELECT unnest(list_filter(
-         |    list_transform(range(1, len(cs)), i -> cs[i] || cs[i+1]),
-         |    p -> regexp_matches(p, '^[a-z0-9]{2}$'))) AS pair
-         |  FROM ch WHERE len(cs) >= 2),
-         |cnt AS (SELECT pair, count(*) AS c FROM bg GROUP BY 1),
-         |top AS (SELECT pair, c AS pair_count FROM cnt
-         |  ORDER BY c DESC, pair LIMIT 1)
-         |SELECT d.doc_id, t.pair, t.pair_count,
-         |  CAST(len(regexp_extract_all(d.text, t.pair)) AS INTEGER)
-         |    AS n_merges,
-         |  regexp_replace(d.text, t.pair, '#', 'g') AS merged_text
-         |FROM documents d CROSS JOIN top t
-         |ORDER BY doc_id""".stripMargin),
-    // qx22: exact integer cents/hour moments, then the identical
-    // closed-form double expression — corr() itself could never
-    // hash-match (order-dependent double accumulation); the moments
-    // can.
-    "qx22_moment_corr" ->
-      ("""WITH m AS (
-         |  SELECT event_type, count(*) AS n,
-         |    SUM(xc) AS sx, SUM(y) AS sy,
-         |    SUM(xc * xc) AS sxx, SUM(xc * y) AS sxy, SUM(y * y) AS syy
-         |  FROM (SELECT event_type,
-         |      CAST(CAST(value AS DECIMAL(18,2)) * 100 AS BIGINT) AS xc,
-         |      CAST(hour(ts) AS BIGINT) AS y
-         |    FROM events)
-         |  GROUP BY 1)
-         |SELECT event_type, n,
-         |  CASE WHEN CAST(n AS DOUBLE) * CAST(sxx AS DOUBLE)
-         |        - CAST(sx AS DOUBLE) * CAST(sx AS DOUBLE) = 0
-         |      OR CAST(n AS DOUBLE) * CAST(syy AS DOUBLE)
-         |        - CAST(sy AS DOUBLE) * CAST(sy AS DOUBLE) = 0
-         |    THEN NULL ELSE
-         |  (CAST(n AS DOUBLE) * CAST(sxy AS DOUBLE)
-         |     - CAST(sx AS DOUBLE) * CAST(sy AS DOUBLE)) /
-         |  (sqrt(CAST(n AS DOUBLE) * CAST(sxx AS DOUBLE)
-         |     - CAST(sx AS DOUBLE) * CAST(sx AS DOUBLE)) *
-         |   sqrt(CAST(n AS DOUBLE) * CAST(syy AS DOUBLE)
-         |     - CAST(sy AS DOUBLE) * CAST(sy AS DOUBLE))) END AS corr,
-         |  CASE WHEN CAST(n AS DOUBLE) * CAST(sxx AS DOUBLE)
-         |        - CAST(sx AS DOUBLE) * CAST(sx AS DOUBLE) = 0
-         |    THEN NULL ELSE
-         |  (CAST(n AS DOUBLE) * CAST(sxy AS DOUBLE)
-         |     - CAST(sx AS DOUBLE) * CAST(sy AS DOUBLE)) /
-         |  (CAST(n AS DOUBLE) * CAST(sxx AS DOUBLE)
-         |     - CAST(sx AS DOUBLE) * CAST(sx AS DOUBLE))
-         |    END AS beta_hours_per_cent
-         |FROM m ORDER BY event_type""".stripMargin),
-    // qd32: qd19's integer window-cumsum bin assignment, then the
-    // sequences themselves — string_agg in id order with the literal
-    // <eos> glue (unique doc_id makes RANGE==ROWS in both engines'
-    // default frames, same as qd19).
-    "qd32_pack_sequences" ->
-      ("""WITH o AS (SELECT source, doc_id, text,
-         |    SUM(n_chars) OVER (PARTITION BY source ORDER BY doc_id)
-         |      - n_chars AS off
-         |  FROM documents),
-         |b AS (SELECT source, doc_id, text,
-         |    CAST(off // 2000 AS INTEGER) AS bin FROM o)
-         |SELECT source, bin, count(*) AS n_docs,
-         |  CAST(length(string_agg(text, '<eos>' ORDER BY doc_id))
-         |    AS INTEGER) AS seq_chars,
-         |  string_agg(text, '<eos>' ORDER BY doc_id) AS seq_text
-         |FROM b GROUP BY 1, 2 ORDER BY source, bin""".stripMargin),
-    "qd31_temperature_sample" ->
-      ("""WITH f AS (
-         |  SELECT doc_id, lang,
-         |    CAST(CASE WHEN length(text) = 0 THEN 0 ELSE
-         |      list_reduce(list_transform(string_split(text, ''),
-         |        c -> CAST(unicode(c) AS BIGINT)),
-         |        (acc, x) -> (acc * 31 + x) % 2147483647) END
-         |      AS BIGINT) AS fp
-         |  FROM documents),
-         |s AS (SELECT lang, count(*) AS n_docs,
-         |    CAST(floor(sqrt(count(*)) * 1e6) AS BIGINT) AS w
-         |  FROM documents GROUP BY 1),
-         |q AS (SELECT lang,
-         |    CAST((250 * w) // SUM(w) OVER () AS BIGINT) AS quota
-         |  FROM s),
-         |r AS (SELECT doc_id, lang, fp, row_number() OVER (
-         |    PARTITION BY lang ORDER BY fp, doc_id) AS rn FROM f)
-         |SELECT r.lang, r.doc_id, CAST(rn AS INTEGER) AS rnk,
-         |  CAST(quota AS INTEGER) AS quota
-         |FROM r JOIN q USING (lang) WHERE rn <= quota
-         |ORDER BY lang, doc_id""".stripMargin),
-    // qp5: the z-ordered layout is a pure clustering change — the
-    // box read's content equals the same filter on the source table
-    // (and the hash proves the clustered write lost nothing).
-    "qp5_zorder" ->
-      ("""SELECT l_orderkey, l_linenumber, l_partkey, l_suppkey,
-         |  l_quantity, l_extendedprice
-         |FROM lineitem
-         |WHERE l_partkey BETWEEN 100 AND 199
-         |  AND l_suppkey BETWEEN 1 AND 4
-         |ORDER BY l_orderkey, l_linenumber, l_partkey, l_suppkey,
-         |  l_quantity, l_extendedprice""".stripMargin),
-    // qx25: CDC diff of the 2000-vs-2001 latest-state snapshots —
-    // change predicate on status only (IS DISTINCT FROM mirrors
-    // Spark's <=> negation), totals carried old/new without
-    // triggering updates, no-change rows suppressed. Totals pass
-    // through unchanged (no arithmetic) so doubles are bit-exact
-    // without the decimal detour (qx14's argument).
-    "qx25_snapshot_diff" ->
-      ("""WITH b AS (
-         |  SELECT o_custkey, o_orderstatus AS status, o_totalprice AS total
-         |  FROM (SELECT *, row_number() OVER (PARTITION BY o_custkey
-         |      ORDER BY o_orderdate DESC, o_orderkey DESC) AS rn
-         |    FROM orders WHERE o_orderdate >= TIMESTAMP '2000-01-01'
-         |      AND o_orderdate < TIMESTAMP '2001-01-01') t
-         |  WHERE rn = 1),
-         |a AS (
-         |  SELECT o_custkey, o_orderstatus AS status, o_totalprice AS total
-         |  FROM (SELECT *, row_number() OVER (PARTITION BY o_custkey
-         |      ORDER BY o_orderdate DESC, o_orderkey DESC) AS rn
-         |    FROM orders WHERE o_orderdate >= TIMESTAMP '2001-01-01') t
-         |  WHERE rn = 1)
-         |SELECT COALESCE(b.o_custkey, a.o_custkey) AS cust,
-         |  CASE WHEN b.o_custkey IS NULL THEN 'insert'
-         |       WHEN a.o_custkey IS NULL THEN 'delete'
-         |       ELSE 'update' END AS op,
-         |  b.status AS old_status, b.total AS old_total,
-         |  a.status AS new_status, a.total AS new_total
-         |FROM b FULL OUTER JOIN a ON b.o_custkey = a.o_custkey
-         |WHERE b.o_custkey IS NULL OR a.o_custkey IS NULL
-         |  OR b.status IS DISTINCT FROM a.status
-         |ORDER BY cust""".stripMargin),
-    // qp6: per-column profile — exact counts/NDV, min/max rendered
-    // AFTER the typed aggregate (money via DECIMAL(18,2), timestamps
-    // via the canonical format) so string casts can't reorder.
-    "qp6_profile" ->
-      (Seq(
-        ("o_orderkey", "CAST(%s AS VARCHAR)"),
-        ("o_custkey", "CAST(%s AS VARCHAR)"),
-        ("o_orderstatus", "%s"),
-        ("o_totalprice", "CAST(CAST(%s AS DECIMAL(18,2)) AS VARCHAR)"),
-        ("o_orderdate", "strftime(%s, '%%Y-%%m-%%d %%H:%%M:%%S')"),
-        ("o_orderpriority", "%s"))
-        .map { case (c, r) =>
-          s"SELECT '$c' AS col_name, count($c) AS n_nonnull, " +
-            s"count(DISTINCT $c) AS ndv, " +
-            s"${r.format(s"min($c)")} AS min_val, " +
-            s"${r.format(s"max($c)")} AS max_val FROM orders"
-        }
-        .mkString("", " UNION ALL ", " ORDER BY col_name")),
-    // qs23: each event belongs to exactly the two epoch-aligned
-    // 2-hour windows starting at trunc_hour(ts) and trunc_hour(ts)-1h
-    // — the cross join against (0,1) materializes that assignment.
-    "qs23_sliding_window" ->
-      ("""SELECT strftime(date_trunc('hour', ts) - k.k * INTERVAL 1 HOUR,
-         |    '%Y-%m-%d %H:00:00') AS wstart,
-         |  count(*) AS n,
-         |  CAST(SUM(CAST(value AS DECIMAL(18,2))) AS DOUBLE) AS total_value
-         |FROM events CROSS JOIN (VALUES (0), (1)) k(k)
-         |GROUP BY 1 ORDER BY wstart""".stripMargin),
-    // qx24: the csv and jdbc legs are written FROM the parquet table
-    // inside the query, so federation reduces to the parquet table
-    // tagged three times — the oracle needs no csv/jdbc reader.
-    "qx24_federation" ->
-      ("""WITH legs AS (
-         |  SELECT 'parquet' AS source, n_nationkey, n_name, n_regionkey
-         |    FROM nation
-         |  UNION ALL
-         |  SELECT 'csv', n_nationkey, n_name, n_regionkey FROM nation
-         |  UNION ALL
-         |  SELECT 'jdbc', n_nationkey, n_name, n_regionkey FROM nation)
-         |SELECT source, n_nationkey, n_name, n_regionkey FROM legs
-         |ORDER BY source, n_nationkey""".stripMargin),
-    // qd35: qd33's char-list adjacency mirror, CHAINED for three
-    // training rounds — each round's corpus CTE (t1/t2) feeds the
-    // next round's candidate count with the merge symbol admitted
-    // into the char class, exactly the Spark driver loop unrolled.
-    "qd35_bpe_train" -> bpeTrainSql,
-    "qd38_bpe_encode" -> bpeEncodeSql,
-  )
 
   /** qd35 unrolled 3-round BPE trainer (see qd33 for the per-round
     * parity argument: adjacency counts via the char-list mirror,
@@ -2787,7 +2587,6 @@ object SparkEntry {
     * corpus stats → per-query micro scores → full ranking `r`.
     */
   private lazy val bm25Ctes: String = {
-    import graft.operators.Search
     val queries = Search.Bm25Queries
     val terms = queries.flatMap(_._2).distinct
     val ti = terms.zipWithIndex.toMap

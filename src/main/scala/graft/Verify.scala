@@ -5,11 +5,13 @@ import java.nio.file.{Files, Paths}
   *
   * Optional trailing args select a subset of queries (the dumped
   * oracle_sql.json is filtered to match, so tools/compare.py checks
-  * exactly that subset) — a debugging aid; the driver passes none.
+  * exactly that subset) — a debugging aid; the driver passes none. An
+  * undeclared name throws, naming it, before the session is built.
   */
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args.take(2)
+    SparkEntry.requireDeclared(args.drop(2).toSeq)
     val selected: Set[String] = args.drop(2).toSet
     val spark = Session.local(Session.cpusFromEnv)
     // q14 scratch: reap legacy trees; the query overwrites a fixed path

@@ -69,121 +69,85 @@ object Scratch {
     new java.io.File(System.getProperty("java.io.tmpdir"),
       "graft_q14_scratch").getAbsolutePath
 
+  /** `<tmpdir>/graft_<tag>_<sfDir>`, with every character of `sfDir`
+    * outside `[A-Za-z0-9._-]` replaced by `_`: one fixed root per query
+    * and source dir.
+    */
+  private def keyed(tag: String, sfDir: String): String =
+    new java.io.File(System.getProperty("java.io.tmpdir"),
+      s"graft_${tag}_" + sfDir.replaceAll("[^A-Za-z0-9._-]", "_"))
+      .getAbsolutePath
+
   /** qp1's partitioned-mart layout, one fixed path per sf dir (its
     * content is a function of the source data, so the path must key
     * on it — a Bench-at-sf0.1 run after a Verify-at-sf0.01 run must
     * not read the smaller mart).
     */
-  def qp1Dir(sfDir: String): String =
-    new java.io.File(System.getProperty("java.io.tmpdir"),
-      "graft_qp1_" + sfDir.replaceAll("[^A-Za-z0-9._-]", "_"))
-      .getAbsolutePath
+  def qp1Dir(sfDir: String): String = keyed("qp1", sfDir)
 
   /** qx13's bucketed-table root, keyed like [[qp1Dir]]. */
-  def qx13Dir(sfDir: String): String =
-    new java.io.File(System.getProperty("java.io.tmpdir"),
-      "graft_qx13_" + sfDir.replaceAll("[^A-Za-z0-9._-]", "_"))
-      .getAbsolutePath
+  def qx13Dir(sfDir: String): String = keyed("qx13", sfDir)
 
   /** qx20's schema-era roots (two parquet trees with DIFFERENT
     * schemas, read back via mergeSchema), keyed like [[qp1Dir]].
     */
-  def qx20Dir(sfDir: String): String =
-    new java.io.File(System.getProperty("java.io.tmpdir"),
-      "graft_qx20_" + sfDir.replaceAll("[^A-Za-z0-9._-]", "_"))
-      .getAbsolutePath
+  def qx20Dir(sfDir: String): String = keyed("qx20", sfDir)
 
   /** qs16's foreachBatch sink root (one subdir per micro-batch id),
     * keyed like [[qp1Dir]].
     */
-  def qs16Dir(sfDir: String): String =
-    new java.io.File(System.getProperty("java.io.tmpdir"),
-      "graft_qs16_" + sfDir.replaceAll("[^A-Za-z0-9._-]", "_"))
-      .getAbsolutePath
+  def qs16Dir(sfDir: String): String = keyed("qs16", sfDir)
 
   /** qp5's z-ordered lineitem layout, keyed like [[qp1Dir]]. */
-  def qp5Dir(sfDir: String): String =
-    new java.io.File(System.getProperty("java.io.tmpdir"),
-      "graft_qp5_" + sfDir.replaceAll("[^A-Za-z0-9._-]", "_"))
-      .getAbsolutePath
+  def qp5Dir(sfDir: String): String = keyed("qp5", sfDir)
 
   /** qx24's federation scratch (csv leg), keyed like [[qp1Dir]]. */
-  def qx24Dir(sfDir: String): String =
-    new java.io.File(System.getProperty("java.io.tmpdir"),
-      "graft_qx24_" + sfDir.replaceAll("[^A-Za-z0-9._-]", "_"))
-      .getAbsolutePath
+  def qx24Dir(sfDir: String): String = keyed("qx24", sfDir)
 
   /** qp4's compaction roots (fragmented + compacted trees), keyed
     * like [[qp1Dir]].
     */
-  def qp4Dir(sfDir: String): String =
-    new java.io.File(System.getProperty("java.io.tmpdir"),
-      "graft_qp4_" + sfDir.replaceAll("[^A-Za-z0-9._-]", "_"))
-      .getAbsolutePath
+  def qp4Dir(sfDir: String): String = keyed("qp4", sfDir)
 
   /** qp8's refreshable-mart root (v1 snapshot then dynamic partition
     * overwrite), keyed like [[qp1Dir]].
     */
-  def qp8Dir(sfDir: String): String =
-    new java.io.File(System.getProperty("java.io.tmpdir"),
-      "graft_qp8_" + sfDir.replaceAll("[^A-Za-z0-9._-]", "_"))
-      .getAbsolutePath
+  def qp8Dir(sfDir: String): String = keyed("qp8", sfDir)
 
   /** qd49's JSONL export/ingest roots (good + planted-corrupt
     * files), keyed like [[qp1Dir]].
     */
-  def qd49Dir(sfDir: String): String =
-    new java.io.File(System.getProperty("java.io.tmpdir"),
-      "graft_qd49_" + sfDir.replaceAll("[^A-Za-z0-9._-]", "_"))
-      .getAbsolutePath
+  def qd49Dir(sfDir: String): String = keyed("qd49", sfDir)
 
   /** qs38's streaming-JSONL landing root (good export + planted
     * corrupt file in ONE directory — the file-stream source lists a
     * single landing path), keyed like [[qp1Dir]].
     */
-  def qs38Dir(sfDir: String): String =
-    new java.io.File(System.getProperty("java.io.tmpdir"),
-      "graft_qs38_" + sfDir.replaceAll("[^A-Za-z0-9._-]", "_"))
-      .getAbsolutePath
+  def qs38Dir(sfDir: String): String = keyed("qs38", sfDir)
 
   /** qs39's admission-gate roots (JSONL batch landing + per-batch
     * verdict sink), keyed like [[qp1Dir]].
     */
-  def qs39Dir(sfDir: String): String =
-    new java.io.File(System.getProperty("java.io.tmpdir"),
-      "graft_qs39_" + sfDir.replaceAll("[^A-Za-z0-9._-]", "_"))
-      .getAbsolutePath
+  def qs39Dir(sfDir: String): String = keyed("qs39", sfDir)
 
   /** The sketch family's SHARED streaming landing root (round 13):
     * qs40–qs43 all drain the same corpus arrival, so they share one
     * landed JSONL tree (the per-gate qs40–qs43 roots this replaces
     * held four identical copies). Keyed like [[qp1Dir]].
     */
-  def sketchDir(sfDir: String): String =
-    new java.io.File(System.getProperty("java.io.tmpdir"),
-      "graft_sketch_" + sfDir.replaceAll("[^A-Za-z0-9._-]", "_"))
-      .getAbsolutePath
+  def sketchDir(sfDir: String): String = keyed("sketch", sfDir)
 
   /** qx28's ORC roundtrip root, keyed like [[qp1Dir]]. */
-  def qx28Dir(sfDir: String): String =
-    new java.io.File(System.getProperty("java.io.tmpdir"),
-      "graft_qx28_" + sfDir.replaceAll("[^A-Za-z0-9._-]", "_"))
-      .getAbsolutePath
+  def qx28Dir(sfDir: String): String = keyed("qx28", sfDir)
 
   /** qd50's sharded-export root, keyed like [[qp1Dir]]. */
-  def qd50Dir(sfDir: String): String =
-    new java.io.File(System.getProperty("java.io.tmpdir"),
-      "graft_qd50_" + sfDir.replaceAll("[^A-Za-z0-9._-]", "_"))
-      .getAbsolutePath
+  def qd50Dir(sfDir: String): String = keyed("qd50", sfDir)
 
   /** Streaming landing dir (symlink to the single-file events table),
     * keyed like [[qp1Dir]]; shared by the streaming gate queries
     * (qs7/qs8/qs9).
     */
-  def eventsLandingDir(sfDir: String): String =
-    new java.io.File(System.getProperty("java.io.tmpdir"),
-      "graft_stream_" + sfDir.replaceAll("[^A-Za-z0-9._-]", "_"))
-      .getAbsolutePath
+  def eventsLandingDir(sfDir: String): String = keyed("stream", sfDir)
 
   /** The file-stream source lists a DIRECTORY; testdata ships events
     * as one parquet file — expose it through a symlinked landing dir.
@@ -211,8 +175,12 @@ object Scratch {
     }
   }
 
-  /** Delete all graft scratch trees under java.io.tmpdir (legacy
-    * random-suffix dirs from earlier rounds plus the fixed paths).
+  /** Delete graft scratch trees under java.io.tmpdir: legacy
+    * random-suffix dirs from earlier rounds and the fixed roots whose
+    * prefixes are listed below. Two kinds of tree are left in place:
+    * the stamp-keyed landings of qs38, qs39 and the sketch family,
+    * which [[stampedOnce]] re-lands only when their source changes,
+    * and the roots that qp8, qd49 and qd50 overwrite on every run.
     */
   def reapTmp(): Unit = {
     val tmpRoot = java.nio.file.Paths.get(System.getProperty("java.io.tmpdir"))

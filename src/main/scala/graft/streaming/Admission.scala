@@ -272,7 +272,8 @@ object Admission {
     * `vec_top_sim` can differ from qs46's parity verdicts; the
     * agreement and top-1 floors are measured in Round16OpsSpec
     * (the qe3/qe25 honest-operating-point precedent — this query is
-    * the one `SparkEntry.rowsOnly` member, approximate by design).
+    * declared `RowsOnly` in the SparkEntry registry, approximate by
+    * design, and is the one `SparkEntry.rowsOnly` member).
     */
   def calibratedAdmissionGate(s: SparkSession, dir: String): DataFrame = {
     val (np, sl, _) =

@@ -13,12 +13,6 @@ class RelationalSpec extends SparkSpec {
     }
   }
 
-  test("every query has an oracle entry (or is declared rows-only)") {
-    val missing = SparkEntry.queries.keySet -- SparkEntry.oracleSql.keySet --
-      SparkEntry.rowsOnly
-    assert(missing.isEmpty, s"queries without oracle nor rows-only tag: $missing")
-  }
-
   test("flagship entry returns rows") {
     assert(SparkEntry.entry(spark).count() > 0)
   }

@@ -33,7 +33,9 @@ END = "<!-- BARS:END -->"
 
 
 def declared_inventory():
-    """Number of declared queries, read off SparkEntry's maps."""
+    """Number of declared queries: the `"name" ->` entries of
+    SparkEntry's registry (RegistrySpec pins this regex to the
+    registry). tools/record_gate.py imports it from here."""
     src = (ROOT / "src/main/scala/graft/SparkEntry.scala").read_text()
     return len(set(re.findall(r'"(q[a-z0-9_]+)"\s*->', src)))
 

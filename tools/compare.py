@@ -12,12 +12,15 @@ TABLES = ["region", "nation", "customer", "supplier", "part", "orders",
           "lineitem", "events", "documents", "embeddings"]
 
 def main(sf_dir, out_dir):
+    oracle = json.load(open(f"{out_dir}/oracle_sql.json"))
+    if not oracle:
+        print(f"FAIL: {out_dir}/oracle_sql.json holds no oracle entries")
+        return 1
     con = duckdb.connect()
     for t in TABLES:
         p = f"{sf_dir}/{t}.parquet"
         if os.path.exists(p):
             con.execute(f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{p}')")
-    oracle = json.load(open(f"{out_dir}/oracle_sql.json"))
     n_pass = n_fail = 0
     for name, sql in sorted(oracle.items()):
         spark_dir = f"{out_dir}/{name}"

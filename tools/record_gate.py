@@ -39,17 +39,14 @@ import re
 import sys
 from pathlib import Path
 
+from bars import declared_inventory
+
 ROOT = Path(__file__).resolve().parent.parent
 PRE_LOAD_MAX = 2.0
 LOAD_CEIL = 14.0
 TOL = 1.2
 CANARY_FACTOR = 1.8
 CANARIES = ["q14_partitioned_roundtrip"]
-
-
-def declared_inventory():
-    src = (ROOT / "src/main/scala/graft/SparkEntry.scala").read_text()
-    return len(set(re.findall(r'"(q[a-z0-9_]+)"\s*->', src)))
 
 
 def bars_bands():
