@@ -157,8 +157,7 @@ object JsonlIngest {
     * path. Also the spec harness's entry for building a landing tree.
     */
   def landJsonl(s: SparkSession, dir: String): String =
-    graft.io.Scratch.landedOnce(dir, graft.io.Scratch.qs38Dir(dir),
-        version = 1) {
+    graft.io.Scratch.landedOnce(dir, graft.io.Scratch.qs38Dir(dir)) {
       landing =>
         graft.io.Writers.sink(graft.core.Tables.documents(s, dir)
           .select(to_json(struct(col("doc_id"), col("text"), col("lang"),

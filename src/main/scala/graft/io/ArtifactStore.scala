@@ -10,10 +10,12 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * signature table — are what production materializes ONCE to storage
   * and then reads per query, exactly like any other table. This
   * helper is that shape on a local scratch disk: build → write
-  * parquet → read back, keyed by the (dir, source-table file stamp,
-  * build version) contract, so a regenerated corpus or a changed
-  * build invalidates the artifact instead of silently serving stale
-  * derived data.
+  * parquet → read back, keyed by the source tables' file stamps plus
+  * the program that builds it ([[programDigest]], Spark's version),
+  * so a regenerated corpus or a changed build invalidates the
+  * artifact instead of silently serving stale derived data. Nothing
+  * is bumped by hand; the first use after any code change rebuilds
+  * each artifact once.
   *
   * Publication protocol (round 10, hardening the r9 design): the
   * stamp IS the directory name — each build writes to a private
@@ -48,17 +50,62 @@ object ArtifactStore {
     */
   def tableStamp(dir: String, table: String): String = {
     val root = new java.io.File(s"$dir/$table.parquet")
-    def walk(f: java.io.File): Seq[java.io.File] =
-      if (f.isDirectory)
-        Option(f.listFiles()).getOrElse(Array.empty)
-          .sortBy(_.getName).toSeq.flatMap(walk)
-      else Seq(f)
     val base = root.toPath
     walk(root).map { f =>
       val rel =
         if (f == root) f.getName else base.relativize(f.toPath).toString
       s"$rel:${f.length}:${f.lastModified}"
     }.mkString(",")
+  }
+
+  /** `f` itself, or every file below it in sorted name order. */
+  private def walk(f: java.io.File): Seq[java.io.File] =
+    if (f.isDirectory)
+      Option(f.listFiles()).getOrElse(Array.empty)
+        .sortBy(_.getName).toSeq.flatMap(walk)
+    else Seq(f)
+
+  /** SHA-256 of the compiled program, computed once per JVM on first
+    * use: the code source of this class — its class directory (sbt,
+    * perfbench), or the jar that holds it. A change to any builder,
+    * UDF, Catalyst expression or driver-side trainer moves it, which
+    * a per-builder plan hash could not see. Throws when the class has
+    * no code source: an artifact is never keyed on nothing.
+    */
+  lazy val programDigest: String = {
+    val src = Option(getClass.getProtectionDomain.getCodeSource)
+      .flatMap(cs => Option(cs.getLocation)).getOrElse(
+        throw new IllegalStateException(
+          s"${getClass.getName} has no code source to digest"))
+    digestOf(new java.io.File(src.toURI))
+  }
+
+  /** Digest of a class directory (every file's relative path and
+    * bytes, walked like [[tableStamp]]) or of one jar's bytes.
+    */
+  private[graft] def digestOf(root: java.io.File): String = {
+    val md = java.security.MessageDigest.getInstance("SHA-256")
+    def add(bytes: Array[Byte]): Unit = {
+      md.update(java.nio.ByteBuffer.allocate(8).putLong(bytes.length).array)
+      md.update(bytes)
+    }
+    walk(root).foreach { f =>
+      if (f != root)
+        add(root.toPath.relativize(f.toPath).toString.getBytes("UTF-8"))
+      add(java.nio.file.Files.readAllBytes(f.toPath))
+    }
+    md.digest().map(b => f"${b & 0xff}%02x").mkString
+  }
+
+  /** The one key every stored artifact and landing is named by: a
+    * 64-bit hash of (program digest, Spark version, source stamp).
+    */
+  private[io] def stampKey(digest: String, stamp: String): String = {
+    val key = s"$digest;${org.apache.spark.SPARK_VERSION};$stamp"
+    java.lang.Long.toHexString(
+      (scala.util.hashing.MurmurHash3.stringHash(key).toLong << 32)
+        | (scala.util.hashing.MurmurHash3
+            .stringHash(key.reverse).toLong & 0xffffffffL))
   }
 
   private val locks =
@@ -83,24 +130,20 @@ object ArtifactStore {
   }
 
   /** Read the artifact `name` derived from `dir/table.parquet`,
-    * building it iff no tree exists for the current stamp.
+    * building it iff no tree exists for the current key.
     *
-    * The stamp is (source file stats + `version`): artifacts OUTLIVE
-    * the JVM, so unlike the in-JVM model caches a change to the BUILD
-    * LOGIC would silently serve a stale tree from a previous session
-    * — `version` is REQUIRED (round 10, VERDICT r9 #4: the implicit
-    * default rode every call site, leaving the bump-on-logic-change
-    * rule doc-only) and callers must bump it whenever the build's
-    * code or parameters change. The stamp is computed INSIDE the
-    * per-artifact lock (a pre-lock stamp could publish over a newer
-    * build after losing a regeneration race). The artifact root
-    * embeds a hash of the RAW dir string — sanitizing alone can
-    * collapse distinct dirs onto one root and thrash rebuilds.
+    * The key is (source file stats, [[programDigest]], Spark version):
+    * artifacts OUTLIVE the JVM, so a change to the BUILD LOGIC must
+    * move the key as surely as a regenerated source does. It is
+    * computed INSIDE the per-artifact lock (a pre-lock stamp could
+    * publish over a newer build after losing a regeneration race).
+    * The artifact root embeds a hash of the RAW dir string —
+    * sanitizing alone can collapse distinct dirs onto one root and
+    * thrash rebuilds.
     */
   def parquetArtifact(s: SparkSession, dir: String, table: String,
-                      name: String, version: Int)
-                     (build: => DataFrame): DataFrame =
-    parquetArtifact(s, dir, Seq(table), name, version)(build)
+                      name: String)(build: => DataFrame): DataFrame =
+    parquetArtifact(s, dir, Seq(table), name)(build)
 
   /** Multi-source variant (round 14): an artifact derived from a JOIN
     * of several source tables (qe25's corpus index reads embeddings
@@ -109,8 +152,16 @@ object ArtifactStore {
     * order.
     */
   def parquetArtifact(s: SparkSession, dir: String, tables: Seq[String],
-                      name: String, version: Int)
-                     (build: => DataFrame): DataFrame = {
+                      name: String)(build: => DataFrame): DataFrame =
+    parquetArtifactUnder(programDigest, s, dir, tables, name)(build)
+
+  /** [[parquetArtifact]] under an explicit program digest — the seam
+    * a spec uses to stand in for a code change.
+    */
+  private[graft] def parquetArtifactUnder(digest: String, s: SparkSession,
+                                          dir: String, tables: Seq[String],
+                                          name: String)
+                                         (build: => DataFrame): DataFrame = {
     val dirHash = java.lang.Long.toHexString(
       scala.util.hashing.MurmurHash3.stringHash(dir).toLong & 0xffffffffL)
     val root = new java.io.File(scratchRoot,
@@ -118,12 +169,8 @@ object ArtifactStore {
         dir.replaceAll("[^A-Za-z0-9._-]", "_").takeRight(32))
     val lock = locks.computeIfAbsent(root.getAbsolutePath, _ => new Object)
     lock.synchronized {
-      val stamp = s"v$version;" +
-        tables.map(t => tableStamp(dir, t)).mkString(";")
-      val stampHash = java.lang.Long.toHexString(
-        (scala.util.hashing.MurmurHash3.stringHash(stamp).toLong << 32)
-          | (scala.util.hashing.MurmurHash3
-              .stringHash(stamp.reverse).toLong & 0xffffffffL))
+      val stampHash = stampKey(digest,
+        tables.map(t => tableStamp(dir, t)).mkString(";"))
       val dataDir = new java.io.File(root, s"data-$stampHash")
       if (!dataDir.isDirectory) {
         java.nio.file.Files.createDirectories(root.toPath)

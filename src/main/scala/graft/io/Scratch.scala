@@ -21,34 +21,29 @@ object Scratch {
     * removed on rewrite (a regenerated corpus re-lands exactly once).
     * Writers must be deterministic functions of the source table.
     *
-    * `version` is REQUIRED and folds into the marker hash (ADVICE r12,
-    * mirroring [[ArtifactStore.parquetArtifact]]): the landing content
-    * also depends on CODE — the landed column set, the repartition
-    * file count, qs38's planted corrupt rows, qs39's !isCorpus filter
-    * — and markers live in /tmp and OUTLIVE the JVM, so each call
-    * site must bump its version whenever its writer logic changes or
-    * a stale landing from a previous session is served silently.
+    * The marker is named by [[ArtifactStore.stampKey]] over the
+    * source stamp, the program digest and Spark's version: the
+    * landing content also depends on CODE — the landed column set,
+    * the repartition file count, qs38's planted corrupt rows, qs39's
+    * !isCorpus filter — and markers OUTLIVE the JVM, so any code
+    * change re-lands once.
     */
-  def landedOnce(dir: String, root: String, version: Int)
-                (write: String => Unit): String =
-    stampedOnce(dir, root, "landing", "documents", version)(write)
+  def landedOnce(dir: String, root: String)(write: String => Unit): String =
+    stampedOnce(dir, root, "landing", "documents")(write)
 
   /** The [[landedOnce]] contract generalized to any scratch subdir
     * derived from any single source table (round 14, ADVICE r13:
     * qx28's ORC tree keyed on bare path existence, so any session
     * that skipped reapTmp served a stale tree after a testdata
-    * regeneration). One marker per (source stamp, version) under
-    * `root`; rewrite drops stale markers so a regenerated source
-    * re-materializes exactly once.
+    * regeneration). One marker per key under `root`; rewrite drops
+    * stale markers so a regenerated source re-materializes exactly
+    * once.
     */
-  def stampedOnce(dir: String, root: String, subdir: String, table: String,
-                  version: Int)(write: String => Unit): String = {
+  def stampedOnce(dir: String, root: String, subdir: String, table: String)
+                 (write: String => Unit): String = {
     val target = new java.io.File(root, subdir).getAbsolutePath
-    val stamp = s"v$version;$subdir;" + ArtifactStore.tableStamp(dir, table)
-    val hash = java.lang.Long.toHexString(
-      (scala.util.hashing.MurmurHash3.stringHash(stamp).toLong << 32)
-        | (scala.util.hashing.MurmurHash3
-            .stringHash(stamp.reverse).toLong & 0xffffffffL))
+    val hash = ArtifactStore.stampKey(ArtifactStore.programDigest,
+      s"$subdir;" + ArtifactStore.tableStamp(dir, table))
     val marker = new java.io.File(root, s"landed-$subdir-$hash")
     if (!marker.exists || !new java.io.File(target).isDirectory) {
       write(target)

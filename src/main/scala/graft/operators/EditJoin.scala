@@ -78,10 +78,9 @@ object EditJoin {
     * paid 37 replace-scans plus 37 same-sized string allocations per
     * doc. Both sides of every `hist_l1` compare must come from the
     * SAME histogram function (the L1 bound is sound for any fixed
-    * classification, but only when applied consistently) — which is
-    * why [[IndexVersion]] bumps with this change: stored corpus
-    * signatures from the replace-era build would otherwise meet
-    * CharHist batch signatures.
+    * classification, but only when applied consistently); stored
+    * corpus signatures are keyed by the program digest, so they are
+    * rebuilt with the histogram function that probes them.
     */
   private def sigs(df: DataFrame, idCol: String, textCol: String): DataFrame = {
     df.select(col(idCol).as("_id"), col(textCol).as("_text"))
@@ -283,9 +282,7 @@ object EditJoin {
     * CodegenFallback HOF (whole Generate stage interpreted) that
     * allocated one W-char string per window before hashing it; the
     * custom expression hashes each window's byte range in place,
-    * BIT-EQUAL to `xxhash64(substring(...))` (spec-pinned), so the
-    * stored corpus artifacts from the previous builder remain valid
-    * and [[IndexVersion]] does not move.
+    * BIT-EQUAL to `xxhash64(substring(...))` (spec-pinned).
     */
   private def gridChunks(sig: DataFrame, maxDist: Int): DataFrame = {
     sig.filter(col("_len") >= minLong(maxDist))
@@ -408,19 +405,6 @@ object EditJoin {
                        textCol: String): DataFrame =
     sigs(corpus, idCol, textCol).select("_id", "_len", "_bkt", "_hist")
 
-  /** Version stamp shared by both stored artifacts: bump on ANY
-    * change to [[sigs]]/[[slidingWindows]] geometry (SegWidth,
-    * HistChars, BucketWidth, the gram hash) — artifacts outlive the
-    * JVM, so a stale tree from a previous session is otherwise served
-    * silently (the ArtifactStore rule). v2: the histogram moved from
-    * the lower()+replace mirror to [[graft.functions.CharHist]]'s
-    * byte-level fold (round 14) — the two classifications differ on
-    * non-ASCII uppercase variants, and a v1 corpus signature meeting
-    * a CharHist batch signature would break the L1 bound's
-    * same-function premise.
-    */
-  private val IndexVersion = 2
-
   /** Canonical corpus split for the stored-index gates (qd69/qs44):
     * src19 is today's arrival batch, everything else is the standing
     * corpus — the qd40/qd54/qs39 framing.
@@ -428,10 +412,10 @@ object EditJoin {
   private[graft] val CorpusFilterKey = "not_src19"
 
   /** The stored window index for `corpus`, built at most once per
-    * (dir, corpus stamp, corpusKey, [[IndexVersion]]) — the ONE place
-    * the artifact name/version pair lives (qd69 and qs44 both read
-    * it). `corpusKey` names the FILTER that shaped `corpus` (ADVICE
-    * r13: the filter is not visible in the table stamp, so two
+    * (dir, corpus stamp, corpusKey, program) — the ONE place the
+    * artifact name lives (qd69 and qs44 both read it). `corpusKey`
+    * names the FILTER that shaped `corpus` (ADVICE r13: the filter
+    * is not visible in the table stamp, so two
     * differently-filtered corpora over the same documents table would
     * otherwise silently share one index tree); callers must pass a
     * distinct key per distinct corpus predicate —
@@ -440,8 +424,7 @@ object EditJoin {
   def storedWindowIndex(s: SparkSession, dir: String, corpus: DataFrame,
                         corpusKey: String = CorpusFilterKey): DataFrame =
     graft.io.ArtifactStore.parquetArtifact(
-      s, dir, "documents", s"edit_windex_$corpusKey",
-      version = IndexVersion) {
+      s, dir, "documents", s"edit_windex_$corpusKey") {
       corpusWindowIndex(corpus, "doc_id", "text")
     }
 
@@ -451,8 +434,7 @@ object EditJoin {
   def storedSignatures(s: SparkSession, dir: String, corpus: DataFrame,
                        corpusKey: String = CorpusFilterKey): DataFrame =
     graft.io.ArtifactStore.parquetArtifact(
-      s, dir, "documents", s"edit_sigs_$corpusKey",
-      version = IndexVersion) {
+      s, dir, "documents", s"edit_sigs_$corpusKey") {
       corpusSignatures(corpus, "doc_id", "text")
     }
 
@@ -492,22 +474,6 @@ object EditJoin {
       csigs.unionByName(aSig.select("_id", "_len", "_bkt", "_hist")))
   }
 
-  /** Version stamp for the PUBLISHED artifacts (verdicts + grown
-    * index pairs) — separate from [[IndexVersion]] because their
-    * builders additionally bake in the ADMISSION decision: bump on
-    * any change to [[editAdmission]]'s candidate/verify path, to
-    * [[MaxDist]], to the admit rule (is_dup = false keeps a doc out
-    * of the next generation), or to the generation split
-    * ([[genBatch]]) — besides everything [[IndexVersion]] covers
-    * (published rows are [[sigs]]/[[slidingWindows]] derivations
-    * too, so a geometry bump must bump BOTH constants). v3: the
-    * publish chain moved to the stored-verdicts derivation (one
-    * admission per (dir, stamp), VERDICT r16 #2). v4: [[genBatch]]
-    * moved from raw doc_id parity (degenerate — every src19 id is
-    * odd) to fingerprint parity.
-    */
-  private val PublishVersion = 4
-
   /** Stored admission verdicts for a named batch split against the
     * gen-0 standing artifacts — the ONE place each generation's
     * admission chain (candidate joins + banded DP) executes per
@@ -520,8 +486,7 @@ object EditJoin {
   private def storedVerdicts(s: SparkSession, dir: String, batchKey: String)
                             (batchOf: DataFrame => DataFrame): DataFrame =
     graft.io.ArtifactStore.parquetArtifact(
-      s, dir, "documents", s"edit_verdicts_$batchKey",
-      version = PublishVersion) {
+      s, dir, "documents", s"edit_verdicts_$batchKey") {
       val docs = graft.core.Tables.table(s, dir, "documents")
       val corpus = docs.filter(col("source") =!= "src19")
       editAdmission(corpus, storedWindowIndex(s, dir, corpus),
@@ -552,7 +517,7 @@ object EditJoin {
                                 batchOf: DataFrame => DataFrame,
                                 verdicts: => DataFrame): DataFrame =
     graft.io.ArtifactStore.parquetArtifact(
-      s, dir, "documents", name, version = PublishVersion) {
+      s, dir, "documents", name) {
       val docs = graft.core.Tables.table(s, dir, "documents")
       val corpus = docs.filter(col("source") =!= "src19")
       val admitted = admittedDocs(batchOf(docs), verdicts)

@@ -410,7 +410,7 @@ object Extras {
     * reaches the OrcScan as PushedFilters and the projection prunes
     * ReadSchema to the three referenced columns (PlanSpec pins both).
     * The documents table routes to ORC once per (sf, corpus stamp,
-    * version) — the landedOnce marker contract (round 14, ADVICE r13:
+    * program) — the landedOnce marker contract (round 14, ADVICE r13:
     * a per-JVM set plus bare path existence served a stale tree to
     * any session that skipped reapTmp after a testdata regeneration)
     * — then the declared query
@@ -425,8 +425,7 @@ object Extras {
     */
   def orcRoundtrip(s: SparkSession, dir: String): DataFrame = {
     val orcPath = graft.io.Scratch.stampedOnce(dir,
-        graft.io.Scratch.qx28Dir(dir), "documents_orc", "documents",
-        version = 1) { target =>
+        graft.io.Scratch.qx28Dir(dir), "documents_orc", "documents") { target =>
       graft.io.Writers.sink(Tables.documents(s, dir)).mode("overwrite").orc(target)
     }
     s.read.orc(orcPath)

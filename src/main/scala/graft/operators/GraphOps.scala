@@ -111,8 +111,7 @@ object GraphOps {
     * artifact ≡ fresh-build parity.
     */
   def knnEdges(s: SparkSession, dir: String): DataFrame =
-    graft.io.ArtifactStore.parquetArtifact(s, dir, "embeddings",
-      "knn_edges", version = 1) {
+    graft.io.ArtifactStore.parquetArtifact(s, dir, "embeddings", "knn_edges") {
       val emb = graft.core.Tables.embeddings(s, dir)
       val model = TrainingOps.ivfModel(s, dir)
       Similarity.knnGraphBlocked(emb, model, k = 3, nProbe = model.k)

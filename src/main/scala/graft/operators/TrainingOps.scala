@@ -232,7 +232,8 @@ object TrainingOps {
     */
   def bigramModel(s: SparkSession, dir: String): Array[(String, Long)] = {
     if (bigramModels.size > 16) bigramModels.clear()
-    bigramModels.computeIfAbsent((dir, tableStamp(dir, "documents")), _ =>
+    bigramModels.computeIfAbsent(
+      (dir, graft.io.ArtifactStore.tableStamp(dir, "documents")), _ =>
       bigramModelOf(bigramCounts(Tables.documents(s, dir)))
         .collect().map(r => (r.getString(0), r.getLong(1))))
   }
@@ -595,8 +596,7 @@ object TrainingOps {
     * artifact ≡ fresh qd13 output.
     */
   def dupLabels(s: SparkSession, dir: String): DataFrame =
-    graft.io.ArtifactStore.parquetArtifact(s, dir, "documents",
-      "dup_labels", version = 1) {
+    graft.io.ArtifactStore.parquetArtifact(s, dir, "documents", "dup_labels") {
       dupClusters(s, dir)
     }
 
@@ -835,7 +835,7 @@ object TrainingOps {
     */
   def dupLabelsCorpus(s: SparkSession, dir: String): DataFrame =
     graft.io.ArtifactStore.parquetArtifact(s, dir,
-      "documents", "dup_labels_corpus", version = 2) {
+      "documents", "dup_labels_corpus") {
       val corpus = Tables.documents(s, dir).where(qd54IsCorpus)
       Dedup.dupClustersStar(corpus,
         Dedup.minhashNearDups(corpus, "doc_id", "text", threshold = 0.9),
@@ -849,7 +849,7 @@ object TrainingOps {
     */
   def corpusBands(s: SparkSession, dir: String): DataFrame =
     graft.io.ArtifactStore.parquetArtifact(s, dir,
-      "documents", "corpus_bands", version = 1) {
+      "documents", "corpus_bands") {
       Dedup.bandIndex(Tables.documents(s, dir).where(qd54IsCorpus),
         "doc_id", "text")
     }
@@ -866,7 +866,7 @@ object TrainingOps {
     */
   def hllRegistersStored(s: SparkSession, dir: String): DataFrame =
     graft.io.ArtifactStore.parquetArtifact(s, dir,
-      "documents", "hll_registers_token", version = 1) {
+      "documents", "hll_registers_token") {
       Sketch.tokenRegisters(Tables.documents(s, dir))
         .groupBy("source", "idx").agg(max(col("rho")).as("mx"))
     }
@@ -896,11 +896,10 @@ object TrainingOps {
   def publishedStandingIndex(s: SparkSession, dir: String):
       Dedup.StandingIndex = Dedup.StandingIndex(
     graft.io.ArtifactStore.parquetArtifact(s, dir,
-      "documents", "dup_labels_all", version = 1) {
+      "documents", "dup_labels_all") {
       refreshedDupLabels(s, dir)
     },
-    graft.io.ArtifactStore.parquetArtifact(s, dir,
-      "documents", "bands_all", version = 1) {
+    graft.io.ArtifactStore.parquetArtifact(s, dir, "documents", "bands_all") {
       corpusBands(s, dir).union(Dedup.bandIndex(
         Tables.documents(s, dir).where(!qd54IsCorpus), "doc_id", "text"))
     })
@@ -1183,21 +1182,6 @@ object TrainingOps {
   private val ivfModels =
     new java.util.concurrent.ConcurrentHashMap[(String, String), Ivf.IvfModel]()
 
-  /** Driver-side corpus stamp: file names + sizes + mtimes of the
-    * embeddings table. A pure filesystem stat — no Spark job inside
-    * qe4's timed region (an earlier count()-based key paid a scan job
-    * on every call) — and it also catches the same-count rewrite a
-    * count key is blind to.
-    */
-  private def corpusStamp(dir: String): String = tableStamp(dir, "embeddings")
-
-  /** File-stat stamp for any table under the sf dir (names + sizes +
-    * mtimes) — the cache-invalidation key for every amortized model;
-    * shared with the parquet-artifact cache.
-    */
-  private def tableStamp(dir: String, table: String): String =
-    graft.io.ArtifactStore.tableStamp(dir, table)
-
   /** Cached IVF model per (sf dir, corpus stamp) — production
     * amortizes training across searches rather than retraining per
     * query (VERDICT r1 #5). The stamp keying means a long-lived
@@ -1209,7 +1193,8 @@ object TrainingOps {
     // crude bound on a long session cycling many corpora: dropping
     // everything on overflow just re-amortizes training
     if (ivfModels.size > 16) ivfModels.clear()
-    ivfModels.computeIfAbsent((dir, corpusStamp(dir)), _ => {
+    ivfModels.computeIfAbsent(
+      (dir, graft.io.ArtifactStore.tableStamp(dir, "embeddings")), _ => {
       val emb = Tables.embeddings(s, dir)
       val k = math.max(4, math.min(256, math.sqrt(emb.count().toDouble).toInt))
       Ivf.train(emb, k = k, iters = 2)
@@ -1237,7 +1222,8 @@ object TrainingOps {
     */
   def pqModel(s: SparkSession, dir: String): Pq.PqModel = {
     if (pqModels.size > 16) pqModels.clear()
-    pqModels.computeIfAbsent((dir, corpusStamp(dir)), _ =>
+    pqModels.computeIfAbsent(
+      (dir, graft.io.ArtifactStore.tableStamp(dir, "embeddings")), _ =>
       Pq.train(Tables.embeddings(s, dir), m = 8, kCodes = 16, iters = 2))
   }
 
@@ -1669,7 +1655,7 @@ object TrainingOps {
                     rounds: Int): Seq[(String, String)] = {
     if (bpeMergeCache.size > 16) bpeMergeCache.clear()
     bpeMergeCache.computeIfAbsent(
-      (dir, tableStamp(dir, "documents"), rounds),
+      (dir, graft.io.ArtifactStore.tableStamp(dir, "documents"), rounds),
       _ => bpeLearnMerges(Tables.documents(s, dir), rounds))
   }
 
@@ -1812,7 +1798,8 @@ object TrainingOps {
     */
   def sqModel(s: SparkSession, dir: String): Sq.SqModel = {
     if (sqModels.size > 16) sqModels.clear()
-    sqModels.computeIfAbsent((dir, corpusStamp(dir)), _ =>
+    sqModels.computeIfAbsent(
+      (dir, graft.io.ArtifactStore.tableStamp(dir, "embeddings")), _ =>
       Sq.train(Tables.embeddings(s, dir)))
   }
 
@@ -1826,8 +1813,7 @@ object TrainingOps {
     * artifact ≡ fresh-encode parity.
     */
   def sqPacked(s: SparkSession, dir: String): DataFrame =
-    graft.io.ArtifactStore.parquetArtifact(s, dir, "embeddings",
-      "sq_packed", version = 1) {
+    graft.io.ArtifactStore.parquetArtifact(s, dir, "embeddings", "sq_packed") {
       Sq.encodePacked(Tables.embeddings(s, dir), sqModel(s, dir))
     }
 
@@ -1836,13 +1822,11 @@ object TrainingOps {
     * widened 16-word sketch made per-query signature rebuilds the
     * dominant cost of qe20/qe22, and production builds a binary index
     * once and scans the artifact. qe11 stays the measured builder;
-    * Round10OpsSpec pins artifact ≡ fresh-build parity. Version 2:
-    * the r10 sketch (sign + ordinal strides 1..15) replaced the
-    * 2-word r6 sketch.
+    * Round10OpsSpec pins artifact ≡ fresh-build parity.
     */
   def hammingSigs(s: SparkSession, dir: String): DataFrame =
     graft.io.ArtifactStore.parquetArtifact(s, dir, "embeddings",
-      "hamming_sigs", version = 2) {
+      "hamming_sigs") {
       Similarity.hammingSignatures(Tables.embeddings(s, dir))
     }
 
@@ -1853,7 +1837,7 @@ object TrainingOps {
     */
   def pqCodesInt(s: SparkSession, dir: String): DataFrame =
     graft.io.ArtifactStore.parquetArtifact(s, dir, "embeddings",
-      "pq_codes_int", version = 1) {
+      "pq_codes_int") {
       PqInt.codeFrame(Tables.embeddings(s, dir),
         PqInt.dimMapIdentity(s))
     }
@@ -1863,7 +1847,7 @@ object TrainingOps {
     */
   def pqCodesOpq(s: SparkSession, dir: String): DataFrame =
     graft.io.ArtifactStore.parquetArtifact(s, dir, "embeddings",
-      "pq_codes_opq", version = 1) {
+      "pq_codes_opq") {
       val emb = Tables.embeddings(s, dir)
       PqInt.codeFrame(emb, PqInt.dimMapVariance(emb))
     }
@@ -1873,7 +1857,7 @@ object TrainingOps {
     */
   def ivfCellsInt(s: SparkSession, dir: String): DataFrame =
     graft.io.ArtifactStore.parquetArtifact(s, dir, "embeddings",
-      "ivf_cells_int", version = 1) {
+      "ivf_cells_int") {
       PqInt.cellFrame(Tables.embeddings(s, dir))
     }
 

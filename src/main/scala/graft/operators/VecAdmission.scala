@@ -114,12 +114,6 @@ object VecAdmission {
     sqModels.computeIfAbsent(stampKey(dir), _ => Sq.train(corpusEmb(s, dir)))
   }
 
-  /** Bump when the index build logic changes (the ArtifactStore
-    * rule); the corpus-filter discriminator rides the artifact names
-    * (the round-14 EditJoin contract).
-    */
-  private val IndexVersion = 1
-
   /** The inverted-file derivation (vec_id, cluster, nrm) — ONE
     * definition shared by the stored build and the spec's
     * artifact ≡ fresh parity check.
@@ -136,8 +130,7 @@ object VecAdmission {
     */
   def storedCells(s: SparkSession, dir: String): DataFrame =
     graft.io.ArtifactStore.parquetArtifact(
-      s, dir, SourceTables, "vec_admit_cells_not_src19",
-      version = IndexVersion) {
+      s, dir, SourceTables, "vec_admit_cells_not_src19") {
       freshCells(s, dir)
     }
 
@@ -146,8 +139,7 @@ object VecAdmission {
     */
   def storedCodes(s: SparkSession, dir: String): DataFrame =
     graft.io.ArtifactStore.parquetArtifact(
-      s, dir, SourceTables, "vec_admit_codes_not_src19",
-      version = IndexVersion) {
+      s, dir, SourceTables, "vec_admit_codes_not_src19") {
       Sq.encodePacked(corpusEmb(s, dir), corpusSqModel(s, dir))
     }
 
@@ -447,20 +439,6 @@ object VecAdmission {
       codes.unionByName(Sq.encodePacked(admitted, sq)))
   }
 
-  /** Version stamp for the PUBLISHED artifacts (survivors + grown
-    * cell/code tables) — separate from [[IndexVersion]] because
-    * their builders additionally bake in the ADMISSION decision:
-    * bump on any change to the [[admit]] pipeline, to
-    * [[admittedArrivals]]'s rule, or to
-    * [[graft.streaming.Admission.VecNeighborThreshold]] — besides
-    * everything [[IndexVersion]] covers (the published rows are
-    * [[Ivf.assignCells]]/[[Sq.encodePacked]] derivations under the
-    * same models, so a model/build bump must bump BOTH constants).
-    * v2: the publish chain moved to the stored-survivors derivation
-    * (one exact admission per (dir, stamps), VERDICT r16 #2).
-    */
-  private val PublishVersion = 2
-
   /** Stored survivor ids for the src19 arrival batch — the ONE place
     * the exact (full-probe, full-shortlist) admission executes per
     * (dir, stamps): both published artifacts derive their admitted
@@ -470,8 +448,7 @@ object VecAdmission {
     */
   def storedSurvivors(s: SparkSession, dir: String): DataFrame =
     graft.io.ArtifactStore.parquetArtifact(
-      s, dir, SourceTables, "vec_admit_survivors",
-      version = PublishVersion) {
+      s, dir, SourceTables, "vec_admit_survivors") {
       admittedArrivals(s, dir,
         graft.streaming.Admission.VecNeighborThreshold)
         .select("vec_id")
@@ -490,8 +467,7 @@ object VecAdmission {
     */
   def publishedCells(s: SparkSession, dir: String): DataFrame =
     graft.io.ArtifactStore.parquetArtifact(
-      s, dir, SourceTables, "vec_admit_cells_all",
-      version = PublishVersion) {
+      s, dir, SourceTables, "vec_admit_cells_all") {
       publishAdmitted(storedCells(s, dir), storedCodes(s, dir),
         survivorEmb(s, dir),
         corpusModel(s, dir), corpusSqModel(s, dir))._1
@@ -502,8 +478,7 @@ object VecAdmission {
     */
   def publishedCodes(s: SparkSession, dir: String): DataFrame =
     graft.io.ArtifactStore.parquetArtifact(
-      s, dir, SourceTables, "vec_admit_codes_all",
-      version = PublishVersion) {
+      s, dir, SourceTables, "vec_admit_codes_all") {
       publishAdmitted(storedCells(s, dir), storedCodes(s, dir),
         survivorEmb(s, dir),
         corpusModel(s, dir), corpusSqModel(s, dir))._2

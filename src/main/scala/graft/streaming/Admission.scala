@@ -52,8 +52,7 @@ object Admission {
     * the gate's correctness argument is about.
     */
   def landBatchJsonl(s: SparkSession, dir: String): String =
-    graft.io.Scratch.landedOnce(dir, graft.io.Scratch.qs39Dir(dir),
-        version = 1) {
+    graft.io.Scratch.landedOnce(dir, graft.io.Scratch.qs39Dir(dir)) {
       landing =>
         graft.io.Writers.sink(Tables.documents(s, dir).where(!isCorpus)
           .repartition(4)
@@ -378,8 +377,7 @@ object Admission {
     */
   private def landGenBatchesJsonl(s: SparkSession, dir: String): String =
     graft.io.Scratch.stampedOnce(dir, graft.io.Scratch.qs39Dir(dir),
-        // v2: genBatch moved to fingerprint parity
-        "seq_landing", "documents", version = 2) { landing =>
+        "seq_landing", "documents") { landing =>
       val docs = Tables.documents(s, dir)
       val t0 = System.currentTimeMillis - 600000L
       Seq(1, 2).foreach { gen =>

@@ -42,7 +42,7 @@ object SketchStream {
   def landJsonl(s: SparkSession, dir: String,
                 root: String => String = graft.io.Scratch.sketchDir)
       : String =
-    graft.io.Scratch.landedOnce(dir, root(dir), version = 1) { landing =>
+    graft.io.Scratch.landedOnce(dir, root(dir)) { landing =>
       graft.io.Writers.sink(Tables.documents(s, dir)
         .repartition(4)
         .select(to_json(struct(col("doc_id"), col("text"), col("lang"),

@@ -20,11 +20,15 @@ class ArtifactLifecycleSpec extends SparkSpec {
     import org.apache.spark.sql.SaveMode
     val dir = tempDir("reapsrc")
     val name = "reap_probe_" + System.nanoTime()
-    spark.range(5).toDF("x").write.mode(SaveMode.Overwrite)
-      .parquet(s"$dir/documents.parquet")
-    def build(v: Int) = graft.io.ArtifactStore.parquetArtifact(
-      spark, dir, "documents", name, version = v) {
-      spark.range(v).toDF("v")
+    // each build first rewrites the source table, superseding the
+    // previous build's tree
+    def build(v: Int) = {
+      spark.range(v).toDF("x").write.mode(SaveMode.Overwrite)
+        .parquet(s"$dir/documents.parquet")
+      graft.io.ArtifactStore.parquetArtifact(
+        spark, dir, "documents", name) {
+        spark.range(v).toDF("v")
+      }
     }
     build(1)
     val root = graft.io.ArtifactStore.scratchRoot.listFiles()
@@ -69,10 +73,10 @@ class ArtifactLifecycleSpec extends SparkSpec {
   test("corpus_bands artifact ≡ a fresh bandIndex build (geometry drift)") {
     // ADVICE r11: qs39's admission gate joins arriving batches against
     // the STORED corpus_bands artifact; a change to minhashSignatures
-    // / band geometry without a version bump would serve a stale index
-    // silently and the gate would admit everything — caught only at
-    // the DuckDB gate. This pins artifact ≡ fresh build in sbt test,
-    // so geometry/version drift fails fast.
+    // / band geometry that did not move the artifact key would serve a
+    // stale index silently and the gate would admit everything —
+    // caught only at the DuckDB gate. This pins artifact ≡ fresh
+    // build in sbt test, so geometry drift fails fast.
     import graft.operators.{Dedup, TrainingOps}
     val dir = "/root/testdata/sf0.001"
     val stored = TrainingOps.corpusBands(spark, dir)
@@ -83,7 +87,7 @@ class ArtifactLifecycleSpec extends SparkSpec {
       .orderBy("doc_id", "band_idx", "band_hash").collect().toSeq
     assert(stored == fresh,
       "stored corpus_bands diverges from the current band geometry — " +
-        "bump the artifact version in TrainingOps.corpusBands")
+        "the artifact key did not move with the build")
   }
 
   test("hll_registers artifact ≡ fresh register build (qd65 parity)") {
@@ -97,7 +101,7 @@ class ArtifactLifecycleSpec extends SparkSpec {
       .orderBy("source", "idx").collect().toSeq
     assert(stored == fresh,
       "stored registers diverge from the current register derivation — " +
-        "bump the artifact version in TrainingOps.hllRegistersStored")
+        "the artifact key did not move with the build")
   }
 
   test("qd57: publish ∘ publish ≡ rebuild on the union, through parquet") {

@@ -83,7 +83,7 @@ class Round10OpsSpec extends SparkSpec {
       .write.partitionBy("p").parquet(tbl)
     var builds = 0
     def art() = graft.io.ArtifactStore
-      .parquetArtifact(spark, root, "t", "part_art", version = 1) {
+      .parquetArtifact(spark, root, "t", "part_art") {
         builds += 1
         spark.read.parquet(tbl).select(sum("x").as("s"))
       }

@@ -79,25 +79,48 @@ class Round9OpsSpec extends SparkSpec {
     assert(art == fresh)
   }
 
-  test("ArtifactStore: a build-version bump invalidates an unchanged source") {
-    val root = tempDir("graft_artifact_ver")
+  test("ArtifactStore: a program-digest change invalidates an unchanged source") {
+    val root = tempDir("graft_artifact_digest")
     val tbl = s"$root/t.parquet"
     Seq(5L).toDF("x").coalesce(1).write.parquet(tbl)
+    val name = "digest_art_" + System.nanoTime()
     var builds = 0
-    def art(v: Int, mult: Int) =
-      ArtifactStore.parquetArtifact(spark, root, "t", "ver_art", version = v) {
-        builds += 1
-        spark.read.parquet(tbl).withColumn("y", col("x") * mult)
-      }
-    assert(art(1, 2).collect().map(_.getLong(1)).toSeq == Seq(10L))
-    assert(builds == 1)
-    // same source, same version: cached — the changed build lambda is
-    // NOT detected (exactly why callers must bump the version)
-    assert(art(1, 3).collect().map(_.getLong(1)).toSeq == Seq(10L))
-    assert(builds == 1)
-    // version bump: rebuilt with the new logic
-    assert(art(2, 3).collect().map(_.getLong(1)).toSeq == Seq(15L))
+    def art(digest: String, mult: Int) = ArtifactStore.parquetArtifactUnder(
+        digest, spark, root, Seq("t"), name) {
+      builds += 1
+      spark.read.parquet(tbl).withColumn("y", col("x") * mult)
+    }
+    assert(art("a", 2).collect().map(_.getLong(1)).toSeq == Seq(10L))
+    assert(art("a", 3).collect().map(_.getLong(1)).toSeq == Seq(10L))
+    assert(builds == 1, "same source, same program: served cached")
+    // same source, another program: rebuilt with the new logic
+    assert(art("b", 3).collect().map(_.getLong(1)).toSeq == Seq(15L))
     assert(builds == 2)
+    val store = ArtifactStore.scratchRoot.listFiles()
+      .filter(_.getName.startsWith(name)).head
+    assert(store.listFiles().count(_.getName.startsWith("data-")) == 2,
+      "two program digests must map to two data-* directories")
+    org.apache.commons.io.FileUtils.deleteDirectory(store)
+  }
+
+  test("ArtifactStore: the program digest moves with any class-file byte") {
+    val classes = new java.io.File(tempDir("graft_digest_tree"))
+    def put(rel: String, bytes: Array[Byte]): Unit = {
+      val f = new java.io.File(classes, rel)
+      f.getParentFile.mkdirs()
+      java.nio.file.Files.write(f.toPath, bytes)
+    }
+    put("graft/A.class", Array[Byte](1, 2, 3))
+    put("graft/io/B.class", Array[Byte](4, 5, 6))
+    val d0 = ArtifactStore.digestOf(classes)
+    assert(ArtifactStore.digestOf(classes) == d0, "stable across calls")
+    put("graft/io/B.class", Array[Byte](4, 5, 7))
+    val d1 = ArtifactStore.digestOf(classes)
+    assert(d1 != d0, "one changed byte must move the digest")
+    put("graft/C.class", Array.emptyByteArray)
+    assert(ArtifactStore.digestOf(classes) != d1,
+      "an added file must move the digest")
+    assert(ArtifactStore.programDigest.matches("[0-9a-f]{64}"))
   }
 
   test("ArtifactStore: concurrent readers race to ONE build") {
@@ -109,7 +132,7 @@ class Round9OpsSpec extends SparkSpec {
     import scala.concurrent.ExecutionContext.Implicits.global
     import scala.concurrent.duration._
     val reads = (1 to 4).map(_ => Future {
-      ArtifactStore.parquetArtifact(spark, root, "t", "conc_art", version = 1) {
+      ArtifactStore.parquetArtifact(spark, root, "t", "conc_art") {
         builds.incrementAndGet()
         spark.read.parquet(tbl)
       }.count()
@@ -125,7 +148,7 @@ class Round9OpsSpec extends SparkSpec {
     val tbl = s"$root/t.parquet"
     Seq(1L, 2L, 3L).toDF("x").coalesce(1).write.parquet(tbl)
     var builds = 0
-    def art() = ArtifactStore.parquetArtifact(spark, root, "t", "spec_art", version = 1) {
+    def art() = ArtifactStore.parquetArtifact(spark, root, "t", "spec_art") {
       builds += 1
       spark.read.parquet(tbl).withColumn("y", col("x") * 2)
     }

@@ -5,10 +5,7 @@ import org.apache.spark.sql.functions._
 
 /** [[graft.functions.SlidingXxh64]] must be BIT-EQUAL to the
   * `xxhash64(substring(text, k*stride + 1, width))` composition it
-  * replaced on the qd68/qd69/qs44 segment-index paths — that equality
-  * is what lets the stored corpus window artifacts built by the
-  * previous (transform-HOF) builder keep serving the new batch-side
-  * probe without an IndexVersion bump.
+  * replaced on the qd68/qd69/qs44 segment-index paths.
   */
 class SlidingXxh64Spec extends SparkSpec {
 

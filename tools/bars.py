@@ -5,7 +5,7 @@ The per-query perf bars used to live only in round-by-round prose
 (~1,200 lines); answering "is query X within its bar?" required
 archaeology (VERDICT r12 #2). This script makes it a one-line lookup:
 
-  python3 tools/bars.py [--check]
+  python3 tools/bars.py [--check] [--force]
 
 Inputs: every bench detail JSON checked into bench_details/ (named
 r<N>_sf<SF>.json — Bench writes the detail file to /tmp/bench.json;
@@ -20,6 +20,7 @@ The table is rewritten in place between the BARS:BEGIN/END markers in
 BASELINE.md; the prose history stays as history. --check exits 1 if
 the table on disk is stale (CI-style guard, not used by the driver).
 """
+import argparse
 import json
 import re
 import sys
@@ -51,7 +52,7 @@ def load_rounds():
     return rounds
 
 
-def guard_latest(rounds):
+def guard_latest(rounds, force):
     """Refuse to regenerate from a LATEST detail file that covers less
     than the declared inventory — the guard that would have caught
     round 14's record loss (a 2-query targeted re-run overwrote the
@@ -60,7 +61,7 @@ def guard_latest(rounds):
     Earlier rounds naturally cover less (the inventory grows);
     --force overrides for genuinely partial records.
     """
-    if not rounds or "--force" in sys.argv:
+    if not rounds or force:
         return
     latest = max(r for r, _, _ in rounds)
     inv = declared_inventory()
@@ -104,8 +105,15 @@ def build_table(rounds):
 
 
 def main():
+    ap = argparse.ArgumentParser(
+        description="Regenerate BASELINE.md's per-query bar table.")
+    ap.add_argument("--check", action="store_true",
+                    help="exit 1 if the table on disk is stale; write nothing")
+    ap.add_argument("--force", action="store_true",
+                    help="regenerate from a partial latest-round record")
+    args = ap.parse_args()
     rounds = load_rounds()
-    guard_latest(rounds)
+    guard_latest(rounds, args.force)
     table = build_table(rounds)
     text = BASELINE.read_text()
     if BEGIN not in text:
@@ -116,7 +124,7 @@ def main():
         text,
         flags=re.S,
     )
-    if "--check" in sys.argv:
+    if args.check:
         if new != text:
             sys.exit("BASELINE.md bar table is stale — run tools/bars.py")
         print("bar table up to date")

@@ -5,7 +5,7 @@ sort columns by name, and hash-compare values row by row.
 
 Usage: python3 tools/compare.py <sfDir> <verifyOutDir>
 """
-import sys, json, glob, os
+import argparse, sys, json, glob, os
 import duckdb
 
 TABLES = ["region", "nation", "customer", "supplier", "part", "orders",
@@ -84,4 +84,9 @@ def main(sf_dir, out_dir):
     return 1 if n_fail else 0
 
 if __name__ == "__main__":
-    sys.exit(main(sys.argv[1], sys.argv[2]))
+    ap = argparse.ArgumentParser(
+        description="Hash-compare Verify output against the DuckDB oracle.")
+    ap.add_argument("sf_dir", help="source tables (e.g. /root/testdata/sf0.01)")
+    ap.add_argument("out_dir", help="Verify output dir holding oracle_sql.json")
+    args = ap.parse_args()
+    sys.exit(main(args.sf_dir, args.out_dir))

@@ -34,6 +34,7 @@ drives load1 to ~6-11 under local[32] with streaming drains, so
 LOAD_CEIL=14 separates self-load from co-tenant load; PRE_LOAD_MAX=2
 matches the r16 idle-launch evidence (0.26-0.62).
 """
+import argparse
 import json
 import re
 import sys
@@ -135,4 +136,8 @@ def main(path):
 
 
 if __name__ == "__main__":
-    sys.exit(main(sys.argv[1] if len(sys.argv) > 1 else "/tmp/bench.json"))
+    ap = argparse.ArgumentParser(
+        description="Check a bench detail JSON before it becomes the record.")
+    ap.add_argument("path", nargs="?", default="/tmp/bench.json",
+                    help="bench detail JSON (default: /tmp/bench.json)")
+    sys.exit(main(ap.parse_args().path))
