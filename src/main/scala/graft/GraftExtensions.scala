@@ -12,11 +12,11 @@ import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
   *   spark.sql.extensions=graft.GraftExtensions
   *
   * and every session on it has the graft functions in its catalog
-  * from construction — SQL and DataFrame alike — with no per-session
-  * `register()` calls (the temp-function form the `of(...)` wrappers
-  * fall back to is per-session and must be re-run in every app; both
-  * paths build the identical Expression, GraftExtensionsSpec asserts
-  * it).
+  * from construction — SQL and DataFrame alike. [[graft.Session]] sets
+  * it on every session the repo builds, and there is no other way in:
+  * Spark 4's Column API has no public Expression constructor, so each
+  * `of(...)` wrapper calls its function by the name injected here
+  * (GraftExtensionsSpec resolves every name in a fresh session).
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
 

@@ -6,7 +6,9 @@ import org.apache.spark.sql.SparkSession
 /** The one place a graft session is configured. Every main and the
   * test suites build their session here, so they all run with the
   * same settings: operators rely on the functions [[GraftExtensions]]
-  * injects and register none themselves.
+  * injects and register none themselves. A scoped conf override goes
+  * through [[withConfs]]; no other code in `src/main` sets or unsets
+  * a session conf (SessionSpec scans for it).
   */
 object Session {
 
@@ -49,6 +51,26 @@ object Session {
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     spark
+  }
+
+  /** Run `body` with `confs` set on the session in order, then restore
+    * each key to its previous value, or unset it if it had none, also
+    * when `body` throws. A lazily returned frame plans after the
+    * restore, so a body whose plan depends on the confs materializes
+    * its result inside the scope. If a set fails part way, the keys
+    * already set are restored before the failure propagates.
+    */
+  def withConfs[A](spark: SparkSession, confs: Seq[(String, String)])
+      (body: => A): A = {
+    val prev = confs.map { case (k, _) => k -> spark.conf.getOption(k) }
+    var applied = 0
+    try {
+      confs.foreach { case (k, v) => spark.conf.set(k, v); applied += 1 }
+      body
+    } finally prev.take(applied).foreach {
+      case (k, Some(v)) => spark.conf.set(k, v)
+      case (k, None)    => spark.conf.unset(k)
+    }
   }
 
   /** Drop every persistent RDD and the SQL cache: no query reuses

@@ -90,38 +90,11 @@ object Tables {
     *    events-family plans. [[normalizeTs]]'s NTZ branch remains as
     *    the fallback for frames read outside this scope.
     */
-  def withEventReadConfs[A](s: SparkSession)(body: => A): A = {
-    val settings = Seq(
+  def withEventReadConfs[A](s: SparkSession)(body: => A): A =
+    graft.Session.withConfs(s, Seq(
       "spark.sql.legacy.parquet.nanosAsLong" -> "true",
-      "spark.sql.parquet.inferTimestampNTZ.enabled" -> "false")
-    val prev = settings.map { case (k, _) => k -> s.conf.getOption(k) }
-    settings.foreach { case (k, v) => s.conf.set(k, v) }
-    try body
-    finally prev.foreach {
-      case (k, Some(v)) => s.conf.set(k, v)
-      case (k, None)    => s.conf.unset(k)
-    }
-  }
+      "spark.sql.parquet.inferTimestampNTZ.enabled" -> "false"))(body)
 
-  /** Former name of [[withEventReadConfs]]. Deprecated because the
-    * replacement ALSO disables inferTimestampNTZ — a caller wrapping
-    * a non-events NTZ parquet read would see session-zone TIMESTAMP
-    * instead of TIMESTAMP_NTZ, a semantic change hiding behind the
-    * old name. This alias keeps the original contract (nanosAsLong
-    * only); opt into the full event-read confs explicitly.
-    */
-  @deprecated("use withEventReadConfs (sets nanosAsLong AND disables " +
-    "inferTimestampNTZ); this alias sets only nanosAsLong", "round 8")
-  def withNanosConf[A](s: SparkSession)(body: => A): A = {
-    val k = "spark.sql.legacy.parquet.nanosAsLong"
-    val prev = s.conf.getOption(k)
-    s.conf.set(k, "true")
-    try body
-    finally prev match {
-      case Some(v) => s.conf.set(k, v)
-      case None    => s.conf.unset(k)
-    }
-  }
   def documents(s: SparkSession, d: String): DataFrame = table(s, d, "documents")
   def embeddings(s: SparkSession, d: String): DataFrame = table(s, d, "embeddings")
 }

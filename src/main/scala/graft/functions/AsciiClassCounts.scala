@@ -75,15 +75,7 @@ object AsciiClassCounts {
     StructField("digit", IntegerType, nullable = false),
     StructField("space", IntegerType, nullable = false)))
 
-  /** Register in the session's function registry (same bridge as
-    * [[DocFingerprint]]: Spark 4's Column API has no public
-    * Expression constructor).
-    */
-  def register(spark: org.apache.spark.sql.SparkSession): Unit =
-    Registration.registerOnce(spark, "ascii_class_counts",
-      exprs => AsciiClassCounts(exprs.head))
-
-  /** Column wrapper, resolved by [[graft.GraftExtensions]] (or [[register]]). */
+  /** Column wrapper, resolved by [[graft.GraftExtensions]]. */
   def of(c: Column): Column =
     org.apache.spark.sql.functions.call_function("ascii_class_counts", c)
 

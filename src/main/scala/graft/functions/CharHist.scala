@@ -89,14 +89,7 @@ case class CharHist(child: Expression) extends UnaryExpression {
 }
 
 object CharHist {
-  /** Per-session registration (quiet-idempotent — the [[Registration]]
-    * contract); clusters get it from `graft.GraftExtensions`.
-    */
-  def register(spark: org.apache.spark.sql.SparkSession): Unit =
-    Registration.registerOnce(spark, "char_hist",
-      exprs => CharHist(exprs.head))
-
-  /** Column wrapper, resolved by [[graft.GraftExtensions]] (or [[register]]). */
+  /** Column wrapper, resolved by [[graft.GraftExtensions]]. */
   def of(c: Column): Column =
     org.apache.spark.sql.functions.call_function("char_hist", c)
 

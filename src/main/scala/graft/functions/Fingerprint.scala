@@ -91,16 +91,7 @@ object DocFingerprint {
     */
   val Modulus: Long = 2147483647L
 
-  /** Register in the session's function registry; afterwards usable
-    * from both SQL and the Column API via [[of]]. (Spark 4's Column
-    * no longer exposes a public Expression constructor, so the
-    * registry is the supported bridge.)
-    */
-  def register(spark: org.apache.spark.sql.SparkSession): Unit =
-    Registration.registerOnce(spark, "doc_fingerprint",
-      exprs => DocFingerprint(exprs.head))
-
-  /** Column wrapper, resolved by [[graft.GraftExtensions]] (or [[register]]). */
+  /** Column wrapper, resolved by [[graft.GraftExtensions]]. */
   def of(c: Column): Column =
     org.apache.spark.sql.functions.call_function("doc_fingerprint", c)
 

@@ -102,15 +102,7 @@ case class HistL1(left: Expression, right: Expression)
 }
 
 object HistL1 {
-  /** Per-session temp registration (same bridge as [[VecDot]]);
-    * clusters get it from `graft.GraftExtensions` instead.
-    * Quiet-idempotent — see [[Registration]].
-    */
-  def register(spark: org.apache.spark.sql.SparkSession): Unit =
-    Registration.registerOnce(spark, "hist_l1",
-      exprs => HistL1(exprs(0), exprs(1)))
-
-  /** Column wrapper, resolved by [[graft.GraftExtensions]] (or [[register]]). */
+  /** Column wrapper, resolved by [[graft.GraftExtensions]]. */
   def of(a: Column, b: Column): Column =
     org.apache.spark.sql.functions.call_function("hist_l1", a, b)
 

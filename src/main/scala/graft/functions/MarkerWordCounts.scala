@@ -141,11 +141,7 @@ object MarkerWordCounts {
     m
   }
 
-  def register(spark: org.apache.spark.sql.SparkSession): Unit =
-    Registration.registerOnce(spark, "marker_word_counts",
-      exprs => MarkerWordCounts(exprs.head))
-
-  /** Column wrapper, resolved by [[graft.GraftExtensions]] (or [[register]]). */
+  /** Column wrapper, resolved by [[graft.GraftExtensions]]. */
   def of(c: Column): Column =
     org.apache.spark.sql.functions.call_function("marker_word_counts", c)
 

@@ -52,15 +52,7 @@ case class NfcNormalize(child: Expression) extends UnaryExpression {
 }
 
 object NfcNormalize {
-  /** Register in the session's function registry (Spark 4's Column
-    * has no public Expression constructor — same bridge as
-    * [[DocFingerprint.register]]).
-    */
-  def register(spark: org.apache.spark.sql.SparkSession): Unit =
-    Registration.registerOnce(spark, "nfc_normalize",
-      exprs => NfcNormalize(exprs.head))
-
-  /** Column wrapper, resolved by [[graft.GraftExtensions]] (or [[register]]). */
+  /** Column wrapper, resolved by [[graft.GraftExtensions]]. */
   def of(c: Column): Column =
     org.apache.spark.sql.functions.call_function("nfc_normalize", c)
 

@@ -134,16 +134,10 @@ case class SlidingXxh64(child: Expression, width: Int, stride: Int)
 }
 
 object SlidingXxh64 {
-  /** Per-session registration (the [[Registration]] contract);
-    * clusters get it from `graft.GraftExtensions`. SQL form:
-    * `sliding_xxh64(text, width, stride)` with literal int geometry.
-    */
-  def register(spark: org.apache.spark.sql.SparkSession): Unit =
-    Registration.registerOnce(spark, "sliding_xxh64", fromExprs)
-
-  /** Builder shared by the temp-function and extension paths: width
-    * and stride must be foldable int literals (index geometry is a
-    * build-time constant, never data).
+  /** [[graft.GraftExtensions]]' builder for the SQL form
+    * `sliding_xxh64(text, width, stride)`: width and stride must be
+    * foldable int literals (index geometry is a build-time constant,
+    * never data).
     */
   private[graft] def fromExprs(exprs: Seq[Expression]): Expression = {
     require(exprs.length == 3,
@@ -157,7 +151,7 @@ object SlidingXxh64 {
     SlidingXxh64(exprs.head, lit(exprs(1), "width"), lit(exprs(2), "stride"))
   }
 
-  /** Column wrapper, resolved by [[graft.GraftExtensions]] (or [[register]]). */
+  /** Column wrapper, resolved by [[graft.GraftExtensions]]. */
   def of(c: Column, width: Int, stride: Int): Column =
     org.apache.spark.sql.functions.call_function("sliding_xxh64", c,
       org.apache.spark.sql.functions.lit(width),

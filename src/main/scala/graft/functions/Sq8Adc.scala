@@ -123,14 +123,7 @@ case class Sq8Adc(first: Expression, second: Expression, third: Expression)
 }
 
 object Sq8Adc {
-  /** Per-session registration (quiet-idempotent — [[Registration]]);
-    * clusters get it from `graft.GraftExtensions`.
-    */
-  def register(spark: org.apache.spark.sql.SparkSession): Unit =
-    Registration.registerOnce(spark, "sq8_adc",
-      exprs => Sq8Adc(exprs(0), exprs(1), exprs(2)))
-
-  /** Column wrapper, resolved by [[graft.GraftExtensions]] (or [[register]]). */
+  /** Column wrapper, resolved by [[graft.GraftExtensions]]. */
   def of(words: Column, q: Column, widths: Column): Column =
     org.apache.spark.sql.functions.call_function("sq8_adc", words, q, widths)
 

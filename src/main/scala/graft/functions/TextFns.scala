@@ -40,7 +40,7 @@ object TextFns {
   /** Quality signals in [0,1] plus a fixed-weight composite score —
     * the length/punctuation/stopword-ratio heuristic family used for
     * corpus filtering. Deterministic; mirrors the oracle SQL exactly.
-    * Requires [[AsciiClassCounts.register]] on the active session
+    * Resolves `ascii_class_counts` from [[graft.GraftExtensions]]
     * (the class counts come from the single-pass codegen expression;
     * values are identical to the regex formulation).
     */
@@ -98,7 +98,7 @@ object TextFns {
     * codepoints short-circuit to 'zh', ties resolve in the fixed
     * marker order, no hits → 'und'. A heuristic classifier, not a
     * model — the point is a deterministic, scalable scoring pass.
-    * Requires [[MarkerWordCounts.register]] on the active session
+    * Resolves `marker_word_counts` from [[graft.GraftExtensions]]
     * (one byte scan replaces four full-text regex passes; counts are
     * identical, spec-cross-checked).
     */

@@ -95,15 +95,7 @@ case class VecDot(left: Expression, right: Expression)
 }
 
 object VecDot {
-  /** Register in the session's function registry (Spark 4's Column
-    * API has no public Expression constructor — same bridge as
-    * [[DocFingerprint]]). Idempotent.
-    */
-  def register(spark: org.apache.spark.sql.SparkSession): Unit =
-    Registration.registerOnce(spark, "vec_dot",
-      exprs => VecDot(exprs(0), exprs(1)))
-
-  /** Column wrapper, resolved by [[graft.GraftExtensions]] (or [[register]]). */
+  /** Column wrapper, resolved by [[graft.GraftExtensions]]. */
   def of(a: Column, b: Column): Column =
     org.apache.spark.sql.functions.call_function("vec_dot", a, b)
 

@@ -242,15 +242,11 @@ object Marts {
 
   /** qp3's conf scope (see [[bloomJoinRead]] for why each key). */
   def withBloomConfs[A](s: SparkSession)(body: => A): A =
-    withConfs(s, Map(
+    graft.Session.withConfs(s, Seq(
       "spark.sql.optimizer.runtime.bloomFilter.applicationSideScanSizeThreshold" -> "0",
       "spark.sql.autoBroadcastJoinThreshold" -> "-1",
       "spark.sql.adaptive.autoBroadcastJoinThreshold" -> "-1"))(body)
 
-  /** Run `body` with session confs overridden, then restore each to
-    * its previous value (the scoped discipline of
-    * Tables.withEventReadConfs, generalized to any set).
-    */
   /** qp5 — Z-ORDER clustered layout + 2-D box read: lineitem written
     * along the Morton curve of (l_partkey, l_suppkey)
     * ([[graft.io.ZOrder.writeZOrdered]]), read back under a box
@@ -329,8 +325,8 @@ object Marts {
       root, Seq("store"))
     // v2: the refresh batch — full history, stores 1-3 only; dynamic
     // mode replaces exactly those three partitions
-    withConfs(s,
-      Map("spark.sql.sources.partitionOverwriteMode" -> "dynamic")) {
+    graft.Session.withConfs(s,
+      Seq("spark.sql.sources.partitionOverwriteMode" -> "dynamic")) {
       graft.io.Writers.writePartitioned(
         mart(identity).filter(col("store").isin(1, 2, 3)),
         root, Seq("store"))
@@ -339,16 +335,5 @@ object Marts {
       .select(col("store").cast("int").as("store"), col("month"),
         col("total_dec").cast("double").as("total"))
       .orderBy("store", "month")
-  }
-
-  private def withConfs[A](s: SparkSession, confs: Map[String, String])
-      (body: => A): A = {
-    val prev = confs.keys.map(k => k -> s.conf.getOption(k)).toMap
-    confs.foreach { case (k, v) => s.conf.set(k, v) }
-    try body
-    finally prev.foreach {
-      case (k, Some(v)) => s.conf.set(k, v)
-      case (k, None) => s.conf.unset(k)
-    }
   }
 }

@@ -37,8 +37,7 @@ object Similarity {
   def normD(a: Column): Column = sqrt(dotD(a, a))
 
   /** Codegen'd dot/norm (bit-identical values to [[dotD]]/[[normD]]);
-    * callers must have run [[graft.functions.VecDot.register]] on the
-    * session — every public operator here does so first.
+    * `vec_dot` resolves from [[graft.GraftExtensions]].
     */
   private def dotN(a: Column, b: Column): Column =
     graft.functions.VecDot.of(a, b)

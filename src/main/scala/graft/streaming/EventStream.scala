@@ -267,22 +267,14 @@ object EventStream {
       .orderBy("event_id")
 
   /** Run `body` with spark.sql.shuffle.partitions overridden, then
-    * restore (same scoped discipline as Tables.withEventReadConfs — a
-    * leaked session conf was the r3 #3 defect class). The streaming
-    * drain completes inside the scope, so every micro-batch plans
-    * with the override.
+    * restore it ([[graft.Session.withConfs]] — a leaked session conf
+    * was the r3 #3 defect class). The streaming drain completes inside
+    * the scope, so every micro-batch plans with the override.
     */
   private[graft] def withShufflePartitions[A](s: SparkSession, n: Int)
-      (body: => A): A = {
-    val key = "spark.sql.shuffle.partitions"
-    val prev = s.conf.getOption(key)
-    s.conf.set(key, n.toString)
-    try body
-    finally prev match {
-      case Some(v) => s.conf.set(key, v)
-      case None => s.conf.unset(key)
-    }
-  }
+      (body: => A): A =
+    graft.Session.withConfs(s,
+      Seq("spark.sql.shuffle.partitions" -> n.toString))(body)
 
   /** Memory-sink names must be unique per start; one counter per JVM
     * covers repeated Bench runs. Each family drops its previous run's

@@ -16,16 +16,6 @@ import org.apache.spark.sql.functions._
   */
 class AqeSkewSpec extends SparkSpec {
 
-  private def withConfs[A](confs: Map[String, String])(body: => A): A = {
-    val prev = confs.keys.map(k => k -> spark.conf.getOption(k)).toMap
-    confs.foreach { case (k, v) => spark.conf.set(k, v) }
-    try body
-    finally prev.foreach {
-      case (k, Some(v)) => spark.conf.set(k, v)
-      case (k, None) => spark.conf.unset(k)
-    }
-  }
-
   test("AQE splits the skewed partition at runtime (skew=true), result unchanged") {
     // one pathological key holding ~95% of the left side
     val left = spark.range(0L, 200000L)
@@ -33,7 +23,7 @@ class AqeSkewSpec extends SparkSpec {
         col("id").as("payload"))
     val right = spark.range(0L, 1000L)
       .select(col("id").as("k"), (col("id") * 7L).as("attr"))
-    val out = withConfs(Map(
+    val out = Session.withConfs(spark, Seq(
       // force the sort-merge path (a broadcast would hide skew handling)
       "spark.sql.autoBroadcastJoinThreshold" -> "-1",
       "spark.sql.adaptive.autoBroadcastJoinThreshold" -> "-1",

@@ -149,7 +149,6 @@ class ArtifactLifecycleSpec extends SparkSpec {
     val got = Selection.dsirResample(docs, model, k = 16).collect()
     // independent join-shaped reference: score via dsirScore, fp via a
     // separate scan, zero-fill, same key
-    graft.functions.DocFingerprint.register(spark)
     val want = docs.select(col("doc_id"), col("source"),
         graft.functions.DocFingerprint.of(col("text")).as("fp"))
       .join(Selection.dsirScore(docs, model)

@@ -151,7 +151,6 @@ class DedupSpec extends SparkSpec {
   }
 
   test("doc_fingerprint matches the pure-Scala reference on real data") {
-    DocFingerprint.register(spark)
     val rows = Tables.documents.limit(50)
       .select(col("text"), DocFingerprint.of(col("text")).as("fp"))
       .collect()
@@ -172,7 +171,6 @@ class DedupSpec extends SparkSpec {
   }
 
   test("doc_fingerprint works from SQL and distinguishes texts") {
-    DocFingerprint.register(spark)
     val d = docs(1L -> "hello world", 2L -> "hello worle")
     d.createOrReplaceTempView("fp_docs")
     val out = spark.sql(

@@ -49,7 +49,6 @@ class EditJoinSpec extends SparkSpec {
       .map(r => (r.getLong(0), r.getLong(1), r.getAs[Int]("edit_dist"))).toSet
 
   test("hist_l1: reference parity, null and length semantics") {
-    graft.functions.HistL1.register(spark)
     val rows = spark.sql(
       """SELECT
         |  hist_l1(array(3, 0, 7, 2), array(1, 4, 7, 0)) AS basic,

@@ -16,7 +16,6 @@ class FingerprintParitySpec extends SparkSpec {
   import spark.implicits._
 
   test("doc_fingerprint folds CODEPOINTS: non-ASCII parity with unicode(c)") {
-    graft.functions.DocFingerprint.register(spark)
     // 2-byte (Latin-1 supplement), 3-byte (CJK), 4-byte (astral /
     // surrogate pair in UTF-16) sequences plus mixed text — each
     // class exercises a distinct branch of the inline UTF-8 decode
@@ -55,7 +54,6 @@ class FingerprintParitySpec extends SparkSpec {
   }
 
   test("doc_fingerprint: codegen and interpreted paths agree off-ASCII") {
-    graft.functions.DocFingerprint.register(spark)
     val texts = Seq("é", "中文 docs", "😀😀", "añño")
     val df = texts.toDF("text")
     val gen = df.select(graft.functions.DocFingerprint.of(col("text")))

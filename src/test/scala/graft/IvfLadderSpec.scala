@@ -39,8 +39,6 @@ class IvfLadderSpec extends SparkSpec {
     val cells = VecAdmission.storedCells(s, dir)
     val codes = VecAdmission.storedCodes(s, dir)
     val corpus = VecAdmission.corpusEmb(s, dir)
-    graft.functions.VecDot.register(s)
-    graft.functions.Sq8Adc.register(s)
     val q = arrivals.select(col("query_id"), col("q_emb"),
       sqrt(graft.functions.VecDot.of(col("q_emb"), col("q_emb")))
         .as("q_nrm"))
@@ -72,8 +70,6 @@ class IvfLadderSpec extends SparkSpec {
     val cells = VecAdmission.storedCells(s, dir)
     val codes = VecAdmission.storedCodes(s, dir)
     val corpus = VecAdmission.corpusEmb(s, dir)
-    graft.functions.VecDot.register(s)
-    graft.functions.Sq8Adc.register(s)
     val q = arrivals.select(col("query_id"), col("q_emb"),
       sqrt(graft.functions.VecDot.of(col("q_emb"), col("q_emb")))
         .as("q_nrm"))

@@ -176,7 +176,6 @@ class PqSpec extends SparkSpec
     val embd = graft.core.Tables.embeddings(spark, dir)
     val (_, rot) = TrainingOps.pcaRotation(spark, dir)
     val rotated = TrainingOps.rotateEmbeddings(embd, rot)
-    graft.functions.VecDot.register(spark)
     val norms = embd
       .join(rotated.withColumnRenamed("embedding", "rotated"), Seq("vec_id"))
       .select(

@@ -26,7 +26,6 @@ class PropertySpec extends SparkSpec {
   } yield ws.mkString(" ")
 
   test("char_hist expression == pure-Scala reference on generated text") {
-    graft.functions.CharHist.register(spark)
     (1L to 3L).foreach { seed =>
       val texts = sample(Gen.listOfN(200, textGen), seed)
       val rows = texts.zipWithIndex.map { case (t, i) => (i, t) }
@@ -42,7 +41,6 @@ class PropertySpec extends SparkSpec {
   }
 
   test("sq8_adc expression == pure-Scala reference on generated codes") {
-    graft.functions.Sq8Adc.register(spark)
     val caseGen: Gen[(Seq[Long], Seq[Double], Seq[Double])] = for {
       nWords <- Gen.choose(1, 8)
       words <- Gen.listOfN(nWords, Gen.choose(Long.MinValue, Long.MaxValue))
@@ -68,7 +66,6 @@ class PropertySpec extends SparkSpec {
   }
 
   test("hist_l1 expression == pure-Scala reference on generated histograms") {
-    graft.functions.HistL1.register(spark)
     val histGen: Gen[Seq[Int]] =
       Gen.listOfN(37, Gen.choose(0, 600)).map(_.toSeq)
     (1L to 3L).foreach { seed =>
@@ -87,7 +84,6 @@ class PropertySpec extends SparkSpec {
   }
 
   test("fingerprint expression == pure-Scala reference on arbitrary text") {
-    DocFingerprint.register(spark)
     (1L to 3L).foreach { seed =>
       val texts = sample(Gen.listOfN(200, textGen), seed)
       val rows = texts.zipWithIndex.map { case (t, i) => (i.toLong, t) }

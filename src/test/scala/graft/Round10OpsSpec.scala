@@ -81,34 +81,36 @@ class Round10OpsSpec extends SparkSpec {
     val tbl = s"$root/t.parquet"
     Seq((1L, "a"), (2L, "b")).toDF("x", "p")
       .write.partitionBy("p").parquet(tbl)
-    var builds = 0
-    def art() = graft.io.ArtifactStore
-      .parquetArtifact(spark, root, "t", "part_art") {
-        builds += 1
-        spark.read.parquet(tbl).select(sum("x").as("s"))
-      }
-    assert(art().collect()(0).getLong(0) == 3L)
-    assert(builds == 1)
-    art(); assert(builds == 1, "unchanged partitioned stamp must not rebuild")
-    Thread.sleep(5) // mtime granularity
-    // TRUE in-place rewrite: overwrite the leaf's CONTENT under its
-    // existing name — the parent dir's own name/length/mtime all stay
-    // put, which is exactly the case the one-level stamp was blind to
-    Seq((10L, "a")).toDF("x", "p").write.mode("overwrite")
-      .partitionBy("p").parquet(s"$root/t_new.parquet")
-    val oldLeaf = new java.io.File(s"$tbl/p=a").listFiles
-      .filter(_.getName.endsWith(".parquet")).head
-    val newLeaf = new java.io.File(s"$root/t_new.parquet/p=a").listFiles
-      .filter(_.getName.endsWith(".parquet")).head
-    java.nio.file.Files.copy(newLeaf.toPath, oldLeaf.toPath,
-      java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-    // the overwritten bytes no longer match the Hadoop .crc sidecar;
-    // drop it (the checksum FS treats a missing sidecar as ok)
-    new java.io.File(oldLeaf.getParentFile,
-      "." + oldLeaf.getName + ".crc").delete()
-    assert(art().collect()(0).getLong(0) == 12L,
-      "nested leaf rewrite must invalidate the artifact")
-    assert(builds == 2)
+    withArtifactName("part_art") { name =>
+      var builds = 0
+      def art() = graft.io.ArtifactStore
+        .parquetArtifact(spark, root, "t", name) {
+          builds += 1
+          spark.read.parquet(tbl).select(sum("x").as("s"))
+        }
+      assert(art().collect()(0).getLong(0) == 3L)
+      assert(builds == 1)
+      art(); assert(builds == 1, "unchanged partitioned stamp must not rebuild")
+      Thread.sleep(5) // mtime granularity
+      // TRUE in-place rewrite: overwrite the leaf's CONTENT under its
+      // existing name — the parent dir's own name/length/mtime all stay
+      // put, which is exactly the case the one-level stamp was blind to
+      Seq((10L, "a")).toDF("x", "p").write.mode("overwrite")
+        .partitionBy("p").parquet(s"$root/t_new.parquet")
+      val oldLeaf = new java.io.File(s"$tbl/p=a").listFiles
+        .filter(_.getName.endsWith(".parquet")).head
+      val newLeaf = new java.io.File(s"$root/t_new.parquet/p=a").listFiles
+        .filter(_.getName.endsWith(".parquet")).head
+      java.nio.file.Files.copy(newLeaf.toPath, oldLeaf.toPath,
+        java.nio.file.StandardCopyOption.REPLACE_EXISTING)
+      // the overwritten bytes no longer match the Hadoop .crc sidecar;
+      // drop it (the checksum FS treats a missing sidecar as ok)
+      new java.io.File(oldLeaf.getParentFile,
+        "." + oldLeaf.getName + ".crc").delete()
+      assert(art().collect()(0).getLong(0) == 12L,
+        "nested leaf rewrite must invalidate the artifact")
+      assert(builds == 2)
+    }
   }
 
   test("qd53: the declared query is value-bearing and conserves tokens") {

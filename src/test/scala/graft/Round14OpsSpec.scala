@@ -11,7 +11,6 @@ class Round14OpsSpec extends SparkSpec {
   import spark.implicits._
 
   test("char_hist == pure-Scala reference, bins match HistChars layout") {
-    graft.functions.CharHist.register(spark)
     val texts = Seq(
       "", "abc", "Hello World 42", "  zz  99  ",
       "ALLCAPS", "mixed CASE with 0123456789 digits",
@@ -35,7 +34,6 @@ class Round14OpsSpec extends SparkSpec {
   }
 
   test("char_hist counts equal the replace-mirror formulation on ASCII") {
-    graft.functions.CharHist.register(spark)
     val docs = spark.read
       .parquet("/root/testdata/sf0.001/documents.parquet")
       .limit(200)
@@ -52,7 +50,6 @@ class Round14OpsSpec extends SparkSpec {
   }
 
   test("char_hist null semantics and codegen == interpreted") {
-    graft.functions.CharHist.register(spark)
     val r = spark.sql(
       "SELECT char_hist(CAST(NULL AS STRING)) AS n, char_hist('') AS e")
       .collect()(0)
@@ -136,7 +133,6 @@ class Round14OpsSpec extends SparkSpec {
   }
 
   test("sq8_adc == pure-Scala reference; null and mismatch semantics") {
-    graft.functions.Sq8Adc.register(spark)
     val words = Seq(0x0807060504030201L, 0xf0e0d0c0b0a09080L)
     val q = (1 to 16).map(i => i * 0.25)
     val widths = (1 to 16).map(i => 0.01 * i)
@@ -308,7 +304,6 @@ class Round14OpsSpec extends SparkSpec {
   }
 
   test("hist_l1 accumulates in a long: no silent Int wraparound") {
-    graft.functions.HistL1.register(spark)
     // two elements of |Int.MaxValue| distance each — the old int
     // accumulator wrapped negative; ANSI-consistent behaviour is a
     // raised ArithmeticException

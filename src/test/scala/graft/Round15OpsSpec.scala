@@ -4,7 +4,7 @@ import org.apache.spark.sql.functions._
 
 /** Round-15 additions: the unigram-LM seed cap (bounded-model
   * contract), codepoint-safe segmentation, EM round 2, the composed
-  * admission verdict, and the ADVICE r14 registration/rewrite fixes.
+  * admission verdict, and the ADVICE r14 rewrite fix.
   */
 class Round15OpsSpec extends SparkSpec {
 
@@ -201,27 +201,5 @@ class Round15OpsSpec extends SparkSpec {
     assert(nd.collectFirst {
       case Levenshtein(_, _, Some(_)) => true }.isDefined,
       s"banded rewrite must still apply: $nd")
-  }
-
-  test("registerOnce: a clashing user temp function is replaced, ours kept") {
-    // fresh session state: the WeakHashMap record and the registry
-    // are both per-session
-    val s2 = spark.newSession()
-    // a user shadows vec_dot with a different function
-    s2.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "vec_dot",
-      exprs => org.apache.spark.sql.catalyst.expressions.Literal(-1.0),
-      "scala_udf")
-    // registerOnce must detect the foreign entry and take the name
-    // back (the old blanket skip silently served the user's lambda)
-    graft.functions.VecDot.register(s2)
-    val got = s2.sql("SELECT vec_dot(array(1.0D, 2.0D), array(3.0D, 4.0D)) AS d")
-      .collect()(0).getDouble(0)
-    assert(got == 11.0, s"graft vec_dot must win the name: $got")
-    // and an extension-installed entry is recognized as ours: a
-    // second register is a no-op (idempotence; the quiet path)
-    graft.functions.VecDot.register(s2)
-    assert(s2.sql("SELECT vec_dot(array(1.0D), array(2.0D)) AS d")
-      .collect()(0).getDouble(0) == 2.0)
   }
 }

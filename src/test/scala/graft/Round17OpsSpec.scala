@@ -177,7 +177,6 @@ class Round17OpsSpec extends SparkSpec {
     val truth = pairs(model.k, Int.MaxValue)
     assert(truth.nonEmpty)
     val brute = {
-      graft.functions.VecDot.register(spark)
       val base = pop.withColumn("nrm",
         sqrt(graft.functions.VecDot.of(col("embedding"), col("embedding"))))
       val q = queries.withColumn("q_nrm",

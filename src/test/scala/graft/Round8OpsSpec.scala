@@ -267,7 +267,6 @@ class Round8OpsSpec extends SparkSpec {
   test("qd50: manifest is content-keyed and order-independent; shards partition the corpus") {
     val docs = spark.read
       .parquet("/root/testdata/sf0.001/documents.parquet")
-    graft.functions.DocFingerprint.register(spark)
     def manifest(df: org.apache.spark.sql.DataFrame) = df
       .withColumn("fp", graft.functions.DocFingerprint.of(col("text")))
       .withColumn("shard", (col("fp") % 8).cast("int"))
@@ -315,12 +314,9 @@ class Round8OpsSpec extends SparkSpec {
 
     val dyn = tempDir("qp8dyn")
     graft.io.Writers.writePartitioned(rows, dyn, Seq("p"), numTasks = 1)
-    val prev = spark.conf.getOption("spark.sql.sources.partitionOverwriteMode")
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try graft.io.Writers.writePartitioned(refresh, dyn, Seq("p"), numTasks = 1)
-    finally prev match {
-      case Some(v) => spark.conf.set("spark.sql.sources.partitionOverwriteMode", v)
-      case None => spark.conf.unset("spark.sql.sources.partitionOverwriteMode")
+    Session.withConfs(spark,
+      Seq("spark.sql.sources.partitionOverwriteMode" -> "dynamic")) {
+      graft.io.Writers.writePartitioned(refresh, dyn, Seq("p"), numTasks = 1)
     }
     assert(state(dyn) == Set((1, "a", 99L), (2, "a", 30L)),
       "p=1 replaced wholesale (its old 'b' row gone), p=2 untouched")

@@ -83,24 +83,24 @@ class Round9OpsSpec extends SparkSpec {
     val root = tempDir("graft_artifact_digest")
     val tbl = s"$root/t.parquet"
     Seq(5L).toDF("x").coalesce(1).write.parquet(tbl)
-    val name = "digest_art_" + System.nanoTime()
-    var builds = 0
-    def art(digest: String, mult: Int) = ArtifactStore.parquetArtifactUnder(
-        digest, spark, root, Seq("t"), name) {
-      builds += 1
-      spark.read.parquet(tbl).withColumn("y", col("x") * mult)
+    withArtifactName("digest_art") { name =>
+      var builds = 0
+      def art(digest: String, mult: Int) = ArtifactStore.parquetArtifactUnder(
+          digest, spark, root, Seq("t"), name) {
+        builds += 1
+        spark.read.parquet(tbl).withColumn("y", col("x") * mult)
+      }
+      assert(art("a", 2).collect().map(_.getLong(1)).toSeq == Seq(10L))
+      assert(art("a", 3).collect().map(_.getLong(1)).toSeq == Seq(10L))
+      assert(builds == 1, "same source, same program: served cached")
+      // same source, another program: rebuilt with the new logic
+      assert(art("b", 3).collect().map(_.getLong(1)).toSeq == Seq(15L))
+      assert(builds == 2)
+      val store = ArtifactStore.scratchRoot.listFiles()
+        .filter(_.getName.startsWith(name)).head
+      assert(store.listFiles().count(_.getName.startsWith("data-")) == 2,
+        "two program digests must map to two data-* directories")
     }
-    assert(art("a", 2).collect().map(_.getLong(1)).toSeq == Seq(10L))
-    assert(art("a", 3).collect().map(_.getLong(1)).toSeq == Seq(10L))
-    assert(builds == 1, "same source, same program: served cached")
-    // same source, another program: rebuilt with the new logic
-    assert(art("b", 3).collect().map(_.getLong(1)).toSeq == Seq(15L))
-    assert(builds == 2)
-    val store = ArtifactStore.scratchRoot.listFiles()
-      .filter(_.getName.startsWith(name)).head
-    assert(store.listFiles().count(_.getName.startsWith("data-")) == 2,
-      "two program digests must map to two data-* directories")
-    org.apache.commons.io.FileUtils.deleteDirectory(store)
   }
 
   test("ArtifactStore: the program digest moves with any class-file byte") {
@@ -127,39 +127,43 @@ class Round9OpsSpec extends SparkSpec {
     val root = tempDir("graft_artifact_conc")
     val tbl = s"$root/t.parquet"
     Seq(1L, 2L).toDF("x").coalesce(1).write.parquet(tbl)
-    val builds = new java.util.concurrent.atomic.AtomicInteger(0)
-    import scala.concurrent.{Await, Future}
-    import scala.concurrent.ExecutionContext.Implicits.global
-    import scala.concurrent.duration._
-    val reads = (1 to 4).map(_ => Future {
-      ArtifactStore.parquetArtifact(spark, root, "t", "conc_art") {
-        builds.incrementAndGet()
-        spark.read.parquet(tbl)
-      }.count()
-    })
-    assert(Await.result(Future.sequence(reads), 120.seconds)
-      .forall(_ == 2L))
-    assert(builds.get() == 1,
-      s"per-path lock must serialize to one build, saw ${builds.get()}")
+    withArtifactName("conc_art") { name =>
+      val builds = new java.util.concurrent.atomic.AtomicInteger(0)
+      import scala.concurrent.{Await, Future}
+      import scala.concurrent.ExecutionContext.Implicits.global
+      import scala.concurrent.duration._
+      val reads = (1 to 4).map(_ => Future {
+        ArtifactStore.parquetArtifact(spark, root, "t", name) {
+          builds.incrementAndGet()
+          spark.read.parquet(tbl)
+        }.count()
+      })
+      assert(Await.result(Future.sequence(reads), 120.seconds)
+        .forall(_ == 2L))
+      assert(builds.get() == 1,
+        s"per-path lock must serialize to one build, saw ${builds.get()}")
+    }
   }
 
   test("ArtifactStore: builds once, serves cached, rebuilds on stamp change") {
     val root = tempDir("graft_artifact_spec")
     val tbl = s"$root/t.parquet"
     Seq(1L, 2L, 3L).toDF("x").coalesce(1).write.parquet(tbl)
-    var builds = 0
-    def art() = ArtifactStore.parquetArtifact(spark, root, "t", "spec_art") {
-      builds += 1
-      spark.read.parquet(tbl).withColumn("y", col("x") * 2)
+    withArtifactName("spec_art") { name =>
+      var builds = 0
+      def art() = ArtifactStore.parquetArtifact(spark, root, "t", name) {
+        builds += 1
+        spark.read.parquet(tbl).withColumn("y", col("x") * 2)
+      }
+      assert(art().collect().map(_.getLong(1)).sorted.toSeq == Seq(2L, 4L, 6L))
+      assert(builds == 1)
+      art()
+      assert(builds == 1, "unchanged stamp must not rebuild")
+      // regenerate the source table -> stamp changes -> rebuild
+      Thread.sleep(5) // mtime granularity
+      Seq(10L).toDF("x").coalesce(1).write.mode("overwrite").parquet(tbl)
+      assert(art().collect().map(_.getLong(1)).toSeq == Seq(20L))
+      assert(builds == 2, "changed stamp must rebuild")
     }
-    assert(art().collect().map(_.getLong(1)).sorted.toSeq == Seq(2L, 4L, 6L))
-    assert(builds == 1)
-    art()
-    assert(builds == 1, "unchanged stamp must not rebuild")
-    // regenerate the source table -> stamp changes -> rebuild
-    Thread.sleep(5) // mtime granularity
-    Seq(10L).toDF("x").coalesce(1).write.mode("overwrite").parquet(tbl)
-    assert(art().collect().map(_.getLong(1)).toSeq == Seq(20L))
-    assert(builds == 2, "changed stamp must rebuild")
   }
 }

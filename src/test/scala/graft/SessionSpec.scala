@@ -8,7 +8,8 @@ import org.apache.hadoop.fs.RawLocalFileSystem
 
 /** [[graft.Session]] is the one place a session is configured: its
   * config is what every main and suite runs with, its reset leaves no
-  * Spark-side state behind, and no other source builds a session.
+  * Spark-side state behind, its conf scope restores what it changed,
+  * and no other source builds a session or changes its state.
   */
 class SessionSpec extends SparkSpec {
 
@@ -50,5 +51,46 @@ class SessionSpec extends SparkSpec {
     assert(offenders.isEmpty, s"build the session with graft.Session: $offenders")
     assert(Files.readString(Paths.get("src/main/scala/graft/Session.scala"))
       .contains(builder), "the scan must see the one builder")
+  }
+
+  test("no source in src/main outside Session.scala sets a conf or a temp function") {
+    val sources = Files.walk(Paths.get("src/main")).iterator().asScala
+      .filter(_.toString.endsWith(".scala"))
+      .map(p => p -> Files.readString(p)).toSeq
+    def holding(needles: String*): Seq[String] = sources.collect {
+      case (p, text) if needles.exists(text.contains) => p.getFileName.toString
+    }
+    assert(holding("conf.set(", "conf.unset(") == Seq("Session.scala"),
+      "scope a conf override with graft.Session.withConfs")
+    assert(holding("createOrReplaceTempFunction", "registerOnce").isEmpty,
+      "graft functions come from GraftExtensions only")
+  }
+
+  test("Session.withConfs sets in order, then restores or unsets, also on throw") {
+    val (set, unset) = ("spark.sql.shuffle.partitions", "graft.spec.scoped")
+    val before = spark.conf.get(set)
+    assert(spark.conf.getOption(unset).isEmpty)
+    def untouched(): Unit = {
+      assert(spark.conf.get(set) == before)
+      assert(spark.conf.getOption(unset).isEmpty)
+    }
+    // a repeated key: the last value wins inside, the first prior value after
+    assert(Session.withConfs(spark, Seq(set -> "7", unset -> "a", set -> "9")) {
+      (spark.conf.get(set), spark.conf.get(unset))
+    } == ("9", "a"))
+    untouched()
+    intercept[IllegalStateException] {
+      Session.withConfs(spark, Seq(set -> "7", unset -> "b")) {
+        throw new IllegalStateException("body failed")
+      }
+    }
+    untouched()
+    // a static conf cannot be set at runtime: the keys set before it
+    // are restored and the failure propagates
+    intercept[Exception] {
+      Session.withConfs(spark,
+        Seq(set -> "7", unset -> "c", "spark.sql.extensions" -> "x"))(())
+    }
+    untouched()
   }
 }

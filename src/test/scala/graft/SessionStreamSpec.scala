@@ -119,23 +119,17 @@ class SessionStreamSpec extends SparkSpec {
     // casts the `file` filesystem to LocalFileSystem: it cannot run on
     // graft.Session's RawLocalFileSystem, so this drain checkpoints
     // through the checksummed one (uncached, so the cast sees it)
-    val confs = Map(
+    Session.withConfs(spark, Seq(
       "spark.sql.streaming.stateStore.providerClass" ->
         "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
       "fs.file.impl" -> classOf[org.apache.hadoop.fs.LocalFileSystem].getName,
-      "fs.file.impl.disable.cache" -> "true")
-    val prev = confs.keys.map(k => k -> spark.conf.getOption(k)).toMap
-    confs.foreach { case (k, v) => spark.conf.set(k, v) }
-    try {
+      "fs.file.impl.disable.cache" -> "true")) {
       val rocks = graft.streaming.SessionStream
         .sessionWindowGate(spark, sf).collect().toSeq
       val batch = graft.operators.Events.sessionWindow(spark, sf)
         .collect().toSeq
       assert(rocks == batch,
         s"RocksDB drain ${rocks.length} rows vs batch ${batch.length}")
-    } finally prev.foreach {
-      case (k, Some(v)) => spark.conf.set(k, v)
-      case (k, None) => spark.conf.unset(k)
     }
   }
 

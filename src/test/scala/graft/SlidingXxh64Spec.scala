@@ -29,7 +29,6 @@ class SlidingXxh64Spec extends SparkSpec {
   )
 
   test("sliding_xxh64 == xxhash64(substring(...)) bit for bit") {
-    SlidingXxh64.register(spark)
     val spark2 = spark
     import spark2.implicits._
     val df = samples.toDF("t")
@@ -45,7 +44,6 @@ class SlidingXxh64Spec extends SparkSpec {
   }
 
   test("sliding_xxh64 matches the pure-Scala reference") {
-    SlidingXxh64.register(spark)
     val spark2 = spark
     import spark2.implicits._
     val df = samples.toDF("t")
@@ -60,7 +58,6 @@ class SlidingXxh64Spec extends SparkSpec {
   }
 
   test("interpreted eval matches codegen (null in, null out)") {
-    SlidingXxh64.register(spark)
     val spark2 = spark
     import spark2.implicits._
     // eval() path directly (codegen is the DataFrame path above)

@@ -13,4 +13,18 @@ trait SparkSpec extends AnyFunSuite {
 
   def tempDir(prefix: String): String =
     java.nio.file.Files.createTempDirectory(prefix).toString
+
+  /** Run `body` with an artifact name unique to this call, then delete
+    * every artifact root built under that name, also when `body`
+    * throws. An artifact of a `tempDir` source is keyed on that dir,
+    * so no later publish would ever reap its root.
+    */
+  def withArtifactName[A](prefix: String)(body: String => A): A = {
+    val name = s"${prefix}_${System.nanoTime()}"
+    try body(name)
+    finally Option(graft.io.ArtifactStore.scratchRoot.listFiles())
+      .getOrElse(Array.empty[java.io.File])
+      .filter(_.getName.startsWith(name + "_"))
+      .foreach(org.apache.commons.io.FileUtils.deleteDirectory)
+  }
 }

@@ -46,7 +46,7 @@ class TablesScopeSpec extends SparkSpec {
   test("conf is restored even when the read throws") {
     spark.conf.unset(key)
     intercept[Exception] {
-      Tables.withNanosConf(spark) {
+      Tables.withEventReadConfs(spark) {
         spark.read.parquet("/nonexistent/graft/path.parquet")
       }
     }

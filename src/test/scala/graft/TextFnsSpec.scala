@@ -21,7 +21,6 @@ class TextFnsSpec extends SparkSpec {
   }
 
   test("ascii_class_counts matches regex counts and reference on real data") {
-    graft.functions.AsciiClassCounts.register(spark)
     val docs = spark.read
       .parquet("/root/testdata/sf0.001/documents.parquet")
       .select("text").limit(100)
@@ -44,7 +43,6 @@ class TextFnsSpec extends SparkSpec {
   }
 
   test("quality signals are in range and score is weighted sum") {
-    graft.functions.AsciiClassCounts.register(spark)
     val df = Seq("The quick brown fox 123!", "").toDF("text")
     val sigs = TextFns.qualitySignals(col("text"))
     val rows = df.select(sigs.map { case (n, c) => c.as(n) }: _*).collect()
@@ -60,7 +58,6 @@ class TextFnsSpec extends SparkSpec {
   }
 
   test("marker_word_counts matches regex counts and reference on real data") {
-    graft.functions.MarkerWordCounts.register(spark)
     val docs = spark.read
       .parquet("/root/testdata/sf0.001/documents.parquet")
       .select("text").limit(100)
@@ -86,7 +83,6 @@ class TextFnsSpec extends SparkSpec {
   }
 
   test("nfc_normalize composes decomposed text and passes NFC text through") {
-    graft.functions.NfcNormalize.register(spark)
     val decomposed = "cafe\u0301 re\u0301sume\u0301" // e + combining acute
     val composed = "caf\u00e9 r\u00e9sum\u00e9" // precomposed
     val cases = Seq(
@@ -116,7 +112,6 @@ class TextFnsSpec extends SparkSpec {
   }
 
   test("langId picks marker languages, CJK, and und") {
-    graft.functions.MarkerWordCounts.register(spark)
     def lid(t: String) = one[String](TextFns.langId(col("text")), t)
     assert(lid("the cat and the dog is in the house") == "en")
     assert(lid("der hund und die katze ist nicht hier") == "de")

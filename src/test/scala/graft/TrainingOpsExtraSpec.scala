@@ -19,7 +19,6 @@ class TrainingOpsExtraSpec extends SparkSpec {
 
   test("minhash estimate: identical docs estimate 1.0, estimates track exact jaccard") {
     import spark.implicits._
-    graft.functions.DocFingerprint.register(spark)
     val near = "alpha beta gamma delta epsilon zeta eta theta iota kappa"
     val docs = Seq(
       (1L, near), (2L, near),                       // identical: J = 1
@@ -130,7 +129,6 @@ class TrainingOpsExtraSpec extends SparkSpec {
 
   test("qd31: integer quotas follow sqrt weights; each stratum fills exactly its quota") {
     import spark.implicits._
-    graft.functions.DocFingerprint.register(spark)
     // strata sizes 9 / 4 / 1 -> weights 3e6 / 2e6 / 1e6, target 7
     // -> quotas (7*3) DIV 6 = 3, (7*2) DIV 6 = 2, 7 DIV 6 = 1
     val docs = (1 to 9).map(i => (i.toLong, "big", s"text b$i")) ++

@@ -18,7 +18,6 @@ class VecDotSpec extends SparkSpec
     try emb.unpersist(blocking = false) finally super.afterAll()
 
   test("vec_dot == HOF fold, bitwise, on the gate corpus") {
-    VecDot.register(spark)
     val paired = emb.select(col("vec_id"), col("embedding"))
       .withColumn("other",
         // deterministic partner: reversed array of the same vector
@@ -43,7 +42,6 @@ class VecDotSpec extends SparkSpec
   }
 
   test("vec_dot matches the pure-Scala reference") {
-    VecDot.register(spark)
     val rows = emb.limit(20).collect().map(r =>
       (r.getAs[Long]("vec_id"),
         r.getAs[scala.collection.Seq[Float]]("embedding").toArray))
@@ -58,7 +56,6 @@ class VecDotSpec extends SparkSpec
   }
 
   test("null semantics match zip_with: length mismatch and null element") {
-    VecDot.register(spark)
     val spark2 = spark
     import spark2.implicits._
     val df = Seq(
@@ -73,7 +70,6 @@ class VecDotSpec extends SparkSpec
   }
 
   test("qe3 parity geometry (1-bit bands) equals exhaustive all-pairs") {
-    VecDot.register(spark)
     val blocked = Similarity
       .embeddingNearDups(emb, threshold = 0.3, nPlanes = 16, nBands = 16)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSeq
