@@ -91,9 +91,14 @@ object Tables {
     *    the fallback for frames read outside this scope.
     */
   def withEventReadConfs[A](s: SparkSession)(body: => A): A =
-    graft.Session.withConfs(s, Seq(
-      "spark.sql.legacy.parquet.nanosAsLong" -> "true",
-      "spark.sql.parquet.inferTimestampNTZ.enabled" -> "false"))(body)
+    graft.Session.withConfs(s, eventReadConfs)(body)
+
+  /** The confs [[withEventReadConfs]] sets, for a streaming drain's
+    * scope ([[graft.streaming.Drain]]).
+    */
+  val eventReadConfs: Seq[(String, String)] = Seq(
+    "spark.sql.legacy.parquet.nanosAsLong" -> "true",
+    "spark.sql.parquet.inferTimestampNTZ.enabled" -> "false")
 
   def documents(s: SparkSession, d: String): DataFrame = table(s, d, "documents")
   def embeddings(s: SparkSession, d: String): DataFrame = table(s, d, "embeddings")

@@ -39,21 +39,6 @@ object JsonlIngest {
       .option("columnNameOfCorruptRecord", "_corrupt_record")
       .json(paths: _*)
 
-  /** qd49 — JSONL round-trip with quarantine: export the documents
-    * corpus as JSONL (`to_json` over the typed struct — map-only),
-    * plant two corrupt lines beside it (one unparseable, one
-    * type-mismatched — the two failure modes PERMISSIVE
-    * distinguishes from good data), read everything back under the
-    * explicit schema, and report the per-language ingest ledger with
-    * the quarantined count as its own `_corrupt` row — the JSONL
-    * twin of the reference's CSV triage (bad files aside, good data
-    * conformed, nothing dropped silently).
-    *
-    * Scale shape: export and parse are both map-only; the only
-    * exchange is the final small-key rollup. The corrupt lines are
-    * planted deterministically, so the DuckDB oracle recomputes the
-    * whole ledger from the source table.
-    */
   /** The two planted corrupt lines — one unparseable, one
     * type-mismatched: the two failure modes PERMISSIVE distinguishes
     * from good data (shared by qd49 and qs38).
@@ -76,6 +61,21 @@ object JsonlIngest {
       .groupBy("bucket")
       .agg(count(lit(1)).as("n"), sum("n_chars").as("total_chars"))
 
+  /** qd49 — JSONL round-trip with quarantine: export the documents
+    * corpus as JSONL (`to_json` over the typed struct — map-only),
+    * plant two corrupt lines beside it (one unparseable, one
+    * type-mismatched — the two failure modes PERMISSIVE
+    * distinguishes from good data), read everything back under the
+    * explicit schema, and report the per-language ingest ledger with
+    * the quarantined count as its own `_corrupt` row — the JSONL
+    * twin of the reference's CSV triage (bad files aside, good data
+    * conformed, nothing dropped silently).
+    *
+    * Scale shape: export and parse are both map-only; the only
+    * exchange is the final small-key rollup. The corrupt lines are
+    * planted deterministically, so the DuckDB oracle recomputes the
+    * whole ledger from the source table.
+    */
   def jsonlRoundtrip(s: SparkSession, dir: String): DataFrame = {
     import s.implicits._
     val root = graft.io.Scratch.qd49Dir(dir)
@@ -98,6 +98,30 @@ object JsonlIngest {
     ledger(parsed).orderBy("bucket")
   }
 
+  /** The documents corpus landed as JSONL under `landing`, as a
+    * stream under the explicit [[DocSchema]], one micro-batch per
+    * landed file.
+    */
+  def docStream(s: SparkSession, landing: String): DataFrame =
+    s.readStream
+      .schema(DocSchema)
+      .option("maxFilesPerTrigger", 1)
+      .json(landing)
+
+  /** Streaming twin of [[readQuarantined]]: the same explicit schema
+    * + PERMISSIVE quarantine contract over a watched landing
+    * directory, one micro-batch per arriving file — the unit a
+    * production drop-folder actually delivers.
+    */
+  def readQuarantinedStream(s: SparkSession, schema: StructType,
+                            landing: String): DataFrame =
+    s.readStream
+      .schema(schema.add("_corrupt_record", StringType))
+      .option("mode", "PERMISSIVE")
+      .option("columnNameOfCorruptRecord", "_corrupt_record")
+      .option("maxFilesPerTrigger", 1)
+      .json(landing)
+
   /** qs38 — STREAMING JSONL corpus ingest with quarantine: the qd49
     * contract on the production ARRIVAL path (VERDICT r10 #10). The
     * corpus lands as JSONL files in a watched directory; a file-source
@@ -113,42 +137,17 @@ object JsonlIngest {
     * Scale shape: the parse is map-only per micro-batch; the only
     * exchange is the small-key ledger rollup whose state is bounded by
     * language cardinality, not corpus size. At 100 TB/day the same
-    * plan runs with a real trigger and a durable sink; AvailableNow +
-    * memory sink is the drain-what's-there gate harness every qs
+    * plan runs with a real trigger and a durable sink; an AvailableNow
+    * memory-sink drain is the drain-what's-there gate harness every qs
     * streaming query uses. The downstream continuation — folding each
     * micro-batch's GOOD rows into the standing dedup index — is
     * [[graft.operators.Dedup.publishRefresh]] per batch; the composed
     * arrival path (quarantine → refresh → labels ≡ full rebuild) is
     * pinned in Round11StreamSpec.
     */
-  /** Streaming twin of [[readQuarantined]]: the same explicit schema
-    * + PERMISSIVE quarantine contract over a watched landing
-    * directory, one micro-batch per arriving file — the unit a
-    * production drop-folder actually delivers.
-    */
-  def readQuarantinedStream(s: SparkSession, schema: StructType,
-                            landing: String): DataFrame =
-    s.readStream
-      .schema(schema.add("_corrupt_record", StringType))
-      .option("mode", "PERMISSIVE")
-      .option("columnNameOfCorruptRecord", "_corrupt_record")
-      .option("maxFilesPerTrigger", 1)
-      .json(landing)
-
-  def streamLedgerAvailableNow(s: SparkSession, landing: String,
-                               queryName: String): DataFrame =
-    graft.streaming.EventStream.withShufflePartitions(s, 8) {
-      // state-store fleet sizing, the qs8 measurement
-      val stream = readQuarantinedStream(s, DocSchema, landing)
-      val q = ledger(stream).writeStream
-        .outputMode("complete")
-        .format("memory")
-        .queryName(queryName)
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      s.table(queryName)
-    }
+  def streamLedgerAvailableNow(s: SparkSession, landing: String): DataFrame =
+    graft.streaming.Drain.memory(s,
+      ledger(readQuarantinedStream(s, DocSchema, landing)), "complete")
 
   /** Land the corpus export + planted corrupt file in qs38's single
     * watched directory (file names sort the corrupt file LAST — the
@@ -169,23 +168,9 @@ object JsonlIngest {
             .getBytes(java.nio.charset.StandardCharsets.UTF_8)): Unit
     }
 
-  private val gateRuns = new java.util.concurrent.atomic.AtomicLong(0L)
-
   /** qs38's gate form: land, drain, present qd49's exact output shape
     * (shared oracle — see [[streamLedgerAvailableNow]]).
-    *
-    * View lifecycle (ADVICE r11): the ledger is language-bucket-sized,
-    * so the memory-sink table is eagerly checkpointed and its temp
-    * view dropped BEFORE returning — zero sink tables retained on the
-    * driver between invocations, and the returned frame stays valid
-    * no matter when (or whether) the caller consumes it.
     */
-  def jsonlStreamGate(s: SparkSession, dir: String): DataFrame = {
-    val name = s"qs38_jsonl_${gateRuns.incrementAndGet()}"
-    val out = streamLedgerAvailableNow(s, landJsonl(s, dir), name)
-      .orderBy("bucket")
-      .localCheckpoint()
-    s.catalog.dropTempView(name)
-    out
-  }
+  def jsonlStreamGate(s: SparkSession, dir: String): DataFrame =
+    streamLedgerAvailableNow(s, landJsonl(s, dir)).orderBy("bucket")
 }

@@ -1,10 +1,10 @@
 package graft.streaming
 
 import graft.core.Tables
+import graft.ingest.JsonlIngest.docStream
 import graft.operators.{Dedup, EditJoin, TrainingOps, VecAdmission}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
 
 /** STREAMING near-dup admission — the production arrival path's
   * dedup gate. New documents land as JSONL files in a drop folder;
@@ -80,20 +80,9 @@ object Admission {
     val bands = TrainingOps.corpusBands(s, dir)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val landing = landBatchJsonl(s, dir)
-    try EventStream.withShufflePartitions(s, 8) {
-      val stream = s.readStream
-        .schema(graft.ingest.JsonlIngest.DocSchema)
-        .option("maxFilesPerTrigger", 1)
-        .json(landing)
-      val q = stream.writeStream
-        .foreachBatch { (df: DataFrame, batchId: Long) =>
-          Dedup.admitAgainst(corpus, bands, df, threshold = 0.9)
-            .write.mode("overwrite").parquet(s"$outRoot/batch=$batchId")
-          ()
-        }
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
+    try Drain.foreachBatch(s, docStream(s, landing)) { (df, batchId) =>
+      Dedup.admitAgainst(corpus, bands, df, threshold = 0.9)
+        .write.mode("overwrite").parquet(s"$outRoot/batch=$batchId")
     } finally {
       corpus.unpersist(blocking = false)
       bands.unpersist(blocking = false)
@@ -103,22 +92,6 @@ object Admission {
       .orderBy("doc_id")
   }
 
-  /** qs44 — the EDIT-DISTANCE admission gate on the same arrival
-    * path: each micro-batch of arriving docs probes the STANDING
-    * corpus window/signature artifacts (qd69's
-    * [[graft.operators.EditJoin.editAdmission]]) and writes one
-    * best-partner verdict per doc to the idempotent per-batch-id
-    * sink. Shares qs39's landing (one export, two gates) and its
-    * batch ≡ stream argument: a verdict depends only on (that doc,
-    * the standing index), so the union across micro-batches equals
-    * qd69's one-shot batch run for ANY file split, and qd69's
-    * exhaustive oracle carries over verbatim.
-    *
-    * Together with qs39 this is the production admission stack: the
-    * MinHash gate catches shingle-level near-dups, this one the
-    * small-patch edits set-based blocking can miss; both are
-    * O(arriving batch) against stored artifacts.
-    */
   /** qs45 — the VECTOR admission gate on the same arrival path: each
     * micro-batch of arriving docs joins its embeddings (vec_id =
     * doc_id, the shared id space) and probes the STANDING corpus
@@ -155,25 +128,14 @@ object Admission {
     val emb = Tables.embeddings(s, dir)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val landing = landBatchJsonl(s, dir)
-    try EventStream.withShufflePartitions(s, 8) {
-      val stream = s.readStream
-        .schema(graft.ingest.JsonlIngest.DocSchema)
-        .option("maxFilesPerTrigger", 1)
-        .json(landing)
-      val q = stream.writeStream
-        .foreachBatch { (df: DataFrame, batchId: Long) =>
-          val arrivals = emb
-            .join(df.select(col("doc_id").as("vec_id")), "vec_id")
-            .select(col("vec_id").as("query_id"),
-              col("embedding").as("q_emb"))
-          VecAdmission.admit(arrivals, cells, codes, corpus, model, sq,
-              k = 10, nProbe = model.k, shortlist = Int.MaxValue)
-            .write.mode("overwrite").parquet(s"$outRoot/batch=$batchId")
-          ()
-        }
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
+    try Drain.foreachBatch(s, docStream(s, landing)) { (df, batchId) =>
+      val arrivals = emb
+        .join(df.select(col("doc_id").as("vec_id")), "vec_id")
+        .select(col("vec_id").as("query_id"),
+          col("embedding").as("q_emb"))
+      VecAdmission.admit(arrivals, cells, codes, corpus, model, sq,
+          k = 10, nProbe = model.k, shortlist = Int.MaxValue)
+        .write.mode("overwrite").parquet(s"$outRoot/batch=$batchId")
     } finally {
       cells.unpersist(blocking = false)
       codes.unpersist(blocking = false)
@@ -185,6 +147,22 @@ object Admission {
       .orderBy("query_id", "rnk", "vec_id")
   }
 
+  /** qs44 — the EDIT-DISTANCE admission gate on the same arrival
+    * path: each micro-batch of arriving docs probes the STANDING
+    * corpus window/signature artifacts (qd69's
+    * [[graft.operators.EditJoin.editAdmission]]) and writes one
+    * best-partner verdict per doc to the idempotent per-batch-id
+    * sink. Shares qs39's landing (one export, two gates) and its
+    * batch ≡ stream argument: a verdict depends only on (that doc,
+    * the standing index), so the union across micro-batches equals
+    * qd69's one-shot batch run for ANY file split, and qd69's
+    * exhaustive oracle carries over verbatim.
+    *
+    * Together with qs39 this is the production admission stack: the
+    * MinHash gate catches shingle-level near-dups, this one the
+    * small-patch edits set-based blocking can miss; both are
+    * O(arriving batch) against stored artifacts.
+    */
   def editAdmissionGate(s: SparkSession, dir: String): DataFrame = {
     import graft.operators.EditJoin
     val outRoot = graft.io.Scratch.qs39Dir(dir) + "/edit_verdicts"
@@ -200,21 +178,9 @@ object Admission {
     val csigs = EditJoin.storedSignatures(s, dir, corpus)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val landing = landBatchJsonl(s, dir)
-    try EventStream.withShufflePartitions(s, 8) {
-      val stream = s.readStream
-        .schema(graft.ingest.JsonlIngest.DocSchema)
-        .option("maxFilesPerTrigger", 1)
-        .json(landing)
-      val q = stream.writeStream
-        .foreachBatch { (df: DataFrame, batchId: Long) =>
-          EditJoin.editAdmission(corpus, windex, csigs, df,
-              "doc_id", "text")
-            .write.mode("overwrite").parquet(s"$outRoot/batch=$batchId")
-          ()
-        }
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
+    try Drain.foreachBatch(s, docStream(s, landing)) { (df, batchId) =>
+      EditJoin.editAdmission(corpus, windex, csigs, df, "doc_id", "text")
+        .write.mode("overwrite").parquet(s"$outRoot/batch=$batchId")
     } finally {
       corpus.unpersist(blocking = false)
       windex.unpersist(blocking = false)
@@ -325,38 +291,27 @@ object Admission {
     var deltaW = windex.limit(0)
     var deltaS = csigs.limit(0)
     val landing = landGenBatchesJsonl(s, dir)
-    try EventStream.withShufflePartitions(s, 8) {
-      val stream = s.readStream
-        .schema(graft.ingest.JsonlIngest.DocSchema)
-        .option("maxFilesPerTrigger", 1)
-        .json(landing)
-      val q = stream.writeStream
-        .foreachBatch { (df: DataFrame, batchId: Long) =>
-          val curDocs = corpus.select(col("doc_id"), col("text"))
-            .unionByName(deltaDocs)
-          val v = EditJoin.editAdmission(curDocs,
-              windex.unionByName(deltaW), csigs.unionByName(deltaS),
-              df, "doc_id", "text")
-            .withColumn("gen", lit(batchId + 1).cast("int"))
-            .select("doc_id", "gen", "dup_of", "edit_dist", "is_dup")
-          v.write.mode("overwrite").parquet(s"$outRoot/batch=$batchId")
-          // sequential publish: survivors from the sink just written
-          // fold into the standing state BEFORE the next batch
-          val admitted = df.join(
-            s.read.parquet(s"$outRoot/batch=$batchId")
-              .filter(!col("is_dup")).select("doc_id"), "doc_id")
-          val (nw, ns) = EditJoin.publishAdmitted(deltaW, deltaS,
-            admitted, "doc_id", "text")
-          deltaW = nw.localCheckpoint()
-          deltaS = ns.localCheckpoint()
-          deltaDocs = deltaDocs
-            .unionByName(admitted.select("doc_id", "text"))
-            .localCheckpoint()
-          ()
-        }
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
+    try Drain.foreachBatch(s, docStream(s, landing)) { (df, batchId) =>
+      val curDocs = corpus.select(col("doc_id"), col("text"))
+        .unionByName(deltaDocs)
+      val v = EditJoin.editAdmission(curDocs,
+          windex.unionByName(deltaW), csigs.unionByName(deltaS),
+          df, "doc_id", "text")
+        .withColumn("gen", lit(batchId + 1).cast("int"))
+        .select("doc_id", "gen", "dup_of", "edit_dist", "is_dup")
+      v.write.mode("overwrite").parquet(s"$outRoot/batch=$batchId")
+      // sequential publish: survivors from the sink just written
+      // fold into the standing state BEFORE the next batch
+      val admitted = df.join(
+        s.read.parquet(s"$outRoot/batch=$batchId")
+          .filter(!col("is_dup")).select("doc_id"), "doc_id")
+      val (nw, ns) = EditJoin.publishAdmitted(deltaW, deltaS,
+        admitted, "doc_id", "text")
+      deltaW = nw.localCheckpoint()
+      deltaS = ns.localCheckpoint()
+      deltaDocs = deltaDocs
+        .unionByName(admitted.select("doc_id", "text"))
+        .localCheckpoint()
     } finally {
       corpus.unpersist(blocking = false)
       windex.unpersist(blocking = false)
@@ -424,84 +379,73 @@ object Admission {
     val emb = Tables.embeddings(s, dir)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val landing = landBatchJsonl(s, dir)
-    try EventStream.withShufflePartitions(s, 8) {
-      val stream = s.readStream
-        .schema(graft.ingest.JsonlIngest.DocSchema)
-        .option("maxFilesPerTrigger", 1)
-        .json(landing)
-      // The three gate legs are INDEPENDENT until the verdict join —
-      // each reads only (the batch, its own standing artifacts) — but
-      // the minhash leg runs construction-time jobs (admitAgainst's
-      // eager chain) that the lazy edit/vector legs used to queue
-      // BEHIND inside the single write job. The r18 core-scaling
-      // measurement shows this tier is job-barrier-bound at gate
-      // scale, so the fix is fewer serialized barriers, not faster
-      // stages: materialize the edit and vector legs as their own
-      // checkpoint jobs on side threads (guide §2.6 — concurrent jobs
-      // back-fill each other's straggler tails; 2-3 in flight is the
-      // guide's own sizing) while the minhash chain runs, then the
-      // sink job is a three-way join of batch-grain checkpoints.
-      // Results are identical by construction: the same three leg
-      // frames meet the same assembly, only the job schedule moved.
-      val legPool = java.util.concurrent.Executors.newFixedThreadPool(2)
-      val legEc = scala.concurrent.ExecutionContext.fromExecutorService(legPool)
-      val q = stream.writeStream
-        .foreachBatch { (df: DataFrame, batchId: Long) =>
-          // three gate pipelines consume the batch: parse it once
-          val d = df.persist(
-            org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-          try {
-            val edF = scala.concurrent.Future {
-              EditJoin.editAdmission(corpus, windex, csigs, d,
-                  "doc_id", "text")
-                .select(col("doc_id"), col("is_dup").as("edit_dup"))
-                .localCheckpoint()
-            }(legEc)
-            val vecF = scala.concurrent.Future {
-              val arrivals = emb
-                .join(d.select(col("doc_id").as("vec_id")), "vec_id")
-                .select(col("vec_id").as("query_id"),
-                  col("embedding").as("q_emb"))
-              VecAdmission.admit(arrivals, cells, codes,
-                  corpusEmb, model, sq,
-                  k = 1, nProbe = math.min(nProbe, model.k),
-                  shortlist = shortlist)
-                .groupBy("query_id").agg(max("sim").as("vec_top_sim"))
-                .withColumnRenamed("query_id", "doc_id")
-                .localCheckpoint()
-            }(legEc)
-            val mh = Dedup.admitAgainst(corpus, bands, d, threshold = 0.9)
-              .select(col("doc_id"), col("is_dup").as("minhash_dup"))
-            val ed = scala.concurrent.Await.result(
-              edF, scala.concurrent.duration.Duration.Inf)
-            val vecTop = scala.concurrent.Await.result(
-              vecF, scala.concurrent.duration.Duration.Inf)
-            try {
-              // a doc with no embedding has no vector verdict: the
-              // semantic leg coalesces to false (mirrored in the oracle)
-              val semantic = coalesce(
-                col("vec_top_sim") >= VecNeighborThreshold, lit(false))
-              mh.join(ed, "doc_id")
-                .join(vecTop, Seq("doc_id"), "left")
-                .select(col("doc_id"), col("minhash_dup"), col("edit_dup"),
-                  semantic.as("vec_neighbor"), col("vec_top_sim"),
-                  (!(col("minhash_dup") || col("edit_dup") || semantic))
-                    .as("admit"))
-                .write.mode("overwrite").parquet(s"$outRoot/batch=$batchId")
-            } finally {
-              // batch-grain checkpoint blocks, released once the sink
-              // job has consumed them (the minhashNearDups lifecycle)
-              Dedup.unpersistCheckpointed(ed)
-              Dedup.unpersistCheckpointed(vecTop)
-            }
-          } finally d.unpersist(blocking = false)
-          ()
+    // The three gate legs are INDEPENDENT until the verdict join —
+    // each reads only (the batch, its own standing artifacts) — but
+    // the minhash leg runs construction-time jobs (admitAgainst's
+    // eager chain) that the lazy edit/vector legs used to queue
+    // BEHIND inside the single write job. The r18 core-scaling
+    // measurement shows this tier is job-barrier-bound at gate
+    // scale, so the fix is fewer serialized barriers, not faster
+    // stages: materialize the edit and vector legs as their own
+    // checkpoint jobs on side threads (guide §2.6 — concurrent jobs
+    // back-fill each other's straggler tails; 2-3 in flight is the
+    // guide's own sizing) while the minhash chain runs, then the
+    // sink job is a three-way join of batch-grain checkpoints.
+    // Results are identical by construction: the same three leg
+    // frames meet the same assembly, only the job schedule moved.
+    val legPool = java.util.concurrent.Executors.newFixedThreadPool(2)
+    val legEc = scala.concurrent.ExecutionContext.fromExecutorService(legPool)
+    try Drain.foreachBatch(s, docStream(s, landing)) { (df, batchId) =>
+      // three gate pipelines consume the batch: parse it once
+      val d = df.persist(
+        org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      try {
+        val edF = scala.concurrent.Future {
+          EditJoin.editAdmission(corpus, windex, csigs, d,
+              "doc_id", "text")
+            .select(col("doc_id"), col("is_dup").as("edit_dup"))
+            .localCheckpoint()
+        }(legEc)
+        val vecF = scala.concurrent.Future {
+          val arrivals = emb
+            .join(d.select(col("doc_id").as("vec_id")), "vec_id")
+            .select(col("vec_id").as("query_id"),
+              col("embedding").as("q_emb"))
+          VecAdmission.admit(arrivals, cells, codes,
+              corpusEmb, model, sq,
+              k = 1, nProbe = math.min(nProbe, model.k),
+              shortlist = shortlist)
+            .groupBy("query_id").agg(max("sim").as("vec_top_sim"))
+            .withColumnRenamed("query_id", "doc_id")
+            .localCheckpoint()
+        }(legEc)
+        val mh = Dedup.admitAgainst(corpus, bands, d, threshold = 0.9)
+          .select(col("doc_id"), col("is_dup").as("minhash_dup"))
+        val ed = scala.concurrent.Await.result(
+          edF, scala.concurrent.duration.Duration.Inf)
+        val vecTop = scala.concurrent.Await.result(
+          vecF, scala.concurrent.duration.Duration.Inf)
+        try {
+          // a doc with no embedding has no vector verdict: the
+          // semantic leg coalesces to false (mirrored in the oracle)
+          val semantic = coalesce(
+            col("vec_top_sim") >= VecNeighborThreshold, lit(false))
+          mh.join(ed, "doc_id")
+            .join(vecTop, Seq("doc_id"), "left")
+            .select(col("doc_id"), col("minhash_dup"), col("edit_dup"),
+              semantic.as("vec_neighbor"), col("vec_top_sim"),
+              (!(col("minhash_dup") || col("edit_dup") || semantic))
+                .as("admit"))
+            .write.mode("overwrite").parquet(s"$outRoot/batch=$batchId")
+        } finally {
+          // batch-grain checkpoint blocks, released once the sink
+          // job has consumed them (the minhashNearDups lifecycle)
+          Dedup.unpersistCheckpointed(ed)
+          Dedup.unpersistCheckpointed(vecTop)
         }
-        .trigger(Trigger.AvailableNow())
-        .start()
-      try q.awaitTermination()
-      finally legPool.shutdown()
+      } finally d.unpersist(blocking = false)
     } finally {
+      legPool.shutdown()
       Seq(corpus, bands, windex, csigs, cells, codes, corpusEmb, emb)
         .foreach(_.unpersist(blocking = false))
     }

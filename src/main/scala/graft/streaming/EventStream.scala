@@ -1,15 +1,14 @@
 package graft.streaming
 
-import graft.core.Fns
+import graft.core.{Fns, Tables}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
 
 /** Structured Streaming versions of the event analytics — the
   * incremental path for the same semantics as
   * [[graft.operators.Events]] (SURVEY.md §2.8: the reference is
-  * batch-only with a file lifecycle; `Trigger.AvailableNow` over a
-  * file source reproduces exactly that consume-what's-there model,
+  * batch-only with a file lifecycle; an AvailableNow [[Drain]] over
+  * a file source reproduces exactly that consume-what's-there model,
   * and the same code keeps running when files keep arriving).
   *
   * Watermarking: event-time with a 1-hour allowance; at
@@ -19,41 +18,30 @@ import org.apache.spark.sql.streaming.Trigger
   */
 object EventStream {
 
-  /** Streaming hourly stats over a parquet events directory; drains
-    * everything available, writes to an in-memory table, returns the
-    * result. Production callers would swap the sink and trigger.
+  /** A parquet events directory as a stream, `ts` normalized like
+    * every other event read ([[Tables.normalizeTs]]). The schema is
+    * sniffed from the files, so build it inside a drain scoped with
+    * [[Tables.eventReadConfs]].
     */
-  def hourlyStatsAvailableNow(spark: SparkSession, eventsDir: String,
-                              queryName: String): DataFrame =
-    graft.core.Tables.withEventReadConfs(spark) {
-    // 8 shuffle partitions => 8 state-store instances: the same
-    // per-batch store-fleet overhead qs15 measured (32 partitions of
-    // byte-small state are pure startup cost at drain scale; a
-    // production deployment sizes this to cluster cores)
-    withShufflePartitions(spark, 8) {
-    val schema = spark.read.parquet(eventsDir).schema
-    val stream = graft.core.Tables.normalizeTs(
-      spark.readStream.schema(schema).parquet(eventsDir))
+  private[graft] def source(s: SparkSession, eventsDir: String): DataFrame =
+    Tables.normalizeTs(s.readStream
+      .schema(s.read.parquet(eventsDir).schema).parquet(eventsDir))
+
+  /** Streaming hourly stats over a parquet events directory; drains
+    * everything available and returns the result. Production callers
+    * would swap the sink and trigger.
+    */
+  def hourlyStatsAvailableNow(spark: SparkSession,
+                              eventsDir: String): DataFrame =
+    Drain.memory(spark, source(spark, eventsDir)
       .withWatermark("ts", "1 hour")
       .groupBy(window(col("ts"), "1 hour"), col("event_type"))
       .agg(count(lit(1)).as("n"),
         Fns.moneySum(col("value")).cast("double").as("total_value"))
       .select(
         date_format(col("window.start"), "yyyy-MM-dd HH:00:00").as("hour"),
-        col("event_type"), col("n"), col("total_value"))
-    val q = stream.writeStream
-      .outputMode("complete")
-      .format("memory")
-      .queryName(queryName)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    spark.table(queryName)
-    // confs restored here — the AvailableNow drain planned every
-    // micro-batch inside the scope (same discipline as Tables.events;
-    // the unscoped set-and-forget was the r3 #3 defect class)
-    }
-    }
+        col("event_type"), col("n"), col("total_value")),
+      "complete", Tables.eventReadConfs)
 
   /** Streaming exact dedup: `dropDuplicates` keyed on `event_id`
     * under an event-time watermark. Honest state caveat: because the
@@ -67,9 +55,8 @@ object EventStream {
     * re-emits) — StreamingSpec pins the three-way contract
     * difference.
     */
-  def dedupAvailableNow(spark: SparkSession, eventsDir: String,
-                        queryName: String): DataFrame =
-    drainDedup(spark, eventsDir, queryName, bounded = false)
+  def dedupAvailableNow(spark: SparkSession, eventsDir: String): DataFrame =
+    dedupStream(spark, eventsDir, bounded = false)
 
   /** The watermarked dedup frame both drain entry points share.
     * `bounded = true` → `dropDuplicatesWithinWatermark` (state expires
@@ -80,29 +67,11 @@ object EventStream {
     */
   private[graft] def dedupFrame(spark: SparkSession, eventsDir: String,
                                 bounded: Boolean): DataFrame = {
-    val schema = spark.read.parquet(eventsDir).schema
-    val base = graft.core.Tables.normalizeTs(
-      spark.readStream.schema(schema).parquet(eventsDir))
-      .withWatermark("ts", "1 hour")
+    val base = source(spark, eventsDir).withWatermark("ts", "1 hour")
     val deduped = if (bounded) base.dropDuplicatesWithinWatermark("event_id")
                   else base.dropDuplicates("event_id")
     deduped.select(col("event_id"), col("user_id"), col("event_type"))
   }
-
-  private def drainDedup(spark: SparkSession, eventsDir: String,
-                         queryName: String, bounded: Boolean): DataFrame =
-    graft.core.Tables.withEventReadConfs(spark) {
-    withShufflePartitions(spark, 8) {  // state-store fleet sizing, see qs8
-    val q = dedupFrame(spark, eventsDir, bounded).writeStream
-      .outputMode("append")
-      .format("memory")
-      .queryName(queryName)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    spark.table(queryName)
-    }
-    }
 
   /** Whether [[dedupStream]] defaults to the bounded-state form.
     * `true` is the deliberate library default (VERDICT r6 #5): a user
@@ -119,9 +88,10 @@ object EventStream {
     * (viable only for bounded key spaces — see [[dedupAvailableNow]]'s
     * Scaladoc for the three-way contract discussion).
     */
-  def dedupStream(spark: SparkSession, eventsDir: String, queryName: String,
+  def dedupStream(spark: SparkSession, eventsDir: String,
                   bounded: Boolean = dedupDefaultBounded): DataFrame =
-    drainDedup(spark, eventsDir, queryName, bounded)
+    Drain.memory(spark, dedupFrame(spark, eventsDir, bounded), "append",
+      Tables.eventReadConfs)
 
   /** Streaming dedup through `dropDuplicatesWithinWatermark`
     * (Spark 3.5+) — the BOUNDED-STATE dedup contract: state keys on
@@ -137,8 +107,8 @@ object EventStream {
     * on the gate corpus (unique event_ids, qs9's argument).
     */
   def dedupWithinWatermarkAvailableNow(spark: SparkSession,
-      eventsDir: String, queryName: String): DataFrame =
-    drainDedup(spark, eventsDir, queryName, bounded = true)
+      eventsDir: String): DataFrame =
+    dedupStream(spark, eventsDir, bounded = true)
 
   /** Streaming stream-static join: every micro-batch of events joins
     * the STATIC customer dimension (broadcast — the dim is read once
@@ -151,28 +121,15 @@ object EventStream {
     * result is bit-equal to the batch join+groupBy (the oracle).
     */
   def segmentSpendAvailableNow(spark: SparkSession, eventsDir: String,
-                               customers: DataFrame,
-                               queryName: String): DataFrame =
-    graft.core.Tables.withEventReadConfs(spark) {
-    withShufflePartitions(spark, 8) {  // state-store fleet sizing, see qs8
-    val schema = spark.read.parquet(eventsDir).schema
-    val stream = spark.readStream.schema(schema).parquet(eventsDir)
+                               customers: DataFrame): DataFrame =
+    Drain.memory(spark, source(spark, eventsDir)
       .select(col("user_id"), col("value"))
       .join(broadcast(customers),
         col("user_id") === customers("c_custkey"))
       .groupBy(col("c_mktsegment").as("segment"))
       .agg(count(lit(1)).as("n"),
-        Fns.moneySum(col("value")).cast("double").as("total_value"))
-    val q = stream.writeStream
-      .outputMode("complete")
-      .format("memory")
-      .queryName(queryName)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    spark.table(queryName)
-    }
-    }
+        Fns.moneySum(col("value")).cast("double").as("total_value")),
+      "complete", Tables.eventReadConfs)
 
   /** STREAM-STREAM join: clicks and purchases are two live streams;
     * each purchase attributes to every click by the same user in the
@@ -183,47 +140,29 @@ object EventStream {
     * state stays bounded by stream rate × window — the property that
     * separates a runnable 100 TB/day stream-stream join from one
     * whose state grows forever. Append mode: matched pairs emit as
-    * both sides arrive.
+    * both sides arrive. The join runs four state stores per shuffle
+    * partition (left/right × keyToNumValues/keyWithIndexToValue), the
+    * store fleet [[Drain]]'s 8 partitions are sized against.
     */
-  def clickAttributionAvailableNow(spark: SparkSession, eventsDir: String,
-                                   queryName: String): DataFrame =
-    graft.core.Tables.withEventReadConfs(spark) {
-    // a stream-stream join runs FOUR state stores per shuffle
-    // partition (left/right × keyToNumValues/keyWithIndexToValue);
-    // at the session's 32 partitions that is 128 store instances
-    // checkpointing per micro-batch — pure fixed overhead at gate
-    // scale (measured 7.0 s -> the store count, not the data, was
-    // the bill). 8 partitions keeps the same per-key parallelism
-    // shape at 1/4 the store fleet; a real 100 TB deployment sizes
-    // this to cluster cores — the conf is scoped-and-restored, not
-    // leaked into the session.
-    withShufflePartitions(spark, 8) {
-    val schema = spark.read.parquet(eventsDir).schema
-    def src = graft.core.Tables.normalizeTs(
-      spark.readStream.schema(schema).parquet(eventsDir))
-    val clicks = src.filter(col("event_type") === "click")
-      .select(col("event_id").as("click_id"), col("user_id"),
-        col("ts").as("c_ts"))
-      .withWatermark("c_ts", "1 hour")
-    val purchases = src.filter(col("event_type") === "purchase")
-      .select(col("event_id").as("purchase_id"),
-        col("user_id").as("p_user"), col("ts").as("p_ts"))
-      .withWatermark("p_ts", "1 hour")
-    val joined = clicks.join(purchases,
-        col("user_id") === col("p_user") &&
-          col("p_ts") >= col("c_ts") &&
-          col("p_ts") <= col("c_ts") + expr("INTERVAL 30 MINUTES"))
-      .select(col("click_id"), col("purchase_id"), col("user_id"))
-    val q = joined.writeStream
-      .outputMode("append")
-      .format("memory")
-      .queryName(queryName)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    spark.table(queryName)
-    }
-    }
+  def clickAttributionAvailableNow(spark: SparkSession,
+                                   eventsDir: String): DataFrame =
+    Drain.memory(spark, {
+      val clicks = source(spark, eventsDir)
+        .filter(col("event_type") === "click")
+        .select(col("event_id").as("click_id"), col("user_id"),
+          col("ts").as("c_ts"))
+        .withWatermark("c_ts", "1 hour")
+      val purchases = source(spark, eventsDir)
+        .filter(col("event_type") === "purchase")
+        .select(col("event_id").as("purchase_id"),
+          col("user_id").as("p_user"), col("ts").as("p_ts"))
+        .withWatermark("p_ts", "1 hour")
+      clicks.join(purchases,
+          col("user_id") === col("p_user") &&
+            col("p_ts") >= col("c_ts") &&
+            col("p_ts") <= col("c_ts") + expr("INTERVAL 30 MINUTES"))
+        .select(col("click_id"), col("purchase_id"), col("user_id"))
+    }, "append", Tables.eventReadConfs)
 
   /** foreachBatch parquet sink with per-batch-id IDEMPOTENCE: each
     * micro-batch overwrites its own `batch=<id>` directory, so a
@@ -237,24 +176,17 @@ object EventStream {
     * a column, pruned away here).
     */
   def foreachBatchSink(spark: SparkSession, eventsDir: String,
-                       outDir: String): DataFrame =
-    graft.core.Tables.withEventReadConfs(spark) {
+                       outDir: String): DataFrame = {
     org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(outDir))
-    val schema = spark.read.parquet(eventsDir).schema
-    val stream = spark.readStream.schema(schema).parquet(eventsDir)
-      .select(col("event_id"), col("user_id"), col("event_type"),
-        col("value"))
-    val q = stream.writeStream
-      .foreachBatch { (df: DataFrame, batchId: Long) =>
-        df.write.mode("overwrite").parquet(s"$outDir/batch=$batchId")
-        ()
-      }
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
+    Drain.foreachBatch(spark, source(spark, eventsDir)
+        .select(col("event_id"), col("user_id"), col("event_type"),
+          col("value")),
+      Tables.eventReadConfs) { (df, batchId) =>
+      df.write.mode("overwrite").parquet(s"$outDir/batch=$batchId")
+    }
     spark.read.parquet(outDir)
       .select("event_id", "user_id", "event_type", "value")
-    }
+  }
 
   /** qs16 — gate-visible foreachBatch sink roundtrip: event_ids are
     * unique, so the sink's union across batch dirs provably equals
@@ -266,45 +198,14 @@ object EventStream {
       graft.io.Scratch.qs16Dir(dir))
       .orderBy("event_id")
 
-  /** Run `body` with spark.sql.shuffle.partitions overridden, then
-    * restore it ([[graft.Session.withConfs]] — a leaked session conf
-    * was the r3 #3 defect class). The streaming drain completes inside
-    * the scope, so every micro-batch plans with the override.
-    */
-  private[graft] def withShufflePartitions[A](s: SparkSession, n: Int)
-      (body: => A): A =
-    graft.Session.withConfs(s,
-      Seq("spark.sql.shuffle.partitions" -> n.toString))(body)
-
-  /** Memory-sink names must be unique per start; one counter per JVM
-    * covers repeated Bench runs. Each family drops its previous run's
-    * view before starting the next — without that every invocation
-    * pins a full result snapshot in driver memory for the JVM
-    * lifetime (qs9's is the whole events projection).
-    */
-  private val gateRuns = new java.util.concurrent.atomic.AtomicLong(0L)
-  private val lastHourlyView =
-    new java.util.concurrent.atomic.AtomicReference[String](null)
-  private val lastDedupWwView =
-    new java.util.concurrent.atomic.AtomicReference[String](null)
-  private val lastDedupView =
-    new java.util.concurrent.atomic.AtomicReference[String](null)
-  private val lastSegmentView =
-    new java.util.concurrent.atomic.AtomicReference[String](null)
-  private val lastAttribView =
-    new java.util.concurrent.atomic.AtomicReference[String](null)
-
   /** qs8 — gate-visible streaming hourly stats: drain the events
     * table and present qs1's exact output shape (shared oracle —
     * decimal money sums are order-free, so the incremental
     * aggregation is bit-equal to the batch groupBy).
     */
-  def hourlyStatsGate(s: SparkSession, dir: String): DataFrame = {
-    val name = s"qs8_hourly_${gateRuns.incrementAndGet()}"
-    Option(lastHourlyView.getAndSet(name)).foreach(s.catalog.dropTempView(_))
-    hourlyStatsAvailableNow(s, graft.io.Scratch.ensureEventsLanding(dir), name)
+  def hourlyStatsGate(s: SparkSession, dir: String): DataFrame =
+    hourlyStatsAvailableNow(s, graft.io.Scratch.ensureEventsLanding(dir))
       .orderBy("hour", "event_type")
-  }
 
   /** qs9 — gate-visible streaming exact dedup. event_ids are unique
     * in the gate corpora, so the deduped stream provably equals the
@@ -312,12 +213,9 @@ object EventStream {
     * cannot arise; duplicate-bearing input is covered by
     * StreamingSpec, where arrival order is controlled.
     */
-  def dedupGate(s: SparkSession, dir: String): DataFrame = {
-    val name = s"qs9_dedup_${gateRuns.incrementAndGet()}"
-    Option(lastDedupView.getAndSet(name)).foreach(s.catalog.dropTempView(_))
-    dedupAvailableNow(s, graft.io.Scratch.ensureEventsLanding(dir), name)
+  def dedupGate(s: SparkSession, dir: String): DataFrame =
+    dedupAvailableNow(s, graft.io.Scratch.ensureEventsLanding(dir))
       .orderBy("event_id")
-  }
 
   /** qs20 — gate-visible `dropDuplicatesWithinWatermark` dedup.
     * Unique gate event_ids make it provably the plain projection
@@ -326,36 +224,25 @@ object EventStream {
     * where plain dropDuplicates keeps both and WithinWatermark drops
     * one.
     */
-  def dedupWwGate(s: SparkSession, dir: String): DataFrame = {
-    val name = s"qs20_dedupww_${gateRuns.incrementAndGet()}"
-    Option(lastDedupWwView.getAndSet(name)).foreach(s.catalog.dropTempView(_))
+  def dedupWwGate(s: SparkSession, dir: String): DataFrame =
     dedupWithinWatermarkAvailableNow(
-      s, graft.io.Scratch.ensureEventsLanding(dir), name)
+      s, graft.io.Scratch.ensureEventsLanding(dir))
       .orderBy("event_id")
-  }
 
   /** qs14 — gate-visible streaming stream-static segment spend:
     * drain the events stream against the static customer dim; the
     * oracle is the plain batch join + groupBy.
     */
-  def segmentSpendGate(s: SparkSession, dir: String): DataFrame = {
-    val name = s"qs14_segment_${gateRuns.incrementAndGet()}"
-    Option(lastSegmentView.getAndSet(name)).foreach(s.catalog.dropTempView(_))
+  def segmentSpendGate(s: SparkSession, dir: String): DataFrame =
     segmentSpendAvailableNow(s, graft.io.Scratch.ensureEventsLanding(dir),
-      graft.core.Tables.customer(s, dir).select("c_custkey", "c_mktsegment"),
-      name)
+      Tables.customer(s, dir).select("c_custkey", "c_mktsegment"))
       .orderBy("segment")
-  }
 
   /** qs15 — gate-visible stream-stream click→purchase attribution;
     * the oracle is the batch interval join on the same
     * micros-truncated timestamps.
     */
-  def clickAttributionGate(s: SparkSession, dir: String): DataFrame = {
-    val name = s"qs15_attrib_${gateRuns.incrementAndGet()}"
-    Option(lastAttribView.getAndSet(name)).foreach(s.catalog.dropTempView(_))
-    clickAttributionAvailableNow(s,
-      graft.io.Scratch.ensureEventsLanding(dir), name)
+  def clickAttributionGate(s: SparkSession, dir: String): DataFrame =
+    clickAttributionAvailableNow(s, graft.io.Scratch.ensureEventsLanding(dir))
       .orderBy("click_id", "purchase_id")
-  }
 }

@@ -2,7 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, Trigger}
+import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
 /** Stateful streaming sessionization with custom per-user state
   * (`flatMapGroupsWithState`) — the incremental counterpart of
@@ -10,10 +10,12 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
   *
   * State per user: the running session (id, bounds, counters). An
   * event farther than `gap` from the previous one closes the open
-  * session (emitted) and starts the next. On AvailableNow drain the
-  * final open sessions are flushed via ProcessingTime timeout at
-  * stream end — for the batch-parity spec we emit open sessions too,
-  * then compare against the batch result exactly.
+  * session (emitted) and starts the next. [[sessionizeAvailableNow]]
+  * runs without a timeout (`NoTimeout`): its drain is one micro-batch,
+  * so it emits each user's open session directly with the closed ones,
+  * and the result equals the batch form exactly. The continuous
+  * variant, [[sessionizeStream]], flushes open sessions on an
+  * event-time timeout instead.
   */
 object SessionStream {
 
@@ -150,21 +152,12 @@ object SessionStream {
     * with a watermark and EventTimeTimeout).
     */
   def sessionizeAvailableNow(spark: SparkSession, eventsDir: String,
-                             queryName: String,
                              gapMinutes: Int = 30): DataFrame = {
     import spark.implicits._
-    graft.core.Tables.withEventReadConfs(spark) {
-    // state-store fleet sizing, same measurement as qs8/qs15
-    EventStream.withShufflePartitions(spark, 8) {
     val gapMs = gapMinutes * 60L * 1000L
-    val schema = spark.read.parquet(eventsDir).schema
-
-    val events = graft.core.Tables.normalizeTs(
-        spark.readStream.schema(schema).parquet(eventsDir))
+    Drain.memory(spark, EventStream.source(spark, eventsDir)
       .select(col("user_id"), col("ts"), col("event_id"), col("value"))
       .as[Evt]
-
-    val sessions = events
       .groupByKey(_.user_id)
       .flatMapGroupsWithState[List[SessionState], SessionOut](
         OutputMode.Append, GroupStateTimeout.NoTimeout) {
@@ -196,31 +189,8 @@ object SessionStream {
           (closed ++ cur).iterator.map(s => SessionOut(user, s.sessionId,
             s.n, s.startMs, s.endMs, fromCents(s.valueCents)))
       }
-
-    val q = sessions.writeStream
-      .outputMode("append")
-      .format("memory")
-      .queryName(queryName)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    spark.table(queryName)
-    // confs restored here: AvailableNow fully drained inside the scope,
-    // so no micro-batch ever plans without the nanos conf
-    }
-    }
+      .toDF(), "append", graft.core.Tables.eventReadConfs)
   }
-
-  /** Memory-sink names must be unique per start (a terminated query's
-    * name stays registered); one counter per JVM covers repeated
-    * Bench runs. The previous run's view is dropped before the next
-    * starts — without that, every invocation would pin a full result
-    * snapshot in driver memory for the JVM lifetime (the consumer has
-    * materialized by then; same contract as Similarity's parity base).
-    */
-  private val gateRuns = new java.util.concurrent.atomic.AtomicLong(0L)
-  private val lastGateView =
-    new java.util.concurrent.atomic.AtomicReference[String](null)
 
   /** qs7 — the gate-visible declared form of streaming sessionization
     * (the one north-star family that had zero gate rows — VERDICT r5
@@ -232,10 +202,8 @@ object SessionStream {
     * accumulate as decimal cents in stream state ([[cents]]),
     * matching the batch DECIMAL(18,2) sum bit for bit.
     */
-  def sessionizeGate(s: SparkSession, dir: String): DataFrame = {
-    val name = s"qs7_sessions_${gateRuns.incrementAndGet()}"
-    Option(lastGateView.getAndSet(name)).foreach(s.catalog.dropTempView(_))
-    sessionizeAvailableNow(s, graft.io.Scratch.ensureEventsLanding(dir), name)
+  def sessionizeGate(s: SparkSession, dir: String): DataFrame =
+    sessionizeAvailableNow(s, graft.io.Scratch.ensureEventsLanding(dir))
       .select(col("user_id"), col("session_id"), col("n_events"),
         date_format(timestamp_millis(col("start_ms")),
           "yyyy-MM-dd HH:mm:ss").as("session_start"),
@@ -243,7 +211,6 @@ object SessionStream {
           "yyyy-MM-dd HH:mm:ss").as("session_end"),
         col("session_value"))
       .orderBy("user_id", "session_id")
-  }
 
   /** qs12 — NATIVE streaming session windows: the same
     * `session_window` expression qs10 runs in batch, executed by the
@@ -268,43 +235,25 @@ object SessionStream {
     * streaming aggregate.
     */
   def sessionWindowStream(spark: SparkSession, eventsDir: String,
-                          queryName: String,
                           gapMinutes: Int = 30): DataFrame =
-    graft.core.Tables.withEventReadConfs(spark) {
-      // state-store fleet sizing, same measurement as qs8/qs15
-      EventStream.withShufflePartitions(spark, 8) {
-      val schema = spark.read.parquet(eventsDir).schema
-      val sessions = graft.core.Tables.normalizeTs(
-          spark.readStream.schema(schema).parquet(eventsDir))
-        .select(col("user_id"),
-          date_trunc("second", col("ts")).as("tsec"), col("value"))
-        .groupBy(col("user_id"),
-          session_window(col("tsec"), s"$gapMinutes minutes"))
-        .agg(count(lit(1)).as("n_events"),
-          graft.core.Fns.moneySum(col("value")).cast("double")
-            .as("session_value"))
-        .select(col("user_id"),
-          date_format(col("session_window.start"), "yyyy-MM-dd HH:mm:ss")
-            .as("session_start"),
-          date_format(col("session_window.end"), "yyyy-MM-dd HH:mm:ss")
-            .as("session_end"),
-          col("n_events"), col("session_value"))
-      val q = sessions.writeStream
-        .outputMode("complete")
-        .format("memory")
-        .queryName(queryName)
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      spark.table(queryName)
-      }
-    }
+    Drain.memory(spark, EventStream.source(spark, eventsDir)
+      .select(col("user_id"),
+        date_trunc("second", col("ts")).as("tsec"), col("value"))
+      .groupBy(col("user_id"),
+        session_window(col("tsec"), s"$gapMinutes minutes"))
+      .agg(count(lit(1)).as("n_events"),
+        graft.core.Fns.moneySum(col("value")).cast("double")
+          .as("session_value"))
+      .select(col("user_id"),
+        date_format(col("session_window.start"), "yyyy-MM-dd HH:mm:ss")
+          .as("session_start"),
+        date_format(col("session_window.end"), "yyyy-MM-dd HH:mm:ss")
+          .as("session_end"),
+        col("n_events"), col("session_value")),
+      "complete", graft.core.Tables.eventReadConfs)
 
-  /** The declared qs12 wrapper (same view lifecycle as qs7). */
-  def sessionWindowGate(s: SparkSession, dir: String): DataFrame = {
-    val name = s"qs12_sessions_${gateRuns.incrementAndGet()}"
-    Option(lastGateView.getAndSet(name)).foreach(s.catalog.dropTempView(_))
-    sessionWindowStream(s, graft.io.Scratch.ensureEventsLanding(dir), name)
+  /** The declared qs12 wrapper. */
+  def sessionWindowGate(s: SparkSession, dir: String): DataFrame =
+    sessionWindowStream(s, graft.io.Scratch.ensureEventsLanding(dir))
       .orderBy("user_id", "session_start")
-  }
 }

@@ -1,10 +1,10 @@
 package graft.streaming
 
 import graft.core.Tables
+import graft.ingest.JsonlIngest.docStream
 import graft.operators.Sketch
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
 
 /** qs40 — STREAMING distinct-token profile via the portable HLL:
   * documents arrive as JSONL files; each micro-batch's tokens flow
@@ -27,8 +27,6 @@ import org.apache.spark.sql.streaming.Trigger
   * register CTEs, estimate-only columns) carries over verbatim.
   */
 object SketchStream {
-
-  private val gateRuns = new java.util.concurrent.atomic.AtomicLong(0L)
 
   /** Land the corpus as JSONL in a watched folder (several part
     * files → several micro-batches under maxFilesPerTrigger = 1).
@@ -53,27 +51,12 @@ object SketchStream {
   /** Drain the landing folder through the streaming register
     * aggregate; return the DRAINED register table (source, idx, mx).
     */
-  def streamRegisters(s: SparkSession, landing: String,
-                      queryName: String): DataFrame =
-    EventStream.withShufflePartitions(s, 8) {
-      val stream = s.readStream
-        .schema(graft.ingest.JsonlIngest.DocSchema)
-        .option("maxFilesPerTrigger", 1)
-        .json(landing)
-      val q = Sketch.tokenRegisters(stream)
-        .groupBy("source", "idx").agg(max(col("rho")).as("mx"))
-        .writeStream
-        .outputMode("complete")
-        .format("memory")
-        .queryName(queryName)
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      s.table(queryName)
-    }
+  def streamRegisters(s: SparkSession, landing: String): DataFrame =
+    Drain.memory(s, Sketch.tokenRegisters(docStream(s, landing))
+      .groupBy("source", "idx").agg(max(col("rho")).as("mx")), "complete")
 
   /** The four drained streaming states, cached per (dir, corpus
-    * stamp) as COLLECTED rows (round 13, VERDICT r12 #3): the family's
+    * stamp) as local frames (round 13, VERDICT r12 #3): the family's
     * gates all drain the same arrival, and each drained state is a
     * deterministic function of the landing (each aggregate is an
     * order-free monoid — the family's core claim, spec-proved), so
@@ -81,20 +64,14 @@ object SketchStream {
     * four streaming queries run CONCURRENTLY over the shared landing
     * (wall-clock ≈ one drain, and each still consumes all four
     * micro-batch files — the boundary-independence conditions are
-    * unchanged); what is cached is kilobyte-sized collected state
-    * (≤ 4·256 rows per source), never a DataFrame — the
-    * [[graft.Session.reset]] contract (driver caches hold collected
-    * objects or parquet paths only).
+    * unchanged). Each cached frame is a [[Drain.memory]] result:
+    * kilobyte-sized collected rows (≤ 4·256 per source) in a local
+    * relation, backed by no RDD block, so [[graft.Session.reset]]
+    * cannot invalidate it (driver caches hold collected objects or
+    * parquet paths only).
     */
-  private final case class Drained(
-      hll: (org.apache.spark.sql.types.StructType,
-            Seq[org.apache.spark.sql.Row]),
-      cm: (org.apache.spark.sql.types.StructType,
-           Seq[org.apache.spark.sql.Row]),
-      bk: (org.apache.spark.sql.types.StructType,
-           Seq[org.apache.spark.sql.Row]),
-      hist: (org.apache.spark.sql.types.StructType,
-             Seq[org.apache.spark.sql.Row]))
+  private final case class Drained(hll: DataFrame, cm: DataFrame,
+                                   bk: DataFrame, hist: DataFrame)
 
   private val drainedCache =
     new java.util.concurrent.ConcurrentHashMap[String, Drained]()
@@ -104,34 +81,21 @@ object SketchStream {
       graft.io.ArtifactStore.tableStamp(dir, "documents")
     drainedCache.computeIfAbsent(key, _ => {
       val landing = landJsonl(s, dir)
-      val runId = gateRuns.incrementAndGet()
-      def grab(name: String)(drain: => DataFrame)
-          : (org.apache.spark.sql.types.StructType,
-             Seq[org.apache.spark.sql.Row]) = {
-        val df = drain
-        val out = (df.schema, df.collect().toSeq)
-        s.catalog.dropTempView(name)
-        out
-      }
       import scala.concurrent.{Await, Future}
       import scala.concurrent.duration.Duration
       val pool = java.util.concurrent.Executors.newFixedThreadPool(4)
       implicit val ec: scala.concurrent.ExecutionContext =
         scala.concurrent.ExecutionContext.fromExecutorService(pool)
-      // the OUTER shuffle-partition scope makes the inner per-drain
-      // set/restore pairs idempotent (every interleaved write is "8"):
-      // without it the first-finishing future would restore the
-      // session default while a sibling is still planning its first
-      // micro-batch, handing that drain a 32-partition state store
-      try EventStream.withShufflePartitions(s, 8) {
-        val fHll = Future(grab(s"qs40_hll_$runId")(
-          streamRegisters(s, landing, s"qs40_hll_$runId")))
-        val fCm = Future(grab(s"qs41_cm_$runId")(
-          streamCmCounters(s, landing, s"qs41_cm_$runId")))
-        val fBk = Future(grab(s"qs42_bk_$runId")(
-          streamBottomk(s, landing, s"qs42_bk_$runId")))
-        val fHist = Future(grab(s"qs43_qh_$runId")(
-          streamLengthHist(s, landing, s"qs43_qh_$runId")))
+      // the OUTER drain scope makes the inner per-drain set/restore
+      // pairs idempotent (every interleaved write is "8"): without it
+      // the first-finishing future would restore the session default
+      // while a sibling is still planning its first micro-batch,
+      // handing that drain a 32-partition state store
+      try Drain.scoped(s, Nil) {
+        val fHll = Future(streamRegisters(s, landing))
+        val fCm = Future(streamCmCounters(s, landing))
+        val fBk = Future(streamBottomk(s, landing))
+        val fHist = Future(streamLengthHist(s, landing))
         Drained(
           Await.result(fHll, Duration.Inf),
           Await.result(fCm, Duration.Inf),
@@ -141,46 +105,21 @@ object SketchStream {
     })
   }
 
-  private def localDf(s: SparkSession,
-      st: (org.apache.spark.sql.types.StructType,
-           Seq[org.apache.spark.sql.Row])): DataFrame = {
-    import scala.jdk.CollectionConverters._
-    s.createDataFrame(st._2.asJava, st._1)
-  }
-
   /** qs40's gate form: land, drain (shared across the family), fold
     * the drained register state to the estimate. The drained state
-    * re-enters the plan as a local relation built from the cached
-    * collected rows — no memory-sink views are retained (the ADVICE
-    * r11 lifecycle concern dissolves: views are dropped inside the
-    * shared drain immediately after collection).
+    * re-enters the plan as the cached local relation.
     */
   def hllStreamGate(s: SparkSession, dir: String): DataFrame =
-    Sketch.registerEstimate(localDf(s, drainedStates(s, dir).hll))
+    Sketch.registerEstimate(drainedStates(s, dir).hll)
 
   /** Drain a landing folder through the streaming count-min counter
     * aggregate; return the DRAINED counter table (source, r, b, cnt)
     * — qs41's streaming state, ≤ 4·256 rows per source forever (the
     * counter-sum monoid; [[Sketch.tokenCmEvents]]).
     */
-  def streamCmCounters(s: SparkSession, landing: String,
-                       queryName: String): DataFrame =
-    EventStream.withShufflePartitions(s, 8) {
-      val stream = s.readStream
-        .schema(graft.ingest.JsonlIngest.DocSchema)
-        .option("maxFilesPerTrigger", 1)
-        .json(landing)
-      val q = Sketch.tokenCmEvents(stream)
-        .groupBy("source", "r", "b").agg(count(lit(1)).as("cnt"))
-        .writeStream
-        .outputMode("complete")
-        .format("memory")
-        .queryName(queryName)
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      s.table(queryName)
-    }
+  def streamCmCounters(s: SparkSession, landing: String): DataFrame =
+    Drain.memory(s, Sketch.tokenCmEvents(docStream(s, landing))
+      .groupBy("source", "r", "b").agg(count(lit(1)).as("cnt")), "complete")
 
   /** Drain a landing folder through the streaming TYPED bottom-k
     * aggregate ([[graft.functions.BottomKAggregator]] inside a
@@ -189,42 +128,27 @@ object SketchStream {
     * token occurrences stream through. Returns the drained
     * (source, h2) sample, exploded back to rows.
     */
-  def streamBottomk(s: SparkSession, landing: String,
-                    queryName: String): DataFrame =
-    EventStream.withShufflePartitions(s, 8) {
-      import s.implicits._
-      val stream = s.readStream
-        .schema(graft.ingest.JsonlIngest.DocSchema)
-        .option("maxFilesPerTrigger", 1)
-        .json(landing)
-      val q = Sketch.tokenHashEvents(stream)
-        .as[(String, Long)]
-        .groupByKey(_._1)
-        .mapValues(_._2)
-        .agg(new graft.functions.BottomKAggregator(Sketch.BottomK)
-          .toColumn.name("bk"))
-        .toDF("source", "bk")
-        .writeStream
-        .outputMode("complete")
-        .format("memory")
-        .queryName(queryName)
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      s.table(queryName)
-        .select(col("source"), explode(col("bk")).as("h2"))
-    }
+  def streamBottomk(s: SparkSession, landing: String): DataFrame = {
+    import s.implicits._
+    Drain.memory(s, Sketch.tokenHashEvents(docStream(s, landing))
+      .as[(String, Long)]
+      .groupByKey(_._1)
+      .mapValues(_._2)
+      .agg(new graft.functions.BottomKAggregator(Sketch.BottomK)
+        .toColumn.name("bk"))
+      .toDF("source", "bk"), "complete")
+      .select(col("source"), explode(col("bk")).as("h2"))
+  }
 
   /** qs42 — STREAMING bottom-k sketch: min-k over a set is an
     * order-free monoid (the aggregator's merge is union + take-k),
     * so the drained sample provably equals qd63's batch bottom-k for
     * ANY micro-batch split, and qd63's oracle carries over VERBATIM.
     * The report tail (exact distinct leg + k-th-minimum estimator)
-    * is the batch step every profiling gate ends with. Same view
-    * lifecycle as the other gates (ADVICE r11).
+    * is the batch step every profiling gate ends with.
     */
   def bottomkStreamGate(s: SparkSession, dir: String): DataFrame = {
-    val sample = localDf(s, drainedStates(s, dir).bk)
+    val sample = drainedStates(s, dir).bk
     val exact = Sketch.tokenHashEvents(Tables.documents(s, dir))
       .distinct()
       .groupBy("source").agg(count(lit(1)).as("exact_distinct"))
@@ -236,24 +160,9 @@ object SketchStream {
     * state — ≤ 8·60+1 rows per source forever (the summable
     * histogram monoid; [[Sketch.lengthBuckets]]).
     */
-  def streamLengthHist(s: SparkSession, landing: String,
-                       queryName: String): DataFrame =
-    EventStream.withShufflePartitions(s, 8) {
-      val stream = s.readStream
-        .schema(graft.ingest.JsonlIngest.DocSchema)
-        .option("maxFilesPerTrigger", 1)
-        .json(landing)
-      val q = Sketch.lengthBuckets(stream)
-        .groupBy("source", "idx").agg(count(lit(1)).as("n_in"))
-        .writeStream
-        .outputMode("complete")
-        .format("memory")
-        .queryName(queryName)
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      s.table(queryName)
-    }
+  def streamLengthHist(s: SparkSession, landing: String): DataFrame =
+    Drain.memory(s, Sketch.lengthBuckets(docStream(s, landing))
+      .groupBy("source", "idx").agg(count(lit(1)).as("n_in")), "complete")
 
   /** qs43 — STREAMING length quantiles: bucket counts are a summable
     * order-free monoid, so the drained histogram provably equals
@@ -265,7 +174,7 @@ object SketchStream {
     * in qd61. Drained state arrives via the family's shared drain.
     */
   def quantileStreamGate(s: SparkSession, dir: String): DataFrame =
-    Sketch.quantileReport(localDf(s, drainedStates(s, dir).hist),
+    Sketch.quantileReport(drainedStates(s, dir).hist,
       Tables.documents(s, dir))
 
   /** qs41 — STREAMING heavy hitters: counter sums are an order-free
@@ -280,5 +189,5 @@ object SketchStream {
     */
   def cmStreamGate(s: SparkSession, dir: String): DataFrame =
     Sketch.cmReport(Sketch.tokenTf(Tables.documents(s, dir)),
-      localDf(s, drainedStates(s, dir).cm), k = 5)
+      drainedStates(s, dir).cm, k = 5)
 }

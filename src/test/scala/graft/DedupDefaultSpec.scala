@@ -31,12 +31,10 @@ class DedupDefaultSpec extends SparkSpec {
 
   test("default drain equals the explicit WithinWatermark drain") {
     val landing = graft.io.Scratch.ensureEventsLanding(sf)
-    val byDefault = EventStream.dedupStream(spark, landing, "dd_default")
+    val byDefault = EventStream.dedupStream(spark, landing)
       .orderBy("event_id").collect().toSeq
-    spark.catalog.dropTempView("dd_default")
     val explicit = EventStream.dedupWithinWatermarkAvailableNow(
-      spark, landing, "dd_explicit").orderBy("event_id").collect().toSeq
-    spark.catalog.dropTempView("dd_explicit")
+      spark, landing).orderBy("event_id").collect().toSeq
     assert(byDefault == explicit)
   }
 }

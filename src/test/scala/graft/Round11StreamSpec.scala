@@ -2,7 +2,6 @@ package graft
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
 
 import graft.ingest.JsonlIngest
 import graft.operators.Dedup
@@ -147,10 +146,9 @@ class Round11StreamSpec extends SparkSpec {
       now - 120000)
     land("b2.jsonl", jsonLines(docs.where(isB2)), now - 60000)
 
-    val q = JsonlIngest
-      .readQuarantinedStream(spark, JsonlIngest.DocSchema, landing)
-      .writeStream
-      .foreachBatch { (df: DataFrame, _: Long) =>
+    graft.streaming.Drain.foreachBatch(spark,
+        JsonlIngest.readQuarantinedStream(spark, JsonlIngest.DocSchema, landing)) {
+      (df, _) =>
         // the quarantine seam: corrupt lines counted aside, good rows
         // folded into the standing index. localCheckpoint materializes
         // each generation off the micro-batch df (whose lineage dies
@@ -167,11 +165,7 @@ class Round11StreamSpec extends SparkSpec {
         standing = Dedup.StandingIndex(next.labels.localCheckpoint(),
           next.bands.localCheckpoint())
         corpusText = corpusText.union(good).localCheckpoint()
-        ()
-      }
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
+    }
 
     assert(corruptSeen == 1L, "the torn line must land in quarantine")
     val got = standing.labels.orderBy("doc_id").collect().toSeq

@@ -164,7 +164,7 @@ class Round12OpsSpec extends SparkSpec {
     val dir = "/root/testdata/sf0.001"
     val landing = graft.streaming.SketchStream.landJsonl(spark, dir)
     val drained = graft.streaming.SketchStream
-      .streamBottomk(spark, landing, "qs42_spec_probe")
+      .streamBottomk(spark, landing)
       .orderBy("source", "h2").collect()
       .map(r => (r.getString(0), r.getLong(1))).toSeq
     val batch = Sketch
@@ -174,7 +174,6 @@ class Round12OpsSpec extends SparkSpec {
     assert(drained == batch,
       "min-k over a set is an order-free monoid: any micro-batch " +
         "split must drain to the batch bottom-k")
-    spark.catalog.dropTempView("qs42_spec_probe")
     val gate = graft.streaming.SketchStream.bottomkStreamGate(spark, dir)
       .collect().toSeq
     val want = Sketch.bottomkQuery(spark, dir).collect().toSeq
@@ -217,7 +216,7 @@ class Round12OpsSpec extends SparkSpec {
     val dir = "/root/testdata/sf0.001"
     val landing = graft.streaming.SketchStream.landJsonl(spark, dir)
     val drained = graft.streaming.SketchStream
-      .streamLengthHist(spark, landing, "qs43_spec_probe")
+      .streamLengthHist(spark, landing)
       .orderBy("source", "idx").collect().toSeq
     val batch = Sketch
       .lengthBuckets(graft.core.Tables.documents(spark, dir))
@@ -230,7 +229,6 @@ class Round12OpsSpec extends SparkSpec {
     drained.groupBy(_.getString(0)).foreach { case (s, rows) =>
       assert(rows.length <= 481, s)
     }
-    spark.catalog.dropTempView("qs43_spec_probe")
     val gate = graft.streaming.SketchStream.quantileStreamGate(spark, dir)
       .collect().toSeq
     val want = Sketch.quantileQuery(spark, dir).collect().toSeq
@@ -241,7 +239,7 @@ class Round12OpsSpec extends SparkSpec {
     val dir = "/root/testdata/sf0.001"
     val landing = graft.streaming.SketchStream.landJsonl(spark, dir)
     val drained = graft.streaming.SketchStream
-      .streamCmCounters(spark, landing, "qs41_spec_probe")
+      .streamCmCounters(spark, landing)
       .orderBy("source", "r", "b").collect().toSeq
     val batch = Sketch.cmCounters(
         graft.core.Tables.documents(spark, dir)
@@ -253,7 +251,6 @@ class Round12OpsSpec extends SparkSpec {
     assert(drained == batch,
       "counter sums are an order-free monoid: any micro-batch split " +
         "must drain to the batch counter table")
-    spark.catalog.dropTempView("qs41_spec_probe")
     val gate = graft.streaming.SketchStream.cmStreamGate(spark, dir)
       .collect().toSeq
     val want = Sketch.cmQuery(spark, dir).collect().toSeq

@@ -66,6 +66,25 @@ class SessionSpec extends SparkSpec {
       "graft functions come from GraftExtensions only")
   }
 
+  test("every streaming query in src/main drains through streaming/Drain.scala") {
+    val sources = Files.walk(Paths.get("src/main")).iterator().asScala
+      .filter(_.toString.endsWith(".scala"))
+      .map(p => p -> Files.readString(p)).toSeq
+    Seq("Trigger.AvailableNow", ".writeStream", ".queryName(").foreach { n =>
+      val holders = sources.collect {
+        case (p, text) if text.contains(n) => p.toString
+      }
+      assert(holders == Seq("src/main/scala/graft/streaming/Drain.scala"),
+        s"$n: start and drain a stream with graft.streaming.Drain")
+    }
+    val slots = sources.collect {
+      case (p, text) if (p.startsWith("src/main/scala/graft/streaming") ||
+          p.startsWith("src/main/scala/graft/ingest")) &&
+        text.contains("AtomicReference[String]") => p.toString
+    }
+    assert(slots.isEmpty, s"Drain drops its own views: $slots")
+  }
+
   test("Session.withConfs sets in order, then restores or unsets, also on throw") {
     val (set, unset) = ("spark.sql.shuffle.partitions", "graft.spec.scoped")
     val before = spark.conf.get(set)

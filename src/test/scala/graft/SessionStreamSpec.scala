@@ -115,15 +115,11 @@ class SessionStreamSpec extends SparkSpec {
     // streaming gates must be backend-agnostic, proven by strict
     // result equality on a real corpus drain
     val sf = "/root/testdata/sf0.001"
-    // RocksDB uploads its snapshot files with copyFromLocalFile, which
-    // casts the `file` filesystem to LocalFileSystem: it cannot run on
-    // graft.Session's RawLocalFileSystem, so this drain checkpoints
-    // through the checksummed one (uncached, so the cast sees it)
+    // only the provider is overridden: the drain itself picks the
+    // filesystem RocksDB's snapshot upload needs (graft.streaming.Drain)
     Session.withConfs(spark, Seq(
       "spark.sql.streaming.stateStore.providerClass" ->
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
-      "fs.file.impl" -> classOf[org.apache.hadoop.fs.LocalFileSystem].getName,
-      "fs.file.impl.disable.cache" -> "true")) {
+        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")) {
       val rocks = graft.streaming.SessionStream
         .sessionWindowGate(spark, sf).collect().toSeq
       val batch = graft.operators.Events.sessionWindow(spark, sf)
@@ -237,7 +233,7 @@ class SessionStreamSpec extends SparkSpec {
       .ofPattern("yyyy-MM-dd HH:mm:ss")
       .withZone(java.time.ZoneOffset.UTC)
     val streamed = SessionStream
-      .sessionizeAvailableNow(spark, landing, "sess_stream_test")
+      .sessionizeAvailableNow(spark, landing)
       .collect()
       .map { r =>
         (r.getAs[Long]("user_id"), r.getAs[Int]("session_id")) ->

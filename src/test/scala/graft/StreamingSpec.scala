@@ -19,8 +19,7 @@ class StreamingSpec extends SparkSpec {
     java.nio.file.Files.copy(
       java.nio.file.Paths.get(s"$sf/events.parquet"),
       java.nio.file.Paths.get(landing, "events.parquet"))
-    val streamed = EventStream.hourlyStatsAvailableNow(
-      spark, landing, "stream_hourly_test")
+    val streamed = EventStream.hourlyStatsAvailableNow(spark, landing)
       .collect().map(_.mkString("|")).toSet
     assert(streamed == batch)
   }
@@ -34,8 +33,7 @@ class StreamingSpec extends SparkSpec {
     java.nio.file.Files.copy(
       java.nio.file.Paths.get(s"$sf/events.parquet"),
       java.nio.file.Paths.get(landing, "b.parquet"))
-    val streamed = EventStream.dedupAvailableNow(
-      spark, landing, "stream_dedup_test")
+    val streamed = EventStream.dedupAvailableNow(spark, landing)
     val expected = graft.core.Tables.events(spark, sf)
       .select("event_id", "user_id", "event_type")
     assert(streamed.count() == expected.count())
@@ -50,7 +48,7 @@ class StreamingSpec extends SparkSpec {
     val customers = graft.core.Tables.customer(spark, sf)
       .select("c_custkey", "c_mktsegment")
     val streamed = EventStream.segmentSpendAvailableNow(
-      spark, landing, customers, "stream_segment_test")
+      spark, landing, customers)
       .collect().map(_.mkString("|")).toSet
     val batch = graft.core.Tables.events(spark, sf)
       .join(customers, col("user_id") === col("c_custkey"))
@@ -79,7 +77,7 @@ class StreamingSpec extends SparkSpec {
       .toDF("event_id", "ts", "user_id", "event_type", "value", "props")
       .coalesce(1).write.parquet(s"$landing/batch1")
     val got = EventStream.clickAttributionAvailableNow(
-      spark, s"$landing/batch1", "stream_attrib_test")
+      spark, s"$landing/batch1")
       .collect().map(r => (r.getAs[Long]("click_id"),
         r.getAs[Long]("purchase_id"))).toSet
     assert(got == Set((100L, 201L), (100L, 202L)),
@@ -91,8 +89,7 @@ class StreamingSpec extends SparkSpec {
     java.nio.file.Files.copy(
       java.nio.file.Paths.get(s"$sf/events.parquet"),
       java.nio.file.Paths.get(landing, "events.parquet"))
-    val streamed = EventStream.clickAttributionAvailableNow(
-      spark, landing, "stream_attrib_real")
+    val streamed = EventStream.clickAttributionAvailableNow(spark, landing)
       .collect().map(_.mkString("|")).toSet
     val ev = graft.core.Tables.events(spark, sf)
     val c = ev.filter(col("event_type") === "click")
