@@ -3,10 +3,10 @@ package graft.io
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Stamp-keyed PARQUET artifact cache — the storage-backed member of
-  * the amortization family (VERDICT r8 #2-4). The driver-side model
-  * caches (`TrainingOps.ivfModel` et al.) hold kilobyte-sized arrays
-  * in the JVM; artifacts that are CORPUS-grain — the kNN edge list
-  * (k·N rows), the SQ8 packed-code table (N rows), the Hamming
+  * the amortization family (VERDICT r8 #2-4). The driver-side models
+  * (`TrainingOps.ivfModel` et al.) hold kilobyte-sized arrays in the
+  * JVM through [[StampMemo]]; artifacts that are CORPUS-grain — the
+  * kNN edge list (k·N rows), the SQ8 packed-code table (N rows), the Hamming
   * signature table — are what production materializes ONCE to storage
   * and then reads per query, exactly like any other table. This
   * helper is that shape on a local scratch disk: build → write
@@ -57,6 +57,13 @@ object ArtifactStore {
       s"$rel:${f.length}:${f.lastModified}"
     }.mkString(",")
   }
+
+  /** The stamp of several source tables: each [[tableStamp]] in
+    * argument order — the source half of every stored artifact's key
+    * and of every [[StampMemo]] key.
+    */
+  private[io] def sourceStamp(dir: String, tables: Seq[String]): String =
+    tables.map(tableStamp(dir, _)).mkString(";")
 
   /** `f` itself, or every file below it in sorted name order. */
   private def walk(f: java.io.File): Seq[java.io.File] =
@@ -169,8 +176,7 @@ object ArtifactStore {
         dir.replaceAll("[^A-Za-z0-9._-]", "_").takeRight(32))
     val lock = locks.computeIfAbsent(root.getAbsolutePath, _ => new Object)
     lock.synchronized {
-      val stampHash = stampKey(digest,
-        tables.map(t => tableStamp(dir, t)).mkString(";"))
+      val stampHash = stampKey(digest, sourceStamp(dir, tables))
       val dataDir = new java.io.File(root, s"data-$stampHash")
       if (!dataDir.isDirectory) {
         java.nio.file.Files.createDirectories(root.toPath)

@@ -731,13 +731,10 @@ object Dedup {
       .orderBy("doc_a", "doc_b")
   }
 
-  /** Exact n-gram Jaccard for an explicit pair list (the verify step
-    * decoupled, usable with candidates from any blocking scheme).
+  /** Exact n-gram Jaccard of each (doc_a, doc_b) pair over a
+    * [[shingleFrame]] — the verify step, for candidates from any
+    * blocking scheme.
     */
-  def ngramJaccard(docs: DataFrame, pairs: DataFrame, idCol: String,
-                   textCol: String): DataFrame =
-    jaccardOver(shingleFrame(docs, idCol, textCol), pairs)
-
   private[operators] def jaccardOver(sh: DataFrame, pairs: DataFrame): DataFrame =
     pairs
       .join(sh.select(col("doc_id").as("doc_a"), col("sh").as("sh_a")), "doc_a")

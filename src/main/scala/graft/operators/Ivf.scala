@@ -69,6 +69,14 @@ object Ivf {
     model
   }
 
+  /** The amortized index's sizing rule: k scales with the corpus as
+    * sqrt(n), clamped to [4, 256], and two refinement passes.
+    */
+  def trainSized(emb: DataFrame): IvfModel = {
+    val k = math.max(4, math.min(256, math.sqrt(emb.count().toDouble).toInt))
+    train(emb, k = k, iters = 2)
+  }
+
   /** Nearest-centroid assignment (cosine) as a relational matmul:
     * explode components, broadcast-join centroid weights, partial-agg
     * the per-centroid dots, argmax via max_by — fully codegen (the

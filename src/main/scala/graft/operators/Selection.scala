@@ -43,9 +43,7 @@ object Selection {
   final case class DsirModel(vocab: Array[(String, Long, Long)],
                              vn: Long, tAll: Long, tTgt: Long)
 
-  private val dsirModels =
-    new java.util.concurrent.ConcurrentHashMap[(String, String, Int),
-      DsirModel]
+  private val dsirModels = new graft.io.StampMemo[DsirModel]("documents")
 
   /** Token-grain (c_all, c_tgt) counts — the trainer's one corpus
     * pass: tokenize, then a single map-side-combined aggregate at
@@ -74,21 +72,16 @@ object Selection {
       rows.map(_._2).sum, rows.map(_._3).sum)
   }
 
-  /** The amortized declared-query model: cached per (dir, documents
-    * stamp, cap) — the [[TrainingOps.bigramModel]]/bpeMergeTable
-    * contract (production trains the scorer once and scores many
-    * batches; Bench prebuilds it and reports the cost in the details
-    * JSON, and the trainer path stays measured by SelectionSpec's
-    * inline-trained parity pin).
+  /** The amortized declared-query model per cap, memoized over
+    * `documents` by [[graft.io.StampMemo]]: production trains the
+    * scorer once and scores many batches; Bench prebuilds it and
+    * reports the cost in the details JSON, and the trainer path stays
+    * measured by SelectionSpec's inline-trained parity pin.
     */
   def dsirModel(s: SparkSession, dir: String,
-                vocabCap: Int = 65536): DsirModel = {
-    if (dsirModels.size > 16) dsirModels.clear()
-    dsirModels.computeIfAbsent(
-      (dir, graft.io.ArtifactStore.tableStamp(dir, "documents"), vocabCap),
-      _ => trainDsir(Tables.documents(s, dir),
-        col("source") === "src0", vocabCap))
-  }
+                vocabCap: Int = 65536): DsirModel =
+    dsirModels(dir, vocabCap)(trainDsir(Tables.documents(s, dir),
+      col("source") === "src0", vocabCap))
 
   /** The model as a broadcastable weight table (token, w_micro):
     * rebuilt from the LOCAL model rows, with [[weightMicroSql]] —
@@ -281,9 +274,7 @@ object Selection {
                            tl: Array[Long], vn: Long,
                            nl: Array[Long], n: Long)
 
-  private val nbModels =
-    new java.util.concurrent.ConcurrentHashMap[(String, String, Int),
-      NbModel]
+  private val nbModels = new graft.io.StampMemo[NbModel]("documents")
 
   /** Train an [[NbModel]]: one tokenize pass to the (token, lang)
     * count grain (map-side combined), vocabulary capped by (corpus
@@ -312,16 +303,11 @@ object Selection {
       vocabTokens.length.toLong, priorRows.map(_._2), priorRows.map(_._2).sum)
   }
 
-  /** The amortized declared-query model — the [[dsirModel]] contract:
-    * cached per (dir, documents stamp, cap).
+  /** The amortized declared-query model per cap, memoized over
+    * `documents` by [[graft.io.StampMemo]].
     */
-  def nbModel(s: SparkSession, dir: String,
-              vocabCap: Int = 8192): NbModel = {
-    if (nbModels.size > 16) nbModels.clear()
-    nbModels.computeIfAbsent(
-      (dir, graft.io.ArtifactStore.tableStamp(dir, "documents"), vocabCap),
-      _ => trainNb(Tables.documents(s, dir), vocabCap))
-  }
+  def nbModel(s: SparkSession, dir: String, vocabCap: Int = 8192): NbModel =
+    nbModels(dir, vocabCap)(trainNb(Tables.documents(s, dir), vocabCap))
 
   /** The model as a broadcastable WIDE weight table (token, w_0 …
     * w_{L-1}) — micro-nat weights evaluated from the local count

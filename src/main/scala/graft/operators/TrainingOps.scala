@@ -218,25 +218,21 @@ object TrainingOps {
     bigramScore(bigramCounts(Tables.documents(s, dir)), model)
   }
 
-  private val bigramModels = new java.util.concurrent.ConcurrentHashMap[
-    (String, String), Array[(String, Long)]]()
+  private val bigramModels =
+    new graft.io.StampMemo[Array[(String, Long)]]("documents")
 
-  /** Cached qd23 bigram model (bg → micro-nat log-prob) per (dir,
-    * documents stamp) — the [[ivfModel]] amortize-and-invalidate
-    * contract (VERDICT r8 #3): production estimates the LM once and
-    * scores many batches against it; re-estimating per run measured
-    * the trainer, which [[bigramLmOn]] (and BigramLmSpec) keep
-    * measured. Driver-sized by construction: one row per DISTINCT
-    * character bigram (≲ alphabet², kilobytes), the same table the
-    * scoring join broadcasts anyway.
+  /** Cached qd23 bigram model (bg → micro-nat log-prob), memoized
+    * over `documents` by [[graft.io.StampMemo]] (VERDICT r8 #3):
+    * production estimates the LM once and scores many batches against
+    * it; re-estimating per run measured the trainer, which
+    * [[bigramLmOn]] (and BigramLmSpec) keep measured. Driver-sized by
+    * construction: one row per DISTINCT character bigram (≲
+    * alphabet², kilobytes), the same table the scoring join
+    * broadcasts anyway.
     */
-  def bigramModel(s: SparkSession, dir: String): Array[(String, Long)] = {
-    if (bigramModels.size > 16) bigramModels.clear()
-    bigramModels.computeIfAbsent(
-      (dir, graft.io.ArtifactStore.tableStamp(dir, "documents")), _ =>
-      bigramModelOf(bigramCounts(Tables.documents(s, dir)))
-        .collect().map(r => (r.getString(0), r.getLong(1))))
-  }
+  def bigramModel(s: SparkSession, dir: String): Array[(String, Long)] =
+    bigramModels(dir)(bigramModelOf(bigramCounts(Tables.documents(s, dir)))
+      .collect().map(r => (r.getString(0), r.getLong(1))))
 
   /** Core of [[bigramLm]] over any (doc_id, text, n_chars) frame.
     *
@@ -1179,27 +1175,16 @@ object TrainingOps {
       .orderBy("label")
   }
 
-  private val ivfModels =
-    new java.util.concurrent.ConcurrentHashMap[(String, String), Ivf.IvfModel]()
+  private val ivfModels = new graft.io.StampMemo[Ivf.IvfModel]("embeddings")
 
-  /** Cached IVF model per (sf dir, corpus stamp) — production
-    * amortizes training across searches rather than retraining per
-    * query (VERDICT r1 #5). The stamp keying means a long-lived
-    * session re-pointing at a CHANGED dataset under the same dir
-    * retrains instead of silently serving a stale model (VERDICT r5
-    * #8). k scales with the corpus as sqrt(n), clamped to [4, 256].
+  /** Cached IVF model ([[Ivf.trainSized]]), memoized over
+    * `embeddings` by [[graft.io.StampMemo]] — production amortizes
+    * training across searches rather than retraining per query
+    * (VERDICT r1 #5), and a changed corpus under the same dir
+    * retrains (VERDICT r5 #8).
     */
-  def ivfModel(s: SparkSession, dir: String): Ivf.IvfModel = {
-    // crude bound on a long session cycling many corpora: dropping
-    // everything on overflow just re-amortizes training
-    if (ivfModels.size > 16) ivfModels.clear()
-    ivfModels.computeIfAbsent(
-      (dir, graft.io.ArtifactStore.tableStamp(dir, "embeddings")), _ => {
-      val emb = Tables.embeddings(s, dir)
-      val k = math.max(4, math.min(256, math.sqrt(emb.count().toDouble).toInt))
-      Ivf.train(emb, k = k, iters = 2)
-    })
-  }
+  def ivfModel(s: SparkSession, dir: String): Ivf.IvfModel =
+    ivfModels(dir)(Ivf.trainSized(Tables.embeddings(s, dir)))
 
   /** IVF ANN, same queries, declared at full probe (nProbe = k):
     * every cell is scored, so the result provably equals brute force
@@ -1212,20 +1197,15 @@ object TrainingOps {
     Ivf.search(emb, model, knnQueryIds, k = 10, nProbe = model.k)
   }
 
-  private val pqModels =
-    new java.util.concurrent.ConcurrentHashMap[(String, String), Pq.PqModel]()
+  private val pqModels = new graft.io.StampMemo[Pq.PqModel]("embeddings")
 
-  /** Cached PQ codebooks per (sf dir, corpus stamp) — same
-    * amortize-and-invalidate contract as [[ivfModel]]. 8 subspaces of
-    * the 64-dim corpus, 16 codes each: a 64-float vector compresses
-    * to 8 nibble-sized codes.
+  /** Cached PQ codebooks, memoized over `embeddings` by
+    * [[graft.io.StampMemo]]. 8 subspaces of the 64-dim corpus, 16
+    * codes each: a 64-float vector compresses to 8 nibble-sized codes.
     */
-  def pqModel(s: SparkSession, dir: String): Pq.PqModel = {
-    if (pqModels.size > 16) pqModels.clear()
-    pqModels.computeIfAbsent(
-      (dir, graft.io.ArtifactStore.tableStamp(dir, "embeddings")), _ =>
+  def pqModel(s: SparkSession, dir: String): Pq.PqModel =
+    pqModels(dir)(
       Pq.train(Tables.embeddings(s, dir), m = 8, kCodes = 16, iters = 2))
-  }
 
   /** qe8 — PQ/ADC ANN, same queries, declared at a full-corpus
     * shortlist: every candidate is exact-cosine re-ranked, so the
@@ -1641,23 +1621,19 @@ object TrainingOps {
     out.toSeq
   }
 
-  private val bpeMergeCache = new java.util.concurrent.ConcurrentHashMap[
-    (String, String, Int), Seq[(String, String)]]()
+  private val bpeMergeCache =
+    new graft.io.StampMemo[Seq[(String, String)]]("documents")
 
-  /** Cached merge table per (sf dir, documents stamp, rounds) — the
-    * [[ivfModel]] amortize-and-invalidate contract applied to the
-    * tokenizer: production trains ONCE and encodes many corpora, so
-    * the APPLICATION queries (qd38 encode, qd47 fertility) reuse the
-    * learned table while qd35 (the TRAINER) keeps re-learning — its
-    * per-round statistics ARE the measured artifact.
+  /** Cached merge table per `rounds`, memoized over `documents` by
+    * [[graft.io.StampMemo]]: production trains the tokenizer ONCE and
+    * encodes many corpora, so the APPLICATION queries (qd38 encode,
+    * qd47 fertility) reuse the learned table while qd35 (the TRAINER)
+    * keeps re-learning — its per-round statistics ARE the measured
+    * artifact.
     */
   def bpeMergeTable(s: SparkSession, dir: String,
-                    rounds: Int): Seq[(String, String)] = {
-    if (bpeMergeCache.size > 16) bpeMergeCache.clear()
-    bpeMergeCache.computeIfAbsent(
-      (dir, graft.io.ArtifactStore.tableStamp(dir, "documents"), rounds),
-      _ => bpeLearnMerges(Tables.documents(s, dir), rounds))
-  }
+                    rounds: Int): Seq[(String, String)] =
+    bpeMergeCache(dir, rounds)(bpeLearnMerges(Tables.documents(s, dir), rounds))
 
   /** The qd38 declared form: encode with the (cached) 3-round merge
     * table — the tokenizer-application pass; training amortizes via
@@ -1788,20 +1764,15 @@ object TrainingOps {
       .orderBy("source")
   }
 
-  private val sqModels =
-    new java.util.concurrent.ConcurrentHashMap[(String, String), Sq.SqModel]()
+  private val sqModels = new graft.io.StampMemo[Sq.SqModel]("embeddings")
 
-  /** Cached SQ8 grid per (sf dir, corpus stamp) — the [[ivfModel]]
-    * amortize-and-invalidate contract. The model is per-dim exact
-    * min/max: deterministic under any partitioning, unlike the
-    * k-means members of the family.
+  /** Cached SQ8 grid, memoized over `embeddings` by
+    * [[graft.io.StampMemo]]. The model is per-dim exact min/max:
+    * deterministic under any partitioning, unlike the k-means members
+    * of the family.
     */
-  def sqModel(s: SparkSession, dir: String): Sq.SqModel = {
-    if (sqModels.size > 16) sqModels.clear()
-    sqModels.computeIfAbsent(
-      (dir, graft.io.ArtifactStore.tableStamp(dir, "embeddings")), _ =>
-      Sq.train(Tables.embeddings(s, dir)))
-  }
+  def sqModel(s: SparkSession, dir: String): Sq.SqModel =
+    sqModels(dir)(Sq.train(Tables.embeddings(s, dir)))
 
   /** Stored SQ8 packed-code table per (dir, corpus stamp) — the
     * encode-once artifact (VERDICT r8 #4): production materializes the
@@ -2299,8 +2270,7 @@ object TrainingOps {
   }
 
   private val pcaModels =
-    new java.util.concurrent.ConcurrentHashMap[(String, String),
-      (Array[Double], Array[Array[Double]])]
+    new graft.io.StampMemo[(Array[Double], Array[Array[Double]])]("embeddings")
 
   /** The PCA/OPQ rotation that CONSUMES qe23's Gram matrix (VERDICT
     * r10 #4 — the payoff the primitive was built for): covariance =
@@ -2318,33 +2288,30 @@ object TrainingOps {
     * 0.47, rot+balance 1.00) and the doesn't-break claim on the
     * near-isotropic gate corpus; the relationally-expressible half of
     * the idea (the variance-balancing permutation alone) is DECLARED
-    * as qe24. Amortized per (dir, corpus stamp), the ivfModel pattern.
+    * as qe24. Memoized over `embeddings` by [[graft.io.StampMemo]].
     */
   def pcaRotation(s: SparkSession, dir: String):
-      (Array[Double], Array[Array[Double]]) = {
-    if (pcaModels.size > 16) pcaModels.clear()
-    pcaModels.computeIfAbsent(
-      (dir, graft.io.ArtifactStore.tableStamp(dir, "embeddings")), _ => {
-        val gr = gramMatrix(s, dir).collect()
-        val dim = 1 + gr.map(_.getInt(0)).max
-        val n = gr.head.getLong(2).toDouble
-        val m2 = Array.ofDim[Double](dim, dim)
-        gr.foreach { r =>
-          val (a, b) = (r.getInt(0), r.getInt(1))
-          // micro² back to unit scale; symmetric fill
-          val v = r.getLong(3) / 1e12 / n
-          m2(a)(b) = v; m2(b)(a) = v
-        }
-        val mu = Tables.embeddings(s, dir)
-          .select(posexplode(col("embedding")).as(Seq("d", "x")))
-          .groupBy("d").agg(sum(col("x").cast("double")).as("sx"))
-          .orderBy("d").collect()
-          .map(_.getDouble(1) / n)
-        val cov = Array.tabulate(dim, dim)((a, b) =>
-          m2(a)(b) - mu(a) * mu(b))
-        graft.core.Eigen.symmetric(cov)
-      })
-  }
+      (Array[Double], Array[Array[Double]]) =
+    pcaModels(dir) {
+      val gr = gramMatrix(s, dir).collect()
+      val dim = 1 + gr.map(_.getInt(0)).max
+      val n = gr.head.getLong(2).toDouble
+      val m2 = Array.ofDim[Double](dim, dim)
+      gr.foreach { r =>
+        val (a, b) = (r.getInt(0), r.getInt(1))
+        // micro² back to unit scale; symmetric fill
+        val v = r.getLong(3) / 1e12 / n
+        m2(a)(b) = v; m2(b)(a) = v
+      }
+      val mu = Tables.embeddings(s, dir)
+        .select(posexplode(col("embedding")).as(Seq("d", "x")))
+        .groupBy("d").agg(sum(col("x").cast("double")).as("sx"))
+        .orderBy("d").collect()
+        .map(_.getDouble(1) / n)
+      val cov = Array.tabulate(dim, dim)((a, b) =>
+        m2(a)(b) - mu(a) * mu(b))
+      graft.core.Eigen.symmetric(cov)
+    }
 
   /** Apply a rotation (rows = components) to the embedding column:
     * 64 codegen'd [[graft.functions.VecDot]] projections against

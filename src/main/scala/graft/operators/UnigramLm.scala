@@ -232,24 +232,6 @@ object UnigramLm {
   def emStepQuery(s: SparkSession, dir: String): DataFrame =
     emStep(Tables.documents(s, dir))
 
-  private val keptCache = new java.util.concurrent.ConcurrentHashMap[
-    (String, String), Map[String, Long]]()
-
-  /** The trained-and-pruned vocabulary (kept piece → RE-ESTIMATED
-    * micro-nat score), cached per (dir, documents stamp) — the
-    * bpeMergeTable amortize-and-invalidate contract: qd70 (the
-    * TRAINER) keeps re-learning; the application pass (qd71) reuses
-    * the learned table.
-    *
-    * Single chars the seed DP never USED (longer pieces covered
-    * every occurrence, so they carry no usage and fall out of the
-    * EM output) are unioned back at the OOV FLOOR score
-    * `floor(ln(1/totalUsage)·10⁶ + 0.5)` — the qd42 Laplace-floor
-    * move, computed through the engine's own ln for cross-engine
-    * parity. Without them a word whose re-scored segmentation wants
-    * an unused char is unsegmentable, breaking the single-chars-
-    * always-available invariant the pruned DP relies on.
-    */
   /** Kept vocabulary from one EM round's OUTPUT rows: kept pieces at
     * their re-estimated scores, plus every corpus single char the
     * round never USED re-floored at `floor(ln(1/totalUsage)·10⁶+0.5)`
@@ -272,63 +254,62 @@ object UnigramLm {
     kept ++ allChars.filterNot(used).map(c => (c, floorScore))
   }
 
-  private val charsCache = new java.util.concurrent.ConcurrentHashMap[
-    (String, String), Array[String]]()
+  private val charsCache = new graft.io.StampMemo[Array[String]]("documents")
 
-  /** Distinct corpus single chars (the OOV-floor union set), cached
-    * per (dir, documents stamp) like the vocab caches: every EM
-    * round's [[vocabFrom]] needs the same set, and uncached each call
-    * re-ran the full wordFreq corpus scan (3× across the round-1/2/3
-    * caches for one stamp — VERDICT r15 #5).
+  /** Distinct corpus single chars (the OOV-floor union set), memoized
+    * over `documents` by [[graft.io.StampMemo]] like the vocabs: every
+    * EM round's [[vocabFrom]] needs the same set, and unmemoized each
+    * call re-ran the full wordFreq corpus scan (3× across rounds 1–3
+    * for one stamp — VERDICT r15 #5).
     */
-  private def corpusChars(s: SparkSession, dir: String): Array[String] = {
-    if (charsCache.size > 16) charsCache.clear()
-    charsCache.computeIfAbsent(
-      (dir, graft.io.ArtifactStore.tableStamp(dir, "documents")),
-      _ => wordFreq(Tables.documents(s, dir))
-        .select(explode(split(col("word"), "")).as("ch"))
-        .where(col("ch") =!= "")
-        .distinct().collect().map(_.getString(0)))
-  }
+  private def corpusChars(s: SparkSession, dir: String): Array[String] =
+    charsCache(dir)(wordFreq(Tables.documents(s, dir))
+      .select(explode(split(col("word"), "")).as("ch"))
+      .where(col("ch") =!= "")
+      .distinct().collect().map(_.getString(0)))
 
-  def keptVocab(s: SparkSession, dir: String): Map[String, Long] = {
-    if (keptCache.size > 16) keptCache.clear()
-    keptCache.computeIfAbsent(
-      (dir, graft.io.ArtifactStore.tableStamp(dir, "documents")),
-      _ => vocabFrom(s, emStep(Tables.documents(s, dir)).collect(),
-        corpusChars(s, dir)))
-  }
+  private val keptCache = new graft.io.StampMemo[Map[String, Long]]("documents")
 
-  private val kept2Cache = new java.util.concurrent.ConcurrentHashMap[
-    (String, String), Map[String, Long]]()
+  /** The trained-and-pruned vocabulary (kept piece → RE-ESTIMATED
+    * micro-nat score), memoized over `documents` by
+    * [[graft.io.StampMemo]]: qd70 (the TRAINER) keeps re-learning; the
+    * application pass (qd71) reuses the learned table.
+    *
+    * Single chars the seed DP never USED (longer pieces covered
+    * every occurrence, so they carry no usage and fall out of the
+    * EM output) are unioned back at the OOV FLOOR score
+    * `floor(ln(1/totalUsage)·10⁶ + 0.5)` — the qd42 Laplace-floor
+    * move, computed through the engine's own ln for cross-engine
+    * parity. Without them a word whose re-scored segmentation wants
+    * an unused char is unsegmentable, breaking the single-chars-
+    * always-available invariant the pruned DP relies on.
+    */
+  def keptVocab(s: SparkSession, dir: String): Map[String, Long] =
+    keptCache(dir)(vocabFrom(s, emStep(Tables.documents(s, dir)).collect(),
+      corpusChars(s, dir)))
+
+  private val kept2Cache = new graft.io.StampMemo[Map[String, Long]]("documents")
 
   /** Round-2 trained vocabulary — [[vocabFrom]] over [[emRound2]]'s
-    * output, cached like [[keptVocab]] (the driver-loop chain: each
+    * output, memoized like [[keptVocab]] (the driver-loop chain: each
     * round's application/trainer query amortizes every EARLIER round
-    * through the stamp caches and measures only its own round).
+    * through the memos and measures only its own round).
     */
-  def kept2Vocab(s: SparkSession, dir: String): Map[String, Long] = {
-    if (kept2Cache.size > 16) kept2Cache.clear()
-    kept2Cache.computeIfAbsent(
-      (dir, graft.io.ArtifactStore.tableStamp(dir, "documents")),
-      _ => vocabFrom(s, emRound2(s, dir).collect(), corpusChars(s, dir)))
-  }
+  def kept2Vocab(s: SparkSession, dir: String): Map[String, Long] =
+    kept2Cache(dir)(
+      vocabFrom(s, emRound2(s, dir).collect(), corpusChars(s, dir)))
 
-  private val kept3Cache = new java.util.concurrent.ConcurrentHashMap[
-    (String, String), Map[String, Long]]()
+  private val kept3Cache = new graft.io.StampMemo[Map[String, Long]]("documents")
 
   /** Round-3 trained vocabulary — [[vocabFrom]] over [[emRound3]]'s
-    * output, cached like [[keptVocab]]/[[kept2Vocab]]. This is the
+    * output, memoized like [[keptVocab]]/[[kept2Vocab]]. This is the
     * artifact the 3-round driver loop actually SHIPS (qd73 trains it);
     * [[encode3ByLang]] (qd74) is its application pass — closing the
     * train→apply loop at the final vocab (VERDICT r15 #4).
     */
-  def kept3Vocab(s: SparkSession, dir: String): Map[String, Long] = {
-    if (kept3Cache.size > 16) kept3Cache.clear()
-    kept3Cache.computeIfAbsent(
-      (dir, graft.io.ArtifactStore.tableStamp(dir, "documents")),
-      _ => vocabFrom(s, emRound3(s, dir).collect(), corpusChars(s, dir)))
-  }
+  def kept3Vocab(s: SparkSession, dir: String): Map[String, Long] =
+    kept3Cache(dir)(
+      vocabFrom(s, emRound3(s, dir).collect(), corpusChars(s, dir)))
 
   /** qd71 — tokenizer APPLICATION (the qd38 move for the unigram
     * family): segment every document with the trained PRUNED vocab

@@ -84,35 +84,22 @@ object VecAdmission {
     */
   private val SourceTables = Seq("embeddings", "documents")
 
-  private def stampKey(dir: String): (String, String) =
-    (dir, SourceTables.map(t =>
-      graft.io.ArtifactStore.tableStamp(dir, t)).mkString(";"))
+  private val ivfModels = new graft.io.StampMemo[Ivf.IvfModel](SourceTables: _*)
+  private val sqModels = new graft.io.StampMemo[Sq.SqModel](SourceTables: _*)
 
-  private val ivfModels = new java.util.concurrent.ConcurrentHashMap[
-    (String, String), Ivf.IvfModel]()
-  private val sqModels = new java.util.concurrent.ConcurrentHashMap[
-    (String, String), Sq.SqModel]()
-
-  /** Corpus-trained coarse quantizer — cached per (dir, stamps); the
-    * TrainingOps.ivfModel contract, but over the corpus SPLIT (the
-    * standing index must not have seen the arrivals).
+  /** Corpus-trained coarse quantizer, memoized over both source
+    * tables by [[graft.io.StampMemo]]; TrainingOps.ivfModel, but over
+    * the corpus SPLIT (the standing index must not have seen the
+    * arrivals).
     */
-  def corpusModel(s: SparkSession, dir: String): Ivf.IvfModel = {
-    if (ivfModels.size > 16) ivfModels.clear()
-    ivfModels.computeIfAbsent(stampKey(dir), _ => {
-      val c = corpusEmb(s, dir)
-      val k = math.max(4, math.min(256, math.sqrt(c.count().toDouble).toInt))
-      Ivf.train(c, k = k, iters = 2)
-    })
-  }
+  def corpusModel(s: SparkSession, dir: String): Ivf.IvfModel =
+    ivfModels(dir)(Ivf.trainSized(corpusEmb(s, dir)))
 
-  /** Corpus-trained SQ8 grid for the code artifact, cached like
+  /** Corpus-trained SQ8 grid for the code artifact, memoized like
     * [[corpusModel]].
     */
-  def corpusSqModel(s: SparkSession, dir: String): Sq.SqModel = {
-    if (sqModels.size > 16) sqModels.clear()
-    sqModels.computeIfAbsent(stampKey(dir), _ => Sq.train(corpusEmb(s, dir)))
-  }
+  def corpusSqModel(s: SparkSession, dir: String): Sq.SqModel =
+    sqModels(dir)(Sq.train(corpusEmb(s, dir)))
 
   /** The inverted-file derivation (vec_id, cluster, nrm) — ONE
     * definition shared by the stored build and the spec's
@@ -291,8 +278,8 @@ object VecAdmission {
       .select("_sl", "query_id", "vec_id")
   }
 
-  private val calibrations = new java.util.concurrent.ConcurrentHashMap[
-    (String, String, Int, Int), (Int, Int, Double)]()
+  private val calibrations =
+    new graft.io.StampMemo[(Int, Int, Double)](SourceTables: _*)
 
   /** Calibrated production operating point — [[graft.operators
     * .Similarity.bandGeometry]]'s contract ported to the IVF tier:
@@ -308,9 +295,10 @@ object VecAdmission {
     * Round14OpsSpec metric); the truth and each rung are
     * report-grain collects (arrivals × k pairs).
     *
-    * Cached per (dir, table stamps, k, target‰): calibration is part
-    * of index training — a production gate calibrates once per index
-    * generation and serves the chosen config from the model tier.
+    * Memoized per (k, targetRecall) over both source tables by
+    * [[graft.io.StampMemo]]: calibration is part of index training —
+    * a production gate calibrates once per index generation and
+    * serves the chosen config from the model tier.
     * Full probe + full shortlist is exact by construction, so the
     * ladder always terminates at a config meeting any target ≤ 1.
     */
@@ -318,78 +306,75 @@ object VecAdmission {
                               targetRecall: Double = 0.8)
       : (Int, Int, Double) = {
     require(targetRecall > 0 && targetRecall <= 1.0)
-    if (calibrations.size > 64) calibrations.clear()
-    val (d, st) = stampKey(dir)
-    calibrations.computeIfAbsent(
-      (d, st, k, (targetRecall * 1000).toInt), _ => {
-        val model = corpusModel(s, dir)
-        val sq = corpusSqModel(s, dir)
-        val arrivals = arrivalEmb(s, dir)
-        val cells = storedCells(s, dir)
-        val codes = storedCodes(s, dir)
-        val corpus = corpusEmb(s, dir)
-        // Ladder restructure (round 17, guide §1.2): the rungs share
-        // ALL their expensive work, so hoist it out of the walk —
-        //  (a) the interpreted nearest-centroid scoring HOF ran once
-        //      per rung; the FULL sorted probe list is computed ONCE
-        //      and each rung takes its length-nProbe prefix
-        //      ([[Ivf.rankedProbeCells]] ≡ probeCells prefix-exact);
-        //  (b) the cell probe + ADC scan ([[scoredCandidates]]) ran
-        //      once per (nProbe, shortlist) pair; it depends only on
-        //      nProbe, so one scored frame serves all four shortlist
-        //      rungs — and since round 18 those four rungs are
-        //      evaluated in ONE job ([[rungPairs]]: the nested cuts
-        //      share _srnk, the float join, and sim; one collect per
-        //      probe rung instead of four plus a persist — the ladder
-        //      is job-barrier-bound, like the rest of the sf0.1 heavy
-        //      tier).
-        // Each rung's pair set is IDENTICAL to admit(nProbe,
-        // shortlist) — admit itself composes the same halves, and the
-        // prefix equality is pinned in IvfLadderSpec — so the
-        // chosen operating point cannot move.
-        val q = arrivals.select(col("query_id"), col("q_emb"),
-          sqrt(graft.functions.VecDot.of(col("q_emb"), col("q_emb")))
-            .as("q_nrm"))
-        val rankedProbes = Ivf.rankedProbeCells(
-            arrivals.select(col("query_id").as("vec_id"),
-              col("q_emb").as("embedding")), model)
-          .select(col("vec_id").as("query_id"), col("_pr"), col("probe"))
-          .localCheckpoint()
-        def collectPairs(df: DataFrame): Set[(Long, Long)] =
-          df.select("query_id", "vec_id")
-            .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-        try {
-          val truth = collectPairs(
-            admit(arrivals, cells, codes, corpus, model, sq,
-              k = k, nProbe = model.k, shortlist = Int.MaxValue))
-          val probeLadder = Iterator.iterate(2)(_ * 2)
-            .takeWhile(_ < model.k).toSeq
-          val shortLadder = Seq(4 * k, 8 * k, 16 * k, 32 * k)
-          val hit = probeLadder.iterator.flatMap { np =>
-            val scored = scoredCandidates(q,
-                rankedProbes.filter(col("_pr") < np)
-                  .select("query_id", "probe"),
-                cells, codes, sq)
-            // one job for the whole probe rung: every shortlist
-            // rung's pair set, grouped driver-side by _sl
-            val bySl = rungPairs(scored, corpus, q, k, shortLadder)
-              .collect()
-              .groupBy(_.getInt(0))
-              .map { case (sl, rows) =>
-                sl -> rows.map(r => (r.getLong(1), r.getLong(2))).toSet
-              }
-            shortLadder.iterator.map { sl =>
-              val got = bySl.getOrElse(sl, Set.empty[(Long, Long)])
-              (np, sl, got.intersect(truth).size.toDouble / truth.size)
-            }.find(_._3 >= targetRecall)
-          }.take(1).toSeq.headOption
-          hit.getOrElse((model.k, Int.MaxValue, 1.0))
-        } finally
-          // release the checkpoint blocks NOW (ADVICE r17 #4) — the
-          // ladder is the ranked list's only consumer; without this
-          // they sit with the ContextCleaner for the session's life
-          Dedup.unpersistCheckpointed(rankedProbes)
-      })
+    calibrations(dir, k, targetRecall) {
+      val model = corpusModel(s, dir)
+      val sq = corpusSqModel(s, dir)
+      val arrivals = arrivalEmb(s, dir)
+      val cells = storedCells(s, dir)
+      val codes = storedCodes(s, dir)
+      val corpus = corpusEmb(s, dir)
+      // Ladder restructure (round 17, guide §1.2): the rungs share
+      // ALL their expensive work, so hoist it out of the walk —
+      //  (a) the interpreted nearest-centroid scoring HOF ran once
+      //      per rung; the FULL sorted probe list is computed ONCE
+      //      and each rung takes its length-nProbe prefix
+      //      ([[Ivf.rankedProbeCells]] ≡ probeCells prefix-exact);
+      //  (b) the cell probe + ADC scan ([[scoredCandidates]]) ran
+      //      once per (nProbe, shortlist) pair; it depends only on
+      //      nProbe, so one scored frame serves all four shortlist
+      //      rungs — and since round 18 those four rungs are
+      //      evaluated in ONE job ([[rungPairs]]: the nested cuts
+      //      share _srnk, the float join, and sim; one collect per
+      //      probe rung instead of four plus a persist — the ladder
+      //      is job-barrier-bound, like the rest of the sf0.1 heavy
+      //      tier).
+      // Each rung's pair set is IDENTICAL to admit(nProbe,
+      // shortlist) — admit itself composes the same halves, and the
+      // prefix equality is pinned in IvfLadderSpec — so the
+      // chosen operating point cannot move.
+      val q = arrivals.select(col("query_id"), col("q_emb"),
+        sqrt(graft.functions.VecDot.of(col("q_emb"), col("q_emb")))
+          .as("q_nrm"))
+      val rankedProbes = Ivf.rankedProbeCells(
+          arrivals.select(col("query_id").as("vec_id"),
+            col("q_emb").as("embedding")), model)
+        .select(col("vec_id").as("query_id"), col("_pr"), col("probe"))
+        .localCheckpoint()
+      def collectPairs(df: DataFrame): Set[(Long, Long)] =
+        df.select("query_id", "vec_id")
+          .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+      try {
+        val truth = collectPairs(
+          admit(arrivals, cells, codes, corpus, model, sq,
+            k = k, nProbe = model.k, shortlist = Int.MaxValue))
+        val probeLadder = Iterator.iterate(2)(_ * 2)
+          .takeWhile(_ < model.k).toSeq
+        val shortLadder = Seq(4 * k, 8 * k, 16 * k, 32 * k)
+        val hit = probeLadder.iterator.flatMap { np =>
+          val scored = scoredCandidates(q,
+              rankedProbes.filter(col("_pr") < np)
+                .select("query_id", "probe"),
+              cells, codes, sq)
+          // one job for the whole probe rung: every shortlist
+          // rung's pair set, grouped driver-side by _sl
+          val bySl = rungPairs(scored, corpus, q, k, shortLadder)
+            .collect()
+            .groupBy(_.getInt(0))
+            .map { case (sl, rows) =>
+              sl -> rows.map(r => (r.getLong(1), r.getLong(2))).toSet
+            }
+          shortLadder.iterator.map { sl =>
+            val got = bySl.getOrElse(sl, Set.empty[(Long, Long)])
+            (np, sl, got.intersect(truth).size.toDouble / truth.size)
+          }.find(_._3 >= targetRecall)
+        }.take(1).toSeq.headOption
+        hit.getOrElse((model.k, Int.MaxValue, 1.0))
+      } finally
+        // release the checkpoint blocks NOW (ADVICE r17 #4) — the
+        // ladder is the ranked list's only consumer; without this
+        // they sit with the ContextCleaner for the session's life
+        Dedup.unpersistCheckpointed(rankedProbes)
+    }
   }
 
   // ---- publish-back: the standing vector index GROWS --------------

@@ -55,16 +55,17 @@ object SketchStream {
     Drain.memory(s, Sketch.tokenRegisters(docStream(s, landing))
       .groupBy("source", "idx").agg(max(col("rho")).as("mx")), "complete")
 
-  /** The four drained streaming states, cached per (dir, corpus
-    * stamp) as local frames (round 13, VERDICT r12 #3): the family's
-    * gates all drain the same arrival, and each drained state is a
-    * deterministic function of the landing (each aggregate is an
-    * order-free monoid — the family's core claim, spec-proved), so
-    * one shared drain serves all four read-sides. On a cache miss the
-    * four streaming queries run CONCURRENTLY over the shared landing
-    * (wall-clock ≈ one drain, and each still consumes all four
-    * micro-batch files — the boundary-independence conditions are
-    * unchanged). Each cached frame is a [[Drain.memory]] result:
+  /** The four drained streaming states as local frames, memoized
+    * over `documents` by [[graft.io.StampMemo]] (round 13, VERDICT r12
+    * #3): the family's gates all drain the same arrival, and each
+    * drained state is a deterministic function of the landing (each
+    * aggregate is an order-free monoid — the family's core claim,
+    * spec-proved), so one shared drain serves all four read-sides.
+    * On a miss the four streaming queries run CONCURRENTLY over the
+    * shared landing (wall-clock ≈ one drain, and each still consumes
+    * all four micro-batch files — the boundary-independence
+    * conditions are unchanged). Each cached frame is a
+    * [[Drain.memory]] result:
     * kilobyte-sized collected rows (≤ 4·256 per source) in a local
     * relation, backed by no RDD block, so [[graft.Session.reset]]
     * cannot invalidate it (driver caches hold collected objects or
@@ -73,13 +74,10 @@ object SketchStream {
   private final case class Drained(hll: DataFrame, cm: DataFrame,
                                    bk: DataFrame, hist: DataFrame)
 
-  private val drainedCache =
-    new java.util.concurrent.ConcurrentHashMap[String, Drained]()
+  private val drainedCache = new graft.io.StampMemo[Drained]("documents")
 
-  private def drainedStates(s: SparkSession, dir: String): Drained = {
-    val key = dir + "|" +
-      graft.io.ArtifactStore.tableStamp(dir, "documents")
-    drainedCache.computeIfAbsent(key, _ => {
+  private def drainedStates(s: SparkSession, dir: String): Drained =
+    drainedCache(dir) {
       val landing = landJsonl(s, dir)
       import scala.concurrent.{Await, Future}
       import scala.concurrent.duration.Duration
@@ -102,8 +100,7 @@ object SketchStream {
           Await.result(fBk, Duration.Inf),
           Await.result(fHist, Duration.Inf))
       } finally pool.shutdown()
-    })
-  }
+    }
 
   /** qs40's gate form: land, drain (shared across the family), fold
     * the drained register state to the estimate. The drained state

@@ -89,8 +89,9 @@ class IvfSpec extends SparkSpec
         .write.mode("overwrite").parquet(s"$dir/embeddings.parquet")
     write(30)
     val m1 = graft.operators.TrainingOps.ivfModel(spark, dir)
-    // re-point the SAME dir at a different corpus: the (dir, count)
-    // cache key must miss and retrain (k follows sqrt(n): 5 -> 8)
+    // re-point the SAME dir at a different corpus: the (dir,
+    // embeddings stamp) key must miss and retrain (k follows
+    // sqrt(n): 5 -> 8)
     write(80)
     val m2 = graft.operators.TrainingOps.ivfModel(spark, dir)
     assert(m1.k == 5 && m2.k == 8)

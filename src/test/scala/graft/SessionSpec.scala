@@ -53,11 +53,14 @@ class SessionSpec extends SparkSpec {
       .contains(builder), "the scan must see the one builder")
   }
 
-  test("no source in src/main outside Session.scala sets a conf or a temp function") {
-    val sources = Files.walk(Paths.get("src/main")).iterator().asScala
+  /** Every source file under src/main with its text. */
+  private lazy val mainSources =
+    Files.walk(Paths.get("src/main")).iterator().asScala
       .filter(_.toString.endsWith(".scala"))
       .map(p => p -> Files.readString(p)).toSeq
-    def holding(needles: String*): Seq[String] = sources.collect {
+
+  test("no source in src/main outside Session.scala sets a conf or a temp function") {
+    def holding(needles: String*): Seq[String] = mainSources.collect {
       case (p, text) if needles.exists(text.contains) => p.getFileName.toString
     }
     assert(holding("conf.set(", "conf.unset(") == Seq("Session.scala"),
@@ -67,22 +70,36 @@ class SessionSpec extends SparkSpec {
   }
 
   test("every streaming query in src/main drains through streaming/Drain.scala") {
-    val sources = Files.walk(Paths.get("src/main")).iterator().asScala
-      .filter(_.toString.endsWith(".scala"))
-      .map(p => p -> Files.readString(p)).toSeq
     Seq("Trigger.AvailableNow", ".writeStream", ".queryName(").foreach { n =>
-      val holders = sources.collect {
+      val holders = mainSources.collect {
         case (p, text) if text.contains(n) => p.toString
       }
       assert(holders == Seq("src/main/scala/graft/streaming/Drain.scala"),
         s"$n: start and drain a stream with graft.streaming.Drain")
     }
-    val slots = sources.collect {
+    val slots = mainSources.collect {
       case (p, text) if (p.startsWith("src/main/scala/graft/streaming") ||
           p.startsWith("src/main/scala/graft/ingest")) &&
         text.contains("AtomicReference[String]") => p.toString
     }
     assert(slots.isEmpty, s"Drain drops its own views: $slots")
+  }
+
+  test("every driver-side model in src/main is memoized through io/StampMemo.scala") {
+    Seq("computeIfAbsent", "tableStamp(").foreach { n =>
+      val outside = mainSources.collect {
+        case (p, text) if text.contains(n) &&
+          !p.startsWith("src/main/scala/graft/io") => p.toString
+      }
+      assert(outside.isEmpty, s"$n: memoize a model with graft.io.StampMemo")
+    }
+    // an overflow guard: `if (<map>.size > <bound> ...) <map>.clear()`
+    val guard = raw"(?s)\.size\s*>.{0,80}?\.clear\(\)".r
+    val guards = mainSources.collect {
+      case (p, text) if guard.findFirstIn(text).nonEmpty => p.toString
+    }
+    assert(guards == Seq("src/main/scala/graft/io/StampMemo.scala"),
+      "the memo owns the one bound")
   }
 
   test("Session.withConfs sets in order, then restores or unsets, also on throw") {
