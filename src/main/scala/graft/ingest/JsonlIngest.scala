@@ -154,18 +154,20 @@ object JsonlIngest {
     * quarantine rows arrive in the final micro-batches, so the ledger
     * state visibly absorbs them incrementally). Returns the landing
     * path. Also the spec harness's entry for building a landing tree.
+    * Published once per corpus stamp and program
+    * ([[graft.io.ArtifactStore.publish]]).
     */
   def landJsonl(s: SparkSession, dir: String): String =
-    graft.io.Scratch.landedOnce(dir, graft.io.Scratch.qs38Dir(dir)) {
-      landing =>
-        graft.io.Writers.sink(graft.core.Tables.documents(s, dir)
-          .select(to_json(struct(col("doc_id"), col("text"), col("lang"),
-            col("source"), col("n_chars"))).as("value")))
-          .mode("overwrite").text(landing)
-        java.nio.file.Files.write(
-          java.nio.file.Paths.get(landing, "zz-corrupt.jsonl"),
-          PlantedBad.mkString("", "\n", "\n")
-            .getBytes(java.nio.charset.StandardCharsets.UTF_8)): Unit
+    graft.io.ArtifactStore.publish(graft.io.Scratch.qs38Dir(dir) + "/landing",
+        dir, Seq("documents")) { landing =>
+      graft.io.Writers.sink(graft.core.Tables.documents(s, dir)
+        .select(to_json(struct(col("doc_id"), col("text"), col("lang"),
+          col("source"), col("n_chars"))).as("value")))
+        .mode("overwrite").text(landing)
+      java.nio.file.Files.write(
+        java.nio.file.Paths.get(landing, "zz-corrupt.jsonl"),
+        PlantedBad.mkString("", "\n", "\n")
+          .getBytes(java.nio.charset.StandardCharsets.UTF_8)): Unit
     }
 
   /** qs38's gate form: land, drain, present qd49's exact output shape

@@ -17,21 +17,19 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * is bumped by hand; the first use after any code change rebuilds
   * each artifact once.
   *
-  * Publication protocol (round 10, hardening the r9 design): the
-  * stamp IS the directory name — each build writes to a private
-  * `tmp-*` dir and atomically renames it to `data-<stampHash>`, so a
-  * reader (in THIS process or any other sharing the scratch root)
-  * either sees a complete tree or no tree; there is no
-  * mutate-in-place window and no separate `_stamp` file to tear. A
-  * build that loses the rename race discards its own tmp tree and
-  * reads the winner's. Stale stamp dirs are reaped lazily with an
-  * age guard so a concurrent reader of a just-replaced artifact is
-  * not unlinked mid-scan.
+  * Every derived tree that outlives the JVM is published through
+  * [[publish]], parquet artifact or not: the JSONL landings of qs38,
+  * qs39, qs48 and the sketch family, qx28's ORC copy, qp1's hive
+  * layout and qx20's schema eras. The key IS the directory name —
+  * each build writes a private `tmp-*` dir and atomically renames it
+  * to `data-<key>`, so there is no mutate-in-place window and no
+  * separate marker to tear.
   *
-  * The scratch root is USER-OWNED (`$GRAFT_ARTIFACT_DIR` override,
-  * default `~/.cache/graft-artifacts`) rather than the shared
-  * world-writable java.io.tmpdir, so another local user cannot
-  * pre-create or symlink the artifact paths.
+  * The parquet artifacts' scratch root is USER-OWNED
+  * (`$GRAFT_ARTIFACT_DIR` override, default `~/.cache/graft-artifacts`)
+  * rather than the shared world-writable java.io.tmpdir, so another
+  * local user cannot pre-create or symlink the artifact paths. The
+  * other trees keep their [[Scratch]] roots under java.io.tmpdir.
   *
   * At 100 TB the artifact lives on the object store next to the
   * source tables and the build is a scheduled job; the read side —
@@ -136,17 +134,18 @@ object ArtifactStore {
     f.delete(): Unit
   }
 
+  /** `<tag>_<hash of the raw dir>_<last 32 chars of the sanitized
+    * dir>`: the name of a root keyed on one source dir. Sanitizing
+    * alone maps `/a/b c` and `/a/b_c` to one name, and the reaper
+    * would then thrash between the two sources' trees.
+    */
+  private[io] def keyedName(tag: String, dir: String): String =
+    tag + "_" + java.lang.Long.toHexString(
+      scala.util.hashing.MurmurHash3.stringHash(dir).toLong & 0xffffffffL) +
+      "_" + dir.replaceAll("[^A-Za-z0-9._-]", "_").takeRight(32)
+
   /** Read the artifact `name` derived from `dir/table.parquet`,
     * building it iff no tree exists for the current key.
-    *
-    * The key is (source file stats, [[programDigest]], Spark version):
-    * artifacts OUTLIVE the JVM, so a change to the BUILD LOGIC must
-    * move the key as surely as a regenerated source does. It is
-    * computed INSIDE the per-artifact lock (a pre-lock stamp could
-    * publish over a newer build after losing a regeneration race).
-    * The artifact root embeds a hash of the RAW dir string —
-    * sanitizing alone can collapse distinct dirs onto one root and
-    * thrash rebuilds.
     */
   def parquetArtifact(s: SparkSession, dir: String, table: String,
                       name: String)(build: => DataFrame): DataFrame =
@@ -168,21 +167,51 @@ object ArtifactStore {
   private[graft] def parquetArtifactUnder(digest: String, s: SparkSession,
                                           dir: String, tables: Seq[String],
                                           name: String)
-                                         (build: => DataFrame): DataFrame = {
-    val dirHash = java.lang.Long.toHexString(
-      scala.util.hashing.MurmurHash3.stringHash(dir).toLong & 0xffffffffL)
-    val root = new java.io.File(scratchRoot,
-      name + "_" + dirHash + "_" +
-        dir.replaceAll("[^A-Za-z0-9._-]", "_").takeRight(32))
-    val lock = locks.computeIfAbsent(root.getAbsolutePath, _ => new Object)
+                                         (build: => DataFrame): DataFrame =
+    s.read.parquet(publishUnder(digest,
+        new java.io.File(scratchRoot, keyedName(name, dir)).getPath,
+        dir, tables) { tmp =>
+      Writers.sink(build).mode("overwrite").parquet(tmp)
+    })
+
+  /** The key of a tree derived from `dir`'s `tables` by this program:
+    * what [[publish]] names its tree by, for a layout that cannot be
+    * renamed into place (qx13's catalog tables record their paths).
+    */
+  def sourceKey(dir: String, tables: Seq[String]): String =
+    stampKey(programDigest, sourceStamp(dir, tables))
+
+  /** Publish the tree `write` lays down from `dir`'s `tables` under
+    * `root` and return its path, building it iff no tree exists for
+    * the current key ([[stampKey]]). The key is computed INSIDE the
+    * per-root lock (a pre-lock stamp could publish over a newer build
+    * after losing a regeneration race). `write` gets a private
+    * `tmp-*` path; a `write` that throws publishes nothing, and a
+    * build that loses the rename race to another process discards
+    * its own tree. The root records `dir`; see [[reap]].
+    */
+  def publish(root: String, dir: String, tables: Seq[String])
+             (write: String => Unit): String =
+    publishUnder(programDigest, root, dir, tables)(write)
+
+  /** [[publish]] under an explicit program digest. */
+  private[graft] def publishUnder(digest: String, root: String, dir: String,
+                                  tables: Seq[String])
+                                 (write: String => Unit): String = {
+    val rootDir = new java.io.File(root).getAbsoluteFile
+    val lock = locks.computeIfAbsent(rootDir.getPath, _ => new Object)
     lock.synchronized {
-      val stampHash = stampKey(digest, sourceStamp(dir, tables))
-      val dataDir = new java.io.File(root, s"data-$stampHash")
+      val dataDir = new java.io.File(rootDir,
+        "data-" + stampKey(digest, sourceStamp(dir, tables)))
       if (!dataDir.isDirectory) {
-        java.nio.file.Files.createDirectories(root.toPath)
-        val tmp = new java.io.File(root,
+        java.nio.file.Files.createDirectories(rootDir.toPath)
+        val record = new java.io.File(rootDir, SourceRecord)
+        if (!record.isFile)
+          java.nio.file.Files.write(record.toPath, dir.getBytes("UTF-8")): Unit
+        val tmp = new java.io.File(rootDir,
           "tmp-" + java.util.UUID.randomUUID.toString.take(13))
-        Writers.sink(build).mode("overwrite").parquet(tmp.getAbsolutePath)
+        try write(tmp.getPath)
+        catch { case e: Throwable => deleteRec(tmp); throw e }
         try
           java.nio.file.Files.move(tmp.toPath, dataDir.toPath,
             java.nio.file.StandardCopyOption.ATOMIC_MOVE)
@@ -193,35 +222,58 @@ object ArtifactStore {
                | _: java.nio.file.DirectoryNotEmptyException
             if dataDir.isDirectory => deleteRec(tmp)
         }
-        // reap superseded stamp dirs and orphaned tmp trees, with an
-        // age guard so another process still scanning a just-replaced
-        // artifact is not unlinked mid-read. The guard must run off
-        // the SUPERSESSION time, not the dir's own mtime (its BUILD
-        // time — ADVICE r10): a tree built an hour ago would
-        // otherwise be unlinked the instant a new stamp publishes,
-        // exactly when a lazy DataFrame may still be scanning it. A
-        // zero-byte `stale-<dir>` marker records when the tree was
-        // FIRST seen superseded; deletion happens only on a later
-        // pass once the marker itself has aged past the cutoff.
-        val cutoff = System.currentTimeMillis - 15L * 60 * 1000
-        Option(root.listFiles()).getOrElse(Array.empty)
-          .filter(f => f.getName != dataDir.getName &&
-            (f.getName.startsWith("data-") || f.getName.startsWith("tmp-")))
-          .foreach { f =>
-            val marker = new java.io.File(root, "stale-" + f.getName)
-            if (!marker.exists) marker.createNewFile(): Unit
-            else if (marker.lastModified < cutoff) {
-              deleteRec(f); marker.delete(): Unit
-            }
-          }
-        // markers whose tree is already gone (deleted above, or by an
-        // earlier process) are themselves litter
-        Option(root.listFiles()).getOrElse(Array.empty)
-          .filter(f => f.getName.startsWith("stale-") &&
-            !new java.io.File(root, f.getName.stripPrefix("stale-")).exists)
-          .foreach(_.delete(): Unit)
+        reap(rootDir, dataDir)
       }
-      s.read.parquet(dataDir.getAbsolutePath)
+      dataDir.getPath
+    }
+  }
+
+  /** The file in each published root that records its source dir. */
+  private val SourceRecord = "source-dir"
+
+  /** Reap, after `dataDir` is published: the root's superseded
+    * `data-*` trees and orphaned `tmp-*` trees, then every sibling
+    * root whose recorded source dir no longer exists (a root with no
+    * record is left alone). Both go through one age guard, so another
+    * process still scanning a just-replaced tree is not unlinked
+    * mid-read. The guard runs off the SUPERSESSION time, not the
+    * tree's own mtime (its BUILD time — ADVICE r10): a tree built an
+    * hour ago would otherwise be unlinked the instant a new stamp
+    * publishes, exactly when a lazy DataFrame may still be scanning
+    * it. A zero-byte marker records when the tree was FIRST seen
+    * superseded (`stale-<tree>` beside it) or orphaned (`orphaned`
+    * inside the root); deletion happens only on a later pass once
+    * the marker itself has aged past the cutoff.
+    */
+  private def reap(root: java.io.File, dataDir: java.io.File): Unit = {
+    val cutoff = System.currentTimeMillis - 15L * 60 * 1000
+    def ageOut(tree: java.io.File, marker: java.io.File): Unit =
+      if (!marker.exists) marker.createNewFile(): Unit
+      else if (marker.lastModified < cutoff) {
+        deleteRec(tree); marker.delete(): Unit
+      }
+    def list(f: java.io.File) =
+      Option(f.listFiles()).getOrElse(Array.empty[java.io.File])
+    list(root)
+      .filter(f => f.getName != dataDir.getName &&
+        (f.getName.startsWith("data-") || f.getName.startsWith("tmp-")))
+      .foreach(f => ageOut(f, new java.io.File(root, "stale-" + f.getName)))
+    // markers whose tree is already gone (deleted above, or by an
+    // earlier process) are themselves litter
+    list(root)
+      .filter(f => f.getName.startsWith("stale-") &&
+        !new java.io.File(root, f.getName.stripPrefix("stale-")).exists)
+      .foreach(_.delete(): Unit)
+    list(root.getParentFile).filter(_ != root).foreach { sib =>
+      val record = new java.io.File(sib, SourceRecord)
+      if (record.isFile) {
+        val marker = new java.io.File(sib, "orphaned")
+        val src = new String(
+          java.nio.file.Files.readAllBytes(record.toPath), "UTF-8")
+        // a source regenerated at the same path revives its root
+        if (new java.io.File(src).exists) marker.delete(): Unit
+        else ageOut(sib, marker)
+      }
     }
   }
 }

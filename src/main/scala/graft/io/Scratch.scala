@@ -1,60 +1,19 @@
 package graft.io
 
-/** Scratch-tree management for the driver mains (Bench/Verify).
+/** The fixed scratch roots under java.io.tmpdir, one per query and
+  * source dir, and their clean-up at main startup (Bench/Verify).
   *
-  * q14's partitioned-write roundtrip used to create a fresh random
-  * temp dir per invocation and reap old trees from INSIDE the declared
-  * query (VERDICT r3 #4 — a query must be side-effect free beyond its
-  * own scratch write). The query now overwrites one fixed path; this
-  * helper cleans up legacy random-suffix trees once at main startup.
+  * Two kinds of tree live under them. A tree derived once from the
+  * source tables and reused (the JSONL landings, qx28's ORC copy,
+  * qp1's hive layout, qx20's schema eras) is published by
+  * [[ArtifactStore.publish]] under a root of its own below its
+  * query's root, keyed by the source stamps and the program. A
+  * query's own output (q14's roundtrip, the verdict sinks, qp8's
+  * refreshable mart) is overwritten at a fixed path on every run:
+  * a query must be side-effect free beyond its own scratch write
+  * (VERDICT r3 #4), so no declared query reaps the tmp root.
   */
 object Scratch {
-
-  /** Stamp-cached one-time landing under `root`: run `write` into
-    * `root/landing` only when no marker matches the CURRENT source
-    * stamp of `dir/documents.parquet`, so repeated gate invocations
-    * (three bench runs × every qs* landing gate) skip re-exporting
-    * the corpus as JSONL each time. The landing is the upstream
-    * PRODUCER's work — a drop folder exists before any consumer runs
-    * — so amortizing it keeps each gate measuring drain + state + its
-    * read-side, the work the query declares. Stale markers are
-    * removed on rewrite (a regenerated corpus re-lands exactly once).
-    * Writers must be deterministic functions of the source table.
-    *
-    * The marker is named by [[ArtifactStore.stampKey]] over the
-    * source stamp, the program digest and Spark's version: the
-    * landing content also depends on CODE — the landed column set,
-    * the repartition file count, qs38's planted corrupt rows, qs39's
-    * !isCorpus filter — and markers OUTLIVE the JVM, so any code
-    * change re-lands once.
-    */
-  def landedOnce(dir: String, root: String)(write: String => Unit): String =
-    stampedOnce(dir, root, "landing", "documents")(write)
-
-  /** The [[landedOnce]] contract generalized to any scratch subdir
-    * derived from any single source table (round 14, ADVICE r13:
-    * qx28's ORC tree keyed on bare path existence, so any session
-    * that skipped reapTmp served a stale tree after a testdata
-    * regeneration). One marker per key under `root`; rewrite drops
-    * stale markers so a regenerated source re-materializes exactly
-    * once.
-    */
-  def stampedOnce(dir: String, root: String, subdir: String, table: String)
-                 (write: String => Unit): String = {
-    val target = new java.io.File(root, subdir).getAbsolutePath
-    val hash = ArtifactStore.stampKey(ArtifactStore.programDigest,
-      s"$subdir;" + ArtifactStore.tableStamp(dir, table))
-    val marker = new java.io.File(root, s"landed-$subdir-$hash")
-    if (!marker.exists || !new java.io.File(target).isDirectory) {
-      write(target)
-      Option(new java.io.File(root).listFiles()).getOrElse(Array.empty)
-        .filter(f => f.getName.startsWith(s"landed-$subdir-") &&
-          f.getName != marker.getName)
-        .foreach(_.delete(): Unit)
-      marker.createNewFile(): Unit
-    }
-    target
-  }
 
   /** Fixed q14 scratch root: overwritten in place on every run, so
     * repeated bench/verify invocations never accumulate directory
@@ -64,16 +23,15 @@ object Scratch {
     new java.io.File(System.getProperty("java.io.tmpdir"),
       "graft_q14_scratch").getAbsolutePath
 
-  /** `<tmpdir>/graft_<tag>_<sfDir>`, with every character of `sfDir`
-    * outside `[A-Za-z0-9._-]` replaced by `_`: one fixed root per query
-    * and source dir.
+  /** `<tmpdir>/graft_<tag>_<hash>_<sfDir>`, named like an artifact
+    * root ([[ArtifactStore.keyedName]]): one fixed root per query and
+    * source dir.
     */
   private def keyed(tag: String, sfDir: String): String =
     new java.io.File(System.getProperty("java.io.tmpdir"),
-      s"graft_${tag}_" + sfDir.replaceAll("[^A-Za-z0-9._-]", "_"))
-      .getAbsolutePath
+      ArtifactStore.keyedName(s"graft_$tag", sfDir)).getAbsolutePath
 
-  /** qp1's partitioned-mart layout, one fixed path per sf dir (its
+  /** qp1's partitioned-mart root, one fixed path per sf dir (its
     * content is a function of the source data, so the path must key
     * on it — a Bench-at-sf0.1 run after a Verify-at-sf0.01 run must
     * not read the smaller mart).
@@ -120,8 +78,8 @@ object Scratch {
     */
   def qs38Dir(sfDir: String): String = keyed("qs38", sfDir)
 
-  /** qs39's admission-gate roots (JSONL batch landing + per-batch
-    * verdict sink), keyed like [[qp1Dir]].
+  /** qs39's admission-gate roots (the qs39 and qs48 JSONL landings +
+    * the per-batch verdict sinks), keyed like [[qp1Dir]].
     */
   def qs39Dir(sfDir: String): String = keyed("qs39", sfDir)
 
@@ -173,19 +131,20 @@ object Scratch {
   /** Delete graft scratch trees under java.io.tmpdir: legacy
     * random-suffix dirs from earlier rounds and the fixed roots whose
     * prefixes are listed below. Two kinds of tree are left in place:
-    * the stamp-keyed landings of qs38, qs39 and the sketch family,
-    * which [[stampedOnce]] re-lands only when their source changes,
-    * and the roots that qp8, qd49 and qd50 overwrite on every run.
+    * the published trees of qp1, qx20, qx28, qs38, qs39 and the
+    * sketch family, whose key moves with their sources and the
+    * program so they cannot go stale, and the roots that qp8, qd49
+    * and qd50 overwrite on every run.
     */
   def reapTmp(): Unit = {
     val tmpRoot = java.nio.file.Paths.get(System.getProperty("java.io.tmpdir"))
     // graft_qs7_ covers legacy round-6 landing trees (now graft_stream_);
     // graft_qs40_..43_ cover the per-gate sketch landings replaced by
     // the shared graft_sketch_ tree in round 13
-    val prefixes = Seq("graft_q14_", "graft_qp1_", "graft_qx13_",
-      "graft_qx20_", "graft_qs16_", "graft_qs7_", "graft_stream_",
-      "graft_qx24_", "graft_qp4_", "graft_qp5_", "graft_qx28_",
-      "graft_qs40_", "graft_qs41_", "graft_qs42_", "graft_qs43_")
+    val prefixes = Seq("graft_q14_", "graft_qx13_", "graft_qs16_",
+      "graft_qs7_", "graft_stream_", "graft_qx24_", "graft_qp4_",
+      "graft_qp5_", "graft_qs40_", "graft_qs41_", "graft_qs42_",
+      "graft_qs43_")
     if (java.nio.file.Files.isDirectory(tmpRoot)) {
       val it = java.nio.file.Files.list(tmpRoot)
       try it.forEach { p =>

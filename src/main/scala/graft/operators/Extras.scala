@@ -104,13 +104,6 @@ object Extras {
       .orderBy("event_id")
   }
 
-  /** sf dirs whose qx13 bucketed tables were laid down in this JVM
-    * (setup, like qp1's layout — the declared query measures the
-    * co-located read+join, not the one-time write).
-    */
-  private val bucketedWritten =
-    java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
-
   /** qx13 — bucketed co-located join, the batch-layout answer to "the
     * same join runs every day at 100 TB": orders and customer are
     * written ONCE as 8-bucket tables on the join key, so the join
@@ -130,30 +123,32 @@ object Extras {
       .orderBy("o_orderkey")
   }
 
-  /** Lay down (once per JVM per dir) and name the 8-bucket orders /
-    * customer tables qx13 and qp7 read — returns (ordersTable,
-    * customerTable).
+  /** Lay down (once per session and source key) and name the
+    * 8-bucket orders / customer tables qx13 and qp7 read — returns
+    * (ordersTable, customerTable). The catalog records each table's
+    * path, so the tables are not renamed into place like a published
+    * tree: their names and paths carry the source key
+    * ([[graft.io.ArtifactStore.sourceKey]]) instead, and the session
+    * catalog is the record of what was written.
     */
   def ensureBucketedTables(s: SparkSession, dir: String): (String, String) = {
     // hex hash keeps the table name injective per exact dir string —
     // sanitizing alone collapses '.' and '-' to '_', which would let
     // two different sf dirs share (and silently re-point) one table
+    val key = graft.io.ArtifactStore.sourceKey(dir, Seq("orders", "customer"))
     val suffix = dir.replaceAll("[^A-Za-z0-9_]", "_") + "_" +
-      java.lang.Integer.toHexString(dir.hashCode)
-    val root = graft.io.Scratch.qx13Dir(dir)
+      java.lang.Integer.toHexString(dir.hashCode) + "_" + key
+    val root = graft.io.Scratch.qx13Dir(dir) + "/" + key
     val oTab = s"graft_orders_b$suffix"
     val cTab = s"graft_customer_b$suffix"
-    // mark written only after both writes return (see
-    // Marts.ensurePartitionedMart — a partial write must retry)
-    if (!bucketedWritten.contains(root) || !s.catalog.tableExists(oTab) ||
-        !s.catalog.tableExists(cTab)) {
+    // a partial write (orders only) leaves cTab absent: both retry
+    if (!s.catalog.tableExists(oTab) || !s.catalog.tableExists(cTab)) {
       graft.io.Bucketing.writeBucketed(
         Tables.orders(s, dir).select("o_orderkey", "o_custkey", "o_totalprice"),
         oTab, "o_custkey", buckets = 8, path = Some(s"$root/orders"))
       graft.io.Bucketing.writeBucketed(
         Tables.customer(s, dir).select("c_custkey", "c_name"),
         cTab, "c_custkey", buckets = 8, path = Some(s"$root/customer"))
-      bucketedWritten.add(root)
     }
     (oTab, cTab)
   }
@@ -364,13 +359,6 @@ object Extras {
     s.sql(editSqlText)
   }
 
-  /** sf dirs whose qx20 era trees were laid down in this JVM (setup,
-    * like qx13's tables — the declared query measures the merged
-    * READ, not the one-time writes).
-    */
-  private val evolvedWritten =
-    java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
-
   /** qx20 — schema-evolution read: two parquet "eras" of the same
     * table written with DIFFERENT schemas (era 1 carries
     * o_totalprice, era 2 o_orderstatus — the column drift every
@@ -382,24 +370,23 @@ object Extras {
     * (mergeSchema reads one footer per file at planning; production
     * keeps it off and pins the merged schema explicitly — the read
     * itself is identical.) Oracle: the same union-by-name, expressed
-    * as per-era CASE projections over the source table.
+    * as per-era CASE projections over the source table. The eras are
+    * setup, published once per orders stamp and program
+    * ([[graft.io.ArtifactStore.publish]]); the query measures the
+    * merged READ.
     */
   def schemaMergeRead(s: SparkSession, dir: String): DataFrame = {
-    val root = graft.io.Scratch.qx20Dir(dir)
-    val era1 = s"$root/era1"
-    val era2 = s"$root/era2"
-    if (!evolvedWritten.contains(root) || !new java.io.File(era1).exists()
-        || !new java.io.File(era2).exists()) {
+    val root = graft.io.ArtifactStore.publish(
+        graft.io.Scratch.qx20Dir(dir) + "/eras", dir, Seq("orders")) { out =>
       val o = Tables.orders(s, dir)
       graft.io.Writers.sink(o.filter(col("o_orderkey") % 2 === 0)
         .select("o_orderkey", "o_totalprice"))
-        .mode("overwrite").parquet(era1)
+        .mode("overwrite").parquet(s"$out/era1")
       graft.io.Writers.sink(o.filter(col("o_orderkey") % 2 === 1)
         .select("o_orderkey", "o_orderstatus"))
-        .mode("overwrite").parquet(era2)
-      evolvedWritten.add(root)
+        .mode("overwrite").parquet(s"$out/era2")
     }
-    s.read.option("mergeSchema", "true").parquet(era1, era2)
+    s.read.option("mergeSchema", "true").parquet(s"$root/era1", s"$root/era2")
       .select("o_orderkey", "o_totalprice", "o_orderstatus")
       .orderBy("o_orderkey")
   }
@@ -410,10 +397,7 @@ object Extras {
     * reaches the OrcScan as PushedFilters and the projection prunes
     * ReadSchema to the three referenced columns (PlanSpec pins both).
     * The documents table routes to ORC once per (sf, corpus stamp,
-    * program) — the landedOnce marker contract (round 14, ADVICE r13:
-    * a per-JVM set plus bare path existence served a stale tree to
-    * any session that skipped reapTmp after a testdata regeneration)
-    * — then the declared query
+    * program) through [[orcDocuments]], then the declared query
     * reads ONLY the ORC tree: per-source doc counts and char sums
     * over the n_chars >= 200 slice. The oracle recomputes from the
     * parquet source, so the roundtrip must be lossless for every
@@ -423,19 +407,23 @@ object Extras {
     * downstream reads ORC gets the same pushdown/pruning economics
     * as the parquet path, from the same declarative plan.
     */
-  def orcRoundtrip(s: SparkSession, dir: String): DataFrame = {
-    val orcPath = graft.io.Scratch.stampedOnce(dir,
-        graft.io.Scratch.qx28Dir(dir), "documents_orc", "documents") { target =>
-      graft.io.Writers.sink(Tables.documents(s, dir)).mode("overwrite").orc(target)
-    }
-    s.read.orc(orcPath)
+  def orcRoundtrip(s: SparkSession, dir: String): DataFrame =
+    s.read.orc(orcDocuments(s, dir))
       .filter(col("n_chars") >= 200)
       .groupBy("source")
       .agg(count(lit(1)).as("n_docs"),
         sum("n_chars").as("sum_chars"),
         min("doc_id").as("first_doc"))
       .orderBy("source")
-  }
+
+  /** The documents table as ORC, published once per corpus stamp and
+    * program ([[graft.io.ArtifactStore.publish]]); returns its path.
+    */
+  private[graft] def orcDocuments(s: SparkSession, dir: String): String =
+    graft.io.ArtifactStore.publish(graft.io.Scratch.qx28Dir(dir) + "/documents_orc",
+        dir, Seq("documents")) { target =>
+      graft.io.Writers.sink(Tables.documents(s, dir)).mode("overwrite").orc(target)
+    }
 
   /** qx21 — NULL-SAFE equi-join (`<=>` / IS NOT DISTINCT FROM): the
     * join trap every warehouse hits — plain `=` silently DROPS rows

@@ -69,30 +69,18 @@ object Marts {
       .orderBy("store", "month", "person")
   }
 
-  /** sf dirs whose qp1 mart layout was laid down in this JVM — the
-    * write is one-time setup (the measured write cost is q14's job);
-    * qp1 itself measures the PRUNED READ.
+  /** Publish the q09 mart in the same hive `month`/`store` layout q14
+    * writes, once per stamp of q09's four source tables and program
+    * ([[graft.io.ArtifactStore.publish]]); returns its path. The write
+    * is one-time setup (the measured write cost is q14's job); qp1
+    * itself measures the PRUNED READ.
     */
-  private val martWritten =
-    java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
-
-  /** Write (at most once per JVM per sf dir) the q09 mart in the same
-    * hive `month`/`store` layout q14 writes, at a path keyed by the
-    * sf dir; returns the path. Re-written if an external reap removed
-    * the tree.
-    */
-  def ensurePartitionedMart(s: SparkSession, dir: String): String = {
-    val out = graft.io.Scratch.qp1Dir(dir)
-    // mark as written only AFTER the write returns: marking first
-    // would let a failed partial write be silently reused for the
-    // rest of the JVM (the overwrite mode makes retries safe)
-    if (!martWritten.contains(out) || !new java.io.File(out).exists()) {
+  def ensurePartitionedMart(s: SparkSession, dir: String): String =
+    graft.io.ArtifactStore.publish(graft.io.Scratch.qp1Dir(dir) + "/mart",
+        dir, Seq("lineitem", "orders", "supplier", "nation")) { out =>
       graft.io.Writers.writePartitioned(Relational.q09(s, dir), out,
         Seq("month", "store"))
-      martWritten.add(out)
     }
-    out
-  }
 
   /** qp1 — partition-pruned read: the payoff of S6's hive layout
     * (reference main.py:360-365 partitions the mart precisely so

@@ -52,13 +52,13 @@ object Admission {
     * the gate's correctness argument is about.
     */
   def landBatchJsonl(s: SparkSession, dir: String): String =
-    graft.io.Scratch.landedOnce(dir, graft.io.Scratch.qs39Dir(dir)) {
-      landing =>
-        graft.io.Writers.sink(Tables.documents(s, dir).where(!isCorpus)
-          .repartition(4)
-          .select(to_json(struct(col("doc_id"), col("text"), col("lang"),
-            col("source"), col("n_chars"))).as("value")))
-          .mode("overwrite").text(landing)
+    graft.io.ArtifactStore.publish(graft.io.Scratch.qs39Dir(dir) + "/landing",
+        dir, Seq("documents")) { landing =>
+      graft.io.Writers.sink(Tables.documents(s, dir).where(!isCorpus)
+        .repartition(4)
+        .select(to_json(struct(col("doc_id"), col("text"), col("lang"),
+          col("source"), col("n_chars"))).as("value")))
+        .mode("overwrite").text(landing)
     }
 
   /** qs39 — drain the drop folder, score each micro-batch against
@@ -331,8 +331,9 @@ object Admission {
     * arbitrary one.
     */
   private def landGenBatchesJsonl(s: SparkSession, dir: String): String =
-    graft.io.Scratch.stampedOnce(dir, graft.io.Scratch.qs39Dir(dir),
-        "seq_landing", "documents") { landing =>
+    graft.io.ArtifactStore.publish(
+        graft.io.Scratch.qs39Dir(dir) + "/seq_landing",
+        dir, Seq("documents")) { landing =>
       val docs = Tables.documents(s, dir)
       val t0 = System.currentTimeMillis - 600000L
       Seq(1, 2).foreach { gen =>

@@ -29,18 +29,17 @@ import org.apache.spark.sql.functions._
 object SketchStream {
 
   /** Land the corpus as JSONL in a watched folder (several part
-    * files → several micro-batches under maxFilesPerTrigger = 1).
-    * `root` defaults to the sketch family's SHARED tree (round 13,
-    * VERDICT r12 #3: qs40–qs43 all consume the same arrival, so four
-    * per-gate copies of one identical export were pure waste).
-    * Stamp-cached ([[graft.io.Scratch.landedOnce]]): the landing is
-    * the upstream producer's work, re-exported only when the corpus
-    * changes.
+    * files → several micro-batches under maxFilesPerTrigger = 1):
+    * the sketch family's SHARED tree (round 13, VERDICT r12 #3:
+    * qs40–qs43 all consume the same arrival, so four per-gate copies
+    * of one identical export were pure waste). Published once per
+    * corpus stamp and program ([[graft.io.ArtifactStore.publish]]):
+    * the landing is the upstream producer's work, re-exported only
+    * when the corpus or the program changes.
     */
-  def landJsonl(s: SparkSession, dir: String,
-                root: String => String = graft.io.Scratch.sketchDir)
-      : String =
-    graft.io.Scratch.landedOnce(dir, root(dir)) { landing =>
+  def landJsonl(s: SparkSession, dir: String): String =
+    graft.io.ArtifactStore.publish(graft.io.Scratch.sketchDir(dir) + "/landing",
+        dir, Seq("documents")) { landing =>
       graft.io.Writers.sink(Tables.documents(s, dir)
         .repartition(4)
         .select(to_json(struct(col("doc_id"), col("text"), col("lang"),

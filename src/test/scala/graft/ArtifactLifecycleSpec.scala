@@ -55,6 +55,146 @@ class ArtifactLifecycleSpec extends SparkSpec {
     deleteRec(root)
   }
 
+  /** A one-file "table" `dir/t.parquet` holding `v`: the stamp only
+    * stats the file, so a non-parquet source is enough.
+    */
+  private def putSource(dir: String, v: String): Unit = {
+    java.nio.file.Files.write(java.nio.file.Paths.get(dir, "t.parquet"),
+      v.getBytes("UTF-8")): Unit
+  }
+
+  /** `body` over a fresh source dir holding `v`, deleted afterwards. */
+  private def withSource[A](prefix: String, v: String)(body: String => A): A = {
+    val dir = tempDir(prefix)
+    putSource(dir, v)
+    try body(dir)
+    finally org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(dir))
+  }
+
+  /** A non-parquet tree: `out/v.txt` holding the source's bytes. */
+  private def copyTree(dir: String)(out: String): Unit = {
+    java.nio.file.Files.createDirectories(java.nio.file.Paths.get(out))
+    java.nio.file.Files.copy(java.nio.file.Paths.get(dir, "t.parquet"),
+      java.nio.file.Paths.get(out, "v.txt")): Unit
+  }
+
+  private def readTree(path: String): String =
+    new String(java.nio.file.Files.readAllBytes(
+      java.nio.file.Paths.get(path, "v.txt")), "UTF-8")
+
+  test("ArtifactStore.publish: a tree builds once, then republishes on a source rewrite or a changed digest") {
+    import graft.io.ArtifactStore
+    withSource("pubsrc", "1") { dir => withArtifactName("pub_art") { name =>
+      val root = new java.io.File(ArtifactStore.scratchRoot, name + "_t").getPath
+      var builds = 0
+      def pub(digest: String) =
+        ArtifactStore.publishUnder(digest, root, dir, Seq("t")) { out =>
+          builds += 1
+          copyTree(dir)(out)
+        }
+      val p1 = pub("a")
+      assert(readTree(p1) == "1" && builds == 1)
+      assert(pub("a") == p1 && builds == 1,
+        "same source, same program: the published tree is served")
+      putSource(dir, "22") // a new size moves the stamp whatever the mtime
+      val p2 = pub("a")
+      assert(p2 != p1 && readTree(p2) == "22" && builds == 2,
+        "a source rewritten in place republishes")
+      val p3 = pub("b")
+      assert(p3 != p2 && readTree(p3) == "22" && builds == 3,
+        "a changed program republishes")
+      assert(new java.io.File(root, "source-dir").isFile,
+        "the root records its source dir")
+    }}
+  }
+
+  test("ArtifactStore.publish: a throwing write publishes nothing, and the next call builds") {
+    import graft.io.ArtifactStore
+    withSource("pubfail", "1") { dir => withArtifactName("fail_art") { name =>
+      val root = new java.io.File(ArtifactStore.scratchRoot, name + "_t")
+      val e = intercept[IllegalStateException] {
+        ArtifactStore.publish(root.getPath, dir, Seq("t")) { out =>
+          copyTree(dir)(out)
+          throw new IllegalStateException("write failed halfway")
+        }
+      }
+      assert(e.getMessage == "write failed halfway")
+      assert(root.listFiles().forall(f =>
+        !f.getName.startsWith("data-") && !f.getName.startsWith("tmp-")),
+        s"a failed write left a tree: ${root.list().toSeq}")
+      var builds = 0
+      val p = ArtifactStore.publish(root.getPath, dir, Seq("t")) { out =>
+        builds += 1
+        copyTree(dir)(out)
+      }
+      assert(builds == 1 && readTree(p) == "1")
+    }}
+  }
+
+  test("ArtifactStore reaps a root whose recorded source dir is gone, after the age guard") {
+    import graft.io.ArtifactStore
+    withSource("livesrc", "2") { live => withArtifactName("orphan_art") { name =>
+      def root(tag: String) = new java.io.File(ArtifactStore.scratchRoot, s"${name}_$tag")
+      def pub(dir: String, tag: String) =
+        ArtifactStore.publish(root(tag).getPath, dir, Seq("t"))(copyTree(dir))
+      val gone = tempDir("orphansrc")
+      putSource(gone, "1")
+      pub(gone, "gone")
+      // a root built before roots recorded their source dir
+      val legacy = root("legacy")
+      new java.io.File(legacy, "data-0").mkdirs()
+      org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(gone))
+      pub(live, "a")
+      val marker = new java.io.File(root("gone"), "orphaned")
+      assert(root("gone").isDirectory && marker.exists,
+        "an orphan is marked, not deleted, by the publish that finds it")
+      // a source regenerated at the same path revives its root
+      new java.io.File(gone).mkdirs()
+      pub(live, "b")
+      assert(!marker.exists && root("gone").isDirectory)
+      org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(gone))
+      pub(live, "c")
+      assert(marker.exists)
+      marker.setLastModified(System.currentTimeMillis - 16L * 60 * 1000)
+      pub(live, "d")
+      assert(!root("gone").exists, "an aged orphan is reaped on a later pass")
+      assert(new java.io.File(legacy, "data-0").isDirectory,
+        "a root with no record is left alone")
+      assert(root("a").isDirectory && root("d").isDirectory)
+    }}
+  }
+
+  test("qp1's mart and qx20's eras follow an in-place rewrite of orders") {
+    import graft.operators.{Extras, Marts, Relational}
+    val src = "/root/testdata/sf0.001"
+    val dir = tempDir("q09src")
+    Seq("lineitem", "orders", "supplier", "nation").foreach { t =>
+      org.apache.commons.io.FileUtils.copyToDirectory(
+        new java.io.File(s"$src/$t.parquet"), new java.io.File(dir))
+    }
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.select(col("store").cast("int"), col("person").cast("long"),
+        col("month"), col("total"), col("incentive"))
+        .collect().map(_.toSeq).toSet
+    def mart() = rows(spark.read.parquet(Marts.ensurePartitionedMart(spark, dir)))
+    try {
+      val before = mart()
+      assert(before == rows(Relational.q09(spark, dir)))
+      assert(Extras.schemaMergeRead(spark, dir).count() ==
+        spark.read.parquet(s"$src/orders.parquet").count())
+      // keep half of the orders, written over the copy in place
+      val kept = spark.read.parquet(s"$src/orders.parquet")
+        .filter(col("o_orderkey") % 4 =!= 0)
+      kept.write.mode("overwrite").parquet(s"$dir/orders.parquet")
+      val after = mart()
+      assert(after != before, "the mart still reflects the old orders")
+      assert(after == rows(Relational.q09(spark, dir)))
+      assert(Extras.schemaMergeRead(spark, dir).count() == kept.count(),
+        "the eras still reflect the old orders")
+    } finally Seq(graft.io.Scratch.qp1Dir(dir), graft.io.Scratch.qx20Dir(dir), dir)
+      .foreach(d => org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(d)))
+  }
+
   test("pq/cell artifacts ≡ fresh encode (parity)") {
     import graft.operators.{PqInt, TrainingOps}
     val dir = "/root/testdata/sf0.001"

@@ -484,7 +484,7 @@ class PlanSpec extends SparkSpec
     val scan = allNodes(df.queryExecution.executedPlan).collectFirst {
       case f: org.apache.spark.sql.execution.FileSourceScanExec => f
     }.get
-    val root = new java.io.File(graft.io.Scratch.qp1Dir(sf))
+    val root = new java.io.File(graft.operators.Marts.ensurePartitionedMart(spark, sf))
     def parquetFiles(f: java.io.File): Seq[java.io.File] =
       if (f.isDirectory) f.listFiles().toSeq.flatMap(parquetFiles)
       else if (f.getName.endsWith(".parquet")) Seq(f) else Seq.empty

@@ -99,7 +99,7 @@ class Round13OpsSpec extends SparkSpec {
     // force the write via the declared query, then compare the FULL
     // table (not just the aggregate) against the parquet source
     graft.operators.Extras.orcRoundtrip(spark, dir).collect()
-    val orc = spark.read.orc(graft.io.Scratch.qx28Dir(dir) + "/documents_orc")
+    val orc = spark.read.orc(graft.operators.Extras.orcDocuments(spark, dir))
       .collect().map(_.toSeq).toSet
     val pq = spark.read.parquet(s"$dir/documents.parquet")
       .collect().map(_.toSeq).toSet

@@ -4,12 +4,16 @@ import org.scalatest.funsuite.AnyFunSuite
 
 import graft.io.Scratch
 
-/** The keyed scratch roots: `<tmpdir>/graft_<tag>_<sanitized sf dir>`. */
+/** The keyed scratch roots:
+  * `<tmpdir>/graft_<tag>_<dir hash>_<sanitized sf dir>`.
+  */
 class ScratchSpec extends AnyFunSuite {
 
-  test("every keyed scratch root is tmpdir/graft_<tag>_<sanitized sf dir>") {
-    assert(Scratch.qp1Dir("/data/sf0.01").endsWith("/graft_qp1__data_sf0.01"))
+  test("every keyed scratch root is tmpdir/graft_<tag>_<dir hash>_<sanitized sf dir>") {
+    assert(Scratch.qp1Dir("/data/sf0.01").matches(".*/graft_qp1_[0-9a-f]+__data_sf0.01"))
     val sf = "/data/sf 0.1+x"
+    val hash = java.lang.Long.toHexString(
+      scala.util.hashing.MurmurHash3.stringHash(sf).toLong & 0xffffffffL)
     val roots = Seq(
       Scratch.qp1Dir(sf) -> "qp1", Scratch.qx13Dir(sf) -> "qx13",
       Scratch.qx20Dir(sf) -> "qx20", Scratch.qs16Dir(sf) -> "qs16",
@@ -21,7 +25,14 @@ class ScratchSpec extends AnyFunSuite {
       Scratch.eventsLandingDir(sf) -> "stream")
     val tmp = System.getProperty("java.io.tmpdir")
     roots.foreach { case (dir, tag) =>
-      assert(dir == new java.io.File(tmp, s"graft_${tag}__data_sf_0.1_x").getAbsolutePath)
+      assert(dir == new java.io.File(tmp, s"graft_${tag}_${hash}__data_sf_0.1_x").getAbsolutePath)
     }
+  }
+
+  test("two sf dirs that sanitize alike get two roots") {
+    // both sanitize to _a_b_c: without the raw-dir hash they would
+    // share one root, and each publish would reap the other's tree
+    assert(Scratch.qp1Dir("/a/b c") != Scratch.qp1Dir("/a/b_c"))
+    assert(Scratch.qs39Dir("/a/b c") != Scratch.qs39Dir("/a/b_c"))
   }
 }

@@ -102,6 +102,21 @@ class SessionSpec extends SparkSpec {
       "the memo owns the one bound")
   }
 
+  test("every derived tree in src/main is published through io/ArtifactStore.scala") {
+    Seq("stampedOnce", "landedOnce", "landed-", "newKeySet").foreach { n =>
+      val holders = mainSources.collect {
+        case (p, text) if text.contains(n) => p.toString
+      }
+      assert(holders.isEmpty,
+        s"$n: publish a derived tree with graft.io.ArtifactStore.publish")
+    }
+    val keyed = mainSources.collect {
+      case (p, text) if text.contains("stampKey(") => p.toString
+    }
+    assert(keyed == Seq("src/main/scala/graft/io/ArtifactStore.scala"),
+      "ArtifactStore owns the one key")
+  }
+
   test("Session.withConfs sets in order, then restores or unsets, also on throw") {
     val (set, unset) = ("spark.sql.shuffle.partitions", "graft.spec.scoped")
     val before = spark.conf.get(set)
