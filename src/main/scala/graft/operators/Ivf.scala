@@ -1,7 +1,6 @@
 package graft.operators
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** IVF (inverted-file) approximate nearest neighbor: cluster the
@@ -184,23 +183,11 @@ object Ivf {
              nProbe: Int = 4): DataFrame = {
     val assigned = assign(emb, model)
       .select(col("vec_id"), col("embedding"), col("cluster"),
-        org.apache.spark.sql.functions.sqrt(graft.functions.VecDot
-          .of(col("embedding"), col("embedding"))).as("nrm"))
-    val q = assigned.filter(col("vec_id").isin(queryIds: _*))
-      .withColumn("probe",
-        explode(nearestCentroids(model, nProbe)))
-      .select(col("vec_id").as("query_id"), col("embedding").as("q_emb"),
-        col("nrm").as("q_nrm"), col("probe"))
-    val w = Window.partitionBy("query_id")
-      .orderBy(col("sim").desc, col("vec_id"))
-    assigned.join(broadcast(q), col("cluster") === col("probe"))
-      .filter(col("vec_id") =!= col("query_id"))
-      .withColumn("sim",
-        graft.functions.VecDot.of(col("embedding"), col("q_emb"))
-          / (col("nrm") * col("q_nrm")))
-      .withColumn("rnk", rank().over(w))
-      .filter(col("rnk") <= k)
-      .select("query_id", "vec_id", "rnk", "sim")
+        CosineTopK.norm(col("embedding")).as("nrm"))
+    val q = CosineTopK.queries(assigned, queryIds,
+      explode(nearestCentroids(model, nProbe)).as("probe"))
+    CosineTopK(assigned.join(q, col("cluster") === col("probe"))
+        .filter(col("vec_id") =!= col("query_id")), k)
       .orderBy("query_id", "rnk", "vec_id")
   }
 }

@@ -384,8 +384,7 @@ object Multimodal {
     def side(name: String, shift: Int): DataFrame =
       emb.select((col("vec_id") - shift).as("media_id"),
         col("embedding").as(s"${name}_emb"),
-        sqrt(graft.functions.VecDot.of(col("embedding"), col("embedding")))
-          .as(s"${name}_nrm"))
+        CosineTopK.norm(col("embedding")).as(s"${name}_nrm"))
     val captionSrc = docs
       .select((col("doc_id") - 1).as("media_id"), col("source"))
     meta

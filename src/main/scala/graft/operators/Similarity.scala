@@ -25,6 +25,7 @@ import org.apache.spark.sql.functions._
   * (VecDotSpec asserts bitwise equality of the two).
   */
 object Similarity {
+  import CosineTopK.{cosine, keepTop, norm, queries, withNorm}
 
   /** Sequential-fold double dot product — HOF reference formulation
     * (interpreted lambda eval per element; fine for literal centroid
@@ -36,31 +37,13 @@ object Similarity {
 
   def normD(a: Column): Column = sqrt(dotD(a, a))
 
-  /** Codegen'd dot/norm (bit-identical values to [[dotD]]/[[normD]]);
-    * `vec_dot` resolves from [[graft.GraftExtensions]].
-    */
-  private def dotN(a: Column, b: Column): Column =
-    graft.functions.VecDot.of(a, b)
-  private def normN(a: Column): Column = sqrt(dotN(a, a))
-
   /** Exact cosine top-k for the given query ids (self excluded).
     * Output: query_id, vec_id, rnk, sim — deterministically ordered.
     */
   def bruteForceKnn(emb: DataFrame, queryIds: Seq[Long], k: Int): DataFrame = {
-    val base = emb.select(col("vec_id"), col("embedding"),
-      normN(col("embedding")).as("nrm"))
-    val q = base.filter(col("vec_id").isin(queryIds: _*))
-      .select(col("vec_id").as("query_id"), col("embedding").as("q_emb"),
-        col("nrm").as("q_nrm"))
-    val w = Window.partitionBy("query_id")
-      .orderBy(col("sim").desc, col("vec_id"))
-    base.crossJoin(broadcast(q))
-      .filter(col("vec_id") =!= col("query_id"))
-      .withColumn("sim",
-        dotN(col("embedding"), col("q_emb")) / (col("nrm") * col("q_nrm")))
-      .withColumn("rnk", rank().over(w))
-      .filter(col("rnk") <= k)
-      .select("query_id", "vec_id", "rnk", "sim")
+    val base = withNorm(emb)
+    CosineTopK(base.crossJoin(queries(base, queryIds))
+        .filter(col("vec_id") =!= col("query_id")), k)
       .orderBy("query_id", "rnk", "vec_id")
   }
 
@@ -155,15 +138,14 @@ object Similarity {
       .filter(col("id_a") < col("id_b"))
       .select("id_a", "id_b")
       .distinct()
-    val withN = emb.select(col("vec_id"), col("embedding"),
-      normN(col("embedding")).as("nrm"))
+    val withN = withNorm(emb)
     pairs
       .join(withN.select(col("vec_id").as("id_a"),
         col("embedding").as("emb_a"), col("nrm").as("nrm_a")), "id_a")
       .join(withN.select(col("vec_id").as("id_b"),
         col("embedding").as("emb_b"), col("nrm").as("nrm_b")), "id_b")
       .withColumn("sim",
-        dotN(col("emb_a"), col("emb_b")) / (col("nrm_a") * col("nrm_b")))
+        cosine(col("emb_a"), col("emb_b"), col("nrm_a"), col("nrm_b")))
       .filter(col("sim") >= threshold)
       .select("id_a", "id_b", "sim")
       .orderBy("id_a", "id_b")
@@ -256,7 +238,7 @@ object Similarity {
     val rawBase = emb
       .join(packedSignatures(emb, dim, nPlanes), "vec_id")
       .select(col("vec_id"), col("embedding"),
-        normN(col("embedding")).as("nrm"), col("sig"))
+        norm(col("embedding")).as("nrm"), col("sig"))
     val base = if (materialize)
       rawBase.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     else rawBase
@@ -268,7 +250,7 @@ object Similarity {
       .filter(col("id_a") < col("id_b") &&
         col("sig_a") =!= lit(mask).bitwiseXOR(col("sig_b")))
       .withColumn("sim",
-        dotN(col("emb_a"), col("emb_b")) / (col("nrm_a") * col("nrm_b")))
+        cosine(col("emb_a"), col("emb_b"), col("nrm_a"), col("nrm_b")))
       .filter(col("sim") >= threshold)
       .select("id_a", "id_b", "sim")
     if (!materialize) return pairs.orderBy("id_a", "id_b")
@@ -291,27 +273,16 @@ object Similarity {
   def lshKnn(emb: DataFrame, queryIds: Seq[Long], k: Int,
              dim: Int = 64, nPlanes: Int = NumPlanes,
              nBands: Int = PlaneBands): DataFrame = {
-    val base = emb.select(col("vec_id"), col("embedding"),
-      normN(col("embedding")).as("nrm"))
+    val base = withNorm(emb)
       .join(signatureBands(emb, dim, nPlanes, nBands), "vec_id")
     val exploded = base.select(col("vec_id"), col("embedding"), col("nrm"),
       posexplode(col("bands")).as(Seq("band_idx", "band_val")))
-    val qSide = exploded.filter(col("vec_id").isin(queryIds: _*))
-      .select(col("vec_id").as("query_id"), col("embedding").as("q_emb"),
-        col("nrm").as("q_nrm"), col("band_idx"), col("band_val"))
-    val cands = exploded.join(broadcast(qSide), Seq("band_idx", "band_val"))
+    val qSide = queries(exploded, queryIds, col("band_idx"), col("band_val"))
+    val cands = exploded.join(qSide, Seq("band_idx", "band_val"))
       .filter(col("vec_id") =!= col("query_id"))
       .select("query_id", "q_emb", "q_nrm", "vec_id", "embedding", "nrm")
       .distinct()
-    val w = Window.partitionBy("query_id")
-      .orderBy(col("sim").desc, col("vec_id"))
-    cands
-      .withColumn("sim",
-        dotN(col("embedding"), col("q_emb")) / (col("nrm") * col("q_nrm")))
-      .withColumn("rnk", rank().over(w))
-      .filter(col("rnk") <= k)
-      .select("query_id", "vec_id", "rnk", "sim")
-      .orderBy("query_id", "rnk", "vec_id")
+    CosineTopK(cands, k).orderBy("query_id", "rnk", "vec_id")
   }
 
   /** qe6 — 8-bit scalar-quantization audit: per-dimension uniform
@@ -400,8 +371,8 @@ object Similarity {
           / (x.getField("n").cast("double") * lit(1e6))).as("centroid"))
     emb.join(broadcast(centroids), "label")
       .select(col("label"), col("vec_id"),
-        (dotN(col("embedding"), col("centroid"))
-          / (normN(col("embedding")) * normN(col("centroid")))).as("cos"))
+        cosine(col("embedding"), col("centroid"),
+          norm(col("embedding")), norm(col("centroid"))).as("cos"))
       .withColumn("outlier_rank",
         rank().over(org.apache.spark.sql.expressions.Window
           .partitionBy("label").orderBy(col("cos"), col("vec_id")))
@@ -523,8 +494,7 @@ object Similarity {
     * nbr_id. [[knnGraphBlocked]] is the cell-blocked scale path.
     */
   def knnGraph(emb: DataFrame, k: Int): DataFrame = {
-    val base = emb.select(col("vec_id"), col("embedding"),
-      normN(col("embedding")).as("nrm"))
+    val base = withNorm(emb)
     val right = base.select(col("vec_id").as("nbr_id"),
       col("embedding").as("n_emb"), col("nrm").as("n_nrm"))
     knnGraphRank(base.crossJoin(broadcast(right)), k)
@@ -547,29 +517,24 @@ object Similarity {
     val assigned = Ivf.assignCells(emb, model)
       .select(col("vec_id").as("nbr_id"), col("cluster"),
         col("embedding").as("n_emb"),
-        normN(col("embedding")).as("n_nrm"))
+        norm(col("embedding")).as("n_nrm"))
     val probes = Ivf.probeCells(emb, model, nProbe)
       .join(emb.select(col("vec_id"), col("embedding")), "vec_id")
-      .withColumn("nrm", normN(col("embedding")))
+      .withColumn("nrm", norm(col("embedding")))
     knnGraphRank(
       probes.join(assigned, col("probe") === col("cluster")), k)
   }
 
-  /** Shared scoring tail: exclude self, exact cosine, top-k per
-    * vector with (sim desc, nbr_id) rank ties.
+  /** Shared scoring tail: exclude self, then [[CosineTopK]]'s rank
+    * with the vector as the query and nbr_id as the candidate.
     */
-  private def knnGraphRank(pairs: DataFrame, k: Int): DataFrame = {
-    val w = Window.partitionBy("vec_id")
-      .orderBy(col("sim").desc, col("nbr_id"))
-    pairs
-      .filter(col("nbr_id") =!= col("vec_id"))
-      .withColumn("sim",
-        dotN(col("embedding"), col("n_emb")) / (col("nrm") * col("n_nrm")))
-      .withColumn("rnk", rank().over(w).cast("int"))
-      .filter(col("rnk") <= k)
+  private def knnGraphRank(pairs: DataFrame, k: Int): DataFrame =
+    keepTop(pairs
+        .filter(col("nbr_id") =!= col("vec_id"))
+        .withColumn("sim", cosine(col("embedding"), col("n_emb"),
+          col("nrm"), col("n_nrm"))), k, Seq("vec_id"), "nbr_id")
       .select("vec_id", "nbr_id", "rnk", "sim")
       .orderBy("vec_id", "rnk", "nbr_id")
-  }
 
   /** qe19 — maximum inner-product search (MIPS): top-k by RAW dot
     * product, not cosine — the recommender-scoring semantic (user ×
@@ -581,8 +546,9 @@ object Similarity {
     * NeurIPS 2014): append one dimension √(M²−‖x‖²) to each corpus
     * vector (0 to queries) and MIPS becomes cosine kNN on the
     * augmented space — so every blocked cosine index in this file
-    * (IVF/LSH/SQ8) serves MIPS unchanged. Same scan shape as
-    * [[bruteForceKnn]] minus the norm divisions.
+    * (IVF/LSH/SQ8) serves MIPS unchanged. No declared query serves
+    * MIPS that way, so the augmentation lives in that spec. Same
+    * scan shape as [[bruteForceKnn]] minus the norm divisions.
     */
   def mipsKnn(emb: DataFrame, queryIds: Seq[Long], k: Int): DataFrame = {
     val q = emb.filter(col("vec_id").isin(queryIds: _*))
@@ -591,26 +557,11 @@ object Similarity {
       .orderBy(col("dot").desc, col("vec_id"))
     emb.select(col("vec_id"), col("embedding")).crossJoin(broadcast(q))
       .filter(col("vec_id") =!= col("query_id"))
-      .withColumn("dot", dotN(col("embedding"), col("q_emb")))
+      .withColumn("dot", graft.functions.VecDot.of(col("embedding"), col("q_emb")))
       .withColumn("rnk", rank().over(w).cast("int"))
       .filter(col("rnk") <= k)
       .select("query_id", "vec_id", "rnk", "dot")
       .orderBy("query_id", "rnk", "vec_id")
-  }
-
-  /** The Shrivastava–Li augmentation used by the MIPS spec: corpus
-    * vectors gain √(M²−‖x‖²) as an extra component (M ≥ max norm),
-    * queries gain 0 — inner products are preserved while augmented
-    * corpus norms become the constant M, so cosine order ≡ dot order.
-    */
-  def augmentForMips(emb: DataFrame, m: Double): DataFrame = {
-    emb.withColumn("_sq",
-      graft.functions.VecDot.of(col("embedding"), col("embedding")))
-      .withColumn("embedding",
-        concat(col("embedding"),
-          array(sqrt(greatest(lit(m * m) - col("_sq"), lit(0.0)))
-            .cast("float"))))
-      .drop("_sq")
   }
 
   /** qe18 — cosine-RADIUS search (range query): every corpus vector
@@ -634,16 +585,16 @@ object Similarity {
                    minSim: Double, nProbe: Int): DataFrame = {
     val assigned = Ivf.assignCells(emb, model)
       .select(col("vec_id"), col("cluster"), col("embedding").as("c_emb"),
-        normN(col("embedding")).as("c_nrm"))
+        norm(col("embedding")).as("c_nrm"))
     val probes = Ivf.probeCells(
         emb.filter(col("vec_id").isin(queryIds: _*)), model, nProbe)
       .join(emb.select(col("vec_id"), col("embedding")), "vec_id")
       .select(col("vec_id").as("query_id"), col("probe"),
-        col("embedding").as("q_emb"), normN(col("embedding")).as("q_nrm"))
+        col("embedding").as("q_emb"), norm(col("embedding")).as("q_nrm"))
     probes.join(assigned, col("probe") === col("cluster"))
       .filter(col("vec_id") =!= col("query_id"))
       .withColumn("sim",
-        dotN(col("c_emb"), col("q_emb")) / (col("c_nrm") * col("q_nrm")))
+        cosine(col("c_emb"), col("q_emb"), col("c_nrm"), col("q_nrm")))
       .filter(col("sim") >= minSim)
       .select("query_id", "vec_id", "sim")
       .orderBy("query_id", "vec_id")
@@ -671,14 +622,14 @@ object Similarity {
                     threshold: Double): DataFrame = {
     val assigned = Ivf.assignCells(emb, model)
       .select(col("vec_id"), col("cluster"), col("embedding"),
-        normN(col("embedding")).as("nrm"))
+        norm(col("embedding")).as("nrm"))
     val right = assigned.select(col("cluster"),
       col("vec_id").as("vec_b"), col("embedding").as("emb_b"),
       col("nrm").as("nrm_b"))
     val dups = assigned.join(right, "cluster")
       .filter(col("vec_b") < col("vec_id"))
       .withColumn("sim",
-        dotN(col("embedding"), col("emb_b")) / (col("nrm") * col("nrm_b")))
+        cosine(col("embedding"), col("emb_b"), col("nrm"), col("nrm_b")))
       .filter(col("sim") >= threshold)
       .groupBy("vec_id").agg(min("vec_b").as("dup_of"))
     assigned.select(col("vec_id"), col("cluster"))
@@ -719,8 +670,8 @@ object Similarity {
       col("centroid").as("cb"))
     a.join(b, col("label_a") < col("label_b"))
       .select(col("label_a"), col("label_b"),
-        (dotN(col("ca"), col("cb"))
-          / (normN(col("ca")) * normN(col("cb")))).as("cos"))
+        cosine(col("ca"), col("cb"), norm(col("ca")), norm(col("cb")))
+          .as("cos"))
       .orderBy("label_a", "label_b")
   }
 
@@ -756,14 +707,12 @@ object Similarity {
                    lambda: Double): DataFrame = {
     val spark = emb.sparkSession
     import spark.implicits._
-    val base = emb.select(col("vec_id"), col("embedding"),
-      normN(col("embedding")).as("nrm"))
+    val base = withNorm(emb)
     val q = base.filter(col("vec_id") === queryId)
       .select(col("embedding").as("q_emb"), col("nrm").as("q_nrm"))
     val poolDf = base.filter(col("vec_id") =!= queryId)
       .crossJoin(broadcast(q))
-      .withColumn("rel",
-        dotN(col("embedding"), col("q_emb")) / (col("nrm") * col("q_nrm")))
+      .withColumn("rel", CosineTopK.sim)
       .orderBy(col("rel").desc, col("vec_id"))
       .limit(pool)
       .select(col("vec_id"), col("embedding"), col("nrm"), col("rel"))
@@ -779,7 +728,7 @@ object Similarity {
           col("embedding").as("eb"), col("nrm").as("nb"))
         val sims = a.join(broadcast(b), col("ia") =!= col("ib"))
           .select(col("ia"), col("ib"),
-            (dotN(col("ea"), col("eb")) / (col("na") * col("nb"))).as("s"))
+            cosine(col("ea"), col("eb"), col("na"), col("nb")).as("s"))
         (poolDf.select("vec_id", "rel").collect()
             .map(r => r.getLong(0) -> r.getDouble(1)).toMap,
           sims.collect()

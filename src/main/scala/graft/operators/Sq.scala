@@ -228,21 +228,8 @@ object Sq {
       .filter(col("srnk") <= shortlist)
       .select("query_id", "vec_id")
     // exact re-rank of the shortlist — output shape == bruteForceKnn
-    val base = emb.select(col("vec_id"), col("embedding"),
-      sqrt(graft.functions.VecDot.of(col("embedding"), col("embedding")))
-        .as("nrm"))
-    val q = base.filter(col("vec_id").isin(queryIds: _*))
-      .select(col("vec_id").as("query_id"), col("embedding").as("q_emb"),
-        col("nrm").as("q_nrm"))
-    val wRank = Window.partitionBy("query_id")
-      .orderBy(col("sim").desc, col("vec_id"))
-    short.join(base, "vec_id").join(broadcast(q), "query_id")
-      .withColumn("sim",
-        graft.functions.VecDot.of(col("embedding"), col("q_emb"))
-          / (col("nrm") * col("q_nrm")))
-      .withColumn("rnk", rank().over(wRank))
-      .filter(col("rnk") <= k)
-      .select("query_id", "vec_id", "rnk", "sim")
+    val base = CosineTopK.withNorm(emb)
+    CosineTopK.rerank(short, base, CosineTopK.queries(base, queryIds), k)
       .orderBy("query_id", "rnk", "vec_id")
   }
 }

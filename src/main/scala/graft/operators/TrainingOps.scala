@@ -1166,8 +1166,7 @@ object TrainingOps {
   def normAudit(s: SparkSession, dir: String): DataFrame = {
     Tables.embeddings(s, dir)
       .select(col("label"), size(col("embedding")).as("dim"),
-        sqrt(graft.functions.VecDot.of(col("embedding"), col("embedding")))
-          .as("nrm"))
+        CosineTopK.norm(col("embedding")).as("nrm"))
       .groupBy("label")
       .agg(count(lit(1)).as("n_vecs"),
         min("dim").as("min_dim"), max("dim").as("max_dim"),
@@ -1878,24 +1877,12 @@ object TrainingOps {
       .select(col("doc_id").as("vec_id"))
     val corpus = Ivf.assignCells(emb.join(enIds, "vec_id"), model)
       .select(col("vec_id"), col("embedding"), col("cluster"),
-        sqrt(graft.functions.VecDot.of(col("embedding"), col("embedding")))
-          .as("nrm"))
-    val q = emb.filter(col("vec_id").isin(knnQueryIds: _*))
-      .select(col("vec_id").as("query_id"), col("embedding").as("q_emb"),
-        sqrt(graft.functions.VecDot.of(col("embedding"), col("embedding")))
-          .as("q_nrm"))
+        CosineTopK.norm(col("embedding")).as("nrm"))
+    val q = CosineTopK.queries(CosineTopK.withNorm(emb), knnQueryIds)
       .withColumn("probe",
         explode(typedLit(model.centroids.map(_._1).toSeq)))
-    val w = org.apache.spark.sql.expressions.Window.partitionBy("query_id")
-      .orderBy(col("sim").desc, col("vec_id"))
-    corpus.join(broadcast(q), col("cluster") === col("probe"))
-      .filter(col("vec_id") =!= col("query_id"))
-      .withColumn("sim",
-        graft.functions.VecDot.of(col("embedding"), col("q_emb"))
-          / (col("nrm") * col("q_nrm")))
-      .withColumn("rnk", rank().over(w).cast("int"))
-      .filter(col("rnk") <= 10)
-      .select("query_id", "vec_id", "rnk", "sim")
+    CosineTopK(corpus.join(q, col("cluster") === col("probe"))
+        .filter(col("vec_id") =!= col("query_id")), 10)
       .orderBy("query_id", "rnk", "vec_id")
   }
 
@@ -1943,37 +1930,22 @@ object TrainingOps {
     val corpus = Ivf.assignCells(emb, model)
       .join(langs, "vec_id")
       .select(col("vec_id"), col("embedding"), col("cluster"), col("lang"),
-        sqrt(graft.functions.VecDot.of(col("embedding"), col("embedding")))
-          .as("nrm"))
-    // ONE definition of the query slice (ADVICE r16: the partial-probe
-    // branch re-stated the id predicate — a second tiny scan, and a
-    // drift trap if the predicate ever changes in one place only)
+        CosineTopK.norm(col("embedding")).as("nrm"))
+    // the partial path scores centroids for the query rows only
     val qEmb = emb.filter(col("vec_id").isin(knnQueryIds: _*))
-    val qBase = qEmb
-      .join(langs, "vec_id")
-      .select(col("vec_id").as("query_id"), col("embedding").as("q_emb"),
-        col("lang").as("q_lang"),
-        sqrt(graft.functions.VecDot.of(col("embedding"), col("embedding")))
-          .as("q_nrm"))
+    val qFrom = emb.join(langs, "vec_id")
+      .withColumn("nrm", CosineTopK.norm(col("embedding")))
     val q =
       if (nProbe >= model.k)
-        qBase.withColumn("probe",
-          explode(typedLit(model.centroids.map(_._1).toSeq)))
+        CosineTopK.queries(qFrom, knnQueryIds, col("lang").as("q_lang"))
+          .withColumn("probe",
+            explode(typedLit(model.centroids.map(_._1).toSeq)))
       else
-        qBase.join(
-          Ivf.probeCells(qEmb, model, nProbe)
-            .withColumnRenamed("vec_id", "query_id"),
-          "query_id")
-    val w = org.apache.spark.sql.expressions.Window.partitionBy("query_id")
-      .orderBy(col("sim").desc, col("vec_id"))
-    corpus.join(broadcast(q),
-        col("cluster") === col("probe") && col("lang") =!= col("q_lang"))
-      .withColumn("sim",
-        graft.functions.VecDot.of(col("embedding"), col("q_emb"))
-          / (col("nrm") * col("q_nrm")))
-      .withColumn("rnk", rank().over(w).cast("int"))
-      .filter(col("rnk") <= 10)
-      .select("query_id", "vec_id", "rnk", "sim")
+        CosineTopK.queries(
+          qFrom.join(Ivf.probeCells(qEmb, model, nProbe), "vec_id"),
+          knnQueryIds, col("lang").as("q_lang"), col("probe"))
+    CosineTopK(corpus.join(q,
+        col("cluster") === col("probe") && col("lang") =!= col("q_lang")), 10)
       .orderBy("query_id", "rnk", "vec_id")
   }
 
@@ -2318,6 +2290,12 @@ object TrainingOps {
     * LITERAL rows — a map-only stage, no join, no shuffle; the
     * output schema matches the source table so every downstream
     * quantizer/trainer consumes it unchanged.
+    *
+    * Only PqSpec calls it, and it stays for that: a full eigen
+    * rotation has no relational form a SQL oracle could recompute, so
+    * no query can declare it, and PqSpec's measured OPQ operating
+    * points (see [[pcaRotation]]) are the evidence behind declaring
+    * only the balancing permutation as qe24.
     */
   def rotateEmbeddings(emb: DataFrame,
                        rot: Array[Array[Double]]): DataFrame = {

@@ -108,8 +108,7 @@ object VecAdmission {
   def freshCells(s: SparkSession, dir: String): DataFrame = {
     Ivf.assignCells(corpusEmb(s, dir), corpusModel(s, dir))
       .select(col("vec_id"), col("cluster"),
-        sqrt(graft.functions.VecDot.of(col("embedding"), col("embedding")))
-          .as("nrm"))
+        CosineTopK.norm(col("embedding")).as("nrm"))
   }
 
   /** Stored inverted file: (vec_id, cluster, nrm) — no vectors, the
@@ -159,9 +158,7 @@ object VecAdmission {
   def admit(arrivals: DataFrame, cells: DataFrame, codes: DataFrame,
             corpus: DataFrame, model: Ivf.IvfModel, sq: Sq.SqModel,
             k: Int, nProbe: Int, shortlist: Int): DataFrame = {
-    val q = arrivals.select(col("query_id"), col("q_emb"),
-      sqrt(graft.functions.VecDot.of(col("q_emb"), col("q_emb")))
-        .as("q_nrm"))
+    val q = CosineTopK.batch(arrivals)
     // batch side exploded to its probe cells. At FULL probe the
     // probe set is every cell id by definition — emitted as a literal
     // explode with NO centroid scoring (the partial-probe path's
@@ -184,8 +181,8 @@ object VecAdmission {
     * [[admit]], split out (round 17) so the calibration ladder can
     * persist ONE scored frame per probe rung across its shortlist
     * rungs instead of re-running the cell probe + ADC scan per
-    * (nProbe, shortlist) pair. `q` is the arrival frame with q_nrm
-    * attached; composition through [[rerankShortlist]] is exactly the
+    * (nProbe, shortlist) pair. `q` is the arrival frame's
+    * [[CosineTopK.batch]] query side; composition through [[rerankShortlist]] is exactly the
     * previous inline body.
     */
   private[operators] def scoredCandidates(q: DataFrame, probes: DataFrame,
@@ -200,7 +197,7 @@ object VecAdmission {
     // compressed first pass: stored codes + the batch-as-frame ADC
     cand
       .join(codes, "vec_id")
-      .join(broadcast(q.select(col("query_id"), col("q_emb"))), "query_id")
+      .join(q.select(col("query_id"), col("q_emb")), "query_id")
       .withColumn("_adc", adcScore(sq))
       .select("query_id", "vec_id", "nrm", "_adc")
   }
@@ -229,16 +226,7 @@ object VecAdmission {
         .filter(col("_srnk") <= shortlist)
         .select("query_id", "vec_id", "nrm")
     // exact re-rank: only the shortlist touches the float table
-    val wRank = Window.partitionBy("query_id")
-      .orderBy(col("sim").desc, col("vec_id"))
-    short.join(corpus, "vec_id")
-      .join(broadcast(q), "query_id")
-      .withColumn("sim",
-        graft.functions.VecDot.of(col("embedding"), col("q_emb"))
-          / (col("nrm") * col("q_nrm")))
-      .withColumn("rnk", rank().over(wRank).cast("int"))
-      .filter(col("rnk") <= k)
-      .select("query_id", "vec_id", "rnk", "sim")
+    CosineTopK.rerank(short, corpus, q, k)
   }
 
   /** Every shortlist rung of ONE probe rung evaluated in ONE job —
@@ -261,20 +249,15 @@ object VecAdmission {
                                    shortLadder: Seq[Int]): DataFrame = {
     val wShort = Window.partitionBy("query_id")
       .orderBy(col("_adc").desc, col("vec_id"))
-    val wRank = Window.partitionBy("query_id", "_sl")
-      .orderBy(col("sim").desc, col("vec_id"))
-    scored.withColumn("_srnk", row_number().over(wShort))
+    val pairs = scored.withColumn("_srnk", row_number().over(wShort))
       .filter(col("_srnk") <= shortLadder.max)
       .join(corpus, "vec_id")
-      .join(broadcast(q), "query_id")
-      .withColumn("sim",
-        graft.functions.VecDot.of(col("embedding"), col("q_emb"))
-          / (col("nrm") * col("q_nrm")))
+      .join(q, "query_id")
+      .withColumn("sim", CosineTopK.sim)
       .select(col("query_id"), col("vec_id"), col("sim"), col("_srnk"),
         explode(typedLit(shortLadder)).as("_sl"))
       .filter(col("_srnk") <= col("_sl"))
-      .withColumn("rnk", rank().over(wRank))
-      .filter(col("rnk") <= k)
+    CosineTopK.keepTop(pairs, k, Seq("query_id", "_sl"))
       .select("_sl", "query_id", "vec_id")
   }
 
@@ -332,9 +315,7 @@ object VecAdmission {
       // shortlist) — admit itself composes the same halves, and the
       // prefix equality is pinned in IvfLadderSpec — so the
       // chosen operating point cannot move.
-      val q = arrivals.select(col("query_id"), col("q_emb"),
-        sqrt(graft.functions.VecDot.of(col("q_emb"), col("q_emb")))
-          .as("q_nrm"))
+      val q = CosineTopK.batch(arrivals)
       val rankedProbes = Ivf.rankedProbeCells(
           arrivals.select(col("query_id").as("vec_id"),
             col("q_emb").as("embedding")), model)
@@ -418,8 +399,7 @@ object VecAdmission {
                       sq: Sq.SqModel): (DataFrame, DataFrame) = {
     val newCells = Ivf.assignCells(admitted, model)
       .select(col("vec_id"), col("cluster"),
-        sqrt(graft.functions.VecDot.of(col("embedding"), col("embedding")))
-          .as("nrm"))
+        CosineTopK.norm(col("embedding")).as("nrm"))
     (cells.unionByName(newCells),
       codes.unionByName(Sq.encodePacked(admitted, sq)))
   }
@@ -460,6 +440,13 @@ object VecAdmission {
 
   /** Published next-generation code table, keyed like
     * [[publishedCells]].
+    *
+    * Only specs call it (as they do [[publishedCells]]), and it stays
+    * because the next generation is the PAIR: [[admit]] probes the
+    * cells and scores the codes, so a published cell table without
+    * its codes cannot be searched. Round17OpsSpec searches the pair
+    * (full probe is exact, partial probe holds the standing floors);
+    * no declared query serves generation 2 yet.
     */
   def publishedCodes(s: SparkSession, dir: String): DataFrame =
     graft.io.ArtifactStore.parquetArtifact(

@@ -117,6 +117,22 @@ class SessionSpec extends SparkSpec {
       "ArtifactStore owns the one key")
   }
 
+  test("every exact-cosine top-k in src/main scores through operators/CosineTopK.scala") {
+    val kernel = "src/main/scala/graft/operators/CosineTopK.scala"
+    Seq("""\*\s*col\("q_nrm"\)""", """\*\s*col\("n_nrm"\)""",
+        """sqrt\(graft\.functions\.VecDot\.of\(""").foreach { n =>
+      val outside = mainSources.collect {
+        case (p, text) if n.r.findFirstIn(text).nonEmpty &&
+          p.toString != kernel => p.toString
+      }
+      assert(outside.isEmpty,
+        s"$n: score and rank with graft.operators.CosineTopK: $outside")
+    }
+    assert(mainSources.exists { case (p, text) =>
+        p.toString == kernel && text.contains("sqrt(graft.functions.VecDot.of(")
+      }, "the scan must see the one norm")
+  }
+
   test("Session.withConfs sets in order, then restores or unsets, also on throw") {
     val (set, unset) = ("spark.sql.shuffle.partitions", "graft.spec.scoped")
     val before = spark.conf.get(set)

@@ -423,7 +423,10 @@ class SimilaritySpec extends SparkSpec
     // corpus side's augmentation — zero the query's extra dim exactly
     // as the reduction prescribes.
     val m = 10.0 // >= every corpus norm (|(6,8)| = 10)
-    val aug = Similarity.augmentForMips(emb, m)
+    val aug = emb.withColumn("embedding", concat(col("embedding"),
+      array(sqrt(greatest(lit(m * m) -
+        graft.functions.VecDot.of(col("embedding"), col("embedding")),
+        lit(0.0))).cast("float"))))
     val qZeroed = aug.withColumn("embedding",
       when(col("vec_id") === 0L,
         concat(slice(col("embedding"), 1, 3), array(lit(0.0f))))

@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.SparkSession
+import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Shared local session for all suites (one JVM-wide session via
@@ -8,11 +9,24 @@ import org.scalatest.funsuite.AnyFunSuite
   * `SPARK_GRAFT_CPUS` says, so plan and partition-count assertions
   * see the same session on every host.
   */
-trait SparkSpec extends AnyFunSuite {
+trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
   lazy val spark: SparkSession = Session.local(4)
 
-  def tempDir(prefix: String): String =
-    java.nio.file.Files.createTempDirectory(prefix).toString
+  private val tempDirs = scala.collection.mutable.ListBuffer.empty[java.io.File]
+
+  /** A fresh directory under `java.io.tmpdir`, deleted with everything
+    * in it when the suite ends.
+    */
+  def tempDir(prefix: String): String = {
+    val dir = java.nio.file.Files.createTempDirectory(prefix).toFile
+    tempDirs.synchronized(tempDirs += dir)
+    dir.toString
+  }
+
+  override def afterAll(): Unit =
+    try tempDirs.synchronized(
+      tempDirs.foreach(org.apache.commons.io.FileUtils.deleteQuietly))
+    finally super.afterAll()
 
   /** Run `body` with an artifact name unique to this call, then delete
     * every artifact root built under that name, also when `body`
